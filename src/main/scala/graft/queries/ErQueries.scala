@@ -236,7 +236,7 @@ object ErQueries {
     cache.clear(); goldenCache.clear()
   }
 
-  private def explained(s: SparkSession, dir: String): Explanation =
+  private[graft] def explained(s: SparkSession, dir: String): Explanation =
     cache.getOrElseUpdate(dir, {
       val src = erSource(s, dir)
       val l = src.filter(col("id") === 0)
@@ -317,7 +317,7 @@ object ErQueries {
 
   private val goldenCache = scala.collection.concurrent.TrieMap.empty[String, Explanation]
 
-  private def goldenExplained(s: SparkSession, dir: String): Explanation =
+  private[graft] def goldenExplained(s: SparkSession, dir: String): Explanation =
     goldenCache.getOrElseUpdate(dir, {
       val src = goldenSource(s, dir)
       val l = src.filter(col("id") === 0)

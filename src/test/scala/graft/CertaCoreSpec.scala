@@ -246,4 +246,53 @@ class CertaCoreSpec extends SparkSpec {
       assert(rescored.filter(col("match_score") >= 0.5).count() === 0)
     }
   }
+
+  test("depths past a complete flip are synthesized, not scored") {
+    // every depth-1 perturbation flips under TwoDiffModel, so depth 2 is
+    // synthesized: all its perturbations count as flipped, although the
+    // model would score each of them a match
+    val l = Seq((0L, "alpha beta gamma", "rome", "red"),
+      (1L, "delta epsilon zeta", "paris", "blue"),
+      (2L, "eta theta iota", "berlin", "green"),
+      (3L, "kappa lambda mu", "madrid", "white")).toDF("id", "name", "city", "color")
+    val r = Seq((0L, "alpha beta gamma", "rome", "red"),
+      (1L, "nu xi omicron", "london", "black"),
+      (2L, "pi rho sigma", "oslo", "pink"),
+      (3L, "tau upsilon phi", "lisbon", "grey")).toDF("id", "name", "city", "color")
+    val e = new CertaExplainer(l, r).explain(rec(l, 0), rec(r, 0), TwoDiffModel,
+      numTriangles = 6)
+    val attrs = Seq("ltable_", "rtable_").flatMap(p => Seq("name", "city", "color").map(p + _))
+    // 3 triangles per side: every depth-1 and depth-2 set flips all 3 of 6
+    val pss = e.pss.collect().map(r => r.getAs[String]("attrSet") -> r.getAs[Double]("pos")).toMap
+    val sets = Seq("ltable_", "rtable_").flatMap(p => Seq("name", "city", "color")
+      .map(p + _).combinations(1).toSeq ++ Seq("name", "city", "color").map(p + _).combinations(2))
+    assert(pss === sets.map(_.mkString("/") -> 0.5).toMap)
+    // flips = 36 flipped perturbations + 6 triangles; each attribute is in
+    // 3 depth-1 flips and 6 synthesized depth-2 flips: 6/42 + 9/42
+    val sal = e.saliency.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    assert(sal === attrs.map(_ -> 0.3571428571428571).toMap)
+    assert(e.cfSummary.collect().map(_.getAs[String]("attrSet")).toSet === attrs.toSet)
+    // the minimal max-pos sets are depth 1: the cf examples are the scored
+    // depth-1 flips, one per (set, donor value)
+    assert(e.cfExamples.schema.treeString === GoldenCfExamples.schema(attrs))
+    assert(GoldenCfExamples.rows(e.cfExamples) === Seq(
+      "alpha beta gamma|berlin|red|alpha beta gamma|rome|red|[ltable_city]|[rome]|[berlin]|0@0 1@0 0@2|0.0|1.0|1",
+      "alpha beta gamma|madrid|red|alpha beta gamma|rome|red|[ltable_city]|[rome]|[madrid]|0@0 1@0 0@3|0.0|1.0|1",
+      "alpha beta gamma|paris|red|alpha beta gamma|rome|red|[ltable_city]|[rome]|[paris]|0@0 1@0 0@1|0.0|1.0|1",
+      "alpha beta gamma|rome|blue|alpha beta gamma|rome|red|[ltable_color]|[red]|[blue]|0@0 1@0 0@1|0.0|1.0|1",
+      "alpha beta gamma|rome|green|alpha beta gamma|rome|red|[ltable_color]|[red]|[green]|0@0 1@0 0@2|0.0|1.0|1",
+      "alpha beta gamma|rome|red|alpha beta gamma|lisbon|red|[rtable_city]|[rome]|[lisbon]|1@0 0@0 1@3|0.0|1.0|1",
+      "alpha beta gamma|rome|red|alpha beta gamma|london|red|[rtable_city]|[rome]|[london]|1@0 0@0 1@1|0.0|1.0|1",
+      "alpha beta gamma|rome|red|alpha beta gamma|oslo|red|[rtable_city]|[rome]|[oslo]|1@0 0@0 1@2|0.0|1.0|1",
+      "alpha beta gamma|rome|red|alpha beta gamma|rome|black|[rtable_color]|[red]|[black]|1@0 0@0 1@1|0.0|1.0|1",
+      "alpha beta gamma|rome|red|alpha beta gamma|rome|grey|[rtable_color]|[red]|[grey]|1@0 0@0 1@3|0.0|1.0|1",
+      "alpha beta gamma|rome|red|alpha beta gamma|rome|pink|[rtable_color]|[red]|[pink]|1@0 0@0 1@2|0.0|1.0|1",
+      "alpha beta gamma|rome|red|nu xi omicron|rome|red|[rtable_name]|[alpha beta gamma]|[nu xi omicron]|1@0 0@0 1@1|0.0|1.0|1",
+      "alpha beta gamma|rome|red|pi rho sigma|rome|red|[rtable_name]|[alpha beta gamma]|[pi rho sigma]|1@0 0@0 1@2|0.0|1.0|1",
+      "alpha beta gamma|rome|red|tau upsilon phi|rome|red|[rtable_name]|[alpha beta gamma]|[tau upsilon phi]|1@0 0@0 1@3|0.0|1.0|1",
+      "alpha beta gamma|rome|white|alpha beta gamma|rome|red|[ltable_color]|[red]|[white]|0@0 1@0 0@3|0.0|1.0|1",
+      "delta epsilon zeta|rome|red|alpha beta gamma|rome|red|[ltable_name]|[alpha beta gamma]|[delta epsilon zeta]|0@0 1@0 0@1|0.0|1.0|1",
+      "eta theta iota|rome|red|alpha beta gamma|rome|red|[ltable_name]|[alpha beta gamma]|[eta theta iota]|0@0 1@0 0@2|0.0|1.0|1",
+      "kappa lambda mu|rome|red|alpha beta gamma|rome|red|[ltable_name]|[alpha beta gamma]|[kappa lambda mu]|0@0 1@0 0@3|0.0|1.0|1"))
+  }
 }

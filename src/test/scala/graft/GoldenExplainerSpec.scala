@@ -32,6 +32,14 @@ class GoldenExplainerSpec extends SparkSpec {
     assert(got === GoldenExplainer.triangles)
   }
 
+  test("live explainer cfExamples equal the frozen golden exactly") {
+    val cf = ErQueries.goldenExplained(spark, dir).cfExamples
+    assert(cf.schema.treeString === GoldenCfExamples.schema(
+      Seq("ltable_", "rtable_").flatMap(p =>
+        Seq("name", "region", "grp").map(p + _))))
+    assert(GoldenCfExamples.rows(cf) === GoldenCfExamples.golden)
+  }
+
   test("baseline explainers equal their frozen goldens exactly") {
     val got = ErQueries.q63GoldenBaselines(spark, dir).collect()
       .map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSeq
@@ -53,6 +61,11 @@ class GoldenExplainerSpec extends SparkSpec {
     val base = ErQueries.q28BaselineSaliency(spark, dir).collect()
       .map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSeq
     assert(base === g.baselines)
+    val cf = ErQueries.explained(spark, dir).cfExamples
+    assert(cf.schema.treeString === GoldenCfExamples.schema(
+      Seq("ltable_", "rtable_").flatMap(p =>
+        Seq("name", "brand", "ptype", "psize").map(p + _))))
+    assert(GoldenCfExamples.rows(cf) === GoldenCfExamples.q25)
     // the driver's oracle strings key off the verify SF and must exist
     assert(GoldenLive.bySf.contains(GoldenLive.verifySf))
     assert(ErQueries.oracles("q25_certa_saliency")
