@@ -81,10 +81,12 @@ object Blocking {
     // its lineage usually carries the caller's sketch pass (minhash
     // band keys) — and it sits under SIX branch executions below (the
     // truth census, both sides of each per-band covered join, n_rows).
-    // One eager localCheckpoint computes the sketch once; every branch
-    // re-reads rows (r12, guide §5 — the q128/q136 multi-branch rule).
-    val base = df.select(col(truthCol).as("__t") +: col(idCol).as("__i") +:
-      blockCols.map(col): _*).localCheckpoint()
+    // Collecting it into a LocalRelation computes the sketch once; every
+    // branch re-reads rows, and nothing stays pinned in the block manager.
+    val keyed = df.select(col(truthCol).as("__t") +: col(idCol).as("__i") +:
+      blockCols.map(col): _*)
+    val base = df.sparkSession.createDataFrame(
+      java.util.Arrays.asList(keyed.collect(): _*), keyed.schema)
     val truth = base.groupBy(col("__t")).agg(count(lit(1)).as("c"))
       .agg(coalesce(sum(pairs(col("c"))), lit(0L)).as("truth_pairs"))
     val right = base.select(col("__t").as("__t2") +: col("__i").as("__i2") +:

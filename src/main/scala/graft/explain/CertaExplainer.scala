@@ -25,10 +25,13 @@ final case class Explanation(
     triangles: DataFrame)
 
 /** CERTA explainer (reference explain.py:34-158, §3.1 of SURVEY.md),
-  * Spark-native: the driver orchestrates the stage sequence and the
-  * per-depth lattice loop (with the reference's monotonicity shortcut,
-  * triangles_method.py:301-327); every stage body is a distributed
-  * DataFrame program. No per-triangle driver loops anywhere.
+  * Spark-native. The support search is a distributed scan of the
+  * sources; everything after it is bounded by numTriangles × the
+  * attribute powerset and runs as driver work around the fewest jobs:
+  * triangles are joined driver-side, every lattice depth is predicted
+  * in ONE cached pass, and the driver replays the reference's
+  * monotonicity shortcut (triangles_method.py:301-327) over one
+  * (attribute set → n, flips) census. No per-triangle driver loops.
   */
 /** @param candidateGen J3 strategy for the support search (SURVEY §4):
   *   the default [[graft.candidates.AutoSelect]] resolves cost-based at
@@ -77,6 +80,14 @@ class CertaExplainer(
             .generator
         }
       case g => g
+    }
+
+  // the G2 fallback's fresh-id offsets: both source id maxima in one
+  // job, once per instance (the sources are fixed constructor arguments)
+  @transient private lazy val maxSourceIds: (Long, Long) =
+    staged("source max ids") {
+      val r = lsource.agg(max(col("id"))).crossJoin(rsource.agg(max(col("id")))).head()
+      (r.getLong(0), r.getLong(1))
     }
 
   override def close(): Unit = synchronized {
@@ -189,8 +200,8 @@ class CertaExplainer(
     // short, search again among prefix/suffix-perturbed copies of the
     // probe records; generated records extend the sources the triangle
     // stages resolve against (explain.py:67). The generated frames are
-    // tiny (2·Σ(tokens-1) rows per probe attribute) — localized so the
-    // repeated counts and the extended-source unions replay nothing.
+    // tiny (2·Σ(tokens-1) rows per probe attribute) LocalRelations, so
+    // the counts and the extended-source unions replay nothing.
     //
     // r12: the support rows live driver-side from here on (the fused
     // search returns true LocalRelations, so the collect is job-free) —
@@ -205,19 +216,12 @@ class CertaExplainer(
     var extendedR = rsource
     val n0 = nbRows.size.toLong
     if (n0 < numTriangles) {
-      // both source maxima in ONE job (these are the only two full-source
-      // aggregates in the fallback; two sequential 1-row jobs doubled the
-      // scheduler round-trips here)
-      val maxIds = staged("source max ids")(
-        lsource.agg(max(col("id")).as("m"))
-          .crossJoin(rsource.agg(max(col("id")).as("m2"))).head())
-      val maxLid = maxIds.getLong(0)
-      val maxRid = maxIds.getLong(1)
+      val (maxLid, maxRid) = maxSourceIds
       // variants of the left probe serve as right-side candidates & v.v.
-      val genFromL = localize(staged("augment")(graft.perturb.Augment
-        .generateSubsequences(lRecord, startId = maxRid + 1)))
-      val genFromR = localize(staged("augment")(graft.perturb.Augment
-        .generateSubsequences(rRecord, startId = maxLid + 1)))
+      val genFromL = staged("augment")(graft.perturb.Augment
+        .generateSubsequences(lRecord, startId = maxRid + 1))
+      val genFromR = staged("augment")(graft.perturb.Augment
+        .generateSubsequences(rRecord, startId = maxLid + 1))
       if (boundedCount(genFromL) > 0 && boundedCount(genFromR) > 0) {
         val (_, support2) = staged("augmented support search")(Candidates.support(
           lRecord, rRecord, genFromR, genFromL, pc, model, numTriangles,
@@ -239,23 +243,16 @@ class CertaExplainer(
 
     // O3 head+tail truncation in the seeded shuffle order (reference
     // local_explain.py:63-64), driver-side: sort by (__shuffle, id) with
-    // Spark's exact ordering (long asc; the id tie-break — reachable
-    // only on an xxhash64 collision — compares the UTF-8 bytes unsigned,
-    // UTF8String's binary order).
+    // Spark's exact ordering (long asc; the id tie-break is reachable
+    // only on an xxhash64 collision).
     val half = numTriangles / 2
     val shufIdx = nbSchema.fieldIndex("__shuffle")
     val idIdx = nbSchema.fieldIndex("id")
     val sortedRows = nbRows.sortWith { (x, y) =>
       val sx = x.getLong(shufIdx); val sy = y.getLong(shufIdx)
       if (sx != sy) sx < sy
-      else {
-        val ix = x.getString(idIdx); val iy = y.getString(idIdx)
-        if (ix == null) iy != null
-        else if (iy == null) false
-        else java.util.Arrays.compareUnsigned(
-          ix.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-          iy.getBytes(java.nio.charset.StandardCharsets.UTF_8)) < 0
-      }
+      else graft.operators.SparkOrder.compareStrings(
+        x.getString(idIdx), y.getString(idIdx)) < 0
     }
     val truncatedRows =
       if (nSupport > numTriangles)
@@ -290,10 +287,9 @@ class CertaExplainer(
       java.util.Arrays.asList((firstRowRows.toIndexedSeq ++ supportRows): _*),
       supportPairsSchema)
 
-    // stage 4: triangle discovery (pos×neg self-joins over the bounded
-    // local support set; result localized — ≤ (numTriangles/2)² rows)
-    val discovered = staged("triangle discovery")(
-      localize(Triangles.discover(supportPairs, schema)))
+    // stage 4: triangle discovery — a driver-side join of the local
+    // support set (≤ (numTriangles/2)² rows, job-free)
+    val discovered = staged("triangle discovery")(Triangles.discover(supportPairs, schema))
     if (boundedCount(discovered) == 0) return emptyExplanation()
 
     // G6 invariant probes (reference triangles_method.py:280-283): the
@@ -315,72 +311,46 @@ class CertaExplainer(
     val nTriangles = boundedCount(triangles)
     if (nTriangles == 0) return emptyExplanation()
 
-    // stage 5: lattice-stratified perturb & predict with monotonicity
-    // shortcut (reference perturb_predict, triangles_method.py:266-334).
-    // Vertex-record resolution is depth-independent — resolve() scans
-    // each source once with an id-IN pushdown filter and returns bounded
-    // LocalRelations; each depth replays only its explode+project.
+    // stage 5: perturb & predict every lattice depth in one cached pass
+    // (reference perturb_predict, triangles_method.py:266-334). Vertex
+    // resolution scans each source once with an id-IN pushdown filter
+    // and returns bounded LocalRelations; one Generate explodes every
+    // depth's subsets, and one (set → n, flips) census is collected.
+    val depths = 1 until attrLength
+    if (depths.isEmpty) return emptyExplanation()
     val resolved = staged("vertex resolution")(
       Perturb.resolve(triangles, extendedL, extendedR, schema))
     val classScoreCol = if (pc == 1) "match_score" else "nomatch_score"
-    var allGood = false
-    var totalFlipped = 0L
-    // per-set flip counts accumulate DRIVER-side (r12): every set is
-    // powerset-bounded, depth-a sets have exactly a attributes, so the
-    // old cross-depth union+groupBy re-grouped rows that were already
-    // disjoint — the per-depth census below IS the final ranking.
-    val rankingRows = scala.collection.mutable.ArrayBuffer
-      .empty[(Seq[String], Long)]
-    val flippedParts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var anyDepth = false
+    val preds = cached(model.predict(Perturb.forDepth(resolved, depths, pc, schema))
+      .withColumn("__flip", col(classScoreCol) < 0.5))
+    val census = staged(s"perturb depth 1-${depths.last}")(
+      preds.groupBy(col("alteredAttributes"))
+        .agg(count(lit(1)).as("n"),
+          sum(when(col("__flip"), 1L).otherwise(0L)).as("cnt"))
+        .collect()).map(r => (r.getSeq[String](0), r.getLong(1), r.getLong(2)))
 
-    for (a <- 1 until attrLength) {
-      val perturbations = Perturb.forDepth(resolved, a, pc, schema)
-      if (!allGood) {
-        val preds = cached(model.predict(perturbations)
-          .withColumn("__flip", col(classScoreCol) < 0.5))
-        // ONE job per depth (r12): the per-set flip census is collected
-        // directly — its marginals are the old nPert/nFlip aggregate,
-        // and its rows are the ranking entries the old code re-derived
-        // from the cache in a second distributed pass at stage 6.
-        val sets = staged(s"perturb depth $a")(
-          preds.groupBy(col("alteredAttributes"))
-            .agg(count(lit(1)).as("n"),
-              sum(when(col("__flip"), 1L).otherwise(0L)).as("cnt"))
-            .collect())
-        val nPert = sets.map(_.getLong(1)).sum
-        val nFlip = sets.map(_.getLong(2)).sum
-        if (nPert > 0) {
-          anyDepth = true
-          rankingRows ++= sets.map(r => (r.getSeq[String](0), r.getLong(2)))
-          flippedParts += preds.filter(col("__flip")).drop("__flip")
-          totalFlipped += nFlip
-          if (nFlip == nPert) allGood = true
-        }
-      } else {
-        // synthesize flipped scores for deeper levels without model calls
-        val synth = cached(perturbations
-          .withColumn("match_score", lit(if (pc == 1) 0.0 else 1.0))
-          .withColumn("nomatch_score", lit(if (pc == 1) 1.0 else 0.0)))
-        val sets = staged(s"perturb depth $a (synthesized)")(
-          synth.groupBy(col("alteredAttributes"))
-            .agg(count(lit(1)).as("cnt")).collect())
-        anyDepth = true
-        rankingRows ++= sets.map(r => (r.getSeq[String](0), r.getLong(1)))
-        flippedParts += synth
-        totalFlipped += sets.map(_.getLong(1)).sum
-      }
+    // The reference's monotonicity shortcut, replayed on the census: once
+    // every perturbation of a depth flips, deeper depths count all their
+    // perturbations as flipped (their model scores are ignored). The
+    // ranking is per set (depth-a sets have exactly a attributes) and
+    // powerset-bounded, so it stays driver-side.
+    val perDepth = census.groupMapReduce(_._1.size)(c => (c._2, c._3)) {
+      case ((n1, f1), (n2, f2)) => (n1 + n2, f1 + f2)
     }
-    if (!anyDepth) return emptyExplanation()
+    val fullFlip = depths.find(a => perDepth.get(a).exists { case (n, f) => n == f })
+      .getOrElse(Int.MaxValue)
+    val rankingRows = depths.flatMap(a => census.collect {
+      case (set, n, flips) if set.size == a => (set, if (a > fullFlip) n else flips)
+    })
+    if (rankingRows.isEmpty) return emptyExplanation()
+    val totalFlipped = rankingRows.map(_._2).sum
 
     // stage 6a: A2 aggregate rankings → probability of sufficiency.
     // The result is bounded by the attribute powerset (≤ Σ C(n,a) rows,
-    // data-size independent) and already aggregated per depth, so it
+    // data-size independent) and already aggregated per set, so it
     // assembles driver-side — exactly the reference's pandas Series —
-    // with zero additional jobs (the old union+groupBy collect here was
-    // a whole distributed pass over the per-depth prediction caches).
-    // pos = cnt / nTriangles with the same double ops Spark's
-    // Divide(cast(long), double) runs.
+    // with zero additional jobs. pos = cnt / nTriangles with the same
+    // double ops Spark's Divide(cast(long), double) runs.
     val pssRows: IndexedSeq[org.apache.spark.sql.Row] =
       rankingRows.map { case (set, cnt) =>
         org.apache.spark.sql.Row(set, cnt.toDouble / nTriangles.toDouble,
@@ -400,10 +370,9 @@ class CertaExplainer(
     val pss = localFrame(pssRows)
 
     // stage 6b: A3 saliency = base + per-attribute flip mass — driver
-    // arithmetic over the same bounded ranking rows (r12; the old
-    // explode+groupBy+join job re-read the per-depth caches a third
-    // time). flipCnt is an exact long sum; base + flipCnt/flips are the
-    // identical IEEE double ops the old column program ran.
+    // arithmetic over the same bounded ranking rows. flipCnt is an exact
+    // long sum; base + flipCnt/flips are the identical IEEE double ops
+    // of the column program this replaced.
     val flips = (totalFlipped + nTriangles).toDouble
     val base = nTriangles / flips
     val pairAttrNames =
@@ -438,20 +407,25 @@ class CertaExplainer(
     }
     val cfSummary = localFrame(cfSummaryRows)
 
-    // stage 6d: CF examples — flipped rows restricted to summary sets
-    // (literal key set — no join), deduplicated, ordered by set size
-    // (reference explain.py:73-77)
+    // stage 6d: CF examples — flipped rows of the summary sets (literal
+    // key set — no join), deduplicated keeping the first row in the
+    // prediction cache's partition order, stably ordered by set size
+    // (reference explain.py:73-77). Synthesized depths need no rows
+    // here: each of their sets contains a fully flipped set of the same
+    // side with the same pos, so the minimal antichain never selects one.
     val summaryKeys = cfSummaryRows.map(_.getString(2))
-    val flippedAll = flippedParts.reduce(_ unionByName _)
-    // localized: all outputs survive the finally-unpersist of the
-    // per-depth prediction caches they derive from (and, like the
-    // reference's returned pandas frames, cost nothing to re-read)
-    val cfExamples = staged("cf examples")(localize(flippedAll
-      .filter(array_join(col("alteredAttributes"), "/")
-        .isin(summaryKeys.toIndexedSeq: _*))
-      .dropDuplicates("copiedValues", "alteredAttributes", "droppedValues")
-      .withColumn("attr_count", size(col("alteredAttributes")))
-      .orderBy(col("attr_count"))))
+    val flipped = preds.filter(col("__flip") &&
+      array_join(col("alteredAttributes"), "/").isin(summaryKeys: _*)).drop("__flip")
+    val seen = scala.collection.mutable.HashSet.empty[Seq[Any]]
+    val keyIdx = Seq("copiedValues", "alteredAttributes", "droppedValues")
+      .map(flipped.schema.fieldIndex)
+    val altIdx = flipped.schema.fieldIndex("alteredAttributes")
+    val cfRows = staged("cf examples")(flipped.collect()).toIndexedSeq
+      .filter(r => seen.add(keyIdx.map(r.get)))
+      .map(r => org.apache.spark.sql.Row.fromSeq(r.toSeq :+ r.getSeq[String](altIdx).size))
+      .sortBy(_.getInt(flipped.schema.length))
+    val cfExamples = spark.createDataFrame(java.util.Arrays.asList(cfRows: _*),
+      flipped.schema.add("attr_count", org.apache.spark.sql.types.IntegerType))
 
     Explanation(saliency, pss, cfSummary, cfExamples, flaggedTriangles)
   }

@@ -12,9 +12,9 @@ import org.apache.spark.sql.functions._
   * contributes one Generator stage — explode over the cut-point
   * sequence × the {suffix-dropped, prefix-dropped} pair — so fan-out
   * (2·Σ(tokens-1) rows per record per attribute) happens executor-side.
-  * Fresh ids are `offset + rank` in a deterministic total order,
-  * assigned with a range-partitioned sort + zipWithIndex (never a
-  * single-partition global window).
+  * [[generateSubsequences]] serves bounded inputs (the explainer's 1-row
+  * probes): it collects the variants and assigns fresh ids `offset +
+  * rank` in a deterministic total order on the driver.
   */
 object Augment {
 
@@ -23,8 +23,8 @@ object Augment {
     * [[generateSubsequences]] layers the deterministic fresh-id
     * assignment on top; censuses that are id-assignment-independent
     * (q57's — its min/max are count-derived identities, asserted as
-    * such by its oracle) aggregate this frame directly and skip the
-    * global sort + zipWithIndex entirely (r12, guide §1.2).
+    * such by its oracle) aggregate this frame directly, at any source
+    * size.
     */
   def subsequenceVariants(source: DataFrame,
       attrs: Seq[String] = Nil): (DataFrame, Seq[String]) = {
@@ -54,36 +54,39 @@ object Augment {
       targetAttrs)
   }
 
-  /** G1 for one source table. `attrs` defaults to every non-id string
-    * column. Output: same schema as `source`, only generated rows,
-    * ids starting at `startId` (reference start_id = len(source)).
+  /** G1 for a bounded source table (the explainer's probe records):
+    * the variants are collected in one job. `attrs` defaults to every
+    * non-id string column. Output: a LocalRelation with the schema of
+    * `source` (id as long), only generated rows, ids starting at
+    * `startId` (reference start_id = len(source)).
+    *
+    * Ids follow the rank of each variant in the ascending total order
+    * (xxhash64(attrs, id as string), attrs…, id as string) — Spark's
+    * ordering: nulls first, strings by unsigned UTF-8 bytes — so they
+    * do not depend on partitioning.
     */
   def generateSubsequences(source: DataFrame, startId: Long,
       attrs: Seq[String] = Nil): DataFrame = {
     val (generated, targetAttrs) = subsequenceVariants(source, attrs)
-    // fresh deterministic ids: global sort (range-partitioned — no
-    // single-partition window) + zipWithIndex. The index is the row's
-    // rank in a total order, so ids are deterministic regardless of
-    // partitioning. The primary sort key is an 8-byte hash of the
-    // (attrs, old id) tuple, NOT the attribute strings themselves —
-    // range-sorting millions of document-length strings dominated the
-    // generator's cost (7 s → 1.5 s on the sf0.1 census); the string
-    // columns remain as tiebreakers so the order stays total even on
-    // hash collisions.
-    val spark = source.sparkSession
-    val sortCols =
-      xxhash64(targetAttrs.map(col) :+ col("id").cast("string"): _*) +:
-        (targetAttrs.map(col) :+ col("id").cast("string"))
-    val sorted = generated.orderBy(sortCols: _*)
+    val keyCols = targetAttrs.map(col) :+ col("id").cast("string")
+    val width = generated.columns.length
+    val rows = generated.select(col("*") +: xxhash64(keyCols: _*) +: keyCols: _*).collect()
+    val sorted = rows.sortWith { (x, y) =>
+      val c = java.lang.Long.compare(x.getLong(width), y.getLong(width))
+      if (c != 0) c < 0
+      else (width + 1 until x.length).iterator
+        .map(i => graft.operators.SparkOrder.compareStrings(x.getString(i), y.getString(i)))
+        .find(_ != 0).exists(_ < 0)
+    }
+    val idIdx = generated.schema.fieldIndex("id")
     val outSchema = org.apache.spark.sql.types.StructType(
-      sorted.schema.fields.map(f =>
+      generated.schema.fields.map(f =>
         if (f.name == "id") f.copy(dataType = org.apache.spark.sql.types.LongType)
         else f))
-    val idIdx = sorted.schema.fieldIndex("id")
-    val indexed = sorted.rdd.zipWithIndex().map { case (r, i) =>
-      org.apache.spark.sql.Row.fromSeq(r.toSeq.updated(idIdx, startId + i))
+    val out = sorted.toIndexedSeq.zipWithIndex.map { case (r, i) =>
+      org.apache.spark.sql.Row.fromSeq(r.toSeq.take(width).updated(idIdx, startId + i))
     }
-    spark.createDataFrame(indexed, outSchema)
+    source.sparkSession.createDataFrame(java.util.Arrays.asList(out: _*), outSchema)
   }
 
   /** G2 expand_copies (reference local_explain.py:237-302): the same

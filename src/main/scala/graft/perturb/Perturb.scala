@@ -18,15 +18,15 @@ import graft.schema.PairSchema
   * (triangles_method.py:278-292) building pandas frames; here the whole
   * triangles frame flows through one declarative plan: resolve the
   * three vertex records once (triangles are bounded by num_triangles,
-  * so they broadcast and the sources stream — the only shape that
-  * survives 100 TB sources), then per depth explode a literal subset
-  * array and select each attribute through `when(array_contains(...))`
-  * — Generator + Project fused by whole-stage codegen, no driver
-  * fan-out, linear in |triangles| × C(#attrs, depth).
+  * so their records are fetched with one filtered scan per source and
+  * assembled driver-side), then explode one literal array holding the
+  * subsets of every requested depth and select each attribute through
+  * `when(array_contains(...))` — a single Generate + Project fused by
+  * whole-stage codegen, no driver fan-out, linear in |triangles| ×
+  * Σ C(#attrs, depth).
   *
-  * [[resolve]] is depth-independent; the explainer caches its two
-  * frames so the per-depth loop replays only the explode+project, not
-  * the source joins.
+  * [[resolve]] is depth-independent; the explainer generates every
+  * lattice depth from one resolution in one [[forDepth]] call.
   */
 object Perturb {
 
@@ -40,8 +40,8 @@ object Perturb {
     * record's side. `left`/`right` carry columns `u,v,w` plus
     * `__u_<attr>`, `__w_<attr>` (free-side schema) and `__v_<attr>`
     * (pivot-side schema). Both frames are bounded LocalRelations
-    * (|triangles| rows), so downstream per-depth consumers replay
-    * nothing against the sources.
+    * (|triangles| rows), so the lattice pass replays nothing against
+    * the sources.
     */
   final case class ResolvedTriangles(
       left: DataFrame, right: DataFrame,
@@ -126,15 +126,18 @@ object Perturb {
       lAttrs, rAttrs)
   }
 
-  /** Generate all perturbations for one lattice depth from resolved
-    * triangles: explode + project only — no joins, no source scans.
+  /** Generate all perturbations for a range of lattice depths from
+    * resolved triangles: one explode + project over every depth's
+    * subsets — no joins, no source scans, no per-depth union. Each
+    * triangle row emits its subsets depth by depth, in combinations
+    * order.
     *
     * @return pair rows (ltable_* / rtable_* attrs, no ids) ⊕
     *         alteredAttributes, droppedValues, copiedValues, triangle
     */
   def forDepth(
       resolved: ResolvedTriangles,
-      depth: Int,
+      depths: Range,
       classToExplain: Int,
       schema: PairSchema): DataFrame = {
 
@@ -147,7 +150,8 @@ object Perturb {
 
       val (freeRole, donorRole) = if (classToExplain == 1) ("u", "w") else ("w", "u")
 
-      val prefixedSubsets = subsets(freeAttrs.map(freePrefix + _), depth)
+      val prefixedSubsets: Seq[Seq[String]] =
+        depths.flatMap(subsets(freeAttrs.map(freePrefix + _), _))
       val exploded = joined.withColumn("alteredAttributes",
         explode(typedLit(prefixedSubsets)))
 
@@ -190,5 +194,6 @@ object Perturb {
       depth: Int,
       classToExplain: Int,
       schema: PairSchema = PairSchema.default): DataFrame =
-    forDepth(resolve(triangles, lsource, rsource, schema), depth, classToExplain, schema)
+    forDepth(resolve(triangles, lsource, rsource, schema), depth to depth, classToExplain,
+      schema)
 }

@@ -408,7 +408,9 @@ object Ann {
           col("__na") * col("__nb")).as("cosine"))
     val idType = df.schema(idCol).dataType
     if (graft.operators.TopK.integralKeyType(idType))
-      graft.operators.TopK.topKPerGroup(scored, Seq("__pid"),
+      // a null or dimension-mismatched embedding scores a null cosine:
+      // it ranks no neighbour (TopK's scores are non-nullable)
+      graft.operators.TopK.topKPerGroup(scored.filter(col("cosine").isNotNull), Seq("__pid"),
           col("cosine"), col(idCol), k)
         .select(col("__pid").as(probeIdCol), col("rank"),
           col("id").cast(idType).as(idCol), col("score").as("cosine"))

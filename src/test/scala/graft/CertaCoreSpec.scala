@@ -211,6 +211,37 @@ class CertaCoreSpec extends SparkSpec {
     val _ = LshBlockingGenerator
   }
 
+  test("an explanation runs its post-search stages in a bounded number of jobs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // jobs of this thread only: other suites share the session
+    val tag = s"certa-job-budget-${java.util.UUID.randomUUID}"
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("graft.spec.tag") == tag)
+          descs.add(String.valueOf(e.properties.getProperty("spark.job.description")))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.spec.tag", tag)
+    try {
+      // a non-match whose support is short: walks the G2 fallback as well
+      new CertaExplainer(lsource, rsource).explain(rec(lsource, 0), rec(rsource, 2),
+        TokenCosineModel(), numTriangles = 6)
+      assert(org.apache.spark.GraftCoreBridge.flushListenerBus(sc))
+    } finally {
+      sc.setLocalProperty("graft.spec.tag", null)
+      sc.removeSparkListener(listener)
+    }
+    val jobs = scala.jdk.CollectionConverters.CollectionHasAsScala(descs).asScala.toSeq
+    def count(desc: String): Int = jobs.count(_ == desc)
+    assert(count("certa: source max ids") > 0, jobs)
+    assert(count("certa: augment") <= 2, jobs) // one per probe record
+    assert(count("certa: triangle discovery") === 0, jobs)
+    assert(jobs.count(_.startsWith("certa: perturb depth")) <= 3, jobs)
+    assert(count("certa: cf examples") <= 1, jobs)
+  }
+
   test("end-to-end explain on a matched pair") {
     val model = TokenCosineModel()
     val explainer = new CertaExplainer(lsource, rsource)

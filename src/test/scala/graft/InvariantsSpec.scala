@@ -112,6 +112,16 @@ class InvariantsSpec extends SparkSpec {
     val ids = gen.select("id").as[Long].collect().sorted.toSeq
     assert(ids === Seq(100L, 101L, 102L, 103L))
     gen.unpersist()
+    // ids are ranks in Spark's own (xxhash64(attrs, id), attrs, id) order
+    val two = Seq((7L, "a b c", "x y"), (8L, "é b ü", "x"), (9L, "ü b", null))
+      .toDF("id", "name", "city")
+    val (variants, attrs) = Augment.subsequenceVariants(two)
+    val keys = attrs.map(col) :+ col("id").cast("string")
+    val ranked = variants.orderBy(xxhash64(keys: _*) +: keys: _*)
+      .select(attrs.map(col): _*).collect().toSeq
+    val assigned = Augment.generateSubsequences(two, startId = 100L)
+    assert(assigned.orderBy("id").select(attrs.map(col): _*).collect().toSeq === ranked)
+    assert(assigned.select("id").as[Long].collect().sorted.toSeq === (100L until 100L + ranked.size))
   }
 
   test("eval driver computes per-pair CF metrics with memoized sinks") {

@@ -1350,6 +1350,21 @@ class PipelineSpec extends SparkSpec {
     assert(twoPhase.size === 4 * 5)
   }
 
+  test("knn join: null and dimension-mismatched embeddings rank no neighbour") {
+    val rnd = new scala.util.Random(5)
+    val good = Seq.tabulate(12)(i => (i.toLong, Seq.fill(4)(rnd.nextFloat() * 2f - 1f)))
+    val embs = (good ++ Seq((100L, null), (101L, Seq(1f, 2f)))).toDF("vec_id", "embedding")
+    val probes = embs.filter(col("vec_id") < 3 || col("vec_id") >= 100)
+      .select(col("vec_id").as("probe_id"), col("embedding"))
+    def knn(corpus: DataFrame) = Ann.knnJoin(corpus, "embedding", "vec_id", probes,
+        "probe_id", "embedding", k = 3)
+      .collect().map(r2 => (r2.getLong(0), r2.getInt(1), r2.getLong(2), r2.getDouble(3))).toSet
+    val got = knn(embs)
+    // the malformed rows neither rank as neighbours nor get any as probes
+    assert(got === knn(embs.filter(col("vec_id") < 100)))
+    assert(got.map(_._1) === Set(0L, 1L, 2L) && got.size === 3 * 3)
+  }
+
   test("knnGraph: cell-local edges equal brute force when cells are lossless") {
     // positive scalings of one direction share every hyperplane sign →
     // one family per LSH cell, so the bucketed graph loses nothing and
