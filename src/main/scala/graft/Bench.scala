@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark entry point: runs every registered query on
   * SPARK_GRAFT_SF_DIR, prints one JSON line with per-query seconds.
   * A warm-up pass on a trivial plan first amortizes JVM/codegen
@@ -11,28 +9,18 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     // scratch on tmpfs: streaming checkpoints fsync per micro-batch and
     // spills share the device — route them off the (contended) root disk
     // so timings measure the engine, not the host's IO queue
-    val scratch = graft.tools.Scratch.route("graft-bench-")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = Session.local(cpus, scratchPrefix = Some("graft-bench-"),
       // conf-registered (NOT addListener): streaming queries run on
       // ConfScope forks, whose managers deliver progress events only
       // to their own session's listeners — the class-name route makes
       // every session (forks included) attach an instance, and the
       // companion accumulates the totals across them
-      .config("spark.sql.streaming.streamingQueryListeners",
-        "graft.tools.BenchStreamMetrics")
-    scratch.foreach(d => builder.config("spark.local.dir", d))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      conf = Map("spark.sql.streaming.streamingQueryListeners" ->
+        "graft.tools.BenchStreamMetrics"))
 
     // warm-up: schema read + one small shuffle + codegen paths
     try {
@@ -90,7 +78,7 @@ object Bench {
     // shows intermittent external contention (round-3's recording was
     // inflated up to 17× by it), and a query's first executions also pay
     // JIT compilation of its generated code — measured convergence takes
-    // 2-3 executions for the sketch-heavy censuses (QLoop: q32 ran
+    // 2-3 executions for the sketch-heavy censuses (q32 ran
     // 9.2/7.8/1.7/1.8 s in one JVM). Min-of-3 measures the code, not
     // the JIT or the neighbor; all raw runs are emitted for
     // transparency.

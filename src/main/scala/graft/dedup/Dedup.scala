@@ -620,13 +620,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("distance"))
   }
 
-  /** [[simhashNearDuplicates]] over the portable 60-bit signature. */
-  def simhashNearDuplicatesPortable(df: DataFrame, textCol: String, idCol: String,
-      maxDistance: Int = 8, prefixBits: Int = 16): DataFrame =
-    simhashNearDuplicatesFromSigs(
-      df.select(col(idCol), simhashPortable(col(textCol)).as("sig")),
-      idCol, maxDistance, prefixBits, bits = 60)
-
   /** [[simhashNearDuplicatesComplete]] `numBlocks` sentinel: size the
     * block count to the corpus via [[autoBlocks]] (one count job).
     */

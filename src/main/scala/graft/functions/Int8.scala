@@ -7,7 +7,8 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** Fused int8-quantized cosine scoring. The declarative formulation
-  * ([[graft.similarity.Ann.int8Codes]] + `int8Cosine`) composes
+  * ([[graft.similarity.Ann.int8Codes]] + an integer-dot cosine; the
+  * specs keep it as `ReferenceTwins.int8TopKDeclarative`) composes
   * `transform`/`aggregate`/`zip_with` — higher-order functions are
   * CodegenFallback in Spark: every row pays lambda interpretation over
   * every dimension, three times (codes, self-dot, probe-dot). This

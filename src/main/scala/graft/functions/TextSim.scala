@@ -44,14 +44,6 @@ object TextSim {
     */
   def tokenCosine(a: Column, b: Column): Column = TokenBagCosine(a, b)
 
-  /** U4 token-set difference (reference utils.py:75-81): words of `a`
-    * not in `b`, plus words of `b` not in `a` — pure built-ins.
-    */
-  def tokenDiff(a: Column, b: Column): Column =
-    concat(
-      array_except(split(a, " "), split(b, " ")),
-      array_except(split(b, " "), split(a, " ")))
-
   /** Whitespace-joined record text for similarity scoring (reference
     * record_to_text, local_explain.py:140-141), excluding bookkeeping
     * columns. Null attribute values render as empty (reference

@@ -62,13 +62,6 @@ object ConfScope {
   def shufflePartitions(df: DataFrame, n: Int): DataFrame =
     GraftSqlBridge.withSession(df, fork(df.sparkSession, n))
 
-  /** A session forked from `parent` with `spark.sql.shuffle
-    * .partitions = n` — for call sites that BUILD frames (readStream,
-    * createDataFrame) rather than transform one.
-    */
-  def sessionWithShufflePartitions(parent: SparkSession, n: Int): SparkSession =
-    fork(parent, n)
-
   /** Re-bind `df` to `session` — the exit edge of a scope: a survivor
     * frame computed under a sized fork returns to the caller's session
     * so downstream stages plan at the caller's own width.

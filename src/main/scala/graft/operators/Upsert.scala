@@ -65,15 +65,26 @@ object Upsert {
       .distinct().collect().map(_.getString(0)).sorted.toSeq
     val current = spark.read.parquet(tableDir)
       .filter(col(partCol).isin(touched: _*))
-    val merged = upsert(current, updates, keys).localCheckpoint()
-    val pinned = merged.queryExecution.analyzed match {
+    overwriteMaterialized(upsert(current, updates, keys)) {
+      _.write.option("partitionOverwriteMode", "dynamic")
+        .mode("overwrite").partitionBy(partCol).parquet(tableDir)
+    }
+    touched
+  }
+
+  /** Materialize `df` (eager localCheckpoint), run `write` on the
+    * materialized rows, and release the checkpoint once `write` returns
+    * or throws — for writes that overwrite the very files `df` reads:
+    * the read completes before the first byte is staged.
+    */
+  def overwriteMaterialized(df: DataFrame)(write: DataFrame => Unit): Unit = {
+    val m = df.localCheckpoint()
+    val pinned = m.queryExecution.analyzed match {
       case l: org.apache.spark.sql.execution.LogicalRDD => Some(l.rdd)
       case _ => None
     }
-    try merged.write.option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").partitionBy(partCol).parquet(tableDir)
+    try write(m)
     finally pinned.foreach(_.unpersist(blocking = false))
-    touched
   }
 
   /** Change census for audit/monitoring: one row with how many keys the

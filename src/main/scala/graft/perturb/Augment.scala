@@ -88,17 +88,4 @@ object Augment {
     }
     source.sparkSession.createDataFrame(java.util.Arrays.asList(out: _*), outSchema)
   }
-
-  /** G2 expand_copies (reference local_explain.py:237-302): the same
-    * prefix/suffix perturbation applied to just the two probe records,
-    * emitting synthetic source records with fresh ids. Operates on two
-    * 1-row frames — the fan-out is tiny, but the same generator is
-    * reused so semantics stay aligned.
-    */
-  def expandCopies(lRecord: DataFrame, rRecord: DataFrame,
-      lStartId: Long, rStartId: Long): (DataFrame, DataFrame) = {
-    val genLeft = generateSubsequences(lRecord, lStartId)
-    val genRight = generateSubsequences(rRecord, rStartId)
-    (genLeft, genRight)
-  }
 }

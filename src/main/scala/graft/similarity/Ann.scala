@@ -88,22 +88,6 @@ object Ann {
     graft.functions.VecMath.lshBucketPortable(
       emb, portablePlaneWeights(numPlanes, dim))
 
-  /** Declarative twin of [[lshBucketPortable]] (numPlanes separate
-    * zip_with/aggregate folds) — the form the SQL oracles replay and
-    * the parity baseline for the fused expression.
-    */
-  def lshBucketPortableDeclarative(emb: Column, dim: Int,
-      numPlanes: Int = 8): Column = {
-    val w = portablePlaneWeights(numPlanes, dim)
-    val bits = (0 until numPlanes).map { p =>
-      val proj = aggregate(
-        zip_with(emb, typedLit(w(p).toIndexedSeq), (x, wi) => x.cast("double") * wi),
-        lit(0.0), (acc, v) => acc + v)
-      when(proj >= 0, shiftleft(lit(1L), p)).otherwise(0L)
-    }
-    bits.reduce(_ bitwiseOR _)
-  }
-
   /** Sign bits of `numPlanes` random-hyperplane projections → LSH bucket
     * id. Vectors with equal buckets are cosine-close with high
     * probability.
@@ -304,20 +288,6 @@ object Ann {
         .otherwise(floor(x.cast("double") * 127.0 / mx + 0.5).cast("int")))
   }
 
-  /** Integer dot product of two int8 code arrays, accumulated in long
-    * (max |dot| = dims · 127² — overflow needs 5.7e14 dims).
-    */
-  def int8Dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x * y).cast("long")),
-      lit(0L), (acc, v) => acc + v)
-
-  /** Cosine over int8 codes — the scale-free quantized similarity. */
-  def int8Cosine(a: Column, b: Column): Column = {
-    val den2 = int8Dot(a, a) * int8Dot(b, b)
-    when(den2 === 0L, 0.0)
-      .otherwise(int8Dot(a, b).cast("double") / sqrt(den2.cast("double")))
-  }
-
   /** Quantize a probe vector driver-side with the identical formula. */
   def int8CodesLocal(v: Seq[Float]): Seq[Int] = {
     val mx = v.map(x => math.abs(x.toDouble)).foldLeft(0.0)(math.max)
@@ -337,21 +307,6 @@ object Ann {
     val base = excludeId.fold(df)(id => df.filter(col(idCol) =!= id))
     base.select(col(idCol),
         graft.functions.Int8Cosine(col(embCol), probeCodes).as("qcosine"))
-      .orderBy(col("qcosine").desc, col(idCol).asc)
-      .limit(k)
-  }
-
-  /** Declarative twin of [[int8TopK]] (higher-order-function folds —
-    * CodegenFallback, so ~3 interpreted lambda passes per row; kept as
-    * the equivalence-spec surface and the formulation the SQL oracle
-    * replays).
-    */
-  def int8TopKDeclarative(df: DataFrame, embCol: String, idCol: String,
-      probe: Seq[Float], k: Int, excludeId: Option[Long] = None): DataFrame = {
-    val probeCodes = typedLit(int8CodesLocal(probe))
-    val base = excludeId.fold(df)(id => df.filter(col(idCol) =!= id))
-    base.select(col(idCol), int8Codes(col(embCol)).as("__codes"))
-      .select(col(idCol), int8Cosine(col("__codes"), probeCodes).as("qcosine"))
       .orderBy(col("qcosine").desc, col(idCol).asc)
       .limit(k)
   }

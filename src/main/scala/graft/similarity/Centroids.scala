@@ -70,15 +70,6 @@ object Centroids {
   def sqDistLong(a: Column, b: Column): Column =
     graft.functions.SqDistLong(a, b)
 
-  /** Declarative twin of [[sqDistLong]] (zip_with + aggregate) — kept
-    * for the value-equivalence spec; identical long ops in identical
-    * order.
-    */
-  def sqDistLongDeclarative(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => { val d = x - y; d * d }),
-      lit(0L), (acc, v) => acc + v)
-
   /** Assignment step over integer vectors: nearest centroid by exact
     * integer distance, ties to the smaller centroid id — the same
     * literal-fold, scan-local shape as [[assign]] (corpus never

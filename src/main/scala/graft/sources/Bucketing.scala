@@ -33,12 +33,6 @@ object Bucketing {
       .format("parquet")
       .saveAsTable(table)
 
-  /** Read a bucketed table back (bucket metadata flows from the
-    * catalog; the reader plans bucket-aligned scans automatically).
-    */
-  def readBucketed(spark: SparkSession, table: String): DataFrame =
-    spark.table(table)
-
   /** Equi-join two same-key bucketed tables. With equal bucket counts
     * the planner aligns buckets and the join carries no Exchange on
     * either side; [[graft.BucketingSpec]] pins that plan property.

@@ -431,8 +431,8 @@ object StreamingOps {
     * store, no watermark, re-bootstrap = drop the directory. The merge
     * is a full-outer join of two aggregate-sized frames (broadcast
     * scale); the merged result is MATERIALIZED (eager localCheckpoint)
-    * before overwriting its own read path — the [[graft.operators
-    * .Upsert.upsertPartitioned]] crash-window rule.
+    * before overwriting its own read path
+    * ([[graft.operators.Upsert.overwriteMaterialized]]).
     */
   def incrementalStatsStream(docs: DataFrame, keyCol: String,
       aggs: Seq[(String, org.apache.spark.sql.Column)], tableDir: String)(
@@ -459,13 +459,9 @@ object StreamingOps {
               (coalesce(col(s"__o_$n"), lit(0L))
                 + coalesce(col(s"__b_$n"), lit(0L))).as(n)): _*)
         }
-      val m = merged.localCheckpoint()
-      val pinned = m.queryExecution.analyzed match {
-        case l: org.apache.spark.sql.execution.LogicalRDD => Some(l.rdd)
-        case _ => None
+      graft.operators.Upsert.overwriteMaterialized(merged) {
+        _.coalesce(1).write.mode("overwrite").parquet(tableDir)
       }
-      try m.coalesce(1).write.mode("overwrite").parquet(tableDir)
-      finally pinned.foreach(_.unpersist(blocking = false))
       onBatch(id)
     }.start()
   }
@@ -538,11 +534,10 @@ object StreamingOps {
     * store, no watermark, corpus-lifetime history.
     *
     * The table rewrites whole per batch (materialized first —
-    * [[graft.operators.Upsert.upsertPartitioned]]'s read-then-
-    * overwrite rule); dimensions are small next to facts, and a
-    * partition-scoped write (bucket `valid_from` into the partition
-    * column: closed versions never change again) is the drop-in when
-    * they are not.
+    * [[graft.operators.Upsert.overwriteMaterialized]]); dimensions are
+    * small next to facts, and a partition-scoped write (bucket
+    * `valid_from` into the partition column: closed versions never
+    * change again) is the drop-in when they are not.
     */
   def scd2Stream(changes: DataFrame, tableDir: String, keys: Seq[String],
       attrs: Seq[String], versionCol: String): org.apache.spark.sql.streaming.StreamingQuery =
@@ -561,13 +556,10 @@ object StreamingOps {
         else {
           val table = spark.read.parquet(tableDir)
           val next = graft.operators.Scd2.apply(table,
-            latest.drop(versionCol), keys, attrs, asOf).localCheckpoint()
-          val pinned = next.queryExecution.analyzed match {
-            case l: org.apache.spark.sql.execution.LogicalRDD => Some(l.rdd)
-            case _ => None
+            latest.drop(versionCol), keys, attrs, asOf)
+          graft.operators.Upsert.overwriteMaterialized(next) {
+            _.write.mode("overwrite").parquet(tableDir)
           }
-          try next.write.mode("overwrite").parquet(tableDir)
-          finally pinned.foreach(_.unpersist(blocking = false))
         }
       }
     }.start()

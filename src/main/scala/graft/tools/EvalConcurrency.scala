@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Explainer concurrency at the reference eval-loop scale (eval.py:69
@@ -33,15 +32,9 @@ object EvalConcurrency {
         |  </pool>
         |</allocations>""".stripMargin)
 
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.scheduler.allocation.file", alloc.toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(32, logLevel = "ERROR", conf = Map(
+      "spark.scheduler.mode" -> "FAIR",
+      "spark.scheduler.allocation.file" -> alloc.toString))
     import spark.implicits._
 
     val part = graft.sources.Tables.load(spark, sfDir, "part")

@@ -1,31 +1,21 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
 /** Dev probe (r11): per-query job census — how many Spark jobs a query
   * fires and where the wall clock goes between them. Scheduling-bound
   * queries (wall >> task time) show up as many short jobs with gaps.
+  * Runs under Bench's session settings ([[graft.Session]]).
   * Usage: runMain graft.tools.JobProfile <queryName> [queryName...]
   */
 object JobProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val scratch = Scratch.route("graft-jobprofile-")
-    val builder = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("JP_AQE", "true"))
-      .config("spark.sql.codegen.wholeStage", sys.env.getOrElse("JP_WSCG", "true"))
-      .config("spark.sql.codegen.factoryMode", sys.env.getOrElse("JP_FACTORY", "CODEGEN_ONLY"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    scratch.foreach(d => builder.config("spark.local.dir", d))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.Session.local(cpus,
+      scratchPrefix = Some("graft-jobprofile-"), logLevel = "ERROR")
 
     final case class J(id: Int, submitted: Long, var completed: Long = 0L,
       var tasks: Int = 0, var taskMs: Long = 0L, desc: String = "")

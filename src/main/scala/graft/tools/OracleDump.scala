@@ -3,21 +3,15 @@ package graft.tools
 /** Dump `SparkEntry.oracleSql` to a JSON file without running any
   * query (no SparkSession) — the fast path for iterating on an oracle's
   * DuckDB-side form with `tools/compare_oracle.py` or a direct duckdb
-  * shell, instead of paying a full Verify run per edit.
+  * shell, instead of paying a full Verify run per edit. Writes the same
+  * file Verify writes as `oracle_sql.json`.
   *
   * Usage: runMain graft.tools.OracleDump <outFile>
   */
 object OracleDump {
   def main(args: Array[String]): Unit = {
     val out = if (args.nonEmpty) args(0) else "/tmp/oracle_sql.json"
-    def esc(s: String): String = s
-      .replace("\\", "\\\\").replace("\"", "\\\"")
-      .replace("\n", "\\n").replace("\r", "\\r").replace("\t", "\\t")
-    val body = graft.SparkEntry.oracleSql.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""${esc(k)}": "${esc(v)}"""" }
-      .mkString("{\n", ",\n", "\n}")
-    java.nio.file.Files.write(java.nio.file.Paths.get(out),
-      body.getBytes("UTF-8"))
+    graft.Verify.writeOracleSql(out)
     println(s"[oracle-dump] wrote ${graft.SparkEntry.oracleSql.size} oracles to $out")
   }
 }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.explain.CertaExplainer
 import graft.matcher.TokenCosineModel
@@ -31,13 +31,7 @@ object ParityDump {
   def main(args: Array[String]): Unit = {
     val nt = args(0).toInt
     val out = args(1)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(8, logLevel = "ERROR")
     val dir = "/root/testdata/sf0.001"
 
     val n = Tables.load(spark, dir, "nation")

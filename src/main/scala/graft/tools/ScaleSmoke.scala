@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.dedup.Dedup
 import graft.text.TextAnalysis
@@ -19,10 +19,7 @@ import graft.text.TextAnalysis
 object ScaleSmoke {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
+    val spark = graft.Session.local(32, logLevel = "ERROR", conf = Map(
       // The 10M-doc finding this line records: with shuffles PINNED at
       // 32 partitions, the shingle-verify join at 2048× (10.24M docs)
       // dies with "Can't acquire 1073741824 bytes to build hash
@@ -33,11 +30,8 @@ object ScaleSmoke {
       // data, never be a constant of the harness.
       // env-gated so the width-vs-scale trade is itself measurable
       // (SMOKE_INIT_PARTS=32 reproduces the pinned-width death)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SMOKE_INIT_PARTS", "1024"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+      "spark.sql.adaptive.coalescePartitions.initialPartitionNum" ->
+        sys.env.getOrElse("SMOKE_INIT_PARTS", "1024")))
 
     def corpus(mult: Int): DataFrame = {
       val base = spark.read.parquet(s"$sfDir/documents.parquet")

@@ -70,6 +70,8 @@ class GoldenExplainerSpec extends SparkSpec {
     assert(GoldenLive.bySf.contains(GoldenLive.verifySf))
     assert(ErQueries.oracles("q25_certa_saliency")
       .startsWith("SELECT * FROM (VALUES"))
+    // smoke contract: the flagship entry query returns rows
+    assert(SparkEntry.entry(spark).count() > 0)
   }
 
   test("golden VALUES oracles carry the same rows the constants do") {

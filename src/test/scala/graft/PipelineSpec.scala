@@ -600,7 +600,7 @@ class PipelineSpec extends SparkSpec {
     // near-dup (doc 5, one token changed) closer than a different language
     assert(ham(sigs(0L), sigs(5L)) < ham(sigs(0L), sigs(3L)))
     // portable near-dup scan agrees with the xxhash64 scan on exact dups
-    val p = Dedup.simhashNearDuplicatesPortable(docs, "text", "doc_id",
+    val p = ReferenceTwins.simhashNearDuplicatesPortable(docs, "text", "doc_id",
       maxDistance = 0, prefixBits = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(p.contains((0L, 1L)))
@@ -1455,7 +1455,7 @@ class PipelineSpec extends SparkSpec {
     def rows(d: org.apache.spark.sql.DataFrame) =
       d.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val fused = rows(Ann.int8TopK(embs, "embedding", "vec_id", probe, k = 50))
-    val decl = rows(Ann.int8TopKDeclarative(embs, "embedding", "vec_id", probe, k = 50))
+    val decl = rows(ReferenceTwins.int8TopKDeclarative(embs, "embedding", "vec_id", probe, k = 50))
     assert(fused === decl) // exact double equality, all 50 rows
   }
 
@@ -1553,7 +1553,7 @@ class PipelineSpec extends SparkSpec {
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(
       buckets(e => Ann.lshBucketPortable(e, 12, numPlanes = 6)) ===
-      buckets(e => Ann.lshBucketPortableDeclarative(e, 12, numPlanes = 6)))
+      buckets(e => ReferenceTwins.lshBucketPortableDeclarative(e, 12, numPlanes = 6)))
     // degenerate inputs follow the declarative bucket-0 fall-through
     val weird = Seq(
       (1L, null.asInstanceOf[Seq[Float]]),   // null array
@@ -1562,7 +1562,7 @@ class PipelineSpec extends SparkSpec {
     ).toDF("id", "emb")
     val wf = buckets2(weird, e => Ann.lshBucketPortable(e, 12, 6))
     assert(wf === buckets2(weird,
-      e => Ann.lshBucketPortableDeclarative(e, 12, 6)))
+      e => ReferenceTwins.lshBucketPortableDeclarative(e, 12, 6)))
     assert(wf(1L) === 0L && wf(2L) === 0L && wf(3L) === 63L)
     // signature agreement over string arrays, including unequal
     // lengths (pad counts 0) and null elements
@@ -1911,8 +1911,11 @@ class PipelineSpec extends SparkSpec {
     val p1Before = files("p1")
     val p2Before = files("p2")
     val batch = Seq((2L, "b2", "p0"), (9L, "new", "p0")).toDF("id", "v", "part")
+    val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet
     val touched = Upsert.upsertPartitioned(spark, base, batch, Seq("id"), "part")
     assert(touched === Seq("p0"))
+    // the materialized merge is released once the overwrite commits
+    assert(spark.sparkContext.getPersistentRDDs.keySet === pinnedBefore)
     // untouched partitions: the exact same files, never rewritten
     assert(files("p1") === p1Before)
     assert(files("p2") === p2Before)
@@ -2456,7 +2459,7 @@ class PipelineSpec extends SparkSpec {
     val df = rows.toDF("id", "a", "b")
     val diff = df.select(
         graft.similarity.Centroids.sqDistLong(col("a"), col("b")).as("f"),
-        graft.similarity.Centroids.sqDistLongDeclarative(col("a"), col("b"))
+        ReferenceTwins.sqDistLongDeclarative(col("a"), col("b"))
           .as("d"))
       .filter(col("f") =!= col("d")).count()
     assert(diff === 0L)

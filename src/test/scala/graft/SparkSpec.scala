@@ -9,18 +9,13 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    // set from birth, not at first events read: suites run in parallel
-    // threads, and a thread without an active session resolves parquet
-    // schemas against DEFAULT conf values (ts → TIMESTAMP_NTZ flake)
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+  // ERROR matches src/test/resources/log4j2.properties; nanosAsLong is
+  // set from birth by Session.local — suites run in parallel threads,
+  // and a thread without an active session resolves parquet schemas
+  // against DEFAULT conf values (ts → TIMESTAMP_NTZ flake)
+  lazy val session: SparkSession = Session.local(4, logLevel = "ERROR", conf = Map(
+    "spark.app.name" -> "graft-test",
     // managed tables (BucketingSpec) must never land in the repo tree
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-    .getOrCreate()
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft-warehouse").toString))
 }

@@ -407,6 +407,7 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[(Long, String, String)]
     val docs = input.toDF().toDF("doc_id", "text", "source")
     val table = java.nio.file.Files.createTempDirectory("istats").toString + "/t"
+    val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet
     val q = StreamingOps.incrementalStatsStream(docs, "source", Seq(
       "n_docs" -> count(lit(1)),
       "sum_tokens" -> sum(org.apache.spark.sql.functions.size(
@@ -418,6 +419,8 @@ class StreamingSpec extends SparkSpec {
       input.addData((3L, "f", "s1"), (4L, "g h i j", "s3"))
       q.processAllAvailable()
     } finally q.stop()
+    // each batch's materialized merge is released after its overwrite
+    assert(spark.sparkContext.getPersistentRDDs.keySet === pinnedBefore)
     val got = spark.read.parquet(table).orderBy("source")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     assert(got.toSeq === Seq(
