@@ -23,13 +23,20 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
-      // query-internal caches (census stages, LSH keys, IVF assignment)
-      // must not accumulate across the 40+ query catalog
-      spark.catalog.clearCache()
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      }
+      // query-internal caches (census stages, LSH keys, IVF assignment)
+      // must not accumulate across the catalog; a block that survives
+      // clearCache has no owner left — report it against this query,
+      // then free it so the next query is measured on its own
+      spark.catalog.clearCache()
+      val leaked = spark.sparkContext.getPersistentRDDs.values
+      if (leaked.nonEmpty) {
+        System.err.println(s"[verify] LEAK $name: ${leaked.size} pinned RDDs")
+        leaked.foreach(_.unpersist(blocking = false))
       }
     }
     writeOracleSql(s"$outDir/oracle_sql.json")

@@ -1,8 +1,10 @@
 package graft.dedup
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.Pinned
 
 /** Distributed connected components over an undirected edge list —
   * the cluster-resolution step that turns near-duplicate PAIRS
@@ -28,6 +30,10 @@ import org.apache.spark.sql.functions._
   * the next round materializes; the RETURNED mapping is persisted and
   * caller-owned (unpersist when done — the library itself pins
   * nothing beyond it, same ownership contract as `IvfIndex`).
+  *
+  * The dedup operators never hold a mapping: they end in
+  * [[dropLosers]], which applies a survivorship rule, pins only the
+  * loser ids and releases the mapping before returning.
   */
 object Components {
 
@@ -59,32 +65,22 @@ object Components {
       driverEdgeThreshold: Long = 1L << 20,
       roundObserver: (Int, Long) => Unit = (_, _) => ()): DataFrame = {
     val spark = edges.sparkSession
-    val schema = edges
-      .select(col(aCol).as("u"), col(bCol).as("v")).schema
     // Each round must TRUNCATE lineage, not just cache: both star
     // passes reference their input twice (self-union / self-window),
     // so composed plans grow ~4× per round — exponential in rounds,
-    // an OOM at plan-stringification long before execution. Pinning
-    // the round's rows as an RDD and rebuilding a DataFrame over it
-    // keeps every round's plan constant-size; the RDD handle gives
-    // deterministic block release (unlike localCheckpoint, whose
-    // blocks only die on GC).
-    def pin(df: DataFrame): (org.apache.spark.rdd.RDD[org.apache.spark.sql.Row],
-        DataFrame) = {
-      val rdd = df.rdd.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      (rdd, spark.createDataFrame(rdd, schema))
-    }
-    var (curRdd, cur) = pin(canonical(
+    // an OOM at plan-stringification long before execution. Each
+    // round's rows are a Pinned handle: constant-size plans, blocks
+    // filled inside the round's checksum job, released by close().
+    var cur = Pinned(canonical(
       edges.select(col(aCol).as("u"), col(bCol).as("v"))))
-    var curSum = checksum(cur)
-    val longIds = schema.fields.forall(
+    var curSum = checksum(cur.df)
+    val longIds = cur.df.schema.fields.forall(
       _.dataType == org.apache.spark.sql.types.LongType)
     if (longIds && curSum._1 <= driverEdgeThreshold) {
       // driver union-find over the pinned canonical edges (reads the
       // persisted blocks — no recompute of the edge lineage)
-      val rows = cur.collect()
-      curRdd.unpersist(blocking = false)
+      val rows = cur.df.collect()
+      cur.close()
       val parent = new java.util.HashMap[Long, Long]()
       def find(x: Long): Long = {
         var r = x
@@ -122,26 +118,93 @@ object Components {
     var converged = false
     var it = 0
     while (!converged && it < maxIter) {
-      val (nextRdd, next) = pin(canonical(smallStar(largeStar(cur))))
-      val nextSum = checksum(next) // materializes next's blocks
-      curRdd.unpersist(blocking = false)
+      val next = Pinned(canonical(smallStar(largeStar(cur.df))))
+      val nextSum = checksum(next.df) // materializes next's blocks
+      cur.close()
       converged = nextSum == curSum
-      curRdd = nextRdd
       cur = next
       curSum = nextSum
       it += 1
       roundObserver(it, nextSum._1)
     }
     // converged edges are stars (child, componentMin)
-    val mapping = cur
+    val mapping = cur.df
       .select(col("u").as("id"), col("v").as("rep"))
-      .union(cur.select(col("v").as("id"), col("v").as("rep")))
+      .union(cur.df.select(col("v").as("id"), col("v").as("rep")))
       .distinct()
       .persist()
     mapping.count() // pin before releasing the final iteration frame
-    curRdd.unpersist(blocking = true)
+    cur.close()
     mapping
   }
+
+  // ------------------------------------------------- closure to losers
+  /** Closure to losers — the step every dedup operator ends in, and
+    * the one place its output is pinned. Closes `edges` into
+    * components, lets the survivorship `rule` turn the (id, rep)
+    * mapping into loser ids (one `idCol` column), and returns `df`
+    * without them ([[withoutLosers]]). The losers are materialized
+    * while the mapping is still cached, then the mapping is released:
+    * the handle holds the only pin — the loser list, the duplicate
+    * mass, small next to the corpus.
+    */
+  private[graft] def dropLosers(df: DataFrame, idCol: String,
+      edges: DataFrame)(rule: DataFrame => DataFrame = minIdLosers(idCol))
+      : Dedup.NearDupResult = {
+    val mapping = connectedComponents(edges)
+    try withoutLosers(df, idCol, rule(mapping)) finally mapping.unpersist()
+  }
+
+  /** `df` minus `losers` (one `idCol` column) as a caller-owned
+    * [[Dedup.NearDupResult]]. The losers are persisted and counted, so
+    * their lineage runs once; `close()` releases them. A loser plan
+    * that folds to a LocalRelation (the rule ran over the driver-side
+    * closure's mapping) is already driver-resident: nothing is
+    * persisted and no counting job runs.
+    */
+  private[graft] def withoutLosers(df: DataFrame, idCol: String,
+      losers: DataFrame): Dedup.NearDupResult = {
+    val pinned = losers.queryExecution.optimizedPlan match {
+      case _: LocalRelation => losers
+      case _ => val l = losers.persist(); l.count(); l
+    }
+    Dedup.NearDupResult(df.join(pinned, Seq(idCol), "left_anti"), pinned)
+  }
+
+  /** Min-id survivorship: every member but its component's minimum
+    * loses — the deterministic batch-dedup rule.
+    */
+  private def minIdLosers(idCol: String)(
+      mapping: DataFrame): DataFrame =
+    mapping.filter(col("id") =!= col("rep")).select(col("id").as(idCol))
+
+  /** Survivorship for a `batch` closed against an already-deduped
+    * history (the incremental operators): only batch ids can lose.
+    *  - min-id (the id-ordering contract): a batch doc survives iff it
+    *    is its component's overall minimum;
+    *  - first-arrival (`historyWins`, the streaming semantic, no
+    *    id-order assumption): a batch doc dies iff its component
+    *    touches ANY history doc, or a smaller batch id claims the
+    *    batch-only component — one marked per-component aggregate.
+    */
+  private[graft] def batchLosers(batch: DataFrame, idCol: String,
+      historyWins: Boolean)(mapping: DataFrame): DataFrame =
+    if (!historyWins)
+      mapping.filter(col("id") =!= col("rep"))
+        .join(batch.select(col(idCol).as("id")), Seq("id"), "left_semi")
+        .select(col("id").as(idCol))
+    else {
+      val marked = mapping.join(
+        batch.select(col(idCol).as("id"), lit(true).as("__isBatch")),
+        Seq("id"), "left")
+      val perRep = marked.groupBy(col("rep")).agg(
+        max(when(col("__isBatch").isNull, 1).otherwise(0)).as("__hasHist"),
+        min(when(col("__isBatch").isNotNull, col("id"))).as("__minBatch"))
+      marked.filter(col("__isBatch").isNotNull)
+        .join(perRep, Seq("rep"))
+        .filter(col("__hasHist") === 1 || col("id") =!= col("__minBatch"))
+        .select(col("id").as(idCol))
+    }
 
   /** Cluster census from a mapping: representative, size, id checksum. */
   def clusters(mapping: DataFrame): DataFrame =

@@ -226,14 +226,10 @@ object Dedup {
     verifyJaccard(cands, df, textCol, idCol, threshold, k)
   }
 
-  /** The end-user dedup surface: remove every near-duplicate except its
-    * cluster representative (component MINIMUM id — deterministic). The
-    * pair→component closure runs through [[Components]]; docs in no
-    * near-dup pair survive untouched. The handle OWNS the pinned
-    * loser-id frame the survivors anti-join against (pinning the loser
-    * list — the duplicate mass, small next to the corpus — instead of
-    * the full mapping); `close()` releases it, after which actions on
-    * `survivors` would recompute the whole closure. Same ownership
+  /** A dedup operator's output: `survivors` is the input minus the
+    * `losers` ids. Built only by [[Components.withoutLosers]], which
+    * pins the loser frame; `close()` releases it, after which actions
+    * on `survivors` would recompute the whole closure. Same ownership
     * contract as `Ann.IvfIndex`.
     */
   final case class NearDupResult(survivors: DataFrame, losers: DataFrame)
@@ -241,19 +237,17 @@ object Dedup {
     override def close(): Unit = losers.unpersist(true)
   }
 
+  /** The end-user dedup surface: remove every near-duplicate except its
+    * cluster representative (component MINIMUM id — deterministic). The
+    * pair→component closure and the loser pin are
+    * [[Components.dropLosers]]; docs in no near-dup pair survive
+    * untouched.
+    */
   def dropNearDuplicates(df: DataFrame, textCol: String, idCol: String,
       threshold: Double = 0.7, numBands: Int = 2, rowsPerBand: Int = 2,
-      k: Int = 3): NearDupResult = {
-    val pairs = nearDuplicates(df, textCol, idCol, threshold, numBands,
-      rowsPerBand, k).select(col("id_a"), col("id_b"))
-    val mapping = Components.connectedComponents(pairs)
-    val losers = mapping.filter(col("id") =!= col("rep"))
-      .select(col("id").as(idCol))
-      .persist()
-    losers.count() // materialize while the mapping cache is alive
-    mapping.unpersist()
-    NearDupResult(df.join(losers, Seq(idCol), "left_anti"), losers)
-  }
+      k: Int = 3): NearDupResult =
+    Components.dropLosers(df, idCol, nearDuplicates(df, textCol, idCol,
+      threshold, numBands, rowsPerBand, k).select(col("id_a"), col("id_b")))()
 
   /** [[dropNearDuplicates]] over a PRECOMPUTED (and caller-PERSISTED)
     * [[lshBandKeys]] frame for `df` — the seam for callers that need
@@ -282,15 +276,9 @@ object Dedup {
       .distinct()
     val pruned = df.select(col(idCol), col(textCol))
       .join(refIds, col(idCol) === col("__rid"), "left_semi")
-    val pairs = verifyJaccard(cands, pruned, textCol, idCol, threshold, k)
-      .select(col("id_a"), col("id_b"))
-    val mapping = Components.connectedComponents(pairs)
-    val losers = mapping.filter(col("id") =!= col("rep"))
-      .select(col("id").as(idCol))
-      .persist()
-    losers.count() // materialize while the mapping cache is alive
-    mapping.unpersist()
-    NearDupResult(df.join(losers, Seq(idCol), "left_anti"), losers)
+    Components.dropLosers(df, idCol,
+      verifyJaccard(cands, pruned, textCol, idCol, threshold, k)
+        .select(col("id_a"), col("id_b")))()
   }
 
   /** Quality-aware cluster survivor selection: like
@@ -318,20 +306,17 @@ object Dedup {
       rowsPerBand: Int = 2, k: Int = 3): NearDupResult = {
     val pairs = nearDuplicates(df, textCol, idCol, threshold, numBands,
       rowsPerBand, k).select(col("id_a"), col("id_b"))
-    val mapping = Components.connectedComponents(pairs)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("rep"))
       .orderBy(col("__score").desc_nulls_last, col("id").asc)
-    val losers = mapping
-      .join(df.select(col(idCol).as("id"), col(scoreCol).as("__score")),
-        Seq("id"))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") > 1)
-      .select(col("id").as(idCol))
-      .persist()
-    losers.count() // materialize while the mapping cache is alive
-    mapping.unpersist()
-    NearDupResult(df.join(losers, Seq(idCol), "left_anti"), losers)
+    Components.dropLosers(df, idCol, pairs) { mapping =>
+      mapping
+        .join(df.select(col(idCol).as("id"), col(scoreCol).as("__score")),
+          Seq("id"))
+        .withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") > 1)
+        .select(col("id").as(idCol))
+    }
   }
 
   /** Incremental near-dup maintenance — the posture a corpus at scale
@@ -467,37 +452,8 @@ object Dedup {
         .join(refIds, col(idCol) === col("__rid"), "left_semi")
       val edges = verifyJaccard(cands, pruned, textCol, idCol, threshold, k)
         .select(col("id_a"), col("id_b"))
-      val mapping = Components.connectedComponents(edges)
-      val loserRows =
-        if (!historyWins)
-          // min-id rule (the id-ordering contract): batch doc survives
-          // iff it is its component's overall min
-          mapping.filter(col("id") =!= col("rep"))
-            .join(batch.select(col(idCol).as("id")), Seq("id"), "left_semi")
-            .select(col("id").as(idCol))
-        else {
-          // FIRST-ARRIVAL rule (streaming semantics, no id-ordering
-          // assumption): a batch doc dies iff its component touches
-          // ANY history doc — regardless of id order — or another
-          // batch doc with a smaller id claims the batch-only
-          // component. One marked per-component aggregate.
-          val marked = mapping.join(
-            batch.select(col(idCol).as("id"), lit(true).as("__isBatch")),
-            Seq("id"), "left")
-          val perRep = marked.groupBy(col("rep")).agg(
-            max(when(col("__isBatch").isNull, 1).otherwise(0))
-              .as("__hasHist"),
-            min(when(col("__isBatch").isNotNull, col("id")))
-              .as("__minBatch"))
-          marked.filter(col("__isBatch").isNotNull)
-            .join(perRep, Seq("rep"))
-            .filter(col("__hasHist") === 1 || col("id") =!= col("__minBatch"))
-            .select(col("id").as(idCol))
-        }
-      val losers = loserRows.persist()
-      losers.count() // materialize while the mapping cache is alive
-      mapping.unpersist()
-      NearDupResult(batch.join(losers, Seq(idCol), "left_anti"), losers)
+      Components.dropLosers(batch, idCol, edges)(
+        Components.batchLosers(batch, idCol, historyWins))
     } finally keysB.unpersist(false)
   }
 

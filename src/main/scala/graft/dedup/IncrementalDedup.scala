@@ -212,8 +212,8 @@ object IncrementalDedup {
     *     signature agreement ≥ `threshold`;
     *  3. remaining rows' within-batch candidate pairs (band-key
     *     self-join), agreement-verified, closed into components
-    *     ([[Components.connectedComponents]] — driver path for small
-    *     edge sets), min-id representative kept;
+    *     ([[Components.dropLosers]] — driver path for small edge
+    *     sets), min-id representative kept;
     *  4. survivors' state rows returned for append.
     * NULL-text rows always survive and add no state (the bloomNewDocs
     * semantic).
@@ -275,30 +275,16 @@ object IncrementalDedup {
         col("key") === col("__k2") && col("id_a") < col("id_b"))
       .filter(sigAgreement(col("__sa"), col("__sb"), nh) >= threshold)
       .select(col("id_a"), col("id_b")).distinct()
-    // the closure's mapping is released here (the SemDedup pattern);
-    // losers joins ride the handle's pinned set until close(). When the
-    // closure came back as a driver-local mapping (the usual micro-batch
-    // case), the loser set folds to a LocalRelation — no persist, no
-    // materializing count job (r12; one scheduler round-trip per batch).
-    val mapping = Components.connectedComponents(edges)
-    val losers0 = mapping.filter(col("id") =!= col("rep"))
-      .select(col("id").as(idCol))
-    val losers = losers0.queryExecution.optimizedPlan match {
-      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        losers0
-      case _ =>
-        val l = losers0.persist()
-        l.count() // materialize while the mapping cache is alive
-        mapping.unpersist()
-        l
-    }
-    val keptSig = fresh.join(losers, Seq(idCol), "left_anti")
+    // closure to losers (Components.dropLosers); the loser pin rides
+    // the handle's pinned set until close()
+    val kept = Components.dropLosers(fresh, idCol, edges)()
+    val keptSig = kept.survivors
 
     val survivors = batch.filter(col(textCol).isNull)
       .unionByName(keptSig.drop("__sig"))
     val historyRows = keptSig.select(col(idCol), col("__sig"),
         posexplode(array(keyExprs.map(e => e): _*)).as(Seq("band", "key")))
       .select(col(idCol), col("band"), col("key"), col("__sig").as("sig"))
-    NearDupBatch(survivors, historyRows, Seq(sigged, histMatches, losers))
+    NearDupBatch(survivors, historyRows, Seq(sigged, histMatches, kept.losers))
   }
 }

@@ -143,30 +143,6 @@ class CertaExplainer(
       useRight: Boolean = true,
       check: Boolean = false,
       discardBad: Boolean = false): Explanation = {
-    // every cache taken below is registered here and released in the
-    // finally — explain() leaves nothing pinned in the block manager
-    // (EvalDriver loops explanations; leaked caches accumulate without
-    // bound — the round-3 q25 regression)
-    val tracked = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def cached(df: DataFrame): DataFrame = { df.cache(); tracked += df; df }
-    try explainImpl(lRecord, rRecord, model, numTriangles, attrLengthOpt,
-      maxPredict, useLeft, useRight, check, discardBad, cached)
-    finally tracked.foreach(_.unpersist(false))
-  }
-
-  private def explainImpl(
-      lRecord: DataFrame,
-      rRecord: DataFrame,
-      model: ERModel,
-      numTriangles: Int,
-      attrLengthOpt: Int,
-      maxPredict: Int,
-      useLeft: Boolean,
-      useRight: Boolean,
-      check: Boolean,
-      discardBad: Boolean,
-      cached: DataFrame => DataFrame): Explanation = {
-
     val gen = resolvedGen(model)
     val lAttrs = lRecord.columns.filter(_ != "id").toIndexedSeq
     val rAttrs = rRecord.columns.filter(_ != "id").toIndexedSeq
@@ -321,113 +297,119 @@ class CertaExplainer(
     val resolved = staged("vertex resolution")(
       Perturb.resolve(triangles, extendedL, extendedR, schema))
     val classScoreCol = if (pc == 1) "match_score" else "nomatch_score"
-    val preds = cached(model.predict(Perturb.forDepth(resolved, depths, pc, schema))
-      .withColumn("__flip", col(classScoreCol) < 0.5))
-    val census = staged(s"perturb depth 1-${depths.last}")(
-      preds.groupBy(col("alteredAttributes"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("__flip"), 1L).otherwise(0L)).as("cnt"))
-        .collect()).map(r => (r.getSeq[String](0), r.getLong(1), r.getLong(2)))
+    // the one cache an explanation takes, released before return —
+    // explain() leaves nothing pinned (EvalDriver loops explanations;
+    // leaked caches accumulate without bound — the round-3 q25
+    // regression)
+    val preds = model.predict(Perturb.forDepth(resolved, depths, pc, schema))
+      .withColumn("__flip", col(classScoreCol) < 0.5).persist()
+    try {
+      val census = staged(s"perturb depth 1-${depths.last}")(
+        preds.groupBy(col("alteredAttributes"))
+          .agg(count(lit(1)).as("n"),
+            sum(when(col("__flip"), 1L).otherwise(0L)).as("cnt"))
+          .collect()).map(r => (r.getSeq[String](0), r.getLong(1), r.getLong(2)))
 
-    // The reference's monotonicity shortcut, replayed on the census: once
-    // every perturbation of a depth flips, deeper depths count all their
-    // perturbations as flipped (their model scores are ignored). The
-    // ranking is per set (depth-a sets have exactly a attributes) and
-    // powerset-bounded, so it stays driver-side.
-    val perDepth = census.groupMapReduce(_._1.size)(c => (c._2, c._3)) {
-      case ((n1, f1), (n2, f2)) => (n1 + n2, f1 + f2)
-    }
-    val fullFlip = depths.find(a => perDepth.get(a).exists { case (n, f) => n == f })
-      .getOrElse(Int.MaxValue)
-    val rankingRows = depths.flatMap(a => census.collect {
-      case (set, n, flips) if set.size == a => (set, if (a > fullFlip) n else flips)
-    })
-    if (rankingRows.isEmpty) return emptyExplanation()
-    val totalFlipped = rankingRows.map(_._2).sum
-
-    // stage 6a: A2 aggregate rankings → probability of sufficiency.
-    // The result is bounded by the attribute powerset (≤ Σ C(n,a) rows,
-    // data-size independent) and already aggregated per set, so it
-    // assembles driver-side — exactly the reference's pandas Series —
-    // with zero additional jobs. pos = cnt / nTriangles with the same
-    // double ops Spark's Divide(cast(long), double) runs.
-    val pssRows: IndexedSeq[org.apache.spark.sql.Row] =
-      rankingRows.map { case (set, cnt) =>
-        org.apache.spark.sql.Row(set, cnt.toDouble / nTriangles.toDouble,
-          set.mkString("/"))
-      }.toIndexedSeq
-    val pssSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("alteredAttributes",
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.StringType)),
-      org.apache.spark.sql.types.StructField("pos",
-        org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("attrSet",
-        org.apache.spark.sql.types.StringType)))
-    def localFrame(rows: Seq[org.apache.spark.sql.Row]) =
-      spark.createDataFrame(
-        new java.util.ArrayList(scala.jdk.CollectionConverters
-          .SeqHasAsJava(rows).asJava), pssSchema)
-    val pss = localFrame(pssRows)
-
-    // stage 6b: A3 saliency = base + per-attribute flip mass — driver
-    // arithmetic over the same bounded ranking rows. flipCnt is an exact
-    // long sum; base + flipCnt/flips are the identical IEEE double ops
-    // of the column program this replaced.
-    val flips = (totalFlipped + nTriangles).toDouble
-    val base = nTriangles / flips
-    val pairAttrNames =
-      lAttrs.map(schema.lprefix + _) ++ rAttrs.map(schema.rprefix + _)
-    val saliencyRows = pairAttrNames.map { attr =>
-      var flipCnt = 0L
-      rankingRows.foreach { case (set, cnt) =>
-        if (set.contains(attr)) flipCnt += cnt
+      // The reference's monotonicity shortcut, replayed on the census: once
+      // every perturbation of a depth flips, deeper depths count all their
+      // perturbations as flipped (their model scores are ignored). The
+      // ranking is per set (depth-a sets have exactly a attributes) and
+      // powerset-bounded, so it stays driver-side.
+      val perDepth = census.groupMapReduce(_._1.size)(c => (c._2, c._3)) {
+        case ((n1, f1), (n2, f2)) => (n1 + n2, f1 + f2)
       }
-      org.apache.spark.sql.Row(attr, base + flipCnt.toDouble / flips)
-    }
-    val saliencySchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("attribute",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("saliency",
-        org.apache.spark.sql.types.DoubleType)))
-    val saliency = spark.createDataFrame(
-      new java.util.ArrayList(scala.jdk.CollectionConverters
-        .SeqHasAsJava(saliencyRows).asJava), saliencySchema)
+      val fullFlip = depths.find(a => perDepth.get(a).exists { case (n, f) => n == f })
+        .getOrElse(Int.MaxValue)
+      val rankingRows = depths.flatMap(a => census.collect {
+        case (set, n, flips) if set.size == a => (set, if (a > fullFlip) n else flips)
+      })
+      if (rankingRows.isEmpty) return emptyExplanation()
+      val totalFlipped = rankingRows.map(_._2).sum
 
-    // stage 6c: A4 cf_summary — max-probability sets, minimal antichain
-    // (reference cf_summary, triangles_method.py:254-263). Driver-side
-    // over the materialized pss, as the reference computes it — the set
-    // count is powerset-bounded, and a distributed self-join here would
-    // cost far more than it computes.
-    val maxPos = pssRows.map(_.getDouble(1)).max
-    val atMax = pssRows.filter(_.getDouble(1) == maxPos)
-    val atMaxSets = atMax.map(r => r.getSeq[String](0).toSet)
-    val cfSummaryRows = atMax.filter { r =>
-      val s = r.getSeq[String](0).toSet
-      !atMaxSets.exists(b => b.size < s.size && b.subsetOf(s))
-    }
-    val cfSummary = localFrame(cfSummaryRows)
+      // stage 6a: A2 aggregate rankings → probability of sufficiency.
+      // The result is bounded by the attribute powerset (≤ Σ C(n,a) rows,
+      // data-size independent) and already aggregated per set, so it
+      // assembles driver-side — exactly the reference's pandas Series —
+      // with zero additional jobs. pos = cnt / nTriangles with the same
+      // double ops Spark's Divide(cast(long), double) runs.
+      val pssRows: IndexedSeq[org.apache.spark.sql.Row] =
+        rankingRows.map { case (set, cnt) =>
+          org.apache.spark.sql.Row(set, cnt.toDouble / nTriangles.toDouble,
+            set.mkString("/"))
+        }.toIndexedSeq
+      val pssSchema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("alteredAttributes",
+          org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.StringType)),
+        org.apache.spark.sql.types.StructField("pos",
+          org.apache.spark.sql.types.DoubleType),
+        org.apache.spark.sql.types.StructField("attrSet",
+          org.apache.spark.sql.types.StringType)))
+      def localFrame(rows: Seq[org.apache.spark.sql.Row]) =
+        spark.createDataFrame(
+          new java.util.ArrayList(scala.jdk.CollectionConverters
+            .SeqHasAsJava(rows).asJava), pssSchema)
+      val pss = localFrame(pssRows)
 
-    // stage 6d: CF examples — flipped rows of the summary sets (literal
-    // key set — no join), deduplicated keeping the first row in the
-    // prediction cache's partition order, stably ordered by set size
-    // (reference explain.py:73-77). Synthesized depths need no rows
-    // here: each of their sets contains a fully flipped set of the same
-    // side with the same pos, so the minimal antichain never selects one.
-    val summaryKeys = cfSummaryRows.map(_.getString(2))
-    val flipped = preds.filter(col("__flip") &&
-      array_join(col("alteredAttributes"), "/").isin(summaryKeys: _*)).drop("__flip")
-    val seen = scala.collection.mutable.HashSet.empty[Seq[Any]]
-    val keyIdx = Seq("copiedValues", "alteredAttributes", "droppedValues")
-      .map(flipped.schema.fieldIndex)
-    val altIdx = flipped.schema.fieldIndex("alteredAttributes")
-    val cfRows = staged("cf examples")(flipped.collect()).toIndexedSeq
-      .filter(r => seen.add(keyIdx.map(r.get)))
-      .map(r => org.apache.spark.sql.Row.fromSeq(r.toSeq :+ r.getSeq[String](altIdx).size))
-      .sortBy(_.getInt(flipped.schema.length))
-    val cfExamples = spark.createDataFrame(java.util.Arrays.asList(cfRows: _*),
-      flipped.schema.add("attr_count", org.apache.spark.sql.types.IntegerType))
+      // stage 6b: A3 saliency = base + per-attribute flip mass — driver
+      // arithmetic over the same bounded ranking rows. flipCnt is an exact
+      // long sum; base + flipCnt/flips are the identical IEEE double ops
+      // of the column program this replaced.
+      val flips = (totalFlipped + nTriangles).toDouble
+      val base = nTriangles / flips
+      val pairAttrNames =
+        lAttrs.map(schema.lprefix + _) ++ rAttrs.map(schema.rprefix + _)
+      val saliencyRows = pairAttrNames.map { attr =>
+        var flipCnt = 0L
+        rankingRows.foreach { case (set, cnt) =>
+          if (set.contains(attr)) flipCnt += cnt
+        }
+        org.apache.spark.sql.Row(attr, base + flipCnt.toDouble / flips)
+      }
+      val saliencySchema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("attribute",
+          org.apache.spark.sql.types.StringType),
+        org.apache.spark.sql.types.StructField("saliency",
+          org.apache.spark.sql.types.DoubleType)))
+      val saliency = spark.createDataFrame(
+        new java.util.ArrayList(scala.jdk.CollectionConverters
+          .SeqHasAsJava(saliencyRows).asJava), saliencySchema)
 
-    Explanation(saliency, pss, cfSummary, cfExamples, flaggedTriangles)
+      // stage 6c: A4 cf_summary — max-probability sets, minimal antichain
+      // (reference cf_summary, triangles_method.py:254-263). Driver-side
+      // over the materialized pss, as the reference computes it — the set
+      // count is powerset-bounded, and a distributed self-join here would
+      // cost far more than it computes.
+      val maxPos = pssRows.map(_.getDouble(1)).max
+      val atMax = pssRows.filter(_.getDouble(1) == maxPos)
+      val atMaxSets = atMax.map(r => r.getSeq[String](0).toSet)
+      val cfSummaryRows = atMax.filter { r =>
+        val s = r.getSeq[String](0).toSet
+        !atMaxSets.exists(b => b.size < s.size && b.subsetOf(s))
+      }
+      val cfSummary = localFrame(cfSummaryRows)
+
+      // stage 6d: CF examples — flipped rows of the summary sets (literal
+      // key set — no join), deduplicated keeping the first row in the
+      // prediction cache's partition order, stably ordered by set size
+      // (reference explain.py:73-77). Synthesized depths need no rows
+      // here: each of their sets contains a fully flipped set of the same
+      // side with the same pos, so the minimal antichain never selects one.
+      val summaryKeys = cfSummaryRows.map(_.getString(2))
+      val flipped = preds.filter(col("__flip") &&
+        array_join(col("alteredAttributes"), "/").isin(summaryKeys: _*)).drop("__flip")
+      val seen = scala.collection.mutable.HashSet.empty[Seq[Any]]
+      val keyIdx = Seq("copiedValues", "alteredAttributes", "droppedValues")
+        .map(flipped.schema.fieldIndex)
+      val altIdx = flipped.schema.fieldIndex("alteredAttributes")
+      val cfRows = staged("cf examples")(flipped.collect()).toIndexedSeq
+        .filter(r => seen.add(keyIdx.map(r.get)))
+        .map(r => org.apache.spark.sql.Row.fromSeq(r.toSeq :+ r.getSeq[String](altIdx).size))
+        .sortBy(_.getInt(flipped.schema.length))
+      val cfExamples = spark.createDataFrame(java.util.Arrays.asList(cfRows: _*),
+        flipped.schema.add("attr_count", org.apache.spark.sql.types.IntegerType))
+
+      Explanation(saliency, pss, cfSummary, cfExamples, flaggedTriangles)
+    } finally preds.unpersist(false)
   }
 
   private def emptyExplanation(): Explanation = {

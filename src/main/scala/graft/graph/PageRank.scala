@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.Pinned
 
 /** PageRank in FIXED-POINT integer arithmetic — graph centrality over
   * derived similarity graphs (kNN edges, near-dup edges) with a
@@ -18,45 +19,46 @@ import org.apache.spark.sql.functions._
   * key shuffle), a dst-grouped partial-aggregated sum, and a left
   * join back onto the node set — all hash equi-joins, nothing
   * quadratic, state is one long per node. Driver-bounded iteration
-  * count; for deep runs truncate lineage per round (localCheckpoint,
-  * the [[graft.text.Bpe]] rule) — at the 2-3 iterations typical for
-  * similarity-graph scoring the plan stays shallow without it.
+  * count.
   */
 object PageRank {
 
   /** Rank nodes of `edges` (`src`, `dst` long columns) after `iters`
     * damped rounds. Returns (id, pr) with `pr` on the integer scale
-    * `base` (initial mass per node).
+    * `base` (initial mass per node), persisted and caller-owned
+    * (unpersist when done — the [[graft.dedup.Components]] mapping
+    * contract): nothing else stays pinned.
     */
   def rankInt(edges0: DataFrame, iters: Int, dampPct: Int = 85,
       base: Long = 1000000L): DataFrame = {
     require(iters >= 0 && dampPct >= 0 && dampPct <= 100)
-    // Lineage truncation (r12, guide §5): every iteration references
-    // the edge list again (eDeg) and the node set rides three joins, so
-    // an un-truncated final plan embeds the caller's edge-GENERATION
-    // subtree 2·iters+3 times and re-executes it per reference — q128's
-    // 3-NN build (the 4M-pair quantized distance scan) ran ~10× per
-    // action. One eager localCheckpoint pins the edge rows (O(k·n) for
-    // kNN graphs, orders below the corpus); every downstream reference
-    // re-reads blocks. This is the scaladoc's own "truncate lineage"
-    // rule applied unconditionally — at 2-3 iterations the plan stayed
-    // SHALLOW, but each copy still re-executed.
-    val edges = edges0.localCheckpoint()
-    val nodes = edges.select(col("src").as("id"))
-      .unionByName(edges.select(col("dst").as("id"))).distinct()
-    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("dg"))
-    val eDeg = edges.join(deg, "src")
-    val basePr = base * (100 - dampPct) / 100
-    var pr = nodes.withColumn("pr", lit(base))
-    for (_ <- 1 to iters) {
-      val contrib = eDeg.join(pr, eDeg("src") === pr("id"))
-        .select(col("dst"),
-          expr(s"(pr * $dampPct) div (100 * dg)").as("c"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("s"))
-      pr = nodes.join(contrib, nodes("id") === contrib("dst"), "left")
-        .select(col("id"),
-          (lit(basePr) + coalesce(col("s"), lit(0L))).as("pr"))
-    }
-    pr
+    // Lineage cut (guide §5): every iteration references the edge list
+    // again (eDeg) and the node set rides three joins, so an uncut plan
+    // embeds the caller's edge-GENERATION subtree 2·iters+3 times and
+    // re-executes it per reference — q128's 3-NN build (the 4M-pair
+    // quantized distance scan) ran ~10× per action. The edge rows
+    // (O(k·n) for kNN graphs, orders below the corpus) are pinned while
+    // the ranks materialize, then released.
+    val edges = Pinned(edges0)
+    try {
+      val nodes = edges.df.select(col("src").as("id"))
+        .unionByName(edges.df.select(col("dst").as("id"))).distinct()
+      val deg = edges.df.groupBy(col("src")).agg(count(lit(1)).as("dg"))
+      val eDeg = edges.df.join(deg, "src")
+      val basePr = base * (100 - dampPct) / 100
+      var pr = nodes.withColumn("pr", lit(base))
+      for (_ <- 1 to iters) {
+        val contrib = eDeg.join(pr, eDeg("src") === pr("id"))
+          .select(col("dst"),
+            expr(s"(pr * $dampPct) div (100 * dg)").as("c"))
+          .groupBy(col("dst")).agg(sum(col("c")).as("s"))
+        pr = nodes.join(contrib, nodes("id") === contrib("dst"), "left")
+          .select(col("id"),
+            (lit(basePr) + coalesce(col("s"), lit(0L))).as("pr"))
+      }
+      pr.persist()
+      pr.count()
+      pr
+    } finally edges.close()
   }
 }

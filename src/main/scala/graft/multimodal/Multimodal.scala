@@ -486,8 +486,8 @@ object Multimodal {
     *    is touched twice: once to hash-group, once for the final
     *    loser anti-join.
     *
-    * Ownership follows [[graft.dedup.Dedup.dropNearDuplicates]]: the
-    * one pinned loser frame is released by `close()`.
+    * Ownership: the loser pin of [[graft.dedup.Components.withoutLosers]],
+    * released by `close()`.
     *
     * @param hashed output of [[withAverageHash]] (or anything with
     *               idCol/ahash_hi/ahash_lo)
@@ -498,41 +498,38 @@ object Multimodal {
       "maxHamming 0..3 (wider balls: compose rounds or coarsen the hash)")
     val groups = hashed.groupBy(col("ahash_hi"), col("ahash_lo"))
       .agg(min(col(idCol)).as("__gid"))
-    val (repOf, mapping) =
-      if (maxHamming == 0) (groups.withColumn("__rep", col("__gid")), None)
-      else {
-        // the two 32-bit halves pack losslessly into bits 0..63; all
-        // downstream block arithmetic is shiftrightunsigned + masks,
-        // so bit 63 (pixel 63) never meets signed-shift semantics.
-        // Both halves are masked to their stated 32 bits first: the
-        // input contract is "anything with idCol/ahash_hi/ahash_lo",
-        // and a caller-supplied frame with wider halves would
-        // otherwise bleed hi bits across the OR and merge unrelated
-        // signatures
-        val m32 = lit(0xFFFFFFFFL)
-        val sigs = groups.select(col("__gid"),
-          shiftleft(col("ahash_hi").bitwiseAND(m32), 32)
-            .bitwiseOR(col("ahash_lo").bitwiseAND(m32)).as("sig"))
-        val edges = graft.dedup.Dedup.simhashNearDuplicatesComplete(
-            sigs, "__gid", maxDistance = maxHamming, bits = 64)
-          .select(col("id_a"), col("id_b"))
-        val m = graft.dedup.Components.connectedComponents(edges)
-        (groups.join(
-            m.select(col("id").as("__gid"), col("rep").as("__rep0")),
-            Seq("__gid"), "left")
-          .withColumn("__rep", coalesce(col("__rep0"), col("__gid"))),
-          Some(m))
-      }
-    val losers = hashed
+    // a row loses iff it is not its hash group's representative
+    def losers(repOf: DataFrame): DataFrame = hashed
       .join(repOf.select(col("ahash_hi"), col("ahash_lo"), col("__rep")),
         Seq("ahash_hi", "ahash_lo"))
       .filter(col(idCol) =!= col("__rep"))
       .select(col(idCol))
-      .persist()
-    losers.count() // materialize while the components cache is alive
-    mapping.foreach(_.unpersist())
-    graft.dedup.Dedup.NearDupResult(
-      hashed.join(losers, Seq(idCol), "left_anti"), losers)
+    if (maxHamming == 0)
+      graft.dedup.Components.withoutLosers(hashed, idCol,
+        losers(groups.withColumn("__rep", col("__gid"))))
+    else {
+      // the two 32-bit halves pack losslessly into bits 0..63; all
+      // downstream block arithmetic is shiftrightunsigned + masks,
+      // so bit 63 (pixel 63) never meets signed-shift semantics.
+      // Both halves are masked to their stated 32 bits first: the
+      // input contract is "anything with idCol/ahash_hi/ahash_lo",
+      // and a caller-supplied frame with wider halves would
+      // otherwise bleed hi bits across the OR and merge unrelated
+      // signatures
+      val m32 = lit(0xFFFFFFFFL)
+      val sigs = groups.select(col("__gid"),
+        shiftleft(col("ahash_hi").bitwiseAND(m32), 32)
+          .bitwiseOR(col("ahash_lo").bitwiseAND(m32)).as("sig"))
+      val edges = graft.dedup.Dedup.simhashNearDuplicatesComplete(
+          sigs, "__gid", maxDistance = maxHamming, bits = 64)
+        .select(col("id_a"), col("id_b"))
+      graft.dedup.Components.dropLosers(hashed, idCol, edges) { m =>
+        losers(groups.join(
+            m.select(col("id").as("__gid"), col("rep").as("__rep0")),
+            Seq("__gid"), "left")
+          .withColumn("__rep", coalesce(col("__rep0"), col("__gid"))))
+      }
+    }
   }
 
   /** REAL image resize: decode (per-partition reader lifecycle as in

@@ -45,10 +45,10 @@ object Upsert {
     * partition values.
     *
     * Crash safety: the write overwrites the very partitions the merged
-    * plan reads, so the merged rows are MATERIALIZED (eager
-    * localCheckpoint) before the overwrite starts — the read completes
-    * before the first byte is staged, and the checkpoint is released
-    * after the write commits. The remaining window is the dynamic-
+    * plan reads, so the merged rows are MATERIALIZED
+    * ([[overwriteMaterialized]]) before the overwrite starts — the read
+    * completes before the first byte is staged, and the pin is
+    * released after the write commits. The remaining window is the dynamic-
     * overwrite commit itself (staged files swap in, touched-partition
     * files delete, at job commit): a crash inside that protocol can
     * still leave touched partitions partially swapped — the same
@@ -72,19 +72,15 @@ object Upsert {
     touched
   }
 
-  /** Materialize `df` (eager localCheckpoint), run `write` on the
-    * materialized rows, and release the checkpoint once `write` returns
-    * or throws — for writes that overwrite the very files `df` reads:
-    * the read completes before the first byte is staged.
+  /** Materialize `df` into a [[Pinned]] handle, run `write` on the
+    * pinned rows, and release them once `write` returns or throws —
+    * for writes that overwrite the very files `df` reads: the read
+    * completes before the first byte is staged.
     */
   def overwriteMaterialized(df: DataFrame)(write: DataFrame => Unit): Unit = {
-    val m = df.localCheckpoint()
-    val pinned = m.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD => Some(l.rdd)
-      case _ => None
-    }
-    try write(m)
-    finally pinned.foreach(_.unpersist(blocking = false))
+    val m = Pinned(df)
+    try { m.materialize(); write(m.df) }
+    finally m.close()
   }
 
   /** Change census for audit/monitoring: one row with how many keys the

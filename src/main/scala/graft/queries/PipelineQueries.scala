@@ -3955,6 +3955,8 @@ object PipelineQueries {
     val edges = graft.operators.TopK.topKPerGroup(
         pairs, Seq("src"), -col("dist"), col("dst"), k = 3)
       .select(col("src"), col("id").as("dst"))
+    // the ranks come back persisted: the catalog runner's clearCache
+    // releases them
     graft.graph.PageRank.rankInt(edges, iters = 2)
       .select(col("id").as("vec_id"), col("pr"))
       .orderBy(col("pr").desc, col("vec_id")).limit(10)
@@ -6644,29 +6646,20 @@ object PipelineQueries {
     // by its own count AND by every downstream stage's action, so an
     // unpinned chain re-executes stage k once per downstream stage —
     // O(stages²) recompute (measured: 15.1 s → ~2× less with pins at
-    // sf0.1). Pins are released before return (the ledger is a local
-    // Seq by then); a disk-backed pipeline would write intermediate
-    // tables here instead, same idea.
+    // sf0.1). Pins and the two dedup handles are released before
+    // return, exception or not (the ledger is a local Seq by then); a
+    // disk-backed pipeline would write intermediate tables here
+    // instead, same idea.
     val pinned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def pin(df: DataFrame): DataFrame = { pinned += df.cache(); df }
-    // dev-only stage profiler (GRAFT_FUNNEL_TIMING=1): prints wall per
-    // stage to stderr; zero cost when unset
-    var t0 = System.nanoTime()
-    def lap(stage: String): Unit =
-      if (sys.env.contains("GRAFT_FUNNEL_TIMING")) {
-        val t1 = System.nanoTime()
-        System.err.println(f"[funnel] $stage ${(t1 - t0) / 1e9}%.2fs")
-        t0 = t1
-      }
+    val handles = scala.collection.mutable.ArrayBuffer.empty[AutoCloseable]
     try {
       val d0 = pin(docs.filter(col("text").isNotNull))
       val n0 = d0.count()
-      lap("d0_scan")
       // 1. exact dedup (q30): min doc_id survives its md5(text) group
       val d1 = pin(d0.join(Dedup.exactSurvivors(d0, "text", "doc_id")
         .select(col("doc_id")), Seq("doc_id"), "left_semi"))
       val n1 = d1.count()
-      lap("s1_exact")
       // 2+3. the two closure stages run their edge-sized shuffles at 8
       // partitions (the q68/q76 sizing rule — duplicate-pair edge sets
       // are orders of magnitude below the corpus; each closure round is
@@ -6678,6 +6671,7 @@ object PipelineQueries {
       // 2. MinHash near-dup deletion (q32 candidates, q68 closure)
       val r2 = Dedup.dropNearDuplicates(d1s, "text", "doc_id",
         threshold = 0.7)
+      handles += r2
       // 3. semantic dedup over the joined embedding column
       //    (geometry from semPlanes/semProbe — the catalog query
       //    pins q76's 4-plane single-probe cells for replay)
@@ -6685,25 +6679,23 @@ object PipelineQueries {
         r2.survivors.join(embs, col("doc_id") === col("vec_id")),
         "embedding", "doc_id", threshold = 0.5, numPlanes = semPlanes,
         probeBits = semProbe)
+      handles += r3
       // scope exit: survivors re-bind to the caller's session so the
       // downstream corpus-scale stages plan at the caller's width
       val d2 = pin(graft.operators.ConfScope.bindTo(r2.survivors, s))
       val n2 = d2.count()
-      lap("s2_minhash")
       // losers anti-join, NOT r3.survivors: the semdedup input is the
       // embedding INNER join, so a doc with no embedding row is absent
       // from r3.survivors — but it cannot be a semantic near-dup and
       // must pass through (the oracle's d3 = d2 minus losers semantic)
       val d3 = pin(d2.join(r3.losers, Seq("doc_id"), "left_anti"))
       val n3 = d3.count()
-      lap("s3_semdedup")
       // 4. Gopher quality gate (q180's four rules)
       val d4 = pin(TextAnalysis.withGopherSignals(d3)
         .filter(!col("g_fail_mwl") && !col("g_fail_len") &&
           !col("g_fail_stop") && !col("g_fail_rep"))
         .select(d3.columns.map(col).toIndexedSeq: _*))
       val n4 = d4.count()
-      lap("s4_gopher")
       // 5. decontamination (q58's ANY-shared rule via the
       //    Decontaminate module): drop the benchmark source itself
       //    plus any survivor sharing a distinct 5-gram with it (grams
@@ -6716,12 +6708,10 @@ object PipelineQueries {
         train, "text", "doc_id", bGrams, 5)
       val d5 = pin(train.join(contaminated, Seq("doc_id"), "left_anti"))
       val n5 = d5.count()
-      lap("s5_decontam")
       // 6. mix sampling (q53's md5 gate)
       val d6 = pin(TextAnalysis.mixSample(d5, "source", "doc_id",
         funnelMixRates))
       val n6 = d6.count()
-      lap("s6_mix")
       // 7. sequence packing (q71): 512-token chunks per lang; the
       //    ledger's final n_out is the CHUNK count the funnel emits
       val nChunks = graft.operators.Packing.packingCensus(
@@ -6729,8 +6719,6 @@ object PipelineQueries {
             size(split(col("text"), " ")).as("sz")),
           Seq("lang"), "doc_id", "sz", budget = 512)
         .agg(coalesce(sum(col("n_chunks")), lit(0L))).head().getLong(0)
-      lap("s7_pack")
-      r2.close(); r3.close()
       Seq(
         (1, "exact_dedup", n0, n1),
         (2, "neardup_minhash", n1, n2),
@@ -6741,7 +6729,10 @@ object PipelineQueries {
         (7, "pack_512", n6, nChunks))
         .toDF("stage", "stage_name", "n_in", "n_out")
         .orderBy(col("stage"))
-    } finally pinned.foreach(_.unpersist(false))
+    } finally {
+      handles.foreach(_.close())
+      pinned.foreach(_.unpersist(false))
+    }
   }
 
   /** Funnel mix rates: every non-benchmark source enumerated (absent

@@ -167,13 +167,7 @@ object SemDedup {
     val edges = nearDuplicatePairs(df, embCol, idCol, threshold, numPlanes,
         maxBucketSize, probeBits, targetRecallPct)
       .select(col("id_a"), col("id_b"))
-    val mapping = Components.connectedComponents(edges)
-    val losers = mapping.filter(col("id") =!= col("rep"))
-      .select(col("id").as(idCol))
-      .persist()
-    losers.count() // materialize while the mapping cache is alive
-    mapping.unpersist()
-    Dedup.NearDupResult(df.join(losers, Seq(idCol), "left_anti"), losers)
+    Components.dropLosers(df, idCol, edges)()
   }
 
   /** Incremental semantic dedup — the embedding-space twin of
@@ -239,11 +233,9 @@ object SemDedup {
     // the separate isEmpty + head() pair cost two scheduler
     // round-trips per micro-batch.
     val dimProbe = batch.select(size(col(embCol))).head(1)
-    if (dimProbe.isEmpty) {
-      val losers = batch.select(col(idCol)).persist()
-      losers.count()
-      return Dedup.NearDupResult(batch, losers)
-    }
+    if (dimProbe.isEmpty) // limit(0) folds to an empty LocalRelation
+      return Components.withoutLosers(batch, idCol,
+        batch.select(col(idCol)).limit(0))
     val dim = dimProbe(0).getInt(0)
     // per-row self-norms (r12, the nearDuplicatePairs treatment): one
     // dot loop per probe-join candidate, bit-identical cosine
@@ -274,35 +266,7 @@ object SemDedup {
     val self = nearDuplicatePairs(batch, embCol, idCol, threshold,
         numPlanes, maxBucketSize, probeBits)
       .select(col("id_a"), col("id_b"))
-    val mapping = Components.connectedComponents(self.unionByName(cross))
-    val loserRows =
-      if (!historyWins)
-        // min-id rule (the id-ordering contract): batch vector
-        // survives iff it is its component's overall min
-        mapping.filter(col("id") =!= col("rep"))
-          .join(batch.select(col(idCol).as("id")), Seq("id"), "left_semi")
-          .select(col("id").as(idCol))
-      else {
-        // FIRST-ARRIVAL rule (streaming semantics): a batch vector
-        // dies iff its component touches any history vector — or a
-        // smaller-id batch vector claims the batch-only component
-        // (the Dedup.incrementalNearDuplicates historyWins block)
-        val marked = mapping.join(
-          batch.select(col(idCol).as("id"), lit(true).as("__isBatch")),
-          Seq("id"), "left")
-        val perRep = marked.groupBy(col("rep")).agg(
-          max(when(col("__isBatch").isNull, 1).otherwise(0))
-            .as("__hasHist"),
-          min(when(col("__isBatch").isNotNull, col("id")))
-            .as("__minBatch"))
-        marked.filter(col("__isBatch").isNotNull)
-          .join(perRep, Seq("rep"))
-          .filter(col("__hasHist") === 1 || col("id") =!= col("__minBatch"))
-          .select(col("id").as(idCol))
-      }
-    val losers = loserRows.persist()
-    losers.count() // materialize while the mapping cache is alive
-    mapping.unpersist()
-    Dedup.NearDupResult(batch.join(losers, Seq(idCol), "left_anti"), losers)
+    Components.dropLosers(batch, idCol, self.unionByName(cross))(
+      Components.batchLosers(batch, idCol, historyWins))
   }
 }

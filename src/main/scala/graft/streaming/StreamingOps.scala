@@ -430,8 +430,8 @@ object StreamingOps {
     * State is the aggregate table itself: one row per key, no state
     * store, no watermark, re-bootstrap = drop the directory. The merge
     * is a full-outer join of two aggregate-sized frames (broadcast
-    * scale); the merged result is MATERIALIZED (eager localCheckpoint)
-    * before overwriting its own read path
+    * scale); the merged result is MATERIALIZED before overwriting its
+    * own read path
     * ([[graft.operators.Upsert.overwriteMaterialized]]).
     */
   def incrementalStatsStream(docs: DataFrame, keyCol: String,

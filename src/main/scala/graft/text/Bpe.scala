@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.operators.Pinned
 
 /** Byte-pair-encoding vocabulary training — the tokenizer-learning
   * stage of a training-data pipeline (Sennrich et al. 2016), distributed
@@ -13,9 +14,10 @@ import org.apache.spark.sql.functions._
   * [[tokenize]] applies the frozen merge table to any stream of text —
   * the learn-small/apply-wide split of production tokenizers.
   *
-  * State between rounds is localCheckpoint-truncated: k rounds would
-  * otherwise nest k aggregate() lambdas into one projection and the
-  * plan grows without bound (the Components lesson).
+  * State between rounds is a [[graft.operators.Pinned]] lineage cut:
+  * k rounds would otherwise nest k aggregate() lambdas into one
+  * projection and the plan grows without bound (the Components
+  * lesson).
   */
 object Bpe {
 
@@ -49,43 +51,38 @@ object Bpe {
     require(numMerges >= 0, "numMerges must be non-negative")
     val out = scala.collection.mutable.ArrayBuffer.empty[Merge]
     var words = words0.select(col("sym"), col("freq"))
-    // Each eager localCheckpoint pins one RDD in the block manager;
-    // round r+1 depends only on round r's materialized data and the
-    // merge table is the only output, so the previous round's
-    // checkpoint (and, on return, the last one) is released here —
-    // the loop holds at most one round of state however many merges
-    // are learned.
-    var pinned: Option[org.apache.spark.rdd.RDD[_]] = None
-    def release(): Unit = { pinned.foreach(_.unpersist(blocking = false)); pinned = None }
-    var r = 0
-    var exhausted = false
-    while (r < numMerges && !exhausted) {
-      val top = words
-        .filter(size(col("sym")) >= 2)
-        .select(col("freq"), explode(expr(
-          "transform(sequence(0, size(sym) - 2), " +
-            "i -> struct(sym[i] AS a, sym[i + 1] AS b))")).as("p"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum(col("freq")).as("cnt"))
-        .orderBy(col("cnt").desc, col("a"), col("b"))
-        .limit(1).collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val (a, b, cnt) =
-          (top.head.getString(0), top.head.getString(1), top.head.getLong(2))
-        out += Merge(r, a, b, a + b, cnt)
-        words = words.withColumn("sym", mergeSyms(col("sym"), a, b))
-          .localCheckpoint()
-        val prev = pinned
-        pinned = words.queryExecution.analyzed match {
-          case l: org.apache.spark.sql.execution.LogicalRDD => Some(l.rdd)
-          case _ => None
+    // Round state, newest first. A round's argmax job fills the newest
+    // pin and is the last reader of the one before it, which is closed
+    // right after: the loop holds at most two rounds of state however
+    // many merges are learned, and none on return (the merge table is
+    // the only output).
+    var pins = List.empty[Pinned]
+    try {
+      var r = 0
+      var exhausted = false
+      while (r < numMerges && !exhausted) {
+        val top = words
+          .filter(size(col("sym")) >= 2)
+          .select(col("freq"), explode(expr(
+            "transform(sequence(0, size(sym) - 2), " +
+              "i -> struct(sym[i] AS a, sym[i + 1] AS b))")).as("p"))
+          .groupBy(col("p.a").as("a"), col("p.b").as("b"))
+          .agg(sum(col("freq")).as("cnt"))
+          .orderBy(col("cnt").desc, col("a"), col("b"))
+          .limit(1).collect()
+        pins.drop(1).foreach(_.close())
+        pins = pins.take(1)
+        if (top.isEmpty) exhausted = true
+        else {
+          val (a, b, cnt) =
+            (top.head.getString(0), top.head.getString(1), top.head.getLong(2))
+          out += Merge(r, a, b, a + b, cnt)
+          pins = Pinned(words.withColumn("sym", mergeSyms(col("sym"), a, b))) :: pins
+          words = pins.head.df
+          r += 1
         }
-        prev.foreach(_.unpersist(blocking = false))
-        r += 1
       }
-    }
-    release()
+    } finally pins.foreach(_.close())
     out.toSeq
   }
 

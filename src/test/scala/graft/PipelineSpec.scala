@@ -2466,10 +2466,16 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("integer PageRank matches hand-computed fixed-point values") {
+    val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet
     // star: 1→2, 2→1, 3→1 (all out-degree 1)
     val edges = Seq((1L, 2L), (2L, 1L), (3L, 1L)).toDF("src", "dst")
-    def prMap(iters: Int) = graft.graph.PageRank.rankInt(edges, iters)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // the ranks come back persisted and caller-owned
+    def ranks(e: DataFrame, iters: Int) = {
+      val pr = graft.graph.PageRank.rankInt(e, iters)
+      try pr.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      finally pr.unpersist()
+    }
+    def prMap(iters: Int) = ranks(edges, iters)
     assert(prMap(1) === Map(
       1L -> 1850000L, // 150000 + 850000 (from 2) + 850000 (from 3)
       2L -> 1000000L, // 150000 + 850000 (from 1)
@@ -2481,13 +2487,12 @@ class PipelineSpec extends SparkSpec {
     // pure cycle is a fixed point of the scheme (mass neither leaks
     // nor concentrates): every node stays at the initial base
     val cyc = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
-    assert(graft.graph.PageRank.rankInt(cyc, 3)
-      .collect().map(_.getLong(1)).toSet === Set(1000000L))
+    assert(ranks(cyc, 3).values.toSet === Set(1000000L))
     // out-degree 2 splits the damped mass with floor division
     val split = Seq((1L, 2L), (1L, 3L)).toDF("src", "dst")
-    val m = graft.graph.PageRank.rankInt(split, 1)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val m = ranks(split, 1)
     assert(m(2L) === 150000L + 425000L && m(3L) === 150000L + 425000L)
+    assert(spark.sparkContext.getPersistentRDDs.keySet === pinnedBefore)
   }
 
   test("fixed-point Lloyd ≡ independent driver-side replay (3 iters)") {

@@ -845,4 +845,27 @@ class PlanQualitySpec extends SparkSpec {
       keysH(spark), keysB(spark), Seq("band", "key"), nSalts = 8)
     assert(salted.count() === n / 100L * 99L)
   }
+
+  test("leak gate: pinning queries leave nothing pinned past clearCache") {
+    // every catalog query that reaches a pin site (the dedup closures,
+    // the Pinned lineage cuts, PageRank, the q196 funnel). A catalog
+    // runner releases with clearCache alone, so a block that survives
+    // it leaks once per run in a long-lived session.
+    val gated = Set("q68", "q73", "q76", "q96", "q98", "q104", "q106",
+      "q128", "q142", "q151", "q191", "q192", "q193", "q196", "q197",
+      "q198", "q201", "q207")
+    val runs = graft.SparkEntry.queries.toSeq
+      .filter { case (name, _) => gated(name.takeWhile(_ != '_')) }
+      .sortBy(_._1)
+    assert(runs.map(_._1.takeWhile(_ != '_')).toSet === gated)
+    spark.catalog.clearCache()
+    val leaks = runs.flatMap { case (name, fn) =>
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      fn(spark, dir).count()
+      spark.catalog.clearCache()
+      val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+      if (left.isEmpty) None else Some(s"$name: ${left.size} pinned RDDs")
+    }
+    assert(leaks.isEmpty, leaks.mkString("\n"))
+  }
 }
