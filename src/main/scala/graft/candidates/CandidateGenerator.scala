@@ -34,7 +34,9 @@ trait CandidateGenerator extends Serializable {
 
   /** Attach the (single) probe record's columns as literals under its
     * prefix — the 1-row side of the pair never needs a join, so plans
-    * built this way carry no BroadcastNestedLoopJoin at all.
+    * built this way carry no BroadcastNestedLoopJoin at all. Reading the
+    * probe is job-free when it is a LocalRelation (the explainer binds
+    * its probes that way).
     */
   protected def withProbeLiterals(candidates: DataFrame, probe: DataFrame,
       probePrefix: String): DataFrame = {
@@ -147,17 +149,17 @@ object CandidateGenerator {
   }
 }
 
-/** Reference-exact J3: the probe replicates against every source record
-  * — literally Spark's BroadcastNestedLoopJoin (one pass over the
-  * source with the 1-row probe broadcast). Exhaustive recall; cost is a
-  * full scan of the opposite source per explanation.
+/** Reference-exact J3: the probe pairs with every source record. The
+  * 1-row probe attaches as literals, so the pair frame is a projection
+  * of the source scan — no join operator, and over a local source it
+  * folds to a LocalRelation. Exhaustive recall; cost is a full scan of
+  * the opposite source per explanation.
   */
 case object CrossJoinGenerator extends CandidateGenerator {
   override def pairs(probe: DataFrame, source: DataFrame,
       probeIsLeft: Boolean, schema: PairSchema): DataFrame = {
     val (probePrefix, variedPrefix) = prefixes(probeIsLeft, schema)
-    val probeB = broadcast(schema.renameWithPrefix(probe, probePrefix))
-    schema.renameWithPrefix(source, variedPrefix).crossJoin(probeB)
+    withProbeLiterals(schema.renameWithPrefix(source, variedPrefix), probe, probePrefix)
   }
 }
 

@@ -1,9 +1,12 @@
 package graft.candidates
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 import graft.functions.TextSim
 import graft.matcher.ERModel
+import graft.operators.SparkOrder
 import graft.schema.PairSchema
 
 /** Support-pair search (reference local_explain.py:82-197): find records
@@ -13,18 +16,21 @@ import graft.schema.PairSchema
   *
   * Spark-first re-expression of the reference's batched driver loop
   * (local_explain.py:112-128): instead of predicting 4k-row pandas
-  * slices until k qualify, we
-  *   1. cap the candidate space to the reference's total prediction
-  *      budget (`batch × 20`) with TakeOrderedAndProject (no full sort,
-  *      no full shuffle),
-  *   2. score the whole capped set in one distributed pass,
-  *   3. compute per-batch qualifying counts (≤ 20 tiny rows on the
-  *      driver) and keep exactly the batches the reference would have
-  *      consumed.
-  * Result set matches the reference's early-exit semantics while doing
-  * one job instead of ≤ 20 sequential ones. At 100 TB the crossJoin
-  * candidate generator swaps for an LSH blocking join (see
-  * graft.dedup.MinHashLsh) — the scoring/early-exit pipeline is
+  * slices until k qualify, each searched side
+  *   1. caps its candidate space to the reference's total prediction
+  *      budget (`batch × 20`) in ONE bounded action — a
+  *      TakeOrderedAndProject over a distributed source (no full sort,
+  *      no full shuffle), a driver sort of the folded rows over a local
+  *      one;
+  *   2. is scored together with the other side as one LocalRelation —
+  *      a column-program matcher folds over it, so scoring fires no job;
+  *   3. keeps exactly the batches the reference would have consumed
+  *      (the early-exit walk, driver arithmetic over ≤ 20 batches).
+  * Result set matches the reference's early-exit semantics while a
+  * support call fires one job per distributed side instead of ≤ 20
+  * sequential predictions. At 100 TB the cross-scan candidate
+  * generator swaps for an LSH blocking filter (see
+  * [[LshBlockingGenerator]]) — the scoring/early-exit pipeline is
   * unchanged.
   */
 object Candidates {
@@ -34,43 +40,34 @@ object Candidates {
     xxhash64(a.cast("string"), b.cast("string"), lit(seed))
 
   /** Row count without a Spark job when the frame folds to a
-    * LocalRelation (the batched support paths return bounded
-    * LocalRelations, and Catalyst's ConvertToLocalRelation folds
-    * projections/filters over them) — the explainer fires dozens of
-    * sub-100ms jobs per explanation and each skipped count removes a
-    * whole scheduler round-trip. Falls back to a normal count() for
-    * anything distributed, so the result is always exactly count().
+    * LocalRelation (the support search returns bounded LocalRelations,
+    * and Catalyst's ConvertToLocalRelation folds projections/filters
+    * over them) — the explainer fires dozens of sub-100ms jobs per
+    * explanation and each skipped count removes a whole scheduler
+    * round-trip. Falls back to a normal count() for anything
+    * distributed, so the result is always exactly count().
     */
   private[graft] def boundedCount(df: DataFrame): Long =
     df.queryExecution.optimizedPlan match {
-      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        l.data.size.toLong
+      case l: LocalRelation => l.data.size.toLong
       case _ => df.count()
     }
 
-  /** The J3+A7+O1 candidate-pair frame and its similarity ordering for
-    * one probe side — shared by [[findCandidates]] and [[support]]'s
-    * fused two-side search.
-    *
-    * J3, pluggable (SURVEY §4's scale swap): the default
-    * CrossJoinGenerator replicates the (single-record) probe against
-    * every source record — one BroadcastNestedLoopJoin pass with the
-    * probe side explicitly broadcast (without the hint the planner sees
-    * only "filtered frame × frame" and picks a CartesianProduct whose
-    * task count is |partsL| × |partsR|). LshBlockingGenerator swaps the
-    * full scan for a minhash-band collision filter; SampleGenerator
-    * bounds it — the scoring/early-exit pipeline is unchanged.
+  /** One searched side: the probe record, the opposite source, and
+    * whether the probe is the left record (reference lj=True).
     */
-  private def candidatePairs(
-      probe: DataFrame,
-      source: DataFrame,
-      probeIsLeft: Boolean,
-      findPositives: Boolean,
-      numCandidates: Int,
-      maxPredict: Int,
-      seed: Long,
-      schema: PairSchema,
-      gen: CandidateGenerator): (DataFrame, Seq[Column]) = {
+  private type Side = (DataFrame, DataFrame, Boolean)
+
+  /** The J3 candidate-pair frame of one side (O7-capped) and its A7
+    * similarity column. J3 is pluggable (SURVEY §4's scale swap): the
+    * default CrossJoinGenerator attaches the probe's columns as
+    * literals to every source record — a projection of the source
+    * scan, no join; LshBlockingGenerator swaps the full scan for a
+    * minhash-band collision filter; SampleGenerator bounds it.
+    */
+  private def candidatePairs(side: Side, maxPredict: Int, seed: Long,
+      schema: PairSchema, gen: CandidateGenerator): (DataFrame, Column) = {
+    val (probe, source, probeIsLeft) = side
     val pairs0 = gen.pairs(probe, source, probeIsLeft, schema)
     // O7 prediction cap: seeded pseudo-random subset. xxhash64 of the
     // ids replaces the reference's unseeded sample(frac=1) — same
@@ -80,27 +77,94 @@ object Candidates {
       if (maxPredict > 0)
         pairs0.orderBy(shuffleKey(col(schema.lid), col(schema.rid), seed)).limit(maxPredict)
       else pairs0
-
-    // A7 similarity of probe text vs the varied side's text.
     val (probeCols, variedCols) = {
       val l = pairs.columns.filter(c => c.startsWith(schema.lprefix) && c != schema.lid)
       val r = pairs.columns.filter(c => c.startsWith(schema.rprefix) && c != schema.rid)
       if (probeIsLeft) (l, r) else (r, l)
     }
-    val score = TextSim.tokenCosine(
+    (pairs, TextSim.tokenCosine(
       TextSim.recordText(probeCols.map(col).toIndexedSeq),
-      TextSim.recordText(variedCols.map(col).toIndexedSeq))
-
-    // O1 similarity order: descending when hunting positives
-    // (reference ascending = not find_positives). Ties broken by ids for
-    // determinism (pandas relies on stable sort of the input order).
-    val ordCols: Seq[Column] =
-      (if (findPositives) score.desc else score.asc) +:
-        Seq(col(schema.lid).cast("string").asc, col(schema.rid).cast("string").asc)
-    (pairs, ordCols)
+      TextSim.recordText(variedCols.map(col).toIndexedSeq)))
   }
 
-  /** J3 + A7 + O1 + O2 + P5: candidates for `probe` against `source`.
+  /** The `cap` first pairs of one side in the O1 similarity order:
+    * `score` descending when hunting positives (reference ascending =
+    * not find_positives), ties broken by the id strings ascending
+    * (pandas relies on the stable sort of its input order). One action
+    * over a distributed frame (TakeOrderedAndProject, rows arrive in
+    * order); none over a frame that folds to a LocalRelation, whose
+    * rows sort on the driver in Spark's exact order — there
+    * EliminateLimits drops the Limit and the bare Sort would run as a
+    * range sort of three jobs.
+    */
+  private def cappedSide(pairs: DataFrame, score: Column,
+      findPositives: Boolean, cap: Int, schema: PairSchema): Array[Row] = {
+    val ids = Seq(col(schema.lid).cast("string"), col(schema.rid).cast("string"))
+    pairs.queryExecution.optimizedPlan match {
+      case _: LocalRelation =>
+        val n = pairs.columns.length
+        val keyed = pairs.select(pairs.columns.map(col).toIndexedSeq ++ (score +: ids): _*)
+          .collect()
+        keyed.sortWith { (x, y) =>
+          val c = SparkOrder.compareDoubles(x.getAs[java.lang.Double](n),
+            y.getAs[java.lang.Double](n), ascending = !findPositives)
+          (if (c != 0) c
+          else (n + 1 to n + 2).iterator
+            .map(i => SparkOrder.compareStrings(x.getString(i), y.getString(i)))
+            .find(_ != 0).getOrElse(0)) < 0
+        }.take(cap).map(r => Row.fromSeq(r.toSeq.take(n)))
+      case _ =>
+        pairs.orderBy((if (findPositives) score.desc else score.asc) +: ids.map(_.asc): _*)
+          .limit(cap).collect()
+    }
+  }
+
+  /** The bounded search shared by [[findCandidates]] and [[support]]:
+    * each side's budget-capped candidates (≤ `batch × 20` rows, one
+    * bounded action), scored for all sides at once as ONE LocalRelation,
+    * then the reference's early-exit walk per side. Each kept row holds
+    * the scored pair columns followed by `id` (composite pair id),
+    * `__shuffle` (O5 seeded shuffle key) and `__capkey` (O6 balance
+    * key), computed in-frame by Spark's own pairId and xxhash64
+    * expressions — one projection that folds with the scoring, so no
+    * Spark semantics are re-implemented here. The sides' columns align
+    * by name, as a unionByName would align them.
+    *
+    * @return the kept rows' schema and each side's kept rows, in
+    *         similarity order
+    */
+  private def searchSides(sides: Seq[Side], findPositives: Boolean,
+      model: ERModel, numCandidates: Int, maxPredict: Int, seed: Long,
+      schema: PairSchema, gen: CandidateGenerator): (StructType, Seq[Array[Row]]) = {
+    val batch = numCandidates * 4
+    val pairFrames = sides.map(candidatePairs(_, maxPredict, seed, schema, gen))
+    val pairSchema = pairFrames.map(_._1).reduce(_ unionByName _).schema
+    val aligned = pairSchema.fields.map(f => col(f.name).cast(f.dataType)).toIndexedSeq
+    val rows = pairFrames.zipWithIndex.flatMap { case ((pairs, score), i) =>
+      cappedSide(pairs.select(aligned: _*), score, findPositives, batch * 20, schema)
+        .map(r => Row.fromSeq(r.toSeq :+ i))
+    }
+    val spark = sides.head._2.sparkSession
+    val scored = model.predict(spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+      pairSchema.add(StructField("__side", IntegerType, nullable = false))))
+    val pid = schema.pairId(col(schema.lid), col(schema.rid))
+    val keyed = scored.select(scored.columns.filter(_ != "__side").map(col).toIndexedSeq ++ Seq(
+      pid.as("id"),
+      shuffleKey(pid, lit(""), seed + 1).as("__shuffle"),
+      shuffleKey(col(schema.lid), col(schema.rid), seed).as("__capkey"),
+      col("__side")): _*)
+    // LocalRelation rows keep their order through the column program
+    // (or mapPartitions scorer), so a side's array index is its rank
+    val all = keyed.collect()
+    val sideIdx = keyed.columns.length - 1
+    (new StructType(keyed.schema.fields.init), sides.indices.map { i =>
+      earlyExitKept(all.filter(_.getInt(sideIdx) == i), batch, numCandidates, findPositives)
+        .map(r => Row.fromSeq(r.toSeq.init))
+    })
+  }
+
+  /** J3 + A7 + O1 + O2 + P5: candidates for `probe` against `source`,
+    * as a LocalRelation of scored pair rows.
     *
     * @param probeIsLeft true when the probe is the left record and
     *                    `source` supplies right candidates (reference
@@ -115,35 +179,14 @@ object Candidates {
       numCandidates: Int,
       maxPredict: Int = -1,
       seed: Long = 42L,
-      batched: Boolean = true,
       schema: PairSchema = PairSchema.default,
       gen: CandidateGenerator = CrossJoinGenerator): DataFrame = {
-    val (pairs, ordCols) = candidatePairs(probe, source, probeIsLeft,
-      findPositives, numCandidates, maxPredict, seed, schema, gen)
-    val batch = numCandidates * 4
-    if (!batched) {
-      val scored = model.predict(pairs)
-      val qual = if (findPositives) col("match_score") > 0.5 else col("match_score") < 0.5
-      scored.filter(qual)
-    } else {
-      // O2 early-exit batching. Budget cap first: the reference never
-      // predicts more than 20 batches, so the candidate space collapses
-      // to ≤ batch × 20 rows BEFORE scoring — TakeOrderedAndProject, no
-      // full sort. The scored, budget-capped set is then small by
-      // construction (the reference's own total prediction budget), so
-      // batch assignment and the early-exit walk run driver-side over a
-      // bounded collect and the result is a LocalRelation: one Spark job
-      // total, no cached lineage for downstream consumers to re-trigger
-      // and nothing left pinned in the block manager (the round-3 cache
-      // here leaked a frame per call across EvalDriver loops).
-      val capped = pairs.orderBy(ordCols: _*).limit(batch * 20)
-      val scored = model.predict(capped)
-      val rows = scored.orderBy(ordCols: _*).collect()
-      val kept = earlyExitKept(rows, batch, numCandidates, findPositives)
-      val spark = probe.sparkSession
-      spark.createDataFrame(java.util.Arrays.asList(kept.toIndexedSeq: _*),
-        scored.schema)
-    }
+    val (keptSchema, kept) = searchSides(Seq((probe, source, probeIsLeft)),
+      findPositives, model, numCandidates, maxPredict, seed, schema, gen)
+    val n = keptSchema.length - 3 // the scored columns, without the keys
+    probe.sparkSession.createDataFrame(
+      java.util.Arrays.asList(kept.head.map(r => Row.fromSeq(r.toSeq.take(n))).toIndexedSeq: _*),
+      new StructType(keptSchema.fields.take(n)))
   }
 
   /** The reference's early-exit batch walk over the budget-capped,
@@ -153,9 +196,9 @@ object Candidates {
     * (max(1, ...)) so sub-batch-sized sources still yield support —
     * the reference degenerates to empty there.
     */
-  private def earlyExitKept(rows: Array[org.apache.spark.sql.Row], batch: Int,
-      numCandidates: Int, findPositives: Boolean): Array[org.apache.spark.sql.Row] = {
-    def qual(r: org.apache.spark.sql.Row): Boolean = {
+  private def earlyExitKept(rows: Array[Row], batch: Int,
+      numCandidates: Int, findPositives: Boolean): Array[Row] = {
+    def qual(r: Row): Boolean = {
       val ms = r.getAs[Double]("match_score")
       if (findPositives) ms > 0.5 else ms < 0.5
     }
@@ -176,7 +219,10 @@ object Candidates {
 
   /** get_support (reference local_explain.py:162-197): symmetric
     * candidate search for both probe records, balanced to equal size,
-    * shuffled (seeded), composite-id tagged, polarity-filtered.
+    * shuffled (seeded), composite-id tagged, polarity-filtered. The
+    * result is a LocalRelation of the scored pair columns plus `id` and
+    * `__shuffle` (downstream counts and collects are job-free); a
+    * search that finds nothing returns a frame with no columns.
     */
   def support(
       lRecord: DataFrame,
@@ -189,143 +235,38 @@ object Candidates {
       maxPredict: Int = -1,
       useLeft: Boolean = true,
       useRight: Boolean = true,
-      useAll: Boolean = false,
       seed: Long = 42L,
       schema: PairSchema = PairSchema.default,
       gen: CandidateGenerator = CrossJoinGenerator): (Boolean, DataFrame) = {
-
     val findPositives = classToExplain == 0
-    val numCandidates = numTriangles / 2
     val spark = lsource.sparkSession
-
-    def empty: DataFrame = {
-      import org.apache.spark.sql.types.StructType
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], new StructType())
-    }
-
-    if (useAll) {
-      // the rare useAll path returns a lazy distributed frame; its ≤3
-      // recomputations (counts + final consumption) are accepted over
-      // pinning an unbounded cache across EvalDriver's per-row explain
-      // loop.
-      val c4r1 = if (useRight)
-        findCandidates(lRecord, rsource, probeIsLeft = true, findPositives, model,
-          numCandidates, maxPredict, seed, batched = false, schema, gen)
-      else empty
-      val c4r2 = if (useLeft)
-        findCandidates(rRecord, lsource, probeIsLeft = false, findPositives, model,
-          numCandidates, maxPredict, seed, batched = false, schema, gen)
-      else empty
-
-      val n1 = if (useRight) boundedCount(c4r1) else 0L
-      val n2 = if (useLeft) boundedCount(c4r2) else 0L
-      val both = math.min(n1, n2)
-      val maxLen = if (both == 0) math.max(n1, n2) else both
-
-      // O6 balance via seeded sample-to-n (reference sample(n=max_len))
-      def cap(df: DataFrame, n: Long, have: Long): DataFrame =
-        if (have > n)
-          df.orderBy(shuffleKey(col(schema.lid), col(schema.rid), seed)).limit(n.toInt)
-        else df
-
-      val parts = Seq(
-        if (n1 > 0) Some(cap(c4r1, maxLen, n1)) else None,
-        if (n2 > 0) Some(cap(c4r2, maxLen, n2)) else None).flatten
-      if (parts.isEmpty) return (findPositives, empty)
-
-      // O5 seeded shuffle of the union (reference sample(frac=1))
-      val candidates = parts.reduce(_ unionByName _)
-        .withColumn("id", schema.pairId(col(schema.lid), col(schema.rid)))
-        .withColumn("__shuffle", shuffleKey(col("id"), lit(""), seed + 1))
-
-      val neighborhood =
-        if (findPositives) candidates.filter(col("match_score") >= 0.5)
-        else candidates.filter(col("match_score") < 0.5)
-      return (findPositives, neighborhood)
-    }
-
-    // Batched (default) path, fused (r12, guide §1.2): the two sides'
-    // budget-capped scored searches are INDEPENDENT bounded subtrees, so
-    // they ride ONE union + ONE collect (one scheduler round-trip where
-    // two findCandidates collects ran sequentially before); everything
-    // after the collect — the reference's early-exit batch walk, the O6
-    // balance cap, the O5 union/shuffle keys and the polarity filter —
-    // is driver arithmetic over the ≤ 2·batch·20 collected rows and the
-    // result is a true LocalRelation (downstream counts are job-free).
-    // Row-for-row identical to the sequential path: each side keeps its
-    // own similarity ordering via a per-side row_number (__rank) over
-    // the same ordCols the sequential collect sorted by, and the cap /
-    // shuffle keys are computed IN-frame by the same expressions
-    // (xxhash64, pairId) the lazy path evaluated, so no driver
-    // re-implementation of Spark semantics is involved.
-    import org.apache.spark.sql.expressions.Window
-    val batch = numCandidates * 4
-    val sides: Seq[(DataFrame, DataFrame, Boolean)] = Seq(
+    val sides: Seq[Side] = Seq(
       if (useRight) Some((lRecord, rsource, true)) else None,
       if (useLeft) Some((rRecord, lsource, false)) else None).flatten
-    if (sides.isEmpty) return (findPositives, empty)
-    var scoredSchema: org.apache.spark.sql.types.StructType = null
-    val tagged = sides.zipWithIndex.map { case ((probe, src, isL), i) =>
-      val (pairs, ordCols) = candidatePairs(probe, src, isL, findPositives,
-        numCandidates, maxPredict, seed, schema, gen)
-      val capped = pairs.orderBy(ordCols: _*).limit(batch * 20)
-      val scored = model.predict(capped)
-      if (scoredSchema == null) scoredSchema = scored.schema
-      scored
-        .withColumn("__rank", row_number().over(Window.orderBy(ordCols: _*)))
-        .withColumn("__side", lit(i))
-        .withColumn("__capkey", shuffleKey(col(schema.lid), col(schema.rid), seed))
-        .withColumn("__supid", schema.pairId(col(schema.lid), col(schema.rid)))
-        .withColumn("__supshuffle", shuffleKey(
-          schema.pairId(col(schema.lid), col(schema.rid)), lit(""), seed + 1))
-    }
-    val all = tagged.reduce(_ unionByName _).collect()
-    val sideIdx = all.headOption.map(_.fieldIndex("__side"))
-      .getOrElse(-1)
-    val rankIdx = all.headOption.map(_.fieldIndex("__rank")).getOrElse(-1)
-    val keptBySide: IndexedSeq[Array[org.apache.spark.sql.Row]] =
-      sides.indices.map { i =>
-        val rows = all.filter(_.getInt(sideIdx) == i).sortBy(_.getInt(rankIdx))
-        earlyExitKept(rows, batch, numCandidates, findPositives)
-      }
-    // O6 balance semantics, exactly as before: n1 is the right-search
-    // count when enabled else 0, n2 the left-search count; both = min,
-    // maxLen = max when one side is empty/disabled.
+    if (sides.isEmpty) return (findPositives, spark.emptyDataFrame)
+    val (keptSchema, kept) = searchSides(sides, findPositives, model,
+      numTriangles / 2, maxPredict, seed, schema, gen)
+    // O6 balance: n1 is the right-search count when enabled else 0, n2
+    // the left-search count; both = min, maxLen = max when one side is
+    // empty/disabled. A side above maxLen keeps its maxLen rows of
+    // lowest seeded cap key (reference sample(n=max_len)).
     def sideN(isRightSearch: Boolean): Long =
-      sides.zipWithIndex.collectFirst {
-        case ((_, _, isL), i) if isL == isRightSearch => keptBySide(i).length.toLong
+      sides.zip(kept).collectFirst {
+        case ((_, _, isL), rows) if isL == isRightSearch => rows.length.toLong
       }.getOrElse(0L)
-    val n1 = sideN(true)
-    val n2 = sideN(false)
+    val (n1, n2) = (sideN(true), sideN(false))
     val both = math.min(n1, n2)
     val maxLen = if (both == 0) math.max(n1, n2) else both
-    val capIdx = all.headOption.map(_.fieldIndex("__capkey")).getOrElse(-1)
-    val capped = keptBySide.map { rows =>
+    val capIdx = keptSchema.length - 1
+    val candidateRows = kept.flatMap { rows =>
       if (rows.length > maxLen) rows.sortBy(_.getLong(capIdx)).take(maxLen.toInt)
       else rows
     }
-    val candidateRows = capped.flatten
-    if (candidateRows.isEmpty && n1 == 0 && n2 == 0) return (findPositives, empty)
-    // polarity filter (O5 keys already ride the rows) + projection back
-    // to the neighborhood schema: scored columns + id + __shuffle
-    val msIdx = scoredSchema.fieldIndex("match_score")
-    val keepRow: org.apache.spark.sql.Row => Boolean =
-      if (findPositives) r => r.getDouble(msIdx) >= 0.5
-      else r => r.getDouble(msIdx) < 0.5
-    val supIdIdx = all.headOption.map(_.fieldIndex("__supid")).getOrElse(-1)
-    val supShufIdx = all.headOption.map(_.fieldIndex("__supshuffle")).getOrElse(-1)
-    val nScored = scoredSchema.length
-    val outRows = candidateRows.filter(keepRow).map { r =>
-      org.apache.spark.sql.Row.fromSeq(
-        (0 until nScored).map(r.get) ++ Seq(r.get(supIdIdx), r.get(supShufIdx)))
-    }
-    val outSchema = org.apache.spark.sql.types.StructType(
-      scoredSchema.fields.toIndexedSeq ++ Seq(
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.StringType, nullable = true),
-        org.apache.spark.sql.types.StructField("__shuffle",
-          org.apache.spark.sql.types.LongType, nullable = true)))
+    if (candidateRows.isEmpty) return (findPositives, spark.emptyDataFrame)
+    // projection back to the neighborhood schema: scored columns + id +
+    // __shuffle (the kept rows already passed the polarity filter)
     (findPositives, spark.createDataFrame(
-      java.util.Arrays.asList(outRows.toIndexedSeq: _*), outSchema))
+      java.util.Arrays.asList(candidateRows.map(r => Row.fromSeq(r.toSeq.init)): _*),
+      new StructType(keptSchema.fields.init)))
   }
 }

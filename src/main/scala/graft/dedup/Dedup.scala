@@ -425,17 +425,20 @@ object Dedup {
     try {
       val keysH = historyKeys.getOrElse(
         lshBandKeys(history, textCol, idCol, numBands, rowsPerBand, k))
-      // r12 (guide §3.1): the batch is BY CONTRACT the small side (a
-      // crawl window probing an established corpus), and its key frame
-      // is already persisted above — broadcast it so the history key
-      // table, the side proportional to the full corpus, is never
-      // shuffled for the probe. A batch beyond the broadcast ceiling
-      // (8 GB / 512M key rows) is outside this operator's
-      // batch-maintenance contract; chunk it into windows first.
+      // The batch is BY CONTRACT the small side (a crawl window probing
+      // an established corpus), and its key frame is already persisted
+      // above — broadcast it so the history key table, the side
+      // proportional to the full corpus, is never shuffled for the
+      // probe. The broadcast is gated on the key frame's size estimate
+      // against the session's broadcast threshold: a batch above it (or
+      // a session with broadcast off) takes the shuffle join — the same
+      // pairs, without building an oversized table on the driver.
+      val probeB = keysB.select(col(idCol).as("id_b"), col("band"), col("key"))
+      val broadcastLimit = batch.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+      val fits = broadcastLimit >= 0 &&
+        keysB.queryExecution.optimizedPlan.stats.sizeInBytes <= broadcastLimit
       val cross = keysH.select(col(idCol).as("id_a"), col("band"), col("key"))
-        .join(broadcast(
-            keysB.select(col(idCol).as("id_b"), col("band"), col("key"))),
-          Seq("band", "key"))
+        .join(if (fits) broadcast(probeB) else probeB, Seq("band", "key"))
         .select(col("id_a"), col("id_b")).distinct()
       val self = lshCandidatePairsFromKeys(keysB, idCol)
       // self pairs have both ids in batch, cross pairs one in history —
@@ -474,46 +477,16 @@ object Dedup {
   def winnowFingerprints(text: Column, k: Int = 3, w: Int = 4): Column =
     graft.functions.WinnowSketch(text, k, w)
 
-  /** Declarative twin of [[winnowFingerprints]] (equivalence-spec'd,
-    * and the formulation the SQL oracle replays). The gram-hash array
-    * is let-bound through a lambda variable: a direct reference from
-    * inside the window lambda would INLINE the md5 pass and re-evaluate
-    * it per window — O(n²) md5 calls per document. Even bound, the
-    * interpreted md5-per-gram pass is ~4× slower than the single-pass
-    * [[graft.functions.WinnowSketch]] expression at corpus scale.
-    */
-  def winnowFingerprintsDeclarative(text: Column, k: Int = 3, w: Int = 4): Column = {
-    val hashes = transform(shingles(text, k), g => portableHash60(g))
-    element_at(transform(array(hashes), hs => {
-      val nWindows = size(hs) - (w - 1)
-      val mins = when(nWindows >= 1,
-        transform(sequence(lit(1), nWindows), i => array_min(slice(hs, i, lit(w)))))
-        .otherwise(array(array_min(hs)))
-      array_sort(array_distinct(mins))
-    }), 1)
-  }
 
   // ------------------------------------------------------------- simhash
   /** 64-bit SimHash over tokens (xxhash64 token hashes; per-bit majority
     * vote). Near-dups = small hamming distance. Engine-native hash →
     * fast, but not oracle-portable; verified by property tests instead.
     * Single-pass sketch expression (one token hash feeds all 64
-    * counters); [[simhashDeclarative]] is the per-bit-fold twin kept for
-    * equivalence tests.
+    * counters); its per-bit-fold twin lives with the equivalence
+    * specs.
     */
   def simhash(text: Column): Column = graft.functions.SimHash64(text)
-
-  def simhashDeclarative(text: Column): Column = {
-    val toks = TextAnalysis.tokens(text)
-    val bits = (0 until 64).map { b =>
-      // sum of ±1 votes for bit b over token hashes, sign → bit
-      val vote = aggregate(toks, lit(0L),
-        (acc, t) => acc + when(shiftright(xxhash64(t), b).bitwiseAND(1L) === 1L, 1L)
-          .otherwise(-1L))
-      when(vote > 0, shiftleft(lit(1L), b)).otherwise(0L)
-    }
-    bits.reduce(_ bitwiseOR _)
-  }
 
   /** Hamming distance between two 64-bit signatures. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
@@ -529,33 +502,11 @@ object Dedup {
     * hashes, per-bit majority vote — bit-for-bit reproducible by a SQL
     * oracle, computed by the single-pass
     * [[graft.functions.SimHashPortable60]] expression (one md5 per
-    * token through a reused JVM digest; the declarative fold below
-    * pays the md5 expression interpreter per token).
+    * token through a reused JVM digest; the declarative fold the specs
+    * compare against pays the md5 expression interpreter per token).
     */
   def simhashPortable(text: Column): Column =
     graft.functions.SimHashPortable60(text)
-
-  /** Declarative twin of [[simhashPortable]] (equivalence-spec'd; the
-    * formulation the SQL oracle replays). One `aggregate` carries all
-    * 60 vote counters as an array accumulator, each token's md5 is
-    * computed exactly once (per-bit folds over a hash array would
-    * re-run the md5 per bit).
-    */
-  def simhashPortableDeclarative(text: Column): Column = {
-    val bitsN = 60
-    val tokh = transform(TextAnalysis.tokens(text), t => portableHash60(t))
-    aggregate(
-      tokh,
-      array_repeat(lit(0), bitsN),
-      (acc, h) => zip_with(acc, sequence(lit(0), lit(bitsN - 1)),
-        (a, b) => a + when(call_function("shiftright", h, b)
-          .bitwiseAND(lit(1L)) === 1L, 1).otherwise(-1)),
-      acc => aggregate(
-        zip_with(acc, sequence(lit(0), lit(bitsN - 1)),
-          (a, b) => when(a > 0, call_function("shiftleft", lit(1L), b))
-            .otherwise(lit(0L))),
-        lit(0L), (s, v) => s + v))
-  }
 
   /** Near-dup pairs from a precomputed (idCol, sig) signature frame —
     * callers that need the signatures for more than one leg (e.g. a

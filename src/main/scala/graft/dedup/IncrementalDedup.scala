@@ -190,20 +190,12 @@ object IncrementalDedup {
 
   /** Signature-agreement jaccard estimate of two equal-length minhash
     * arrays: |{i : a(i) = b(i)}| / numHashes. Fused codegen'd
-    * expression ([[graft.functions.SigAgreementExpr]]); the
-    * declarative twin below is the spec parity surface.
+    * expression ([[graft.functions.SigAgreementExpr]]); its
+    * declarative zip_with/aggregate twin is the spec parity surface.
     */
   private[graft] def sigAgreement(a: org.apache.spark.sql.Column,
       b: org.apache.spark.sql.Column, numHashes: Int): org.apache.spark.sql.Column =
     graft.functions.VecMath.sigAgreement(a, b, numHashes)
-
-  /** Declarative (zip_with/aggregate) twin of [[sigAgreement]] — what
-    * the SQL oracles replay; bit-identical by spec.
-    */
-  private[graft] def sigAgreementDeclarative(a: org.apache.spark.sql.Column,
-      b: org.apache.spark.sql.Column, numHashes: Int): org.apache.spark.sql.Column =
-    aggregate(zip_with(a, b, (x, y) => when(x === y, 1).otherwise(0)),
-      lit(0), (acc, v) => acc + v).cast("double") / numHashes
 
   /** Dedup `batch` against `history` (a band-key state table as built
     * by previous calls' `historyRows`) AND within itself:

@@ -25,8 +25,9 @@ final case class Explanation(
     triangles: DataFrame)
 
 /** CERTA explainer (reference explain.py:34-158, §3.1 of SURVEY.md),
-  * Spark-native. The support search is a distributed scan of the
-  * sources; everything after it is bounded by numTriangles × the
+  * Spark-native. The support search scans each opposite source in one
+  * bounded action (its capped top-k) and scores the capped rows as a
+  * LocalRelation; everything after it is bounded by numTriangles × the
   * attribute powerset and runs as driver work around the fewest jobs:
   * triangles are joined driver-side, every lattice depth is predicted
   * in ONE cached pass, and the driver replays the reference's
@@ -151,23 +152,26 @@ class CertaExplainer(
 
     // stage 2: original prediction (1-row job; driver argmax O8). The
     // WHOLE predicted row is collected (not just the two scores): the
-    // pair row itself re-binds as a LocalRelation so the support-pair
-    // assembly below never re-plans the two source scans (r12 —
-    // scheduler-round-trip diet, guide §1.2).
+    // pair row and both probe records re-bind from it as LocalRelations,
+    // so nothing below re-plans the two source scans and reading a
+    // probe (the support search attaches it as literals) fires no job.
     val pairUnderExplanation0 = schema.assemblePair(lRecord, rRecord)
     val orig = staged("original prediction")(
       model.predict(pairUnderExplanation0).head())
     val pc = if (orig.getAs[Double]("match_score") >
       orig.getAs[Double]("nomatch_score")) 1 else 0
-    val pairUnderExplanation = spark.createDataFrame(
+    def fromOrig(frame: DataFrame, prefix: String): DataFrame = spark.createDataFrame(
       java.util.Arrays.asList(org.apache.spark.sql.Row.fromSeq(
-        pairUnderExplanation0.columns.toIndexedSeq
-          .map(c => orig.get(orig.fieldIndex(c))))),
-      pairUnderExplanation0.schema)
+        frame.columns.toIndexedSeq.map(c => orig.get(orig.fieldIndex(prefix + c))))),
+      frame.schema)
+    val pairUnderExplanation = fromOrig(pairUnderExplanation0, "")
+    val lProbe = fromOrig(lRecord, schema.lprefix)
+    val rProbe = fromOrig(rRecord, schema.rprefix)
 
-    // stage 3: support search (batched → bounded LocalRelation result)
+    // stage 3: support search (one bounded action per distributed side,
+    // LocalRelation result)
     val (_, neighborhood0) = staged("support search")(Candidates.support(
-      lRecord, rRecord, lsource, rsource, pc, model, numTriangles,
+      lProbe, rProbe, lsource, rsource, pc, model, numTriangles,
       maxPredict, useLeft, useRight, seed = seed, schema = schema,
       gen = gen))
     if (neighborhood0.columns.isEmpty) return emptyExplanation()
@@ -195,12 +199,14 @@ class CertaExplainer(
       val (maxLid, maxRid) = maxSourceIds
       // variants of the left probe serve as right-side candidates & v.v.
       val genFromL = staged("augment")(graft.perturb.Augment
-        .generateSubsequences(lRecord, startId = maxRid + 1))
+        .generateSubsequences(lProbe, startId = maxRid + 1))
       val genFromR = staged("augment")(graft.perturb.Augment
-        .generateSubsequences(rRecord, startId = maxLid + 1))
+        .generateSubsequences(rProbe, startId = maxLid + 1))
       if (boundedCount(genFromL) > 0 && boundedCount(genFromR) > 0) {
+        // local sources and probes: under a column-program matcher the
+        // whole search folds and fires no job
         val (_, support2) = staged("augmented support search")(Candidates.support(
-          lRecord, rRecord, genFromR, genFromL, pc, model, numTriangles,
+          lProbe, rProbe, genFromR, genFromL, pc, model, numTriangles,
           maxPredict, useLeft, useRight, seed = seed, schema = schema,
           gen = gen))
         if (support2.columns.nonEmpty) {

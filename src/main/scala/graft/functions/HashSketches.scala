@@ -92,9 +92,8 @@ object HashSketches {
     * md5-derived k-gram hashes) in one pass: one tokenizer walk, one
     * reused digest per gram, window mins over a ring walk. The gram
     * hash equals `conv(substring(md5(gram), 1, 15), 16, 10)` — the top
-    * 60 bits of the digest — so the declarative twin
-    * (graft.dedup.Dedup.winnowFingerprintsDeclarative) and any SQL
-    * oracle reproduce it bit-for-bit.
+    * 60 bits of the digest — so the specs' declarative twin and any
+    * SQL oracle reproduce it bit-for-bit.
     */
   def winnowFingerprints(text: String, k: Int, w: Int): Array[Long] = {
     val md = mdLocal.get()
@@ -139,8 +138,8 @@ object HashSketches {
   }
 
   /** Portable 60-bit SimHash (md5-derived token hashes, per-bit
-    * majority vote — the oracle-reproducible formulation of
-    * graft.dedup.Dedup.simhashPortableDeclarative) in one pass: one
+    * majority vote — the oracle-reproducible formulation of the
+    * specs' declarative vote fold) in one pass: one
     * md5 per token, 60 counters updated together.
     */
   def simhashPortable60(text: String): Long = {

@@ -36,11 +36,9 @@ object TextSim {
     if (den == 0.0) 0.0 else num / den
   }
 
-  val cosineUdf = udf(cosineBags _)
-
   /** Column form of A7 — backed by the codegen'd Catalyst expression
-    * ([[TokenBagCosine]]); the UDF stays as the reference twin for
-    * equivalence tests.
+    * ([[TokenBagCosine]]); [[cosineBags]] is the reference twin the
+    * equivalence specs compare it with.
     */
   def tokenCosine(a: Column, b: Column): Column = TokenBagCosine(a, b)
 

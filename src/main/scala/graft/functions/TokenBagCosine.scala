@@ -45,44 +45,46 @@ object TokenBagCosine {
       (c >= '0' && c <= '9') || c == '_'
 
   /** Term-frequency bag via a single char scan (no regex). */
-  private def bag(s: String): java.util.HashMap[String, Int] = {
-    val m = new java.util.HashMap[String, Int]()
+  private def bag(s: String): java.util.HashMap[String, Integer] = {
+    val m = new java.util.HashMap[String, Integer]()
     var i = 0
     val n = s.length
     while (i < n) {
       while (i < n && !isWord(s.charAt(i))) i += 1
       val start = i
       while (i < n && isWord(s.charAt(i))) i += 1
-      if (i > start) {
-        val w = s.substring(start, i)
-        m.merge(w, 1, (x, y) => x + y)
-      }
+      if (i > start) m.merge(s.substring(start, i), 1, (x, y) => x + y)
     }
     m
   }
 
+  private def sumOfSquares(m: java.util.HashMap[String, Integer]): Double = {
+    var sum = 0.0
+    val it = m.values().iterator()
+    while (it.hasNext) { val f = it.next().doubleValue; sum += f * f }
+    sum
+  }
+
   /** Cosine of the `\w+` term bags. Called from generated code (via the
-    * object's static forwarder) — allocation-lean single-pass math.
+    * object's static forwarder) — allocation-lean single-pass math. The
+    * dot product walks the smaller bag and skips its misses in the
+    * larger; every term is an integer-valued double, so the sums are
+    * exact in any order.
     */
   def compute(a: UTF8String, b: UTF8String): Double = {
     if (a == null || b == null) return 0.0
     val va = bag(a.toString)
     val vb = bag(b.toString)
     if (va.isEmpty || vb.isEmpty) return 0.0
+    val (small, large) = if (va.size <= vb.size) (va, vb) else (vb, va)
     var num = 0.0
-    var sumA = 0.0
-    val itA = va.entrySet().iterator()
-    while (itA.hasNext) {
-      val e = itA.next()
-      val f = e.getValue.toDouble
-      sumA += f * f
-      val g = vb.get(e.getKey)
-      if (g != null) num += f * g.toDouble
+    val it = small.entrySet().iterator()
+    while (it.hasNext) {
+      val e = it.next()
+      val g = large.get(e.getKey)
+      if (g != null) num += e.getValue.doubleValue * g.doubleValue
     }
-    var sumB = 0.0
-    val itB = vb.values().iterator()
-    while (itB.hasNext) { val f = itB.next().toDouble; sumB += f * f }
-    val den = math.sqrt(sumA) * math.sqrt(sumB)
+    val den = math.sqrt(sumOfSquares(va)) * math.sqrt(sumOfSquares(vb))
     if (den == 0.0) 0.0 else num / den
   }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Fused float/double vector cosine. The declarative formulation
-  * ([[graft.similarity.Ann.cosineDeclarative]]) composes `zip_with` +
+  * (the specs' parity twin) composes `zip_with` +
   * `aggregate` — higher-order functions are CodegenFallback in Spark:
   * every row pays interpreted lambda dispatch and per-element boxing
   * over every dimension, THREE times (dot, both self-norms). This

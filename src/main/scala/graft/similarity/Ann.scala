@@ -10,9 +10,9 @@ import org.apache.spark.sql.types._
   * hyperplane LSH bucketing so the scan touches only candidate buckets.
   * The pairwise cosine — the verify arithmetic on every candidate path
   * — is a fused codegen'd expression ([[graft.functions.VecCosineExpr]]);
-  * [[cosineDeclarative]] is its bit-identical higher-order-function
-  * twin (deterministic left-to-right accumulation), kept as the spec
-  * parity surface. No UDFs anywhere.
+  * its bit-identical higher-order-function twin (deterministic
+  * left-to-right accumulation) lives with the specs as the parity
+  * surface. No UDFs anywhere.
   */
 object Ann {
 
@@ -26,21 +26,12 @@ object Ann {
   def norm(a: Column): Column = sqrt(dot(a, a))
 
   /** Pairwise cosine — the fused single-pass expression. Bit-identical
-    * to [[cosineDeclarative]] (spec'd), ~an order of magnitude less
+    * to the declarative zip_with/aggregate form (spec'd), ~an order of magnitude less
     * per-row overhead: the declarative form's zip_with/aggregate
     * lambdas are CodegenFallback and box every element three times.
     */
   def cosine(a: Column, b: Column): Column =
     graft.functions.VecMath.cosine(a, b)
-
-  /** The declarative (higher-order-function) cosine twin: the form a
-    * SQL engine replays directly and the parity baseline for the fused
-    * expression.
-    */
-  def cosineDeclarative(a: Column, b: Column): Column = {
-    val den = norm(a) * norm(b)
-    when(den === 0.0, 0.0).otherwise(dot(a, b) / den)
-  }
 
   /** Brute-force cosine top-k against a constant probe vector.
     * TakeOrderedAndProject: no global sort, no shuffle of embeddings;

@@ -40,6 +40,15 @@ class CertaCoreSpec extends SparkSpec {
 
   private def rec(src: DataFrame, id: Long): DataFrame = src.filter(col("id") === id)
 
+  // parquet-backed copies of the sources: a support search over them
+  // takes the distributed path (a LocalRelation source folds)
+  private lazy val parquetSources: (DataFrame, DataFrame) = {
+    val dir = java.nio.file.Files.createTempDirectory("certa-sources").toString
+    lsource.write.parquet(s"$dir/l")
+    rsource.write.parquet(s"$dir/r")
+    (spark.read.parquet(s"$dir/l"), spark.read.parquet(s"$dir/r"))
+  }
+
   test("TextSim.cosineBags matches the reference cs() semantics") {
     assert(math.abs(TextSim.cosineBags("a b c", "a b c") - 1.0) < 1e-12)
     assert(TextSim.cosineBags("a b", "c d") === 0.0)
@@ -122,6 +131,40 @@ class CertaCoreSpec extends SparkSpec {
     // only r0 shares tokens with l0 ("alpha beta gamma rome")
     assert(got.keySet === Set(0L))
     assert(got(0L) === 1.0)
+  }
+
+  test("SparkOrder.compareDoubles sorts as Spark's orderBy, asc and desc") {
+    import graft.operators.SparkOrder
+    // NaN and ±0.0 twice each, ties, nulls, infinities
+    val values: Seq[Option[Double]] = Seq(Some(1.5), Some(Double.NaN), Some(-0.0),
+      None, Some(0.0), Some(Double.NegativeInfinity), Some(1.5), Some(Double.NaN),
+      None, Some(Double.PositiveInfinity), Some(-2.0), Some(0.0), Some(-0.0),
+      Some(Double.MinPositiveValue))
+    val df = values.zipWithIndex.toDF("d", "i").repartition(3)
+    for (asc <- Seq(true, false)) {
+      val byD = if (asc) col("d").asc else col("d").desc
+      val sorted = df.orderBy(byD, col("i")).collect().map(_.getInt(1)).toSeq
+      val driver = values.zipWithIndex.sortWith { case ((x, i), (y, j)) =>
+        val c = SparkOrder.compareDoubles(x.map(Double.box).orNull,
+          y.map(Double.box).orNull, ascending = asc)
+        if (c != 0) c < 0 else i < j
+      }.map(_._2)
+      assert(driver === sorted, s"ascending = $asc")
+    }
+  }
+
+  test("support search returns the same rows over local and distributed sources") {
+    // local sources take the driver sort, parquet-backed ones the
+    // TakeOrderedAndProject collect; l0/l3 tie on every score
+    val (l, r) = parquetSources
+    def rows(ls: DataFrame, rs: DataFrame, pc: Int): Seq[String] =
+      Candidates.support(rec(lsource, 0), rec(rsource, 2), ls, rs, pc,
+        TokenCosineModel(), numTriangles = 6)._2.collect().map(_.toString).toSeq
+    for (pc <- Seq(0, 1)) {
+      val local = rows(lsource, rsource, pc)
+      assert(local.nonEmpty)
+      assert(rows(l, r, pc) === local, s"class $pc")
+    }
   }
 
   test("LSH-blocked candidate search: subset of exhaustive, full recall on dups") {
@@ -221,12 +264,13 @@ class CertaCoreSpec extends SparkSpec {
         if (e.properties != null && e.properties.getProperty("graft.spec.tag") == tag)
           descs.add(String.valueOf(e.properties.getProperty("spark.job.description")))
     }
+    val (l, r) = parquetSources
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
     sc.setLocalProperty("graft.spec.tag", tag)
     try {
       // a non-match whose support is short: walks the G2 fallback as well
-      new CertaExplainer(lsource, rsource).explain(rec(lsource, 0), rec(rsource, 2),
+      new CertaExplainer(l, r).explain(rec(l, 0), rec(r, 2),
         TokenCosineModel(), numTriangles = 6)
       assert(org.apache.spark.GraftCoreBridge.flushListenerBus(sc))
     } finally {
@@ -235,6 +279,9 @@ class CertaCoreSpec extends SparkSpec {
     }
     val jobs = scala.jdk.CollectionConverters.CollectionHasAsScala(descs).asScala.toSeq
     def count(desc: String): Int = jobs.count(_ == desc)
+    // one capped top-k action per searched side; scoring folds
+    assert(count("certa: support search") <= 2, jobs)
+    assert(count("certa: augmented support search") <= 2, jobs)
     assert(count("certa: source max ids") > 0, jobs)
     assert(count("certa: augment") <= 2, jobs) // one per probe record
     assert(count("certa: triangle discovery") === 0, jobs)

@@ -166,6 +166,55 @@ class PipelineSpec extends SparkSpec {
     histSurv.unpersist(); histR.close()
   }
 
+  test("incremental near-dup probes without a broadcast above the session's broadcast threshold") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val base = "the quick brown fox jumps over the lazy dog again and again"
+    val drop = (i: Int) => base.split(" ").zipWithIndex.filter(_._2 != i).map(_._1).mkString(" ")
+    val history = Seq((0L, base), (1L, drop(3)),
+      (2L, "completely different text about spark catalyst planning"))
+    val batch = Seq((100L, base), (101L, drop(5)),
+      (102L, "fresh batch document with novel content entirely its own"),
+      (103L, "fresh batch document with novel content entirely its own"),
+      (104L, "another genuinely new batch document nothing matches"))
+    // the loser ids and the number of broadcast-exchange jobs of one run
+    // (this thread's jobs only: other suites share the context)
+    def run(s: org.apache.spark.sql.SparkSession): (Set[Long], Int) = {
+      val tag = s"incremental-broadcast-${java.util.UUID.randomUUID}"
+      val broadcasts = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (e.properties != null && e.properties.getProperty("graft.spec.tag") == tag &&
+              Option(e.properties.getProperty("spark.job.tags"))
+                .exists(_.contains("broadcast exchange"))) broadcasts.incrementAndGet()
+      }
+      val sc = s.sparkContext
+      sc.addSparkListener(listener)
+      sc.setLocalProperty("graft.spec.tag", tag)
+      try {
+        val r = Dedup.incrementalNearDuplicates(
+          s.createDataFrame(history).toDF("doc_id", "text"),
+          s.createDataFrame(batch).toDF("doc_id", "text"), "text", "doc_id", 0.5)
+        try (r.losers.collect().map(_.getLong(0)).toSet,
+          { assert(org.apache.spark.GraftCoreBridge.flushListenerBus(sc)); broadcasts.get })
+        finally r.close()
+      } finally {
+        sc.setLocalProperty("graft.spec.tag", null)
+        sc.removeSparkListener(listener)
+      }
+    }
+    val (broadcastLosers, broadcastJobs) = run(spark)
+    assert(broadcastJobs > 0) // the batch keys fit: the probe broadcasts them
+    // a session whose broadcast threshold every batch key frame exceeds
+    // plans no broadcast at all (the probe hint is the only explicit one
+    // on this path) and finds the same losers through the shuffle join
+    val tight = spark.newSession()
+    tight.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
+    val (shuffleLosers, shuffleBroadcastJobs) = run(tight)
+    assert(shuffleBroadcastJobs === 0)
+    assert(shuffleLosers === broadcastLosers)
+    assert(broadcastLosers === Set(100L, 101L, 103L))
+  }
+
   test("incremental semantic dedup == full replay restricted to the batch") {
     import spark.implicits._
     import graft.similarity.SemDedup
@@ -1473,7 +1522,7 @@ class PipelineSpec extends SparkSpec {
         .map(r => r.getLong(0) ->
           (if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toMap
     // exact double equality on every random row
-    assert(pair(embs, Ann.cosine) === pair(embs, Ann.cosineDeclarative))
+    assert(pair(embs, Ann.cosine) === pair(embs, ReferenceTwins.cosineDeclarative))
     // edge cases: zero vector (den==0 → 0.0), null side, null element,
     // unequal lengths — all must agree with the declarative semantics
     val edges = Seq(
@@ -1484,18 +1533,18 @@ class PipelineSpec extends SparkSpec {
       (5L, Seq(1f, 2f, 3f), Seq(1f, 2f, 3f))             // identical
     ).toDF("id", "a", "b")
     val fe = pair(edges, Ann.cosine)
-    assert(fe === pair(edges, Ann.cosineDeclarative))
+    assert(fe === pair(edges, ReferenceTwins.cosineDeclarative))
     assert(fe(1L) === Some(0.0) && fe(2L) === Some(0.0))
     assert(fe(3L) === None && fe(4L) === None && fe(5L) === Some(1.0))
     // null ELEMENT inside an array (nulls that side's norm → null out)
     val ne = Seq((6L, Seq[java.lang.Float](1f, null, 3f),
       Seq[java.lang.Float](1f, 2f, 3f))).toDF("id", "a", "b")
-    assert(pair(ne, Ann.cosine) === pair(ne, Ann.cosineDeclarative))
+    assert(pair(ne, Ann.cosine) === pair(ne, ReferenceTwins.cosineDeclarative))
     assert(pair(ne, Ann.cosine)(6L) === None)
     // double-element arrays take the same path
     val dd = Seq((7L, Seq(0.5, -0.25, 0.125), Seq(1.0, 2.0, -4.0)))
       .toDF("id", "a", "b")
-    assert(pair(dd, Ann.cosine) === pair(dd, Ann.cosineDeclarative))
+    assert(pair(dd, Ann.cosine) === pair(dd, ReferenceTwins.cosineDeclarative))
     // codegen coverage is asserted in PlanQualitySpec (formatted-plan
     // '* Project' gate over the parquet scan, the q70 precedent)
   }
@@ -1577,7 +1626,7 @@ class PipelineSpec extends SparkSpec {
         .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     import graft.dedup.IncrementalDedup
     val fa = agr(IncrementalDedup.sigAgreement(_, _, 4))
-    assert(fa === agr(IncrementalDedup.sigAgreementDeclarative(_, _, 4)))
+    assert(fa === agr(ReferenceTwins.sigAgreementDeclarative(_, _, 4)))
     assert(fa === Map(1L -> 0.75, 2L -> 0.5, 3L -> 0.75))
   }
 

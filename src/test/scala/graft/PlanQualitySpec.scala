@@ -196,14 +196,16 @@ class PlanQualitySpec extends SparkSpec {
       .select(col("p_partkey").as("id"), col("p_name").as("name"),
         col("p_brand").as("brand"))
     val probe = src.filter(col("id") === 1)
-    // default J3 is the documented BroadcastNestedLoopJoin (one pass,
-    // probe broadcast)…
+    // default J3 attaches the probe columns as literals to the source
+    // scan: one pass, no join operator of any kind…
     val cross = plan(CrossJoinGenerator.pairs(probe, src, probeIsLeft = true,
       PairSchema.default))
-    assert(cross.contains("BroadcastNestedLoopJoin"), cross)
-    // …the blocked generator replaces it entirely: the probe's band keys
-    // are literals, candidates come from a scan-stage filter, the probe
-    // columns attach as literals — no join operator of any kind remains
+    assert(!cross.contains("BroadcastNestedLoopJoin"), cross)
+    assert(!cross.contains("CartesianProduct"), cross)
+    assert(!cross.contains("Join"), cross)
+    // …and the blocked generator also prunes the scan: the probe's band
+    // keys are literals, candidates come from a scan-stage filter, the
+    // probe columns attach as literals — no join operator remains
     val blocked = plan(LshBlockingGenerator().pairs(probe, src,
       probeIsLeft = true, PairSchema.default))
     assert(!blocked.contains("BroadcastNestedLoopJoin"), blocked)

@@ -3,7 +3,9 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.dedup.Dedup
+import graft.functions.TextSim
 import graft.similarity.Ann
+import graft.text.TextAnalysis
 
 /** Reference implementations the specs compare the fused operators
   * against. Each is the higher-order-function (or portable-signature)
@@ -68,4 +70,74 @@ object ReferenceTwins {
     Dedup.simhashNearDuplicatesFromSigs(
       df.select(col(idCol), Dedup.simhashPortable(col(textCol)).as("sig")),
       idCol, maxDistance, prefixBits, bits = 60)
+
+  /** `TextSim.tokenCosine`'s reference twin: the regex term bags of
+    * `TextSim.cosineBags` as a UDF.
+    */
+  val cosineUdf = udf(TextSim.cosineBags _)
+
+  /** The declarative (higher-order-function) twin of `Ann.cosine`: the
+    * form a SQL engine replays directly.
+    */
+  def cosineDeclarative(a: Column, b: Column): Column = {
+    val den = Ann.norm(a) * Ann.norm(b)
+    when(den === 0.0, 0.0).otherwise(Ann.dot(a, b) / den)
+  }
+
+  /** Declarative (zip_with/aggregate) twin of `IncrementalDedup
+    * .sigAgreement` — what the SQL oracles replay.
+    */
+  def sigAgreementDeclarative(a: Column, b: Column, numHashes: Int): Column =
+    aggregate(zip_with(a, b, (x, y) => when(x === y, 1).otherwise(0)),
+      lit(0), (acc, v) => acc + v).cast("double") / numHashes
+
+  /** Declarative twin of `Dedup.winnowFingerprints` (the formulation the
+    * SQL oracle replays). The gram-hash array is let-bound through a
+    * lambda variable: a direct reference from inside the window lambda
+    * would INLINE the md5 pass and re-evaluate it per window — O(n²)
+    * md5 calls per document.
+    */
+  def winnowFingerprintsDeclarative(text: Column, k: Int = 3, w: Int = 4): Column = {
+    val hashes = transform(Dedup.shingles(text, k), g => Dedup.portableHash60(g))
+    element_at(transform(array(hashes), hs => {
+      val nWindows = size(hs) - (w - 1)
+      val mins = when(nWindows >= 1,
+        transform(sequence(lit(1), nWindows), i => array_min(slice(hs, i, lit(w)))))
+        .otherwise(array(array_min(hs)))
+      array_sort(array_distinct(mins))
+    }), 1)
+  }
+
+  /** Per-bit-fold twin of `Dedup.simhash`: one ±1 vote fold per bit. */
+  def simhashDeclarative(text: Column): Column = {
+    val toks = TextAnalysis.tokens(text)
+    val bits = (0 until 64).map { b =>
+      // sum of ±1 votes for bit b over token hashes, sign → bit
+      val vote = aggregate(toks, lit(0L),
+        (acc, t) => acc + when(shiftright(xxhash64(t), b).bitwiseAND(1L) === 1L, 1L)
+          .otherwise(-1L))
+      when(vote > 0, shiftleft(lit(1L), b)).otherwise(0L)
+    }
+    bits.reduce(_ bitwiseOR _)
+  }
+
+  /** Declarative twin of `Dedup.simhashPortable` (the formulation the
+    * SQL oracle replays). One `aggregate` carries all 60 vote counters
+    * as an array accumulator, so each token's md5 is computed once.
+    */
+  def simhashPortableDeclarative(text: Column): Column = {
+    val bitsN = 60
+    val tokh = transform(TextAnalysis.tokens(text), t => Dedup.portableHash60(t))
+    aggregate(
+      tokh,
+      array_repeat(lit(0), bitsN),
+      (acc, h) => zip_with(acc, sequence(lit(0), lit(bitsN - 1)),
+        (a, b) => a + when(call_function("shiftright", h, b)
+          .bitwiseAND(lit(1L)) === 1L, 1).otherwise(-1)),
+      acc => aggregate(
+        zip_with(acc, sequence(lit(0), lit(bitsN - 1)),
+          (a, b) => when(a > 0, call_function("shiftleft", lit(1L), b))
+            .otherwise(lit(0L))),
+        lit(0L), (s, v) => s + v))
+  }
 }

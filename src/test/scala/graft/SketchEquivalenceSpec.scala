@@ -38,13 +38,13 @@ class SketchEquivalenceSpec extends SparkSpec {
     ).toDF("id", "text"))
     val cmp = wide.select(
       Dedup.winnowFingerprints(col("text")).as("fast"),
-      Dedup.winnowFingerprintsDeclarative(col("text")).as("slow"))
+      ReferenceTwins.winnowFingerprintsDeclarative(col("text")).as("slow"))
     assert(cmp.filter(col("fast") =!= col("slow")).count() === 0)
     // and on real fixture documents
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val cmp2 = docs.select(
       Dedup.winnowFingerprints(col("text")).as("fast"),
-      Dedup.winnowFingerprintsDeclarative(col("text")).as("slow"))
+      ReferenceTwins.winnowFingerprintsDeclarative(col("text")).as("slow"))
     assert(cmp2.filter(col("fast") =!= col("slow")).count() === 0)
   }
 
@@ -52,14 +52,14 @@ class SketchEquivalenceSpec extends SparkSpec {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val cmp = texts.select(col("text")).union(docs.select(col("text"))).select(
       Dedup.simhashPortable(col("text")).as("fast"),
-      Dedup.simhashPortableDeclarative(col("text")).as("slow"))
+      ReferenceTwins.simhashPortableDeclarative(col("text")).as("slow"))
     assert(cmp.filter(col("fast") =!= col("slow")).count() === 0)
   }
 
   test("simhash expression equals the declarative per-bit fold") {
     val cmp = texts.select(
       SimHash64(col("text")).as("fast"),
-      Dedup.simhashDeclarative(col("text")).as("slow"))
+      ReferenceTwins.simhashDeclarative(col("text")).as("slow"))
     assert(cmp.filter(col("fast") =!= col("slow")).count() === 0)
   }
 
@@ -68,7 +68,34 @@ class SketchEquivalenceSpec extends SparkSpec {
       .select(col("a.text").as("ta"), col("b.text").as("tb"))
     val cmp = pairs.select(
       TokenBagCosine(col("ta"), col("tb")).as("fast"),
-      TextSim.cosineUdf(col("ta"), col("tb")).as("slow"))
+      ReferenceTwins.cosineUdf(col("ta"), col("tb")).as("slow"))
     assert(cmp.filter(abs(col("fast") - col("slow")) > 1e-12).count() === 0)
+  }
+
+  test("token-bag cosine is bit-identical to the reference twin on disjoint, overlapping and empty bags") {
+    val cases = Seq(
+      ("alpha beta", "gamma delta"),                 // disjoint
+      ("alpha beta gamma", "beta gamma delta epsilon"), // partly overlapping
+      ("a a a b", "a b b c c c d"),                  // overlap with repeats
+      ("x", "x y z w v u"),                          // smaller bag on the left
+      ("x y z w v u", "x"),                          // and on the right
+      ("same words here", "same words here"),        // identical
+      ("", "alpha"), ("alpha", ""), ("", ""),        // empty bags
+      ("-- !! ..", "alpha"))                         // no word characters
+    val df = cases.toDF("ta", "tb")
+    // the generated-code path and the interpreted path (folded over the
+    // local rows) must both match the UDF twin exactly
+    val fast = df.select(TokenBagCosine(col("ta"), col("tb"))).collect().map(_.getDouble(0))
+    val slow = df.select(ReferenceTwins.cosineUdf(col("ta"), col("tb")))
+      .collect().map(_.getDouble(0))
+    val codegen = df.repartition(2).select(col("ta"), col("tb"),
+      TokenBagCosine(col("ta"), col("tb")).as("c")).collect()
+      .map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2)).toMap
+    cases.zipWithIndex.foreach { case ((a, b), i) =>
+      assert(fast(i) === slow(i), (a, b))
+      assert(fast(i) === TextSim.cosineBags(a, b), (a, b))
+      assert(codegen((a, b)) === slow(i), (a, b))
+    }
+    assert(fast(0) === 0.0 && fast(6) === 0.0 && fast(8) === 0.0)
   }
 }
