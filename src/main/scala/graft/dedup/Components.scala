@@ -1,9 +1,10 @@
 package graft.dedup
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.operators.Pinned
 
 /** Distributed connected components over an undirected edge list —
@@ -52,7 +53,9 @@ object Components {
     * than reading ≤ threshold pairs once. Above the threshold (or for
     * non-long ids) the distributed large-star/small-star loop runs
     * unchanged — the 100 TB default. Both paths produce the identical
-    * mapping (spec-pinned).
+    * mapping (spec-pinned). An edge plan that folds to a LocalRelation of
+    * at most `driverEdgeThreshold` rows is already on the driver: it
+    * goes straight to the union-find, with no pin and no job.
     *
     * `roundObserver` is a measurement seam: the distributed loop calls
     * it after every completed round with (round index starting at 1,
@@ -65,55 +68,32 @@ object Components {
       driverEdgeThreshold: Long = 1L << 20,
       roundObserver: (Int, Long) => Unit = (_, _) => ()): DataFrame = {
     val spark = edges.sparkSession
+    val uv = edges.select(col(aCol).as("u"), col(bCol).as("v"))
+    // an edge set already on the driver (its plan folds to a
+    // LocalRelation) closes there as it stands: no Pinned copy, no
+    // checksum job. Only all-local leaves are worth optimizing to see.
+    val local = longIds(uv) &&
+      uv.queryExecution.analyzed.collectLeaves().forall(
+        _.isInstanceOf[LocalRelation])
+    if (local) uv.queryExecution.optimizedPlan match {
+      case l: LocalRelation if l.data.size <= driverEdgeThreshold =>
+        return unionFind(spark, uv.collect())
+      case _ =>
+    }
     // Each round must TRUNCATE lineage, not just cache: both star
     // passes reference their input twice (self-union / self-window),
     // so composed plans grow ~4× per round — exponential in rounds,
     // an OOM at plan-stringification long before execution. Each
     // round's rows are a Pinned handle: constant-size plans, blocks
     // filled inside the round's checksum job, released by close().
-    var cur = Pinned(canonical(
-      edges.select(col(aCol).as("u"), col(bCol).as("v"))))
+    var cur = Pinned(canonical(uv))
     var curSum = checksum(cur.df)
-    val longIds = cur.df.schema.fields.forall(
-      _.dataType == org.apache.spark.sql.types.LongType)
-    if (longIds && curSum._1 <= driverEdgeThreshold) {
+    if (longIds(cur.df) && curSum._1 <= driverEdgeThreshold) {
       // driver union-find over the pinned canonical edges (reads the
       // persisted blocks — no recompute of the edge lineage)
       val rows = cur.df.collect()
       cur.close()
-      val parent = new java.util.HashMap[Long, Long]()
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrDefault(r, r) != r) r = parent.get(r)
-        // path compression
-        var c = x
-        while (parent.getOrDefault(c, c) != c) {
-          val nxt = parent.get(c); parent.put(c, r); c = nxt
-        }
-        r
-      }
-      rows.foreach { row =>
-        val (u, v) = (row.getLong(0), row.getLong(1))
-        parent.putIfAbsent(u, u); parent.putIfAbsent(v, v)
-        val (ru, rv) = (find(u), find(v))
-        // union by MIN: the representative is the component minimum
-        if (ru != rv) {
-          if (ru < rv) parent.put(rv, ru) else parent.put(ru, rv)
-        }
-      }
-      val out = new java.util.ArrayList[org.apache.spark.sql.Row]()
-      val it0 = parent.keySet().iterator()
-      while (it0.hasNext) {
-        val id = it0.next()
-        out.add(org.apache.spark.sql.Row(id, find(id)))
-      }
-      val outSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("rep",
-          org.apache.spark.sql.types.LongType)))
-      // LocalRelation: nothing pinned, caller's unpersist is a no-op
-      return spark.createDataFrame(out, outSchema)
+      return unionFind(spark, rows)
     }
     var converged = false
     var it = 0
@@ -136,6 +116,48 @@ object Components {
     mapping.count() // pin before releasing the final iteration frame
     cur.close()
     mapping
+  }
+
+  private def longIds(uv: DataFrame): Boolean =
+    uv.schema.fields.forall(_.dataType == LongType)
+
+  /** Path-compressed union-find over (u, v) edge rows on the driver,
+    * union by min so each representative is its component minimum.
+    * Self-loops and null ends are skipped (what [[canonical]] drops).
+    * Returns the (id, rep) mapping as a LocalRelation: nothing pinned,
+    * a caller's unpersist is a no-op.
+    */
+  private def unionFind(spark: SparkSession, rows: Array[Row]): DataFrame = {
+    val parent = new java.util.HashMap[Long, Long]()
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrDefault(r, r) != r) r = parent.get(r)
+      // path compression
+      var c = x
+      while (parent.getOrDefault(c, c) != c) {
+        val nxt = parent.get(c); parent.put(c, r); c = nxt
+      }
+      r
+    }
+    for (row <- rows if !row.isNullAt(0) && !row.isNullAt(1)) {
+      val (u, v) = (row.getLong(0), row.getLong(1))
+      if (u != v) {
+        parent.putIfAbsent(u, u); parent.putIfAbsent(v, v)
+        val (ru, rv) = (find(u), find(v))
+        // union by MIN: the representative is the component minimum
+        if (ru != rv) {
+          if (ru < rv) parent.put(rv, ru) else parent.put(ru, rv)
+        }
+      }
+    }
+    val out = new java.util.ArrayList[Row]()
+    val it0 = parent.keySet().iterator()
+    while (it0.hasNext) {
+      val id = it0.next()
+      out.add(Row(id, find(id)))
+    }
+    spark.createDataFrame(out, StructType(Seq(
+      StructField("id", LongType), StructField("rep", LongType))))
   }
 
   // ------------------------------------------------- closure to losers

@@ -1,7 +1,10 @@
 package graft.dedup
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Incremental (cross-corpus) dedup: filter a NEW batch against an
   * already-ingested reference corpus without joining the two. The
@@ -163,30 +166,31 @@ object IncrementalDedup {
   // SQL oracle.
   // ------------------------------------------------------------------
 
-  /** Ownership handle for one batch's outputs: `survivors` (batch rows
-    * that are new vs history and within-batch representatives),
-    * `historyRows` (this batch's (id, band, key, sig) rows to append to
-    * the state table — survivors only). Both derive from one persisted
-    * signature frame; `close()` releases it after the caller has
-    * consumed/written the outputs.
+  /** One batch's outputs, both driver-resident LocalRelations:
+    * `survivors` (batch rows, in the batch's schema, that are new vs
+    * history and within-batch representatives, plus the null-text rows)
+    * and `historyRows` (the survivors' (id, band, key, sig) rows to
+    * append to the state table). Nothing is pinned, so `close()` has
+    * nothing to release. `probe` is the history probe frame the batch
+    * collected, kept for plan inspection.
     */
   final case class NearDupBatch(survivors: DataFrame, historyRows: DataFrame,
-      private val pinned: Seq[DataFrame]) extends AutoCloseable {
-    override def close(): Unit = pinned.foreach(_.unpersist(false))
+      private[graft] val probe: DataFrame) extends AutoCloseable {
+    override def close(): Unit = ()
   }
 
+  /** The state-table schema: (id, band, key, sig). */
+  private[graft] def stateSchema(idCol: String,
+      idType: DataType = LongType): StructType =
+    StructType(Seq(
+      StructField(idCol, idType),
+      StructField("band", IntegerType),
+      StructField("key", StringType),
+      StructField("sig", ArrayType(StringType))))
+
   /** Empty history frame with the state-table schema. */
-  def emptyHistory(spark: org.apache.spark.sql.SparkSession,
-      idCol: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      StructType(Seq(
-        StructField(idCol, LongType),
-        StructField("band", IntegerType),
-        StructField("key", StringType),
-        StructField("sig", ArrayType(StringType)))))
-  }
+  def emptyHistory(spark: SparkSession, idCol: String): DataFrame =
+    spark.createDataFrame(new java.util.ArrayList[Row](), stateSchema(idCol))
 
   /** Signature-agreement jaccard estimate of two equal-length minhash
     * arrays: |{i : a(i) = b(i)}| / numHashes. Fused codegen'd
@@ -198,85 +202,93 @@ object IncrementalDedup {
     graft.functions.VecMath.sigAgreement(a, b, numHashes)
 
   /** Dedup `batch` against `history` (a band-key state table as built
-    * by previous calls' `historyRows`) AND within itself:
-    *  1. batch signatures + band keys (one sketch pass);
-    *  2. history candidates via the (band, key) equi-join, dropped when
-    *     signature agreement ≥ `threshold`;
-    *  3. remaining rows' within-batch candidate pairs (band-key
-    *     self-join), agreement-verified, closed into components
-    *     ([[Components.dropLosers]] — driver path for small edge
-    *     sets), min-id representative kept;
-    *  4. survivors' state rows returned for append.
-    * NULL-text rows always survive and add no state (the bloomNewDocs
-    * semantic).
+    * by previous calls' `historyRows`) AND within itself, with the
+    * batch held on the driver:
+    *  1. one collect of the batch with its minhash signature and band
+    *     keys (the Catalyst sketch expressions; null for null texts);
+    *     the keys explode on the driver;
+    *  2. one history probe: the batch's (id, band, key, sig) rows as a
+    *     LocalRelation, equi-joined with `history` on (band, key);
+    *     ids whose signature agreement reaches `threshold` drop;
+    *  3. the remaining rows' within-batch candidate pairs (shared
+    *     (band, key) buckets, grouped on the driver) are scored by the
+    *     same agreement over a LocalRelation and closed by
+    *     [[Components.connectedComponents]] (its driver union-find);
+    *     the min-id representative is kept;
+    *  4. the outputs are LocalRelations (see [[NearDupBatch]]).
+    * Jobs: the batch collect and the probe (none when either side is
+    * empty). NULL-text rows always survive and add no state (the
+    * bloomNewDocs semantic).
     *
-    * @param maxBucketSize opt-in skew guard for the WITHIN-BATCH pair
-    *   step (the [[Dedup.lshCandidatePairs]] contract): a degenerate
-    *   batch collapses a band bucket and hands one task O(b²) pair
-    *   verification — capping keeps the `maxBucketSize` id-smallest
-    *   rows per (band, key) bucket for pairing (deterministic, recall
-    *   cost documented there). The history probe is never capped: a
-    *   missed history match would resurrect a duplicate.
+    * Size bound: the whole batch, with its signatures, is collected, so
+    * the batch must fit `spark.driver.maxResultSize` (Spark's error
+    * names that setting when it does not); a stream sizes its batches
+    * with `maxFilesPerTrigger`/`maxBytesPerTrigger`.
     */
   def nearDupNewDocs(history: DataFrame, batch: DataFrame, textCol: String,
       idCol: String, threshold: Double = 0.7, numBands: Int = 2,
-      rowsPerBand: Int = 2, k: Int = 3,
-      maxBucketSize: Int = Int.MaxValue): NearDupBatch = {
+      rowsPerBand: Int = 2, k: Int = 3): NearDupBatch = {
+    val spark = batch.sparkSession
     val nh = numBands * rowsPerBand
-    val sigged = batch.filter(col(textCol).isNotNull)
-      .withColumn("__sig",
-        graft.functions.MinHashSignature(col(textCol), nh, k))
-      .persist()
     val keyExprs = (0 until numBands).map { b =>
       concat_ws("#", (0 until rowsPerBand).map(r =>
         element_at(col("__sig"), b * rowsPerBand + r + 1)): _*)
     }
-    val batchKeys = sigged.select(col(idCol), col("__sig"),
-      posexplode(array(keyExprs: _*)).as(Seq("band", "key")))
+    // 1. the one collect of the batch
+    val n = batch.schema.length
+    val (idAt, textAt) = (batch.schema.fieldIndex(idCol),
+      batch.schema.fieldIndex(textCol))
+    val rows = batch
+      .select(col("*"),
+        graft.functions.MinHashSignature(col(textCol), nh, k).as("__sig"))
+      .select(col("*"),
+        when(col("__sig").isNotNull, array(keyExprs: _*)).as("__keys"))
+      .collect()
+    def idOf(r: Row): Any = r.get(idAt)
+    def sigOf(r: Row): Seq[String] = r.getSeq[String](n)
+    def keysOf(r: Row): Seq[String] = r.getSeq[String](n + 1)
+    val sketched = rows.toSeq.filterNot(_.isNullAt(textAt))
+    val idType = batch.schema(idAt).dataType
+    val schema = stateSchema(idCol, idType)
+    def stateRows(rs: Seq[Row]): Seq[Row] = rs.flatMap(r =>
+      keysOf(r).zipWithIndex.map { case (key, band) =>
+        Row(idOf(r), band, key, sigOf(r)) })
+    def local(rs: Seq[Row], st: StructType): DataFrame =
+      spark.createDataFrame(rs.asJava, st)
 
-    // 2. drop batch rows near-matching history. PERSISTED (r12): the
-    // dropped-id set is consumed by three downstream actions per batch
-    // (the edge/closure job via freshKeys, the survivor aggregate and
-    // the state append via fresh) and the history side is the
-    // corpus-proportional table — unpersisted, every consumer re-ran
-    // the history scan + probe join. The id set itself is
-    // micro-batch-bounded.
-    val histMatches = batchKeys
+    // 2. the one history probe
+    val probe = local(stateRows(sketched), schema)
       .join(history.select(col("band"), col("key"), col("sig").as("__hsig")),
         Seq("band", "key"))
-      .filter(sigAgreement(col("__sig"), col("__hsig"), nh) >= threshold)
-      .select(col(idCol)).distinct()
-      .persist()
-    val fresh = sigged.join(histMatches, Seq(idCol), "left_anti")
+      .filter(sigAgreement(col("sig"), col("__hsig"), nh) >= threshold)
+      .select(col(idCol))
+    val dropped = probe.collect().map(_.get(0)).toSet
+    val fresh = sketched.filterNot(r => dropped(idOf(r))).toIndexedSeq
 
-    // 3. within-batch near-dup closure over the remaining rows
-    val freshKeys0 = batchKeys.join(histMatches, Seq(idCol), "left_anti")
-    val freshKeys =
-      if (maxBucketSize == Int.MaxValue) freshKeys0
-      else {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("band"), col("key")).orderBy(col(idCol))
-        freshKeys0.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") <= maxBucketSize).drop("__rn")
-      }
-    val a = freshKeys.select(col("band"), col("key"),
-      col(idCol).as("id_a"), col("__sig").as("__sa"))
-    val b = freshKeys.select(col("band").as("__b2"), col("key").as("__k2"),
-      col(idCol).as("id_b"), col("__sig").as("__sb"))
-    val edges = a.join(b, col("band") === col("__b2") &&
-        col("key") === col("__k2") && col("id_a") < col("id_b"))
+    // 3. within-batch closure over every pair of rows that share a
+    // (band, key) bucket, each pair once (by batch position)
+    val pairs = fresh.indices
+      .flatMap(i => keysOf(fresh(i)).zipWithIndex.map(_ -> i))
+      .groupBy(_._1).values
+      .flatMap(bucket => bucket.map(_._2).combinations(2))
+      .map { case Seq(x, y) => (x, y) }.toSeq.distinct.sorted
+    val edges = local(pairs.map { case (x, y) =>
+        Row(idOf(fresh(x)), idOf(fresh(y)), sigOf(fresh(x)), sigOf(fresh(y)))
+      }, StructType(Seq(
+        StructField("id_a", idType), StructField("id_b", idType),
+        StructField("__sa", ArrayType(StringType)),
+        StructField("__sb", ArrayType(StringType)))))
       .filter(sigAgreement(col("__sa"), col("__sb"), nh) >= threshold)
-      .select(col("id_a"), col("id_b")).distinct()
-    // closure to losers (Components.dropLosers); the loser pin rides
-    // the handle's pinned set until close()
-    val kept = Components.dropLosers(fresh, idCol, edges)()
-    val keptSig = kept.survivors
+      .select(col("id_a"), col("id_b"))
+    val losers = Components.connectedComponents(edges).collect()
+      .collect { case m if m.get(0) != m.get(1) => m.get(0) }.toSet
+    val kept = fresh.filterNot(r => losers(idOf(r)))
 
-    val survivors = batch.filter(col(textCol).isNull)
-      .unionByName(keptSig.drop("__sig"))
-    val historyRows = keptSig.select(col(idCol), col("__sig"),
-        posexplode(array(keyExprs.map(e => e): _*)).as(Seq("band", "key")))
-      .select(col(idCol), col("band"), col("key"), col("__sig").as("sig"))
-    NearDupBatch(survivors, historyRows, Seq(sigged, histMatches, kept.losers))
+    // 4. local outputs
+    val keptIds = kept.map(idOf).toSet
+    val survivors = local(rows.toSeq
+      .filter(r => r.isNullAt(textAt) || keptIds(idOf(r)))
+      .map(r => Row.fromSeq(r.toSeq.take(n))), batch.schema)
+    NearDupBatch(survivors, local(stateRows(kept), schema), probe)
   }
 }

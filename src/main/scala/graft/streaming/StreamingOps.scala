@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.operators.Pinned
 
 /** Structured Streaming layer (SURVEY.md §2.10 — an extension, not a
   * reference capability): streaming scoring of pair/event streams with
@@ -117,16 +118,16 @@ object StreamingOps {
         .withColumn("__h", md5(col(textCol)))
         .dropDuplicates("__h").drop("__h")
       val fresh = nn.unionByName(batch.filter(col(textCol).isNull))
-      val unseen =
-        (if (sketch == null) fresh
-         else graft.dedup.IncrementalDedup.filterUnseen(fresh, textCol, sketch))
-          .persist()
+      // read twice (the sink, then the sketch build): pinned once
+      val unseen = Pinned(
+        if (sketch == null) fresh
+        else graft.dedup.IncrementalDedup.filterUnseen(fresh, textCol, sketch))
       try {
-        sink(unseen, id)
+        sink(unseen.df, id)
         sketch = graft.dedup.IncrementalDedup.mergeSketches(sketch,
           graft.dedup.IncrementalDedup.sketchBytes(
-            unseen, textCol, expectedItems, fpp))
-      } finally unseen.unpersist(false)
+            unseen.df, textCol, expectedItems, fpp))
+      } finally unseen.close()
     }.start()
   }
 
@@ -140,26 +141,33 @@ object StreamingOps {
     * the sketch, never to the content; the table is partition-prunable
     * by key at scale. Survivors go to `sink`; the batch's own state
     * rows append after the sink consumes them.
+    *
+    * The micro-batch itself is held on the driver: one collect of the
+    * batch sketch, one scan of the state table (read with its schema
+    * given, so no inference job) for the history probe, the
+    * within-batch closure on the driver, and one write job for the
+    * append. `sink` gets a LocalRelation, so reading it fires no job.
+    * The collect must fit `spark.driver.maxResultSize` (Spark's error
+    * names that setting); size the trigger with
+    * `maxFilesPerTrigger`/`maxBytesPerTrigger`.
     */
   def nearDupDedupStream(docs: DataFrame, textCol: String, idCol: String,
       historyDir: String, threshold: Double = 0.7, numBands: Int = 2,
       rowsPerBand: Int = 2, k: Int = 3)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
     docs.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
+      import graft.dedup.IncrementalDedup
       val spark = batch.sparkSession
-      val dir = new java.io.File(historyDir)
-      val hasState = dir.exists() &&
-        dir.listFiles() != null && dir.listFiles().exists(
-          _.getName.endsWith(".parquet"))
+      val files = new java.io.File(historyDir).listFiles()
       val hist =
-        if (hasState) spark.read.parquet(historyDir)
-        else graft.dedup.IncrementalDedup.emptyHistory(spark, idCol)
-      val r = graft.dedup.IncrementalDedup.nearDupNewDocs(
+        if (files != null && files.exists(_.getName.endsWith(".parquet")))
+          spark.read.schema(IncrementalDedup.stateSchema(idCol,
+            batch.schema(idCol).dataType)).parquet(historyDir)
+        else IncrementalDedup.emptyHistory(spark, idCol)
+      val r = IncrementalDedup.nearDupNewDocs(
         hist, batch, textCol, idCol, threshold, numBands, rowsPerBand, k)
-      try {
-        sink(r.survivors, id)
-        r.historyRows.write.mode("append").parquet(historyDir)
-      } finally r.close()
+      sink(r.survivors, id)
+      r.historyRows.write.mode("append").parquet(historyDir)
     }.start()
 
   /** Streaming INCREMENTAL perceptual media dedup — [[nearDupDedupStream]]'s
@@ -240,21 +248,22 @@ object StreamingOps {
         hashed.join(hist.select(col("ahash_hi"), col("ahash_lo")),
           Seq("ahash_hi", "ahash_lo"), "left_anti")
       }
-    val survivors = fresh
+    // read by the sink and the append; filled before either runs, so
+    // the history files are read before the append touches the table
+    val survivors = Pinned(fresh
       .groupBy(col("ahash_hi"), col("ahash_lo"))
-      .agg(min(col("media_id")).as("media_id"))
-      .persist()
+      .agg(min(col("media_id")).as("media_id")))
     try {
-      survivors.count()
-      sink(survivors.select(col("media_id"), col("ahash_hi"),
+      survivors.materialize()
+      sink(survivors.df.select(col("media_id"), col("ahash_hi"),
         col("ahash_lo")))
-      val hashes = survivors.select(col("ahash_hi"), col("ahash_lo"))
+      val hashes = survivors.df.select(col("ahash_hi"), col("ahash_lo"))
       batchId match {
         case Some(id) => hashes.write.mode("overwrite")
           .parquet(s"$historyDir/batch_id=$id")
         case None => hashes.write.mode("append").parquet(historyDir)
       }
-    } finally survivors.unpersist()
+    } finally survivors.close()
   }
 
   /** Streaming INCREMENTAL SEMANTIC dedup — the embedding-space face
@@ -382,14 +391,15 @@ object StreamingOps {
     docs.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
       val spark = batch.sparkSession
       import spark.implicits._
-      val hist = batch.filter(col(textCol).isNotNull)
+      // the histogram is read twice by the sink's plan: pinned once
+      val pinned = Pinned(batch.filter(col(textCol).isNotNull)
         .select(col(chunkCol).as("chunk"),
           explode(graft.text.TextAnalysis.tokens(col(textCol))).as("__t"))
         .select(col("chunk"),
           pmod(graft.dedup.Dedup.portableHash60(col("__t")),
             lit(nBuckets.toLong)).as("bucket"))
-        .groupBy(col("chunk"), col("bucket")).agg(count(lit(1)).as("n_b"))
-        .persist()
+        .groupBy(col("chunk"), col("bucket")).agg(count(lit(1)).as("n_b")))
+      val hist = pinned.df
       try {
         val ct = hist.groupBy(col("chunk")).agg(
           sum(col("n_b")).as("tb"), count(lit(1)).as("n_buckets"))
@@ -415,7 +425,7 @@ object StreamingOps {
           .select(col("chunk"), col("tb").as("n_tokens"),
             col("n_buckets"), col("drift_q"))
         sink(out, id)
-      } finally hist.unpersist(false)
+      } finally pinned.close()
     }.start()
 
   /** Incremental materialized aggregate: maintain a per-key stats

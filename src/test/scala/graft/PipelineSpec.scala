@@ -838,7 +838,7 @@ class PipelineSpec extends SparkSpec {
     assert(r === b)
   }
 
-  test("leakage-safe split keeps each near-dup cluster whole; singletons gate on own id") {
+  leakGatedTest("leakage-safe split keeps each near-dup cluster whole; singletons gate on own id") {
     import graft.operators.Split
     val ids = (0L until 300L).toDF("doc_id")
     val edges = Seq((0L, 1L), (1L, 2L), (50L, 51L), (200L, 299L))
@@ -862,7 +862,6 @@ class PipelineSpec extends SparkSpec {
     assert(out.select(col("split")).distinct().count() === 3L)
     // the components mapping is the one caller-owned cached frame
     mapping.unpersist(blocking = true)
-    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
   }
 
   test("training-order shards concatenate to the exact global hash order") {
@@ -897,7 +896,7 @@ class PipelineSpec extends SparkSpec {
     assert(r(1L)._2 > r(2L)._2 && r(2L)._2 > r(3L)._2)
   }
 
-  test("semantic dedup keeps min-id reps; handle releases its cache") {
+  leakGatedTest("semantic dedup keeps min-id reps; handle releases its cache") {
     import graft.similarity.SemDedup
     val embs = Seq(
       (0L, Seq(1.0f, 2.0f, 3.0f)),
@@ -927,7 +926,6 @@ class PipelineSpec extends SparkSpec {
       .map(_.getLong(0)).toSet
     assert(kept === (0L to 4L).toSet -- losers)
     result.close()
-    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
   }
 
   test("upsampleByWeight: integer copies exact, zero drops, deterministic") {
@@ -1021,7 +1019,7 @@ class PipelineSpec extends SparkSpec {
     assert(p4.size > p0.size) // the lever recovers straddling pairs here
   }
 
-  test("incremental near-dup dedup: history drop, batch closure, null pass") {
+  leakGatedTest("incremental near-dup dedup: history drop, batch closure, null pass") {
     import graft.dedup.IncrementalDedup
     val textA = "the quick brown fox jumps over the lazy dog again"
     val textA2 = textA + " x"        // near-dup of A (shares most shingles)
@@ -1046,7 +1044,6 @@ class PipelineSpec extends SparkSpec {
     val s1 = r1.survivors.select("doc_id").collect().map(_.getLong(0)).toSet
     assert(s1 === Set(11L))
     r0.close(); r1.close(); h0.unpersist(true)
-    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
   }
 
   test("knowledge injection rewrites tokens by the reference's rules") {
@@ -1076,7 +1073,7 @@ class PipelineSpec extends SparkSpec {
     assert(s === "COL size VAL 11 COL price VAL 900.10")
   }
 
-  test("perceptual aHash: formula-exact bits; dedup closure matches brute force") {
+  leakGatedTest("perceptual aHash: formula-exact bits; dedup closure matches brute force") {
     import graft.multimodal.Multimodal
     val idSeq = (0L until 60L)
     val ids = idSeq.toDF("doc_id")
@@ -1151,10 +1148,9 @@ class PipelineSpec extends SparkSpec {
     val hs1 = try hd1.survivors.select("media_id").collect()
       .map(_.getLong(0)).toSet finally hd1.close()
     assert(hs1 === Set(10L, 14L)) // chain closed transitively; D alone
-    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
   }
 
-  test("perceptual dedup at Hamming 2-3: pigeonhole blocks, completeness") {
+  leakGatedTest("perceptual dedup at Hamming 2-3: pigeonhole blocks, completeness") {
     import graft.multimodal.Multimodal
     // hand-built hash frame planting pairs at every distance 0..4,
     // including a pair straddling the hi/lo half boundary and one
@@ -1197,7 +1193,6 @@ class PipelineSpec extends SparkSpec {
       if (d == 3) assert(!got.contains(102L)) else assert(got.contains(102L))
       assert(got.contains(103L), "d=4 clone must survive every ball")
     }
-    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
   }
 
   test("video keyframe hash equals the plain-PNG aHash of frame 0") {
@@ -1222,7 +1217,7 @@ class PipelineSpec extends SparkSpec {
       assert(nf(id) === 4 + id % 5, s"id $id"))
   }
 
-  test("audio fingerprint equals the closed-form energy-delta bits") {
+  leakGatedTest("audio fingerprint equals the closed-form energy-delta bits") {
     import graft.multimodal.Multimodal
     val idSeq = Seq(0L, 1L, 6L, 13L, 2002L, 2003L)
     val ids = idSeq.toDF("doc_id")
@@ -1259,7 +1254,6 @@ class PipelineSpec extends SparkSpec {
     val surv = try r.survivors.count() finally r.close()
     assert(surv === idSeq.map(id => expected(id) match {
       case (_, hi, lo) => (hi, lo) }).distinct.size)
-    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
   }
 
   test("image decode→embedding equals the closed-form pixel sums") {
@@ -1672,7 +1666,7 @@ class PipelineSpec extends SparkSpec {
     assert(census("fr") === ((2L, 513L, 2L, 0L)))
   }
 
-  test("dropNearDuplicates keeps cluster minima and untouched docs") {
+  leakGatedTest("dropNearDuplicates keeps cluster minima and untouched docs") {
     // expected survivors derived from the operator's OWN pair output
     // via a driver union-find (whether (0,5) LSH-collides is
     // band-dependent; (0,1) always does)
@@ -1694,7 +1688,6 @@ class PipelineSpec extends SparkSpec {
       .map(_.getLong(0)).toSet
     assert(kept === (0L to 5L).toSet -- losers)
     result.close()
-    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
   }
 
   test("ANN LSH bucket is deterministic and groups identical vectors") {
@@ -1946,7 +1939,8 @@ class PipelineSpec extends SparkSpec {
     assert(got === expected.toSeq)
   }
 
-  test("partitioned upsert rewrites touched partitions only, byte-identical rest") {
+  // the leak gate: the materialized merge is released once the overwrite commits
+  leakGatedTest("partitioned upsert rewrites touched partitions only, byte-identical rest") {
     import graft.operators.Upsert
     val base = java.nio.file.Files.createTempDirectory("pupsert").toString + "/t"
     Seq((1L, "a", "p0"), (2L, "b", "p0"), (3L, "c", "p1"), (4L, "d", "p2"))
@@ -1960,11 +1954,8 @@ class PipelineSpec extends SparkSpec {
     val p1Before = files("p1")
     val p2Before = files("p2")
     val batch = Seq((2L, "b2", "p0"), (9L, "new", "p0")).toDF("id", "v", "part")
-    val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet
     val touched = Upsert.upsertPartitioned(spark, base, batch, Seq("id"), "part")
     assert(touched === Seq("p0"))
-    // the materialized merge is released once the overwrite commits
-    assert(spark.sparkContext.getPersistentRDDs.keySet === pinnedBefore)
     // untouched partitions: the exact same files, never rewritten
     assert(files("p1") === p1Before)
     assert(files("p2") === p2Before)
@@ -2094,7 +2085,7 @@ class PipelineSpec extends SparkSpec {
     assert(auc >= 0.0)
   }
 
-  test("library dedup ops leave nothing pinned in the block manager") {
+  leakGatedTest("library dedup ops leave nothing pinned in the block manager") {
     spark.catalog.clearCache()
     // the round-4 implementations cached band keys / shingle frames /
     // candidate pairs and never unpersisted — loop these in a long-lived
@@ -2107,10 +2098,9 @@ class PipelineSpec extends SparkSpec {
         Dedup.lshCandidatePairs(docs, "text", "doc_id"),
         docs, "text", "doc_id", threshold = 0.5).count()
     }
-    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
   }
 
-  test("IVF index handle owns its cache; close() releases it") {
+  leakGatedTest("IVF index handle owns its cache; close() releases it") {
     spark.catalog.clearCache()
     val rnd = new scala.util.Random(3)
     val embs = (0L until 64L).map(i => (i, Seq.fill(4)(rnd.nextFloat())))
@@ -2120,7 +2110,6 @@ class PipelineSpec extends SparkSpec {
     assert(Ann.ivfTopK(index, probe, k = 3, nProbe = 2).count() === 3)
     assert(spark.sparkContext.getPersistentRDDs.nonEmpty) // the index cache
     index.close()
-    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
   }
 
   test("LSH bucket cap bounds degenerate-corpus fan-out deterministically") {
@@ -2514,8 +2503,7 @@ class PipelineSpec extends SparkSpec {
     assert(diff === 0L)
   }
 
-  test("integer PageRank matches hand-computed fixed-point values") {
-    val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet
+  leakGatedTest("integer PageRank matches hand-computed fixed-point values") {
     // star: 1→2, 2→1, 3→1 (all out-degree 1)
     val edges = Seq((1L, 2L), (2L, 1L), (3L, 1L)).toDF("src", "dst")
     // the ranks come back persisted and caller-owned
@@ -2541,7 +2529,6 @@ class PipelineSpec extends SparkSpec {
     val split = Seq((1L, 2L), (1L, 3L)).toDF("src", "dst")
     val m = ranks(split, 1)
     assert(m(2L) === 150000L + 425000L && m(3L) === 150000L + 425000L)
-    assert(spark.sparkContext.getPersistentRDDs.keySet === pinnedBefore)
   }
 
   test("fixed-point Lloyd ≡ independent driver-side replay (3 iters)") {

@@ -113,16 +113,22 @@ class PlanQualitySpec extends SparkSpec {
 
   test("q106: history probe is a hash equi-join on (band, key)") {
     import org.apache.spark.sql.functions._
+    import graft.dedup.IncrementalDedup
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id"), col("text"))
-    val hist = graft.dedup.IncrementalDedup.emptyHistory(spark, "doc_id")
-    val r = graft.dedup.IncrementalDedup.nearDupNewDocs(
-      hist, docs, "text", "doc_id")
-    try {
-      val p = plan(r.survivors)
-      assert(!p.contains("CartesianProduct"), p)
-      assert(!p.contains("BroadcastNestedLoopJoin"), p)
-    } finally r.close()
+    // a parquet-backed history: against an empty one the probe folds away
+    val histDir = java.nio.file.Files.createTempDirectory("q106hist")
+      .resolve("h").toString
+    IncrementalDedup.nearDupNewDocs(
+        IncrementalDedup.emptyHistory(spark, "doc_id"), docs, "text", "doc_id")
+      .historyRows.write.parquet(histDir)
+    val hist = spark.read.schema(IncrementalDedup.stateSchema("doc_id"))
+      .parquet(histDir)
+    val p = plan(IncrementalDedup.nearDupNewDocs(hist, docs, "text", "doc_id").probe)
+    assert(("(?s)(BroadcastHashJoin|ShuffledHashJoin|SortMergeJoin)[^(]*" +
+      """Left keys \[2\]: \[band#\d+, key#\d+\]""").r.findFirstIn(p).nonEmpty, p)
+    assert(!p.contains("CartesianProduct"), p)
+    assert(!p.contains("BroadcastNestedLoopJoin"), p)
   }
 
   test("q01: aggregation is partial (map-side) before the shuffle") {
@@ -213,7 +219,7 @@ class PlanQualitySpec extends SparkSpec {
     assert(!blocked.contains("Join"), blocked)
   }
 
-  test("prekeyed blocked generation reads the cached keyed frame, no sketch recompute") {
+  leakGatedTest("prekeyed blocked generation reads the cached keyed frame, no sketch recompute") {
     import org.apache.spark.sql.functions.col
     import graft.candidates.LshBlockingGenerator
     import graft.schema.PairSchema
@@ -234,10 +240,7 @@ class PlanQualitySpec extends SparkSpec {
       val aboveCache = p.split("InMemoryRelation").head
       assert(!aboveCache.toLowerCase.contains("minhash"), p)
       assert(!p.contains("Join"), p)
-    } finally {
-      batch.close()
-      assert(spark.sparkContext.getPersistentRDDs.isEmpty)
-    }
+    } finally batch.close()
   }
 
   test("vertex-resolution id filters push into the parquet scan") {

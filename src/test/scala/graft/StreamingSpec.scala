@@ -2,9 +2,13 @@ package graft
 
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.types._
 import graft.streaming.{Sessionize, StreamingOps}
 
 /** Structured Streaming specs: windowed/watermarked aggregation and
@@ -192,6 +196,64 @@ class StreamingSpec extends SparkSpec {
       assert(texts.count(_ == null) === 2) // null rows all pass
       assert(emitted.map(_._1).toSet === Set(1L, 3L, 5L, 6L))
     } finally q.stop()
+  }
+
+  leakGatedTest("near-dup dedup stream: history drops, within-batch chain to min id, nulls pass, few jobs a batch") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val textA = "the quick brown fox jumps over the lazy dog again"
+    val far = "completely different words nobody repeats anywhere here"
+    val base = java.nio.file.Files.createTempDirectory("ndstream")
+    val in = java.nio.file.Files.createDirectories(base.resolve("in"))
+    val schema = StructType(Seq(StructField("doc_id", LongType),
+      StructField("text", StringType)))
+    val batches = Seq(
+      // A, A+x, A+x+y chain: one component, its min id (11) survives
+      Seq(10L -> far, 11L -> (textA + " x"), 12L -> textA,
+        13L -> (textA + " x y"), 14L -> null),
+      // a near-dup of A drops against history; a fresh text and a null pass
+      Seq(20L -> (textA + " y"), 21L -> "fresh tokens appear exactly once",
+        22L -> null),
+      // a copy of batch 0's survivor drops against history
+      Seq(30L -> far, 31L -> "another unrelated sentence about rivers"))
+    // stage every file before the query starts, so its jobs are the batches'
+    val staged = batches.zipWithIndex.map { case (rows, b) =>
+      val dir = base.resolve(s"stage$b").toString
+      spark.createDataFrame(rows.map { case (i, t) => Row(i, t) }.asJava, schema)
+        .coalesce(1).write.parquet(dir)
+      new java.io.File(dir).listFiles().find(_.getName.endsWith(".parquet")).get
+    }
+    val survivors = scala.collection.mutable.Map.empty[Long, Set[Long]]
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val q = StreamingOps.nearDupDedupStream(
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+          .parquet(in.toString),
+        "text", "doc_id", base.resolve("history").toString) { (sv, id) =>
+      survivors(id) = sv.select("doc_id").collect().map(_.getLong(0)).toSet
+    }
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("sql.streaming.queryId") == q.id.toString)
+          jobs.add(e.properties.getProperty("streaming.sql.batchId"))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      staged.zipWithIndex.foreach { case (f, b) =>
+        java.nio.file.Files.move(f.toPath, in.resolve(s"batch$b.parquet"))
+        q.processAllAvailable()
+      }
+      assert(org.apache.spark.GraftCoreBridge.flushListenerBus(sc))
+    } finally {
+      q.stop()
+      sc.removeSparkListener(listener)
+    }
+    assert(survivors.toMap === Map(
+      0L -> Set(10L, 11L, 14L), 1L -> Set(21L, 22L), 2L -> Set(31L)))
+    val perBatch = jobs.asScala.toSeq.groupBy(identity).map { case (b, js) =>
+      b -> js.size }
+    assert(perBatch.keySet === Set("0", "1", "2"), jobs)
+    assert(perBatch.values.forall(_ <= 5), perBatch)
   }
 
   test("perceptual dedup stream keeps each distinct image once, first arrival") {
@@ -402,12 +464,12 @@ class StreamingSpec extends SparkSpec {
     assert(rows.contains((201L, -1L)))  // unmatched left emitted with null
   }
 
-  test("incremental stats: merged table equals one-shot census") {
+  // the leak gate: each batch's materialized merge is released after its overwrite
+  leakGatedTest("incremental stats: merged table equals one-shot census") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, String, String)]
     val docs = input.toDF().toDF("doc_id", "text", "source")
     val table = java.nio.file.Files.createTempDirectory("istats").toString + "/t"
-    val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet
     val q = StreamingOps.incrementalStatsStream(docs, "source", Seq(
       "n_docs" -> count(lit(1)),
       "sum_tokens" -> sum(org.apache.spark.sql.functions.size(
@@ -419,8 +481,6 @@ class StreamingSpec extends SparkSpec {
       input.addData((3L, "f", "s1"), (4L, "g h i j", "s3"))
       q.processAllAvailable()
     } finally q.stop()
-    // each batch's materialized merge is released after its overwrite
-    assert(spark.sparkContext.getPersistentRDDs.keySet === pinnedBefore)
     val got = spark.read.parquet(table).orderBy("source")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     assert(got.toSeq === Seq(
