@@ -15,6 +15,19 @@ import org.apache.spark.sql.SparkSession
   *    `spark.local.dir`, so streaming checkpoints and spills stay off a
   *    contended root disk;
   *  - the root log level.
+  *
+  * Partition width must scale with the data. This session leaves
+  * `spark.sql.adaptive.coalescePartitions.initialPartitionNum` unset,
+  * so AQE starts every shuffle at `cpus` partitions and only coalesces
+  * down from there. That suits the catalog scale factors, but a width
+  * fixed by the harness dies at corpus scale: with shuffles pinned at
+  * 32 partitions, the shingle-verify hash build at 10.24M documents
+  * (the 2048× replica corpus) failed with "Can't acquire 1073741824
+  * bytes memory to build hash relation", because each task's build
+  * outgrew its 1/32 share of execution memory. A 1024-wide AQE start
+  * ran it to completion (measured, SURVEY.md round 10 ScaleSmoke).
+  * Callers that feed corpus-scale inputs set `initialPartitionNum`
+  * through `conf` so AQE starts wide and coalesces by advisory size.
   */
 object Session {
 

@@ -77,8 +77,9 @@ object CandidateGenerator {
     override def close(): Unit = prekeyed.foreach(_.close())
   }
 
-  /** Cost-based generator choice, encoding the ScaleSmoke-measured
-    * trade ([[LshBlockingGenerator]]'s scaladoc): the blocked search
+  /** Cost-based generator choice, encoding the measured trade
+    * (SURVEY.md round 5 ScaleSmoke; [[LshBlockingGenerator]]'s
+    * scaladoc): the blocked search
     * pays one sketch pass over each source, which LOSES to the cross
     * scan for a single explanation with a cheap column-program scorer
     * (measured 25.4× vs 5.0× at 256× source growth) but WINS once
@@ -176,8 +177,9 @@ case object CrossJoinGenerator extends CandidateGenerator {
   * hunting); negative hunting wants [[SampleGenerator]] — at corpus
   * scale almost any record is a negative.
   *
-  * Measured trade (ScaleSmoke, 5.1M-row source): the one-off blocked
-  * search evaluates the minhash sketch on every source row, which costs
+  * Measured trade (SURVEY.md round 5 ScaleSmoke, 5.1M-row source): the
+  * one-off blocked search evaluates the minhash sketch on every source
+  * row, which costs
   * MORE than the cheap token-cosine the cross path scores with — 17.1 s
   * vs 9.8 s at 256×. Blocking wins when (a) the scorer is expensive
   * (a neural matcher: pruning model calls dominates the sketch pass) or
@@ -301,8 +303,10 @@ object LshBlockingGenerator {
   }
 
   /** Band-keyed copy of a source: original columns plus `__bk0..__bkN`.
-    * The amortization lever ScaleSmoke's trade points at: the one-off
-    * blocked search pays a full sketch pass per call, which at 5M rows
+    * The amortization lever the measured trade points at (SURVEY.md
+    * round 5 ScaleSmoke: 18.7× per explanation once prekeyed): the
+    * one-off blocked search pays a full sketch pass per call, which at
+    * 5M rows
     * costs more than the cheap cosine it prunes — but an EvalDriver
     * batch explains MANY pairs over the SAME sources, so key each
     * source once, persist it (CALLER-owned: `.cache()` it and unpersist

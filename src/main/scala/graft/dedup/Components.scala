@@ -60,8 +60,10 @@ object Components {
     * `roundObserver` is a measurement seam: the distributed loop calls
     * it after every completed round with (round index starting at 1,
     * canonical edge count after the round). The O(log n) round-count
-    * claim is measured through it (ScaleSmoke's closure legs), not
-    * asserted; the driver union-find path never calls it (no rounds).
+    * claim was measured through it (2 rounds at every scale up to
+    * 10.24M docs, SURVEY.md round 10 ScaleSmoke closure legs), and
+    * ComponentsSpec pins the log bound on a 64-node path through it;
+    * the driver union-find path never calls it (no rounds).
     */
   def connectedComponents(edges: DataFrame, aCol: String = "id_a",
       bCol: String = "id_b", maxIter: Int = 25,

@@ -373,9 +373,10 @@ object Dedup {
     * HOT-KEY skew: the batch×history probe join is UNCAPPED by
     * correctness (a capped history probe would resurrect dupes), so a
     * degenerate band key shared by the whole history is its worst
-    * case. Measured (ScaleSmoke "hot-key probe": one real batch key
-    * declared by 10⁴·m soup docs via `historyKeys`): 5.9× wall at 64×
-    * history growth (40k → 2.56M hot-key docs) — the fan-out rides
+    * case. Measured (SURVEY.md round 10 ScaleSmoke "hot-key probe":
+    * one real batch key declared by 10⁴·m soup docs via
+    * `historyKeys`): 5.9× wall at 64× history growth (40k → 2.56M
+    * hot-key docs) — the fan-out rides
     * the normal shuffle path. At production partition sizes AQE's
     * skew split divides the hot reducer partition (plan-pinned in
     * PlanQualitySpec with lowered thresholds: `skew=true` on exactly

@@ -285,7 +285,9 @@ case class SigAgreementExpr(left: Expression, right: Expression,
   * `spark.sql.objectHashAggregate.sortBased.fallbackThreshold`
   * (default 128) distinct groups per task — at 8.2M rows the fallback
   * sorted the 3.3B-row score stream (measured: 77× wall at 64× growth,
-  * 205 GB spill, ScaleSmoke label-propagate leg). Scan-local
+  * 205 GB spill, ScaleSmoke label-propagate leg on q210's first form;
+  * SURVEY.md round 11 records the scan-local form's 3.6× at 16×).
+  * Scan-local
   * evaluation removes the aggregate, the exchange, and the spill.
   *
   * Arithmetic: per-seed cosine is [[VecMath.cosineOrNull]]'s exact

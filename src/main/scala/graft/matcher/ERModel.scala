@@ -25,8 +25,9 @@ trait ERModel extends Serializable {
     * neural models) and trained-pipeline transforms. Drives cost-based
     * candidate-generator selection ([[graft.candidates.AutoSelect]]):
     * pruning candidates is worth a blocking pass exactly when the
-    * scorer it prunes is the expensive side (the ScaleSmoke-measured
-    * trade in [[graft.candidates.LshBlockingGenerator]]'s scaladoc).
+    * scorer it prunes is the expensive side (the trade measured in
+    * SURVEY.md round 5 ScaleSmoke;
+    * [[graft.candidates.LshBlockingGenerator]]'s scaladoc).
     */
   def costlyScorer: Boolean = false
 }

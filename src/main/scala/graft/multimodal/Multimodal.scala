@@ -20,9 +20,9 @@ import org.apache.spark.sql.functions._
 object Multimodal {
 
   /** Per-partition PNG decode context — owns the codec-handle lifecycle
-    * and every buffer the round-6 ScaleSmoke showed being allocated per
-    * row (per-image cost drifted 72→102 µs across 20k→320k images from
-    * allocation/GC pressure):
+    * and every buffer once allocated per row (measured, SURVEY.md
+    * round 6 ScaleSmoke: per-image cost drifted 72→102 µs across
+    * 20k→320k images from allocation/GC pressure):
     *
     *  - ONE `ImageReader` for the partition (as before);
     *  - a memory-backed `ImageInputStream` per row, constructed

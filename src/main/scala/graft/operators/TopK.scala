@@ -22,7 +22,9 @@ case class Scored(score: Double, id: Long)
   * task. This aggregator's partial step is the map-side combine
   * Catalyst can't derive for window functions.
   *
-  * CARDINALITY CAVEAT (measured, ScaleSmoke label-propagate leg):
+  * CARDINALITY CAVEAT (measured by the ScaleSmoke label-propagate leg
+  * on q210's first form; SURVEY.md round 11 records only the
+  * scan-local rewrite's 3.6× at 16×):
   * `ObjectHashAggregateExec` falls back to SORT-based aggregation once
   * a task sees more than
   * `spark.sql.objectHashAggregate.sortBased.fallbackThreshold`

@@ -3568,9 +3568,10 @@ object PipelineQueries {
   /** Robust outlier census ([[graft.operators.Robust.madOutlierCensus]]):
     * per-event-type median + MAD over integer cents, outliers at 3·MAD.
     * Exact percentiles are the oracle surface (`approx_percentile` is
-    * the documented 100 TB swap, measured in ScaleSmoke); the integer
-    * cents scaling keeps every interpolated median k/2-representable so
-    * the DuckDB quantile_cont comparison is double-exact.
+    * the documented 100 TB swap, measured, SURVEY.md round 6
+    * ScaleSmoke); the integer cents scaling keeps every interpolated
+    * median k/2-representable so the DuckDB quantile_cont comparison is
+    * double-exact.
     */
   def q122OutlierMad(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.load(s, dir, "events")
@@ -3928,8 +3929,8 @@ object PipelineQueries {
     * iterations replay bit-for-bit in SQL. The edge build here is the
     * brute-force quantized scan (fine at catalog scale); at corpus
     * scale it swaps for [[Ann.knnGraph]]'s density-sized cell build
-    * (q173, ScaleSmoke-measured 11.1x at 16x growth) — the PR loop is
-    * generator-agnostic.
+    * (q173: 11.1x at 16x growth, measured, SURVEY.md round 7
+    * ScaleSmoke) — the PR loop is generator-agnostic.
     */
   def q128Pagerank(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -6625,9 +6626,10 @@ object PipelineQueries {
       semPlanes = 4, semProbe = 0) // pinned: the oracle replays the cells
 
   /** The q196 funnel over caller-supplied frames — the same body the
-    * catalog query and the ScaleSmoke composition leg run, so the
-    * growth measurement exercises the exact chained plan the oracle
-    * hash-checks. `docs` needs (doc_id, text, lang, source); `embs`
+    * catalog query and the composition growth leg ran (4.6 at 16×,
+    * measured, SURVEY.md round 9 ScaleSmoke), so that measurement
+    * exercised the exact chained plan the oracle hash-checks. `docs`
+    * needs (doc_id, text, lang, source); `embs`
     * (vec_id, embedding) with vec_id aligned to doc_id.
     *
     * `semPlanes`/`semProbe` set the semantic-dedup cell geometry: the
@@ -6635,7 +6637,8 @@ object PipelineQueries {
     * cells, but pinned planes are a REPLAY artifact, not a scale
     * posture — fixed cell count means 16× corpus growth makes every
     * cell 16× denser and the within-cell verify quadratic (the
-    * measured 27.7× funnel leg at 16×, vs linear once the leg passes
+    * 27.7× funnel leg at 16×, measured, SURVEY.md round 9 ScaleSmoke,
+    * vs linear once the leg passes
     * AutoPlanes — production callers should leave the default).
     */
   def pipelineFunnel(s: SparkSession, docs: DataFrame, embs: DataFrame,

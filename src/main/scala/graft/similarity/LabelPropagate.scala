@@ -27,8 +27,9 @@ import org.apache.spark.sql.functions._
   * 128 distinct groups per task — measured at 8.2M rows: 77× wall at
   * 64× corpus growth with 205 GB spilled (the sort covered the full
   * |corpus|×|seed| score stream). The scan-local form is linear by
-  * construction; the ScaleSmoke label-propagate leg is its regression
-  * test.
+  * construction: 3.6× at 16× growth (measured, SURVEY.md round 11
+  * ScaleSmoke). ScaleSmoke is retired; q210's growth across Bench's
+  * three scale factors (`tools/growth.py`) is what still watches it.
   *
   * Determinism: neighbor ties (cosine DESC, seed id ASC) and vote ties
   * (count DESC, label ASC in unsigned UTF-8 order — Spark's own string

@@ -39,9 +39,10 @@ object SemDedup {
   /** Cells sized to corpus density: enough hyperplanes that the MEAN
     * cell holds ~`targetCell` vectors — `ceil(log2(n / targetCell))`
     * planes, clamped to [4, 28]. Per-cell verify work then stays
-    * roughly constant as the corpus grows (the hand-scaling rule the
-    * ScaleSmoke semantic-dedup leg applies, promoted to the default:
-    * a fixed plane count re-measured 92× cost under 64× growth —
+    * roughly constant as the corpus grows (the hand-scaling rule of the
+    * semantic-dedup growth leg, promoted to the default: a fixed plane
+    * count measured 92× cost under 64× growth, SURVEY.md round 6
+    * ScaleSmoke —
     * dense cells do quadratically more cosine work — while the
     * density-scaled count stays ~linear). Mean, not max: genuinely
     * clustered regions can still exceed the target — that residual

@@ -134,9 +134,10 @@ object Decontaminate {
     * the surviving grams, and the per-doc totals rejoin on the doc id
     * — doc-level rows, not gram-level.
     *
-    * POSTURE, measured (ScaleSmoke decontam legs, 64× corpus = 15.2M
-    * exploded train grams, probe pass rate 0.42%): while the benchmark
-    * gram set still BROADCASTS, the exact census is strictly faster
+    * POSTURE (measured, SURVEY.md round 11 ScaleSmoke decontam legs:
+    * 64× corpus = 15.2M exploded train grams, probe pass rate 0.42%):
+    * while the benchmark gram set still BROADCASTS, the exact census is
+    * strictly faster
     * (17.8 s vs 40.3 s at 64× — the sketch build plus probe pass costs
     * more than the broadcast join it avoids, though both grow
     * sub-linearly). The Bloom form pays off only past broadcast

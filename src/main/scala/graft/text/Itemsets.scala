@@ -37,7 +37,8 @@ object Itemsets {
     * probe per token. (A literal-array `array_intersect` was measured
     * quadratic: Spark rebuilds the |F|-element set PER ROW, and |F|
     * itself grows with the corpus at fixed support fraction — 51.8x
-    * cost at 16x growth in the ScaleSmoke leg; the semi-join form is
+    * cost at 16x growth, measured, SURVEY.md round 6 ScaleSmoke; the
+    * semi-join form is
     * the 100 TB shape and keeps the frequent set distributed, no
     * driver collect anywhere.)
     */

@@ -11,8 +11,9 @@ import org.apache.spark.sql.functions._
   * explanation job-streams share executors instead of queueing FIFO),
   * asserts every level's outputs are identical to the sequential
   * loop's, and prints the speedup curve — the job-stream-contention
-  * probe the 32-pair ScaleSmoke leg is too small for, and the
-  * measurement behind [[graft.eval.EvalDriver.defaultParallelism]].
+  * probe the 32-pair EvalDriver leg (measured, SURVEY.md round 6
+  * ScaleSmoke) was too small for, and the measurement behind
+  * [[graft.eval.EvalDriver.defaultParallelism]].
   */
 object EvalConcurrency {
   def main(args: Array[String]): Unit = {

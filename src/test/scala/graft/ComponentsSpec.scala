@@ -82,7 +82,7 @@ class ComponentsSpec extends SparkSpec {
     // 64-node path: the observer must see every round with a
     // monotonically non-increasing canonical edge count, converging in
     // far fewer rounds than the diameter (63) — the log n contract the
-    // ScaleSmoke closure legs measure at ~10M docs
+    // closure legs measured at ~10M docs (SURVEY.md round 10 ScaleSmoke)
     val es = (0L until 63L).map(i => (i, i + 1))
     val seen = scala.collection.mutable.ArrayBuffer.empty[(Int, Long)]
     val got = resultMap(Components.connectedComponents(edgesDf(es),
@@ -133,6 +133,23 @@ class ComponentsSpec extends SparkSpec {
     assert(dist === Map(3L -> 3L, 5L -> 3L, 9L -> 3L, 7L -> 7L, 8L -> 7L,
       1L -> 1L, 2L -> 1L))
     assert(jobs.get === 0)
+  }
+
+  leakGatedTest("withoutLosers pins a loser plan that does not fold, until close()") {
+    // the dedup specs' losers come from the driver-side closure and fold
+    // to a LocalRelation, which pins nothing; a range-derived loser plan
+    // does not fold, so only the persist-and-count path can serve it
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    def added = sc.getPersistentRDDs.keySet -- before
+    val df = (1L to 6L).map(i => (i, s"d$i")).toDF("doc_id", "text")
+    val losers = spark.range(2L, 6L, 2L).toDF("doc_id") // 2, 4
+    val res = Components.withoutLosers(df, "doc_id", losers)
+    assert(added.size === 1, "the loser plan must be pinned exactly once")
+    assert(res.survivors.select("doc_id").as[Long].collect().sorted ===
+      Array(1L, 3L, 5L, 6L))
+    res.close()
+    assert(added.isEmpty, "close() must release the loser pin")
   }
 
   test("empty edge set yields empty mapping") {

@@ -187,7 +187,8 @@ class InvariantsSpec extends SparkSpec {
 
   leakGatedTest("AutoSelect picks cross for one cheap call, prekeyed for a batch") {
     import graft.candidates.{AutoSelect, CandidateGenerator, CrossJoinGenerator}
-    // the selection logic itself (the ScaleSmoke-measured trade);
+    // the selection logic itself (the trade measured in SURVEY.md
+    // round 5 ScaleSmoke);
     // gate disabled so the fixture-sized sources exercise it
     val single = CandidateGenerator.auto(Seq(lsource, rsource), 1,
       costlyScorer = false, minCorpusForBlocking = 0)

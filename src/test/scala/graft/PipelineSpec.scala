@@ -1297,7 +1297,8 @@ class PipelineSpec extends SparkSpec {
     assert(SemDedup.autoPlanes(1000L) === 4)       // small corpus → floor
     assert(SemDedup.autoPlanes(128L * 1024) === 10)
     // 64× growth adds exactly log2(64) = 6 planes — per-cell pair work
-    // stays constant (the ScaleSmoke semantic-dedup leg measures this)
+    // stays constant (measured, SURVEY.md round 6 ScaleSmoke
+    // semantic-dedup leg)
     assert(SemDedup.autoPlanes(128L * 1024 * 64) ===
       SemDedup.autoPlanes(128L * 1024) + 6)
     assert(SemDedup.autoPlanes(Long.MaxValue) === 28) // ceiling

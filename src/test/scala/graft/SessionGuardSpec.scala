@@ -9,6 +9,7 @@ import scala.jdk.CollectionConverters._
   * as a different type), and every RDD-level pin is a
   * [[graft.operators.Pinned]] handle (a hand-rolled one has no owner
   * that releases it, and `catalog.clearCache()` does not reach it).
+  * README's tools table names every main, and only those.
   */
 class SessionGuardSpec extends AnyFunSuite {
 
@@ -33,6 +34,28 @@ class SessionGuardSpec extends AnyFunSuite {
       Seq("SparkSession" + ".builder"))
     assert(found.map(_.takeWhile(_ != ':')) ===
       Seq("src/main/scala/graft/Session.scala"), found.mkString("\n"))
+  }
+
+  test("README's tools table lists exactly the mains in src/main") {
+    // the object enclosing each `def main`, qualified by its package
+    val mains = sites(Seq("src/main/scala"), Seq("def main(")).map { site =>
+      val (path, line) = site.splitAt(site.lastIndexOf(':'))
+      val src = java.nio.file.Files.readAllLines(
+        java.nio.file.Paths.get(path)).asScala.take(line.tail.toInt)
+      val pkg = src.collectFirst { case l if l.startsWith("package ") =>
+        l.stripPrefix("package ").trim }
+      val obj = src.reverse.collectFirst {
+        case l if l.trim.startsWith("object ") => l.trim.split("[ {]")(1) }
+      (pkg.toSeq ++ obj).mkString(".")
+    }.toSet
+    val readme = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("README.md")), "UTF-8")
+    val section = readme.split("\n## ")
+      .find(_.startsWith("Entry points and tools")).getOrElse("")
+    val rows = "(?m)^\\| `(graft\\.[\\w.]+)` \\|".r
+      .findAllMatchIn(section).map(_.group(1)).toSet
+    assert(rows.nonEmpty, "README has no \"Entry points and tools\" table")
+    assert(rows === mains, s"README rows: $rows\nmains: $mains")
   }
 
   test("no RDD-level pin outside graft.operators.Pinned") {
