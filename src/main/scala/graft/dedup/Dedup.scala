@@ -31,30 +31,18 @@ object Dedup {
   // ------------------------------------------------------------- minhash
   /** Word k-shingles of `textCol` (k consecutive tokens joined by one
     * space); documents shorter than k tokens contribute the whole text
-    * as a single shingle.
+    * as a single shingle (a null text yields `[null]`). The token array
+    * is bound once per row ([[TextAnalysis.bindOnce]]), so building the
+    * shingles is linear in the document's tokens times k.
     */
-  def shingles(text: Column, k: Int = 3): Column = {
-    val toks = TextAnalysis.tokens(text)
-    val grams = transform(
-      sequence(lit(1), size(toks) - (k - 1)),
-      i => concat_ws(" ", (0 until k).map(j => element_at(toks, i + j)): _*))
-    when(size(toks) >= k, grams).otherwise(array(text))
-  }
-
-  /** MinHash hash i, declarative formulation: min over shingles of
-    * md5(i || '|' || shingle). String-min over hex md5 is a uniform
-    * permutation surrogate that any engine reproduces bit-for-bit
-    * (the DuckDB-oracle-friendly choice; xxhash64 would be faster but
-    * engine-specific). Kept as the equivalence-test twin of the
-    * single-pass [[graft.functions.MinHashSignature]] expression —
-    * per-hash folds re-run the md5 interpreter per shingle per hash and
-    * are ~100× slower at corpus scale.
-    */
-  def minhashColumn(text: Column, i: Int, k: Int = 3): Column =
-    array_min(transform(shingles(text, k), sh => md5(concat(lit(s"$i|"), sh))))
+  def shingles(text: Column, k: Int = 3): Column =
+    TextAnalysis.bindOnce(TextAnalysis.tokens(text)) { toks =>
+      when(size(toks) >= k, TextAnalysis.windows(toks, k)).otherwise(array(text))
+    }
 
   /** Append `numHashes` minhash columns mh0..mh{n-1} (single-pass
-    * sketch expression; identical values to [[minhashColumn]]).
+    * sketch expression: minhash i is the min over shingles of
+    * md5(i || '|' || shingle)).
     */
   def withMinhashSignature(df: DataFrame, textCol: String,
       numHashes: Int = 4, k: Int = 3): DataFrame = {

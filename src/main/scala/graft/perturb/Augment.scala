@@ -39,11 +39,11 @@ object Augment {
       val toks = split(col(a), " ")
       // cut ∈ [1, nTokens-1]; variant 0 = drop prefix (keep toks[cut:]),
       // variant 1 = drop suffix (keep toks[:cut]) — local_explain.py:207-209
-      val variants = flatten(transform(
-        sequence(lit(1), size(toks) - 1),
+      val variants = graft.text.TextAnalysis.bindOnce(toks)(tk => flatten(transform(
+        sequence(lit(1), size(tk) - 1),
         cut => array(
-          array_join(slice(toks, cut + 1, size(toks) - cut), " "),
-          array_join(slice(toks, lit(1), cut), " "))))
+          array_join(slice(tk, cut + 1, size(tk) - cut), " "),
+          array_join(slice(tk, lit(1), cut), " ")))))
       source
         .filter(size(toks) >= 2)
         .withColumn("__newval", explode(variants))

@@ -41,13 +41,13 @@ object LangModel {
     * document has fewer than two tokens (such documents carry zero
     * surprisal rather than dropping out of the census).
     */
-  def bigrams(text: Column): Column = {
-    val tk = TextAnalysis.tokens(text)
-    when(size(tk) >= 2,
-      transform(sequence(lit(1), size(tk) - 1),
-        i => struct(element_at(tk, i).as("w1"), element_at(tk, i + 1).as("w2"))))
-      .otherwise(array().cast("array<struct<w1:string,w2:string>>"))
-  }
+  def bigrams(text: Column): Column =
+    TextAnalysis.bindOnce(TextAnalysis.tokens(text)) { tk =>
+      when(size(tk) >= 2,
+        transform(sequence(lit(1), size(tk) - 1),
+          i => struct(element_at(tk, i).as("w1"), element_at(tk, i + 1).as("w2"))))
+        .otherwise(array().cast("array<struct<w1:string,w2:string>>"))
+    }
 
   /** The trained model: one row per distinct corpus bigram with its
     * integer-log2 conditional cost — `(w1, w2, c2, c1, cost)`.

@@ -55,11 +55,7 @@ object Search {
       phrase: Seq[String], k: Int): DataFrame = {
     require(phrase.nonEmpty, "phrase must be non-empty")
     val m = phrase.size
-    val tk = TextAnalysis.tokens(col(textCol))
-    val grams = when(size(tk) >= m,
-      transform(sequence(lit(1), size(tk) - (m - 1)),
-        i => concat_ws(" ", (0 until m).map(j => element_at(tk, i + j)): _*))
-    ).otherwise(array().cast("array<string>"))
+    val grams = TextAnalysis.ngrams(col(textCol), m)
     // exactly-conservative prefilter: tokens are split(text, " "), and
     // split-then-join on a single space is the identity (empty tokens
     // preserve runs of spaces), so a matching m-gram appears VERBATIM

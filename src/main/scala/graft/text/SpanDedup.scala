@@ -34,18 +34,13 @@ object SpanDedup {
 
   /** (id, __pos, __g): every n-token window with its 1-based start
     * position. Documents shorter than `n` tokens emit no windows.
-    * Scan-local (explode of a transform over the token array).
+    * Scan-local (posexplode of [[TextAnalysis.ngrams]]).
     */
   private def positionedGrams(df: DataFrame, textCol: String, idCol: String,
-      n: Int): DataFrame = {
-    val tk = TextAnalysis.tokens(col(textCol))
-    val grams = when(size(tk) >= n,
-      transform(sequence(lit(1), size(tk) - (n - 1)),
-        i => concat_ws(" ", (0 until n).map(j => element_at(tk, i + j)): _*))
-    ).otherwise(array().cast("array<string>"))
-    df.select(col(idCol), posexplode(grams).as(Seq("__p0", "__g")))
+      n: Int): DataFrame =
+    df.select(col(idCol),
+        posexplode(TextAnalysis.ngrams(col(textCol), n)).as(Seq("__p0", "__g")))
       .select(col(idCol), (col("__p0") + 1L).as("__pos"), col("__g"))
-  }
 
   /** Maximal duplicated spans per document: (idCol, span_start,
     * span_end), 1-based inclusive token indices. Windows merge when

@@ -13,6 +13,37 @@ object TextAnalysis {
   /** Whitespace tokens (single-space convention of the fixtures). */
   def tokens(text: Column): Column = split(text, " ")
 
+  /** Evaluates `e` once per row and hands it to `f` as a lambda
+    * variable: `f(e)` with `e` let-bound. Use it whenever `f` reads `e`
+    * from inside a higher-order-function lambda. Catalyst inlines a
+    * column where it is referenced, and common-subexpression elimination
+    * does not reach into lambda bodies, so a direct reference
+    * re-evaluates `e` per lambda call: an n-gram builder over
+    * `tokens(text)` would re-split the whole document k times per gram
+    * (O(n²·k) per document), and a window fold over a hashed gram array
+    * would re-run the md5 pass per window. Bound, `e` runs once per row
+    * and every lambda reads the same array. Values, types and null
+    * semantics are those of `f(e)`: a null `e` reaches `f` as null.
+    */
+  def bindOnce(e: Column)(f: Column => Column): Column =
+    element_at(transform(array(e), f), 1)
+
+  /** Every window of `n` consecutive tokens, joined by one space, in
+    * token order; empty when the text has fewer than `n` tokens (or is
+    * null). Linear in tokens × n: the token array is bound once.
+    */
+  def ngrams(text: Column, n: Int): Column =
+    bindOnce(tokens(text)) { tk =>
+      when(size(tk) >= n, windows(tk, n)).otherwise(array().cast("array<string>"))
+    }
+
+  /** The `n`-token windows of a bound token array `tk` that holds at
+    * least `n` tokens, joined by one space.
+    */
+  private[graft] def windows(tk: Column, n: Int): Column =
+    transform(sequence(lit(1), size(tk) - (n - 1)),
+      i => concat_ws(" ", (0 until n).map(j => element_at(tk, i + j)): _*))
+
   // --------------------------------------------------------------- langid
   /** Tiny per-language stopword lists for the n-gram/stopword heuristic.
     * Deliberately minimal — the operator shape (per-language hit
@@ -222,15 +253,13 @@ object TextAnalysis {
     */
   /** Occurrences of the most frequent token: count each DISTINCT
     * token's hits (O(distinct × n) per row — bounded by document
-    * length, not data size), take the max. The token array is
-    * let-bound through a lambda variable so the split runs once per
-    * row, not once per distinct token (expression inlining would make
-    * it O(n²) per document).
+    * length, not data size), take the max; the token array is bound
+    * once ([[bindOnce]]).
     */
   def topTokenCount(toks: Column): Column =
-    element_at(transform(array(toks), tk =>
+    bindOnce(toks)(tk =>
       array_max(transform(array_distinct(tk),
-        t => size(filter(tk, x => x === t))))), 1)
+        t => size(filter(tk, x => x === t)))))
 
   def withRepetitionSignals(df: DataFrame, textCol: String = "text"): DataFrame = {
     val bigrams = graft.dedup.Dedup.shingles(col(textCol), 2)

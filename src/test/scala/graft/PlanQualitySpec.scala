@@ -851,6 +851,52 @@ class PlanQualitySpec extends SparkSpec {
     assert(salted.count() === n / 100L * 99L)
   }
 
+  /** Every `StringSplit` inside a lambda body whose input holds no
+    * lambda variable, in `df`'s optimized plan (subqueries and cached
+    * plans included). Such a split re-splits the same row once per
+    * lambda call; bind its array with `TextAnalysis.bindOnce` instead.
+    */
+  private def splitsInsideLambdas(df: DataFrame): Seq[String] = {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, LambdaFunction,
+      NamedLambdaVariable, StringSplit}
+    import org.apache.spark.sql.catalyst.plans.QueryPlan
+    def exprs(p: QueryPlan[_]): Seq[Expression] =
+      p.expressions ++ (p.subqueries ++ p.children ++ p.innerChildren)
+        .collect { case q: QueryPlan[_] => q }.flatMap(exprs)
+    exprs(df.queryExecution.optimizedPlan)
+      .flatMap(_.collect { case l: LambdaFunction => l.function })
+      .flatMap(_.collect {
+        case s: StringSplit if !s.exists(_.isInstanceOf[NamedLambdaVariable]) => s.sql
+      }).distinct
+  }
+
+  test("n-gram builders split each text once (no row-constant split inside a lambda)") {
+    import org.apache.spark.sql.functions._
+    val docs = spark.read.parquet(s"$dir/documents.parquet")
+      .select(col("doc_id"), col("text"))
+    val builders = Seq(
+      "Dedup.shingles" -> docs.select(graft.dedup.Dedup.shingles(col("text"), 3)),
+      "Search.phraseTopK" -> graft.text.Search.phraseTopK(
+        docs, "text", "doc_id", Seq("the", "data"), 5),
+      "SpanDedup.duplicatedSpans" -> graft.text.SpanDedup.duplicatedSpans(
+        docs, "text", "doc_id"),
+      "LangModel.bigrams" -> docs.select(graft.text.LangModel.bigrams(col("text"))),
+      "Augment.subsequenceVariants" ->
+        graft.perturb.Augment.subsequenceVariants(docs, Seq("text"))._1)
+    val bad = builders.flatMap { case (name, df) =>
+      splitsInsideLambdas(df).map(s => s"$name: $s") }
+    assert(bad.isEmpty, bad.mkString("\n"))
+  }
+
+  test("no catalog query re-splits a row inside a lambda (sf0.001 plans)") {
+    val bad = graft.SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+      spark.catalog.clearCache()
+      splitsInsideLambdas(fn(spark, dir)).map(s => s"$name: $s")
+    }
+    spark.catalog.clearCache()
+    assert(bad.isEmpty, bad.mkString("\n"))
+  }
+
   test("leak gate: pinning queries leave nothing pinned past clearCache") {
     // every catalog query that reaches a pin site (the dedup closures,
     // the Pinned lineage cuts, PageRank, the q196 funnel). A catalog

@@ -13,6 +13,70 @@ import graft.text.TextAnalysis
   */
 object ReferenceTwins {
 
+  // ------------------------------------------------ inline n-gram builders
+  // The n-gram builders as they were written before their token array
+  // was let-bound (`TextAnalysis.bindOnce`): each lambda references
+  // `split(text, " ")` directly, so Catalyst re-splits the text per
+  // lambda call. Same expressions, so same values and types; the specs
+  // compare the library builders against these, and the sketch twins
+  // build on them so they stay independent of the library's builders.
+
+  /** Inline twin of `Dedup.shingles`. */
+  def shinglesInline(text: Column, k: Int = 3): Column = {
+    val toks = split(text, " ")
+    val grams = transform(
+      sequence(lit(1), size(toks) - (k - 1)),
+      i => concat_ws(" ", (0 until k).map(j => element_at(toks, i + j)): _*))
+    when(size(toks) >= k, grams).otherwise(array(text))
+  }
+
+  /** Inline twin of `TextAnalysis.ngrams` (the gram array of
+    * `Search.phraseTopK` and `SpanDedup`'s positioned grams).
+    */
+  def ngramsInline(text: Column, n: Int): Column = {
+    val tk = split(text, " ")
+    when(size(tk) >= n,
+      transform(sequence(lit(1), size(tk) - (n - 1)),
+        i => concat_ws(" ", (0 until n).map(j => element_at(tk, i + j)): _*))
+    ).otherwise(array().cast("array<string>"))
+  }
+
+  /** Inline twin of `LangModel.bigrams`. */
+  def bigramsInline(text: Column): Column = {
+    val tk = split(text, " ")
+    when(size(tk) >= 2,
+      transform(sequence(lit(1), size(tk) - 1),
+        i => struct(element_at(tk, i).as("w1"), element_at(tk, i + 1).as("w2"))))
+      .otherwise(array().cast("array<struct<w1:string,w2:string>>"))
+  }
+
+  /** Inline twin of `Augment.subsequenceVariants` (string attributes
+    * named explicitly).
+    */
+  def subsequenceVariantsInline(source: DataFrame, attrs: Seq[String]): DataFrame =
+    attrs.map { a =>
+      val toks = split(col(a), " ")
+      val variants = flatten(transform(
+        sequence(lit(1), size(toks) - 1),
+        cut => array(
+          array_join(slice(toks, cut + 1, size(toks) - cut), " "),
+          array_join(slice(toks, lit(1), cut), " "))))
+      source
+        .filter(size(toks) >= 2)
+        .withColumn("__newval", explode(variants))
+        .withColumn(a, col("__newval"))
+        .drop("__newval")
+    }.reduce(_ unionByName _)
+
+  /** MinHash hash i, declarative formulation: min over shingles of
+    * md5(i || '|' || shingle). String-min over hex md5 is a uniform
+    * permutation surrogate that any engine reproduces bit-for-bit (the
+    * DuckDB-oracle-friendly choice). The equivalence twin of the
+    * single-pass `graft.functions.MinHashSignature` expression.
+    */
+  def minhashColumn(text: Column, i: Int, k: Int = 3): Column =
+    array_min(transform(shinglesInline(text, k), sh => md5(concat(lit(s"$i|"), sh))))
+
   /** Declarative twin of `Ann.lshBucketPortable` (numPlanes separate
     * zip_with/aggregate folds) — the form the SQL oracles replay.
     */
@@ -92,13 +156,12 @@ object ReferenceTwins {
       lit(0), (acc, v) => acc + v).cast("double") / numHashes
 
   /** Declarative twin of `Dedup.winnowFingerprints` (the formulation the
-    * SQL oracle replays). The gram-hash array is let-bound through a
-    * lambda variable: a direct reference from inside the window lambda
-    * would INLINE the md5 pass and re-evaluate it per window — O(n²)
-    * md5 calls per document.
+    * SQL oracle replays). The gram-hash array is let-bound the way
+    * `TextAnalysis.bindOnce` does it, spelled out here so the twin
+    * shares no code with the library.
     */
   def winnowFingerprintsDeclarative(text: Column, k: Int = 3, w: Int = 4): Column = {
-    val hashes = transform(Dedup.shingles(text, k), g => Dedup.portableHash60(g))
+    val hashes = transform(shinglesInline(text, k), g => Dedup.portableHash60(g))
     element_at(transform(array(hashes), hs => {
       val nWindows = size(hs) - (w - 1)
       val mins = when(nWindows >= 1,

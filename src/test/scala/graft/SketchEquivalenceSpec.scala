@@ -25,7 +25,7 @@ class SketchEquivalenceSpec extends SparkSpec {
   test("minhash expression equals the declarative md5-min fold") {
     val cmp = texts.select(
       MinHashSignature(col("text"), 4, 3).as("fast"),
-      array((0 until 4).map(i => Dedup.minhashColumn(col("text"), i, 3)): _*).as("slow"))
+      array((0 until 4).map(i => ReferenceTwins.minhashColumn(col("text"), i, 3)): _*).as("slow"))
     assert(cmp.filter(col("fast") =!= col("slow")).count() === 0)
   }
 

@@ -7,7 +7,11 @@ Reads each <verifyOutDir>/<name> parquet (written by graft.Verify),
 runs the matching SQL from oracle_sql.json in DuckDB with the sf
 tables registered as views, sorts columns by name and rows by all
 columns, and compares values exactly. Prints per-query PASS/FAIL with
-first diffs. Dev tool only — the engine itself has no Python deps.
+first diffs. DuckDB runs under a fixed memory limit; a query that runs
+out of memory prints SKIP and the comparison goes on. The last line is
+"== P pass, F fail, S skipped"; a skip never counts as a pass, and the
+exit status is non-zero only when some query fails. Dev tool only — the
+engine itself has no Python deps.
 """
 import json
 import math
@@ -18,6 +22,9 @@ import duckdb
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
+# fixed so a run does not depend on the host's memory: uncapped, the
+# q196 oracle alone grows past 12 GiB at sf0.01
+MEMORY_LIMIT = "3GB"
 
 
 def canon(df):
@@ -39,20 +46,26 @@ def values_equal(a, b):
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     con = duckdb.connect()
+    con.execute(f"SET memory_limit = '{MEMORY_LIMIT}'")
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.loads(Path(out_dir, "oracle_sql.json").read_text())
-    n_pass = n_fail = 0
+    n_pass = n_fail = n_skip = 0
     for name in sorted(oracle):
         qdir = Path(out_dir, name)
         if not qdir.exists():
             print(f"FAIL {name}: no spark output")
             n_fail += 1
             continue
-        got = con.execute(
-            f"SELECT * FROM '{qdir}/*.parquet'").df()
-        want = con.execute(oracle[name]).df()
+        try:
+            got = con.execute(
+                f"SELECT * FROM '{qdir}/*.parquet'").df()
+            want = con.execute(oracle[name]).df()
+        except duckdb.OutOfMemoryException:
+            print(f"SKIP {name}: duckdb out of memory")
+            n_skip += 1
+            continue
         got, want = canon(got), canon(want)
         if list(got.columns) != list(want.columns):
             print(f"FAIL {name}: columns {list(got.columns)} != {list(want.columns)}")
@@ -92,7 +105,7 @@ def main():
             n = con.execute(f"SELECT count(*) FROM '{qdir}/*.parquet'").fetchone()[0]
             status = "PASS" if n > 0 else "FAIL"
             print(f"{status} {qdir.name} (rows-only: {n} rows)")
-    print(f"== {n_pass} pass, {n_fail} fail")
+    print(f"== {n_pass} pass, {n_fail} fail, {n_skip} skipped")
     sys.exit(1 if n_fail else 0)
 
 
