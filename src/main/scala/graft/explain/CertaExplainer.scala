@@ -1,7 +1,9 @@
 package graft.explain
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StringType,
+  StructField, StructType}
 import graft.candidates.Candidates
 import graft.matcher.ERModel
 import graft.perturb.Perturb
@@ -28,11 +30,14 @@ final case class Explanation(
   * Spark-native. The support search scans each opposite source in one
   * bounded action (its capped top-k) and scores the capped rows as a
   * LocalRelation; everything after it is bounded by numTriangles × the
-  * attribute powerset and runs as driver work around the fewest jobs:
-  * triangles are joined driver-side, every lattice depth is predicted
-  * in ONE cached pass, and the driver replays the reference's
-  * monotonicity shortcut (triangles_method.py:301-327) over one
-  * (attribute set → n, flips) census. No per-triangle driver loops.
+  * attribute powerset and runs as driver work around one job:
+  * triangles are joined driver-side, their vertex records come from
+  * the support rows the driver already holds (no source is read
+  * again), and every lattice depth is predicted in ONE uncached action
+  * that collects only the flipped rows. The driver replays the
+  * reference's monotonicity shortcut (triangles_method.py:301-327) over
+  * the (attribute set → n, flips) census those rows give. No
+  * per-triangle driver loops.
   */
 /** @param candidateGen J3 strategy for the support search (SURVEY §4):
   *   the default [[graft.candidates.AutoSelect]] resolves cost-based at
@@ -111,8 +116,10 @@ class CertaExplainer(
     * sets the reference holds in pandas).
     */
   private def localize(df: DataFrame): DataFrame =
-    if (df.columns.isEmpty) df
-    else spark.createDataFrame(java.util.Arrays.asList(df.collect().toIndexedSeq: _*), df.schema)
+    if (df.columns.isEmpty) df else localFrame(df.collect().toIndexedSeq, df.schema)
+
+  private def localFrame(rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
   /** count() that skips the Spark job when the frame folds to a
     * LocalRelation ([[graft.candidates.Candidates.boundedCount]]) — an
@@ -145,28 +152,35 @@ class CertaExplainer(
       check: Boolean = false,
       discardBad: Boolean = false): Explanation = {
     val gen = resolvedGen(model)
+    // vertex records are read off the support rows in the sources'
+    // column layout, which the probes therefore have to share
+    for ((probe, source, side) <- Seq((lRecord, lsource, "left"), (rRecord, rsource, "right")))
+      require(probe.schema.map(f => (f.name, f.dataType)) ==
+        source.schema.map(f => (f.name, f.dataType)),
+        s"the $side record's columns ${probe.schema.simpleString} differ from the $side " +
+          s"source's ${source.schema.simpleString}: pass a row of that source, e.g. " +
+          "source.filter(col(\"id\") === id)")
     val lAttrs = lRecord.columns.filter(_ != "id").toIndexedSeq
     val rAttrs = rRecord.columns.filter(_ != "id").toIndexedSeq
     val attrLength =
       if (attrLengthOpt > 0) attrLengthOpt else math.min(lAttrs.size, rAttrs.size)
 
-    // stage 2: original prediction (1-row job; driver argmax O8). The
-    // WHOLE predicted row is collected (not just the two scores): the
-    // pair row and both probe records re-bind from it as LocalRelations,
-    // so nothing below re-plans the two source scans and reading a
-    // probe (the support search attaches it as literals) fires no job.
-    val pairUnderExplanation0 = schema.assemblePair(lRecord, rRecord)
-    val orig = staged("original prediction")(
-      model.predict(pairUnderExplanation0).head())
+    // stage 2: original prediction (driver argmax O8). Each probe record
+    // is read in one collect (none over a LocalRelation), the pair is
+    // predicted as a LocalRelation (a column program folds over it),
+    // and both probes re-bind as LocalRelations, so nothing below
+    // re-plans the two source scans and reading a probe (the support
+    // search attaches it as literals) fires no job.
+    val (lRow, rRow) = staged("original prediction")(
+      (lRecord.collect().head, rRecord.collect().head))
+    val lProbe = localFrame(Seq(lRow), lRecord.schema)
+    val rProbe = localFrame(Seq(rRow), rRecord.schema)
+    val pairUnderExplanation = localFrame(Seq(Row.fromSeq(lRow.toSeq ++ rRow.toSeq)),
+      StructType(lRecord.schema.map(f => f.copy(name = schema.lprefix + f.name)) ++
+        rRecord.schema.map(f => f.copy(name = schema.rprefix + f.name))))
+    val orig = staged("original prediction")(model.predict(pairUnderExplanation).head())
     val pc = if (orig.getAs[Double]("match_score") >
       orig.getAs[Double]("nomatch_score")) 1 else 0
-    def fromOrig(frame: DataFrame, prefix: String): DataFrame = spark.createDataFrame(
-      java.util.Arrays.asList(org.apache.spark.sql.Row.fromSeq(
-        frame.columns.toIndexedSeq.map(c => orig.get(orig.fieldIndex(prefix + c))))),
-      frame.schema)
-    val pairUnderExplanation = fromOrig(pairUnderExplanation0, "")
-    val lProbe = fromOrig(lRecord, schema.lprefix)
-    val rProbe = fromOrig(rRecord, schema.rprefix)
 
     // stage 3: support search (one bounded action per distributed side,
     // LocalRelation result)
@@ -178,24 +192,19 @@ class CertaExplainer(
 
     // G2 fallback (reference local_explain.py:51-60): when support is
     // short, search again among prefix/suffix-perturbed copies of the
-    // probe records; generated records extend the sources the triangle
-    // stages resolve against (explain.py:67). The generated frames are
-    // tiny (2·Σ(tokens-1) rows per probe attribute) LocalRelations, so
-    // the counts and the extended-source unions replay nothing.
+    // probe records. The generated copies are tiny (2·Σ(tokens-1) rows
+    // per probe attribute) LocalRelations built without a job, and the
+    // support rows found among them carry their records, so nothing
+    // extends the sources.
     //
-    // r12: the support rows live driver-side from here on (the fused
-    // search returns true LocalRelations, so the collect is job-free) —
-    // the count, the G2 union, the O3 truncation sort and the F9
-    // labeling below are driver arithmetic over ≤ 2·numTriangles
-    // bounded rows, replacing a count job, a union job and the
-    // window+localize job per explanation.
-    var nbRows: IndexedSeq[org.apache.spark.sql.Row] =
+    // The support rows live driver-side from here on (the fused search
+    // returns true LocalRelations, so the collect is job-free): the
+    // count, the G2 append, the O3 truncation sort and the F9 labeling
+    // below are driver arithmetic over ≤ 2·numTriangles bounded rows.
+    var nbRows: IndexedSeq[Row] =
       neighborhood0.collect().toIndexedSeq
     val nbSchema = neighborhood0.schema
-    var extendedL = lsource
-    var extendedR = rsource
-    val n0 = nbRows.size.toLong
-    if (n0 < numTriangles) {
+    if (nbRows.size < numTriangles) {
       val (maxLid, maxRid) = maxSourceIds
       // variants of the left probe serve as right-side candidates & v.v.
       val genFromL = staged("augment")(graft.perturb.Augment
@@ -209,14 +218,8 @@ class CertaExplainer(
           lProbe, rProbe, genFromR, genFromL, pc, model, numTriangles,
           maxPredict, useLeft, useRight, seed = seed, schema = schema,
           gen = gen))
-        if (support2.columns.nonEmpty) {
-          val rows2 = support2.collect() // LocalRelation — job-free
-          if (rows2.nonEmpty) {
-            nbRows = nbRows ++ rows2
-            extendedL = lsource.unionByName(genFromR)
-            extendedR = rsource.unionByName(genFromL)
-          }
-        }
+        if (support2.columns.nonEmpty)
+          nbRows = nbRows ++ support2.collect() // LocalRelation — job-free
       }
     }
 
@@ -248,7 +251,7 @@ class CertaExplainer(
     val msIdx = nbSchema.fieldIndex("match_score")
     val pairIdxs = pairCols.map(nbSchema.fieldIndex)
     val supportRows = truncatedRows.map { r =>
-      org.apache.spark.sql.Row.fromSeq(
+      Row.fromSeq(
         pairIdxs.map(r.get) ++ Seq(r.get(idIdx),
           if (r.getDouble(msIdx) >= 0.5) 1 else 0))
     }
@@ -259,163 +262,147 @@ class CertaExplainer(
       .withColumn("id", schema.pairId(col(schema.lid), col(schema.rid)))
       .withColumn("label", lit(pc))
       .collect()
-    val supportPairsSchema = org.apache.spark.sql.types.StructType(
-      pairUnderExplanation.schema.fields.toIndexedSeq ++ Seq(
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.StringType, nullable = true),
-        org.apache.spark.sql.types.StructField("label",
-          org.apache.spark.sql.types.IntegerType, nullable = false)))
-    val supportPairs = spark.createDataFrame(
-      java.util.Arrays.asList((firstRowRows.toIndexedSeq ++ supportRows): _*),
-      supportPairsSchema)
+    val supportPairsSchema = pairUnderExplanation.schema
+      .add(StructField("id", StringType, nullable = true))
+      .add(StructField("label", IntegerType, nullable = false))
+    val supportPairs = localFrame(firstRowRows.toIndexedSeq ++ supportRows, supportPairsSchema)
 
     // stage 4: triangle discovery — a driver-side join of the local
     // support set (≤ (numTriangles/2)² rows, job-free)
     val discovered = staged("triangle discovery")(Triangles.discover(supportPairs, schema))
     if (boundedCount(discovered) == 0) return emptyExplanation()
 
+    // stage 5a: vertex resolution. Every vertex is a record of the pair
+    // under explanation or of a support row, G2 copies included, so the
+    // triangles resolve against the rows the driver holds: no job.
+    val resolvedAll = staged("vertex resolution")(Perturb.resolve(discovered,
+      Perturb.vertexRecords(firstRowRows.toIndexedSeq ++ supportRows, supportPairsSchema,
+        lsource.schema, rsource.schema, schema)))
+
     // G6 invariant probes (reference triangles_method.py:280-283): the
     // reference re-scores check_properties per triangle per depth; the
-    // probes are depth-independent, so ONE distributed 12-probe pass
-    // suffices. With discardBad, non-transitive triangles drop before
-    // any perturbation is generated.
-    val (triangles, flaggedTriangles) =
-      if (!check) (discovered, discovered)
+    // probes are depth-independent, so ONE distributed 12-probe pass over
+    // the resolved triangles suffices. With discardBad, non-transitive
+    // triangles drop before any perturbation is generated.
+    val (resolved, flaggedTriangles) =
+      if (!check) (resolvedAll, discovered)
       else {
         val flags = staged("invariant checks")(localize(
-          Invariants.checkAll(discovered, extendedL, extendedR, model, schema)))
-        if (discardBad)
-          (localize(flags.filter(col("transitivity"))
-            .select(col("u"), col("v"), col("w"))),
-            localize(flags.filter(col("transitivity"))))
-        else (discovered, flags)
+          Invariants.checkAll(resolvedAll, model, schema)))
+        if (!discardBad) (resolvedAll, flags)
+        else {
+          val kept = localize(flags.filter(col("transitivity")))
+          (resolvedAll.only(kept), kept)
+        }
       }
-    val nTriangles = boundedCount(triangles)
+    val (nLeft, nRight) = (boundedCount(resolved.left), boundedCount(resolved.right))
+    val nTriangles = nLeft + nRight
     if (nTriangles == 0) return emptyExplanation()
 
-    // stage 5: perturb & predict every lattice depth in one cached pass
-    // (reference perturb_predict, triangles_method.py:266-334). Vertex
-    // resolution scans each source once with an id-IN pushdown filter
-    // and returns bounded LocalRelations; one Generate explodes every
-    // depth's subsets, and one (set → n, flips) census is collected.
+    // stage 5b: perturb & predict every lattice depth in ONE uncached
+    // action (reference perturb_predict, triangles_method.py:266-334):
+    // one Generate explodes every depth's subsets, the matcher scores
+    // them, and only the flipped rows are collected. The lattice stays a
+    // distributed job: it has |triangles| × (2^k−2) rows.
     val depths = 1 until attrLength
     if (depths.isEmpty) return emptyExplanation()
-    val resolved = staged("vertex resolution")(
-      Perturb.resolve(triangles, extendedL, extendedR, schema))
     val classScoreCol = if (pc == 1) "match_score" else "nomatch_score"
-    // the one cache an explanation takes, released before return —
-    // explain() leaves nothing pinned (EvalDriver loops explanations;
-    // leaked caches accumulate without bound — the round-3 q25
-    // regression)
     val preds = model.predict(Perturb.forDepth(resolved, depths, pc, schema))
-      .withColumn("__flip", col(classScoreCol) < 0.5).persist()
-    try {
-      val census = staged(s"perturb depth 1-${depths.last}")(
-        preds.groupBy(col("alteredAttributes"))
-          .agg(count(lit(1)).as("n"),
-            sum(when(col("__flip"), 1L).otherwise(0L)).as("cnt"))
-          .collect()).map(r => (r.getSeq[String](0), r.getLong(1), r.getLong(2)))
+    val flippedRows = staged(s"perturb depth 1-${depths.last}")(
+      preds.filter(col(classScoreCol) < 0.5).collect()).toIndexedSeq
+    val altIdx = preds.schema.fieldIndex("alteredAttributes")
 
-      // The reference's monotonicity shortcut, replayed on the census: once
-      // every perturbation of a depth flips, deeper depths count all their
-      // perturbations as flipped (their model scores are ignored). The
-      // ranking is per set (depth-a sets have exactly a attributes) and
-      // powerset-bounded, so it stays driver-side.
-      val perDepth = census.groupMapReduce(_._1.size)(c => (c._2, c._3)) {
-        case ((n1, f1), (n2, f2)) => (n1 + n2, f1 + f2)
+    // The (attribute set → n, flips) census. Each resolved row emits
+    // each subset of its free side exactly once, so a set's n is its
+    // side's row count; its flips are its collected rows, and a set
+    // that never flips keeps (n, 0).
+    val flipsOf = flippedRows.groupMapReduce(_.getSeq[String](altIdx))(_ => 1L)(_ + _)
+    val census = Seq((resolved.lAttrs, schema.lprefix, nLeft),
+        (resolved.rAttrs, schema.rprefix, nRight)).flatMap {
+      case (attrs, prefix, n) if n > 0 => depths.flatMap(d =>
+        Perturb.subsets(attrs.map(prefix + _), d).map(set =>
+          (set, n, flipsOf.getOrElse(set, 0L))))
+      case _ => Nil
+    }
+
+    // The reference's monotonicity shortcut, replayed on the census: once
+    // every perturbation of a depth flips, deeper depths count all their
+    // perturbations as flipped (their model scores are ignored). The
+    // ranking is per set (depth-a sets have exactly a attributes) and
+    // powerset-bounded, so it stays driver-side.
+    val perDepth = census.groupMapReduce(_._1.size)(c => (c._2, c._3)) {
+      case ((n1, f1), (n2, f2)) => (n1 + n2, f1 + f2)
+    }
+    val fullFlip = depths.find(a => perDepth.get(a).exists { case (n, f) => n == f })
+      .getOrElse(Int.MaxValue)
+    val rankingRows = depths.flatMap(a => census.collect {
+      case (set, n, flips) if set.size == a => (set, if (a > fullFlip) n else flips)
+    })
+    if (rankingRows.isEmpty) return emptyExplanation()
+    val totalFlipped = rankingRows.map(_._2).sum
+
+    // stage 6a: A2 aggregate rankings → probability of sufficiency.
+    // The result is bounded by the attribute powerset (≤ Σ C(n,a) rows,
+    // data-size independent) and already aggregated per set, so it
+    // assembles driver-side — exactly the reference's pandas Series —
+    // with zero additional jobs. pos = cnt / nTriangles with the same
+    // double ops Spark's Divide(cast(long), double) runs.
+    val pssRows: IndexedSeq[Row] = rankingRows.map { case (set, cnt) =>
+      Row(set, cnt.toDouble / nTriangles.toDouble, set.mkString("/"))
+    }
+    val pssSchema = StructType(Seq(StructField("alteredAttributes", ArrayType(StringType)),
+      StructField("pos", DoubleType), StructField("attrSet", StringType)))
+    val pss = localFrame(pssRows, pssSchema)
+
+    // stage 6b: A3 saliency = base + per-attribute flip mass — driver
+    // arithmetic over the same bounded ranking rows. flipCnt is an exact
+    // long sum; base + flipCnt/flips are the identical IEEE double ops
+    // of the column program this replaced.
+    val flips = (totalFlipped + nTriangles).toDouble
+    val base = nTriangles / flips
+    val pairAttrNames =
+      lAttrs.map(schema.lprefix + _) ++ rAttrs.map(schema.rprefix + _)
+    val saliencyRows = pairAttrNames.map { attr =>
+      var flipCnt = 0L
+      rankingRows.foreach { case (set, cnt) =>
+        if (set.contains(attr)) flipCnt += cnt
       }
-      val fullFlip = depths.find(a => perDepth.get(a).exists { case (n, f) => n == f })
-        .getOrElse(Int.MaxValue)
-      val rankingRows = depths.flatMap(a => census.collect {
-        case (set, n, flips) if set.size == a => (set, if (a > fullFlip) n else flips)
-      })
-      if (rankingRows.isEmpty) return emptyExplanation()
-      val totalFlipped = rankingRows.map(_._2).sum
+      Row(attr, base + flipCnt.toDouble / flips)
+    }
+    val saliency = localFrame(saliencyRows, StructType(Seq(
+      StructField("attribute", StringType), StructField("saliency", DoubleType))))
 
-      // stage 6a: A2 aggregate rankings → probability of sufficiency.
-      // The result is bounded by the attribute powerset (≤ Σ C(n,a) rows,
-      // data-size independent) and already aggregated per set, so it
-      // assembles driver-side — exactly the reference's pandas Series —
-      // with zero additional jobs. pos = cnt / nTriangles with the same
-      // double ops Spark's Divide(cast(long), double) runs.
-      val pssRows: IndexedSeq[org.apache.spark.sql.Row] =
-        rankingRows.map { case (set, cnt) =>
-          org.apache.spark.sql.Row(set, cnt.toDouble / nTriangles.toDouble,
-            set.mkString("/"))
-        }.toIndexedSeq
-      val pssSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("alteredAttributes",
-          org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.StringType)),
-        org.apache.spark.sql.types.StructField("pos",
-          org.apache.spark.sql.types.DoubleType),
-        org.apache.spark.sql.types.StructField("attrSet",
-          org.apache.spark.sql.types.StringType)))
-      def localFrame(rows: Seq[org.apache.spark.sql.Row]) =
-        spark.createDataFrame(
-          new java.util.ArrayList(scala.jdk.CollectionConverters
-            .SeqHasAsJava(rows).asJava), pssSchema)
-      val pss = localFrame(pssRows)
+    // stage 6c: A4 cf_summary — max-probability sets, minimal antichain
+    // (reference cf_summary, triangles_method.py:254-263). Driver-side
+    // over the materialized pss, as the reference computes it — the set
+    // count is powerset-bounded, and a distributed self-join here would
+    // cost far more than it computes.
+    val maxPos = pssRows.map(_.getDouble(1)).max
+    val atMax = pssRows.filter(_.getDouble(1) == maxPos)
+    val atMaxSets = atMax.map(r => r.getSeq[String](0).toSet)
+    val cfSummaryRows = atMax.filter { r =>
+      val s = r.getSeq[String](0).toSet
+      !atMaxSets.exists(b => b.size < s.size && b.subsetOf(s))
+    }
+    val cfSummary = localFrame(cfSummaryRows, pssSchema)
 
-      // stage 6b: A3 saliency = base + per-attribute flip mass — driver
-      // arithmetic over the same bounded ranking rows. flipCnt is an exact
-      // long sum; base + flipCnt/flips are the identical IEEE double ops
-      // of the column program this replaced.
-      val flips = (totalFlipped + nTriangles).toDouble
-      val base = nTriangles / flips
-      val pairAttrNames =
-        lAttrs.map(schema.lprefix + _) ++ rAttrs.map(schema.rprefix + _)
-      val saliencyRows = pairAttrNames.map { attr =>
-        var flipCnt = 0L
-        rankingRows.foreach { case (set, cnt) =>
-          if (set.contains(attr)) flipCnt += cnt
-        }
-        org.apache.spark.sql.Row(attr, base + flipCnt.toDouble / flips)
-      }
-      val saliencySchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("attribute",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("saliency",
-          org.apache.spark.sql.types.DoubleType)))
-      val saliency = spark.createDataFrame(
-        new java.util.ArrayList(scala.jdk.CollectionConverters
-          .SeqHasAsJava(saliencyRows).asJava), saliencySchema)
+    // stage 6d: CF examples — the collected flipped rows of the summary
+    // sets, deduplicated keeping the first row in collected (partition)
+    // order, stably ordered by set size (reference explain.py:73-77).
+    // Synthesized depths need no rows here: each of their sets contains a
+    // fully flipped set of the same side with the same pos, so the
+    // minimal antichain never selects one.
+    val summarySets = cfSummaryRows.map(_.getSeq[String](0)).toSet
+    val seen = scala.collection.mutable.HashSet.empty[Seq[Any]]
+    val keyIdx = Seq("copiedValues", "alteredAttributes", "droppedValues")
+      .map(preds.schema.fieldIndex)
+    val cfRows = flippedRows
+      .filter(r => summarySets(r.getSeq[String](altIdx)) && seen.add(keyIdx.map(r.get)))
+      .map(r => Row.fromSeq(r.toSeq :+ r.getSeq[String](altIdx).size))
+      .sortBy(_.getInt(preds.schema.length))
+    val cfExamples = localFrame(cfRows, preds.schema.add("attr_count", IntegerType))
 
-      // stage 6c: A4 cf_summary — max-probability sets, minimal antichain
-      // (reference cf_summary, triangles_method.py:254-263). Driver-side
-      // over the materialized pss, as the reference computes it — the set
-      // count is powerset-bounded, and a distributed self-join here would
-      // cost far more than it computes.
-      val maxPos = pssRows.map(_.getDouble(1)).max
-      val atMax = pssRows.filter(_.getDouble(1) == maxPos)
-      val atMaxSets = atMax.map(r => r.getSeq[String](0).toSet)
-      val cfSummaryRows = atMax.filter { r =>
-        val s = r.getSeq[String](0).toSet
-        !atMaxSets.exists(b => b.size < s.size && b.subsetOf(s))
-      }
-      val cfSummary = localFrame(cfSummaryRows)
-
-      // stage 6d: CF examples — flipped rows of the summary sets (literal
-      // key set — no join), deduplicated keeping the first row in the
-      // prediction cache's partition order, stably ordered by set size
-      // (reference explain.py:73-77). Synthesized depths need no rows
-      // here: each of their sets contains a fully flipped set of the same
-      // side with the same pos, so the minimal antichain never selects one.
-      val summaryKeys = cfSummaryRows.map(_.getString(2))
-      val flipped = preds.filter(col("__flip") &&
-        array_join(col("alteredAttributes"), "/").isin(summaryKeys: _*)).drop("__flip")
-      val seen = scala.collection.mutable.HashSet.empty[Seq[Any]]
-      val keyIdx = Seq("copiedValues", "alteredAttributes", "droppedValues")
-        .map(flipped.schema.fieldIndex)
-      val altIdx = flipped.schema.fieldIndex("alteredAttributes")
-      val cfRows = staged("cf examples")(flipped.collect()).toIndexedSeq
-        .filter(r => seen.add(keyIdx.map(r.get)))
-        .map(r => org.apache.spark.sql.Row.fromSeq(r.toSeq :+ r.getSeq[String](altIdx).size))
-        .sortBy(_.getInt(flipped.schema.length))
-      val cfExamples = spark.createDataFrame(java.util.Arrays.asList(cfRows: _*),
-        flipped.schema.add("attr_count", org.apache.spark.sql.types.IntegerType))
-
-      Explanation(saliency, pss, cfSummary, cfExamples, flaggedTriangles)
-    } finally preds.unpersist(false)
+    Explanation(saliency, pss, cfSummary, cfExamples, flaggedTriangles)
   }
 
   private def emptyExplanation(): Explanation = {

@@ -1,8 +1,9 @@
 package graft.explain
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.matcher.ERModel
+import graft.perturb.Perturb
 import graft.schema.PairSchema
 
 /** G6 matcher-invariant probes (reference triangles_method.py:124-201
@@ -10,9 +11,10 @@ import graft.schema.PairSchema
   * permutations probing identity, symmetry and transitivity, score them
   * in ONE batch, and reduce to three booleans.
   *
-  * The reference runs this per triangle with 12 pandas frames; here a
-  * whole triangles frame expands via one join + explode so all
-  * triangles' probes score in a single distributed pass —
+  * The reference runs this per triangle with 12 pandas frames; here the
+  * resolved triangles ([[graft.perturb.Perturb.ResolvedTriangles]], the
+  * same vertex records the lattice perturbs) expand via one explode, so
+  * all triangles' probes score in a single distributed pass —
   * `checkAll` returns per-triangle invariant flags.
   */
 object Invariants {
@@ -33,39 +35,35 @@ object Invariants {
     Probe("transitivity", 9, "u", "v"), Probe("transitivity", 10, "v", "w"),
     Probe("transitivity", 11, "u", "w"))
 
-  /** Check identity/symmetry/transitivity for every triangle.
+  /** Check identity/symmetry/transitivity for every triangle, resolving
+    * its vertices against the sources.
     *
     * @param triangles (u, v, w) sided-id triples
     * @param lsource,rsource un-prefixed entity sources
     * @return (u, v, w, identity, symmetry, transitivity)
     */
   def checkAll(triangles: DataFrame, lsource: DataFrame, rsource: DataFrame,
-      model: ERModel, schema: PairSchema = PairSchema.default): DataFrame = {
+      model: ERModel, schema: PairSchema = PairSchema.default): DataFrame =
+    checkAll(Perturb.resolve(triangles, Perturb.sourceRecords(triangles, lsource, rsource)),
+      model, schema)
 
-    val attrs = lsource.columns.filter(_ != "id").toIndexedSeq
+  /** Check identity/symmetry/transitivity for every resolved triangle.
+    *
+    * @return (u, v, w, identity, symmetry, transitivity)
+    */
+  def checkAll(resolved: Perturb.ResolvedTriangles, model: ERModel,
+      schema: PairSchema): DataFrame = {
 
-    // resolve each vertex to its record (records live in the source its
-    // side prefix names; u's side determines the others')
-    def res(role: String, src: DataFrame): DataFrame =
-      broadcast(src.select(src.columns.map(c => col(c).as(s"__${role}_$c")).toIndexedSeq: _*))
+    val attrs = resolved.lAttrs
 
-    def resolveFor(tri: DataFrame, uIsLeft: Boolean): DataFrame = {
-      val (uvSrc, pivotSrc) = if (uIsLeft) (lsource, rsource) else (rsource, lsource)
-      tri
-        .join(res("u", uvSrc), schema.vertexRecordId(col("u")) === col("__u_id").cast("string"))
-        .join(res("w", uvSrc), schema.vertexRecordId(col("w")) === col("__w_id").cast("string"))
-        .join(res("v", pivotSrc), schema.vertexRecordId(col("v")) === col("__v_id").cast("string"))
-    }
-
-    def expand(tri: DataFrame, uIsLeft: Boolean): DataFrame = {
-      val resolved = resolveFor(tri, uIsLeft)
+    def expand(tri: DataFrame): DataFrame = {
       val probeRows = probes.map { p =>
         struct(
           lit(p.kind).as("kind"), lit(p.idx).as("idx"),
           struct(attrs.map(a => col(s"__${p.left}_$a").cast("string").as(a)): _*).as("ls"),
           struct(attrs.map(a => col(s"__${p.right}_$a").cast("string").as(a)): _*).as("rs"))
       }
-      resolved.select(col("u"), col("v"), col("w"),
+      tri.select(col("u"), col("v"), col("w"),
           explode(array(probeRows: _*)).as("p"))
         .select(Seq(col("u"), col("v"), col("w"),
           col("p.kind").as("kind"), col("p.idx").as("idx")) ++
@@ -73,8 +71,7 @@ object Invariants {
           attrs.map(a => col(s"p.rs.$a").as(schema.rprefix + a)): _*)
     }
 
-    val expanded = expand(triangles.filter(schema.vertexIsLeft(col("u"))), uIsLeft = true)
-      .unionByName(expand(triangles.filter(!schema.vertexIsLeft(col("u"))), uIsLeft = false))
+    val expanded = expand(resolved.left).unionByName(expand(resolved.right))
 
     val scored = model.predict(expanded)
       .withColumn("pred", when(col("match_score") > col("nomatch_score"), 1).otherwise(0))

@@ -1,7 +1,8 @@
 package graft.perturb
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.schema.PairSchema
 
 /** G3 perturbation generator (reference triangles_method.py:72-121
@@ -17,10 +18,10 @@ import graft.schema.PairSchema
   * The reference loops triangle-by-triangle on the driver
   * (triangles_method.py:278-292) building pandas frames; here the whole
   * triangles frame flows through one declarative plan: resolve the
-  * three vertex records once (triangles are bounded by num_triangles,
-  * so their records are fetched with one filtered scan per source and
-  * assembled driver-side), then explode one literal array holding the
-  * subsets of every requested depth and select each attribute through
+  * three vertex records once, driver-side from [[VertexRecords]] the
+  * caller already holds (the explainer's support rows carry every
+  * vertex), then explode one literal array holding the subsets of every
+  * requested depth and select each attribute through
   * `when(array_contains(...))` — a single Generate + Project fused by
   * whole-stage codegen, no driver fan-out, linear in |triangles| ×
   * Σ C(#attrs, depth).
@@ -36,6 +37,54 @@ object Perturb {
   def subsets(attrs: Seq[String], depth: Int): Seq[Seq[String]] =
     attrs.combinations(depth).map(_.toIndexedSeq).toIndexedSeq
 
+  /** Un-prefixed entity records keyed by sided vertex id (`"0@<id>"`
+    * left, `"1@<id>"` right, the triangle vertex format), with each
+    * side's record schema.
+    */
+  final case class VertexRecords(lSchema: StructType, rSchema: StructType,
+      byVertex: Map[String, Row])
+
+  /** The records carried by pair rows. Every row holds a full left
+    * record under `lprefix` and a full right record under `rprefix`
+    * (the [[graft.candidates.CandidateGenerator.pairs]] contract, G2
+    * variants included), so every vertex of the triangles discovered
+    * from those rows resolves without reading a source. Columns are
+    * taken by name in the order of `lSchema` / `rSchema`; the first row
+    * naming a vertex wins.
+    */
+  def vertexRecords(rows: Seq[Row], pairSchema: StructType, lSchema: StructType,
+      rSchema: StructType, schema: PairSchema = PairSchema.default): VertexRecords = {
+    def side(tag: String, prefix: String, recSchema: StructType): Seq[(String, Row)] = {
+      val idxs = recSchema.fieldNames.toIndexedSeq.map(c => pairSchema.fieldIndex(prefix + c))
+      val idIdx = recSchema.fieldIndex("id")
+      rows.map { r =>
+        val rec = Row.fromSeq(idxs.map(r.get))
+        s"$tag@${rec.get(idIdx)}" -> rec
+      }
+    }
+    val all = side("0", schema.lprefix, lSchema) ++ side("1", schema.rprefix, rSchema)
+    VertexRecords(lSchema, rSchema, all.reverseIterator.toMap)
+  }
+
+  /** The records of the triangles' vertices read from the sources —
+    * for callers that hold only the sources (the one-shot [[forDepth]]
+    * and [[graft.explain.Invariants.checkAll]] surfaces): one filtered
+    * scan per source.
+    */
+  def sourceRecords(triangles: DataFrame, lsource: DataFrame,
+      rsource: DataFrame): VertexRecords = {
+    val vertices = triangles.select(col("u"), col("v"), col("w")).collect()
+      .flatMap(_.toSeq.map(String.valueOf)).distinct.toIndexedSeq
+    def side(tag: String, src: DataFrame): Seq[(String, Row)] = {
+      val ids = vertices.collect { case v if v.startsWith(tag + "@") => v.drop(tag.length + 1) }
+      if (ids.isEmpty) Nil
+      else src.filter(col("id").cast("string").isin(ids: _*)).collect().toIndexedSeq
+        .map(r => s"$tag@${r.getAs[Any]("id")}" -> r)
+    }
+    VertexRecords(lsource.schema, rsource.schema,
+      (side("0", lsource) ++ side("1", rsource)).toMap)
+  }
+
   /** Triangles with their vertex records joined in, split by the free
     * record's side. `left`/`right` carry columns `u,v,w` plus
     * `__u_<attr>`, `__w_<attr>` (free-side schema) and `__v_<attr>`
@@ -45,85 +94,51 @@ object Perturb {
     */
   final case class ResolvedTriangles(
       left: DataFrame, right: DataFrame,
-      lAttrs: Seq[String], rAttrs: Seq[String])
+      lAttrs: Seq[String], rAttrs: Seq[String]) {
+
+    /** Only the triangles listed in `keep` (columns u, v, w), in this
+      * frame's order.
+      */
+    def only(keep: DataFrame): ResolvedTriangles = {
+      val key = concat_ws(" ", col("u"), col("v"), col("w"))
+      val keys = keep.select(key).collect().map(_.getString(0)).toIndexedSeq
+      copy(left = left.filter(key.isin(keys: _*)), right = right.filter(key.isin(keys: _*)))
+    }
+  }
 
   /** Resolve each triangle's three vertices to their records — once, for
-    * all depths. Triangles are ≤ O(num_triangles²) rows by construction
-    * (positives × negatives of a truncated support set), so the vertex
-    * id set is bounded: each source is scanned ONCE with an `id IN (…)`
-    * filter that pushes down to the columnar reader, the (≤ 3·|triangles|)
-    * matching records localize, and the triangle⋈record assembly runs
-    * driver-side. This replaces a 6-broadcast-build join chain whose
-    * every downstream action re-derived the source scans (the round-3
-    * q25 regression).
+    * all depths, driver-side: triangles are ≤ O(num_triangles²) rows by
+    * construction (positives × negatives of a truncated support set).
+    * A triangle with a vertex missing from `records` drops (inner-join
+    * semantics).
     */
-  def resolve(
-      triangles: DataFrame,
-      lsource: DataFrame,
-      rsource: DataFrame,
-      schema: PairSchema = PairSchema.default): ResolvedTriangles = {
-
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, IntegerType, StringType, StructField, StructType}
-
+  def resolve(triangles: DataFrame, records: VertexRecords): ResolvedTriangles = {
     val spark = triangles.sparkSession
-    val lAttrs = lsource.columns.filter(_ != "id").toIndexedSeq
-    val rAttrs = rsource.columns.filter(_ != "id").toIndexedSeq
-
-    def recId(v: String): String = v.split("@", 2)(1)
-    def isLeft(v: String): Boolean = v.startsWith("0@")
-
     val triRows = triangles.select(col("u").cast("string"),
       col("v").cast("string"), col("w").cast("string")).collect()
-    val (leftTri, rightTri) = triRows.partition(r => isLeft(r.getString(0)))
+    val (leftTri, rightTri) = triRows.partition(r => r.getString(0).startsWith("0@"))
 
-    // record ids needed per source: free-side u/w of same-rooted
-    // triangles plus pivots v of opposite-rooted ones
-    val lIds = (leftTri.flatMap(r => Seq(recId(r.getString(0)), recId(r.getString(2)))) ++
-      rightTri.map(r => recId(r.getString(1)))).distinct
-    val rIds = (rightTri.flatMap(r => Seq(recId(r.getString(0)), recId(r.getString(2)))) ++
-      leftTri.map(r => recId(r.getString(1)))).distinct
-
-    // one filtered scan per source; the IN filter is typed to the id
-    // column so it reaches the parquet reader (a cast on the column
-    // side would block pushdown)
-    def fetch(src: DataFrame, ids: Array[String]): Map[String, Row] = {
-      if (ids.isEmpty) return Map.empty
-      val pred = src.schema("id").dataType match {
-        case LongType => col("id").isin(ids.map(_.toLong).toIndexedSeq: _*)
-        case IntegerType => col("id").isin(ids.map(_.toInt).toIndexedSeq: _*)
-        case _ => col("id").isin(ids.toIndexedSeq: _*)
-      }
-      src.filter(pred).collect()
-        .map(r => String.valueOf(r.getAs[Any]("id")) -> r).toMap
-    }
-    val lRecs = fetch(lsource, lIds)
-    val rRecs = fetch(rsource, rIds)
-
-    def side(tri: Array[Row], freeSrc: DataFrame, freeRecs: Map[String, Row],
-        pivotSrc: DataFrame, pivotRecs: Map[String, Row]): DataFrame = {
+    def side(tri: Array[Row], freeSchema: StructType, pivotSchema: StructType): DataFrame = {
       val outSchema = StructType(
         Seq(StructField("u", StringType), StructField("v", StringType),
           StructField("w", StringType)) ++
-          freeSrc.schema.fields.map(f => f.copy(name = s"__u_${f.name}")) ++
-          freeSrc.schema.fields.map(f => f.copy(name = s"__w_${f.name}")) ++
-          pivotSrc.schema.fields.map(f => f.copy(name = s"__v_${f.name}")))
-      // inner-join semantics: a triangle with an unresolvable vertex drops
+          freeSchema.fields.map(f => f.copy(name = s"__u_${f.name}")) ++
+          freeSchema.fields.map(f => f.copy(name = s"__w_${f.name}")) ++
+          pivotSchema.fields.map(f => f.copy(name = s"__v_${f.name}")))
+      val rec = records.byVertex.get _
       val rows = tri.flatMap { t =>
-        for {
-          u <- freeRecs.get(recId(t.getString(0)))
-          w <- freeRecs.get(recId(t.getString(2)))
-          v <- pivotRecs.get(recId(t.getString(1)))
-        } yield Row.fromSeq(Seq(t.getString(0), t.getString(1), t.getString(2)) ++
-          u.toSeq ++ w.toSeq ++ v.toSeq)
+        for (u <- rec(t.getString(0)); w <- rec(t.getString(2)); v <- rec(t.getString(1)))
+          yield Row.fromSeq(Seq(t.getString(0), t.getString(1), t.getString(2)) ++
+            u.toSeq ++ w.toSeq ++ v.toSeq)
       }
       spark.createDataFrame(java.util.Arrays.asList(rows.toIndexedSeq: _*), outSchema)
     }
 
+    def attrs(s: StructType): Seq[String] = s.fieldNames.filter(_ != "id").toIndexedSeq
     ResolvedTriangles(
-      side(leftTri, lsource, lRecs, rsource, rRecs),
-      side(rightTri, rsource, rRecs, lsource, lRecs),
-      lAttrs, rAttrs)
+      side(leftTri, records.lSchema, records.rSchema),
+      side(rightTri, records.rSchema, records.lSchema),
+      attrs(records.lSchema), attrs(records.rSchema))
   }
 
   /** Generate all perturbations for a range of lattice depths from
@@ -186,7 +201,9 @@ object Perturb {
     generate(resolved.left, "l").unionByName(generate(resolved.right, "r"))
   }
 
-  /** One-shot convenience (spec surface): resolve + one depth. */
+  /** One-shot convenience (spec surface): resolve against the sources +
+    * one depth.
+    */
   def forDepth(
       triangles: DataFrame,
       lsource: DataFrame,
@@ -194,6 +211,6 @@ object Perturb {
       depth: Int,
       classToExplain: Int,
       schema: PairSchema = PairSchema.default): DataFrame =
-    forDepth(resolve(triangles, lsource, rsource, schema), depth to depth, classToExplain,
-      schema)
+    forDepth(resolve(triangles, sourceRecords(triangles, lsource, rsource)),
+      depth to depth, classToExplain, schema)
 }

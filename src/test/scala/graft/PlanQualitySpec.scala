@@ -244,9 +244,10 @@ class PlanQualitySpec extends SparkSpec {
   }
 
   test("vertex-resolution id filters push into the parquet scan") {
-    // the shape Perturb.resolve issues: a typed id-IN filter on the
-    // source — it must reach PushedFilters, which a cast on the column
-    // side would block
+    // the shape Ann.int8TopKRerank's shortlist `isin` issues (the
+    // explainer's vertex resolution reads no source any more): a typed
+    // id-IN filter on the source — it must reach PushedFilters, which a
+    // cast on the column side would block
     val part = spark.read.parquet(s"$dir/part.parquet")
     val p = plan(part.filter(org.apache.spark.sql.functions.col("p_partkey")
       .isin(Seq(1L, 2L, 3L).map(x => x: Any): _*)))

@@ -203,4 +203,30 @@ object ReferenceTwins {
             .otherwise(lit(0L))),
         lit(0L), (s, v) => s + v))
   }
+
+  // ------------------------------------------------ explainer lattice census
+  /** The explainer's lattice census as it was taken before it collected
+    * only the flipped rows: one groupBy over EVERY scored perturbation
+    * gives (attribute set → n, flips); the reference's monotonicity
+    * shortcut is replayed on it (once a depth flips completely, deeper
+    * sets count all n as flipped) and pos = cnt / nTriangles. Input:
+    * the predictions of `Perturb.forDepth` over `depths`.
+    *
+    * @return attrSet ("a/b"-joined) → pos
+    */
+  def censusPss(preds: DataFrame, classScoreCol: String, depths: Range,
+      nTriangles: Long): Map[String, Double] = {
+    val census = preds.groupBy(col("alteredAttributes"))
+      .agg(count(lit(1)).as("n"),
+        sum(when(col(classScoreCol) < 0.5, 1L).otherwise(0L)).as("cnt"))
+      .collect().map(r => (r.getSeq[String](0), r.getLong(1), r.getLong(2)))
+    val perDepth = census.groupMapReduce(_._1.size)(c => (c._2, c._3)) {
+      case ((n1, f1), (n2, f2)) => (n1 + n2, f1 + f2)
+    }
+    val fullFlip = depths.find(a => perDepth.get(a).exists { case (n, f) => n == f })
+      .getOrElse(Int.MaxValue)
+    census.map { case (set, n, flips) =>
+      set.mkString("/") -> (if (set.size > fullFlip) n else flips).toDouble / nTriangles.toDouble
+    }.toMap
+  }
 }
