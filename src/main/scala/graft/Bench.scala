@@ -14,13 +14,7 @@ object Bench {
     // spills share the device — route them off the (contended) root disk
     // so timings measure the engine, not the host's IO queue
     val spark = Session.local(cpus, scratchPrefix = Some("graft-bench-"),
-      // conf-registered (NOT addListener): streaming queries run on
-      // ConfScope forks, whose managers deliver progress events only
-      // to their own session's listeners — the class-name route makes
-      // every session (forks included) attach an instance, and the
-      // companion accumulates the totals across them
-      conf = Map("spark.sql.streaming.streamingQueryListeners" ->
-        "graft.tools.BenchStreamMetrics"))
+      conf = Trace.progressConf)
 
     // warm-up: schema read + one small shuffle + codegen paths
     try {
@@ -28,52 +22,17 @@ object Bench {
         .groupBy("n_regionkey").count().count()
     } catch { case _: Throwable => () }
 
-    // Per-query task-metric split (executor CPU vs run vs GC time):
-    // wall-clock alone cannot distinguish "the code got slower" from
-    // "the host was busy" — the round-5/6 q47/q57/q58 ambiguity. With
-    // cpu ≈ prior rounds but wall inflated, the delta is scheduler/IO
-    // wait (host contention); cpu inflated too means a real
-    // regression. Flushed via the listener bus before each reading.
-    val cpuNs = new java.util.concurrent.atomic.AtomicLong
-    val runMs = new java.util.concurrent.atomic.AtomicLong
-    val gcMs = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = e.taskMetrics
-          if (m != null) {
-            cpuNs.addAndGet(m.executorCpuTime)
-            runMs.addAndGet(m.executorRunTime)
-            gcMs.addAndGet(m.jvmGCTime)
-            ()
-          }
-        }
-      })
-    // Streaming micro-batch split (per-batch machinery vs per-row data
-    // work): the streaming tail's cost has been ASSERTED to be fixed
-    // per-batch overhead (checkpoint commits, offset WAL, planning) in
-    // two round reviews without a recorded number. Each progress event
-    // carries the split directly: addBatch is the data work, the rest
-    // of triggerExecution is the fixed machinery — so the JSON records,
-    // per streaming query, batches / input rows / addBatch seconds /
-    // fixed seconds. A fixed term that grows with sf would falsify the
-    // assertion from the BENCH file alone. Collected by the
-    // conf-registered graft.tools.BenchStreamMetrics (see builder
-    // above) so ConfScope-forked streaming queries are counted too.
-    import graft.tools.BenchStreamMetrics
-    def metricSnapshot(): (Double, Double, Double, Long, Long, Double, Double) = {
-      if (!org.apache.spark.GraftCoreBridge.flushListenerBus(spark.sparkContext))
-        // a short flush bleeds this query's task metrics into the next
-        // delta — say so rather than silently misattributing
-        System.err.println("BENCH WARNING: listener bus flush timed out; " +
-          "the adjacent cpu/gc deltas are unreliable")
-      (cpuNs.get / 1e9, runMs.get / 1e3, gcMs.get / 1e3,
-        BenchStreamMetrics.batches.get, BenchStreamMetrics.rows.get,
-        BenchStreamMetrics.addBatchMs.get / 1e3,
-        BenchStreamMetrics.triggerMs.get / 1e3)
-    }
-
+    // Each run is one Trace.window. Its task-metric split (executor CPU
+    // vs run vs GC time) tells "the code got slower" from "the host was
+    // busy": wall-clock alone cannot (the round-5/6 q47/q57/q58
+    // ambiguity). With cpu ≈ prior rounds but wall inflated, the delta
+    // is scheduler/IO wait; cpu inflated too means a real regression.
+    // Its streaming split records, per streaming query, batches / input
+    // rows / addBatch seconds / fixed seconds, so a fixed per-batch term
+    // that grows with sf shows in the BENCH file alone. Its job census
+    // (jobs, driver gap, jobs per stage) names the layer a multi-job
+    // query spends its time in.
+    //
     // Each query runs THREE times and records the min: the bench host
     // shows intermittent external contention (round-3's recording was
     // inflated up to 17× by it), and a query's first executions also pay
@@ -82,10 +41,7 @@ object Bench {
     // 9.2/7.8/1.7/1.8 s in one JVM). Min-of-3 measures the code, not
     // the JIT or the neighbor; all raw runs are emitted for
     // transparency.
-    final case class Run(wall: Double, cpu: Double, taskRun: Double,
-      gc: Double, failure: Option[String],
-      batches: Long = 0L, rows: Long = 0L,
-      addBatchSec: Double = 0.0, fixedSec: Double = 0.0)
+    final case class Run(wall: Double, failure: Option[String], trace: Trace.Window)
     // dev-only filter (SPARK_GRAFT_BENCH_ONLY=substr,substr): iterate on
     // a few queries without paying the full catalog; the driver sets no
     // filter and always runs everything
@@ -94,50 +50,63 @@ object Bench {
       .filter { case (n, _) => only.forall(f => f.exists(n.contains)) }
     val results = selected.map { case (name, fn) =>
       def once(): Run = {
-        // isolate cache state per run: earlier queries' persisted frames
-        // otherwise squeeze the heap and turn later timings into
-        // eviction noise; the explanation memo resets so a repeated q25
-        // re-runs the full explainer
-        spark.catalog.clearCache()
+        // the explanation memo resets so a repeated q25 re-runs the full
+        // explainer
         if (name == "q25_certa_saliency")
           graft.queries.ErQueries.resetExplanationMemo()
-        val (cpu0, run0, gc0, b0, rw0, ab0, tr0) = metricSnapshot()
-        val t0 = System.nanoTime()
-        // a crashing query must NOT look like a fast passing one: record
-        // the failure and surface it in the JSON + on stderr
-        val failure = try { fn(spark, sfDir).count(); None } catch {
-          case t: Throwable =>
-            System.err.println(s"BENCH FAILURE $name: ${t.getClass.getName}: ${t.getMessage}")
-            Some(name)
+        val ((wall, failure), trace) = Trace.window(spark) {
+          val t0 = System.nanoTime()
+          // a crashing query must NOT look like a fast passing one: record
+          // the failure and surface it in the JSON + on stderr
+          val failure = try { fn(spark, sfDir).count(); None } catch {
+            case t: Throwable =>
+              System.err.println(s"BENCH FAILURE $name: ${t.getClass.getName}: ${t.getMessage}")
+              Some(name)
+          }
+          ((System.nanoTime() - t0) / 1e9, failure)
         }
-        val wall = (System.nanoTime() - t0) / 1e9
-        val (cpu1, run1, gc1, b1, rw1, ab1, tr1) = metricSnapshot()
-        Run(wall, cpu1 - cpu0, run1 - run0, gc1 - gc0, failure,
-          b1 - b0, rw1 - rw0, ab1 - ab0, (tr1 - tr0) - (ab1 - ab0))
+        if (!trace.flushed)
+          // a short flush loses task metrics — say so rather than
+          // silently under-reporting
+          System.err.println(s"BENCH WARNING: listener bus flush timed out; " +
+            s"the cpu/gc readings of $name are unreliable")
+        Session.isolate(spark, "bench", name)
+        Run(wall, failure, trace)
       }
       val runs = Seq(once(), once(), once())
       val best = runs.minBy(_.wall)
-      (name, best, runs, runs.flatMap(_.failure).headOption)
+      // only the best run's trace is kept: a full catalog is ~600 runs
+      (name, best, runs.map(_.wall), runs.flatMap(_.failure).headOption)
     }
-    def obj(f: ((String, Run, Seq[Run], Option[String])) => Double): String =
+    def obj(f: ((String, Run, Seq[Double], Option[String])) => Double): String =
       results.map(r => "\"" + r._1 + "\":" + f(r)).mkString("{", ",", "}")
     def r3(x: Double): Double = math.rint(x * 1000) / 1000
-    def obj3(f: ((String, Run, Seq[Run], Option[String])) => Double): String =
+    def obj3(f: ((String, Run, Seq[Double], Option[String])) => Double): String =
       results.map(r => "\"" + r._1 + "\":" + r3(f(r))).mkString("{", ",", "}")
     val qs = obj(_._2.wall)
-    // task-metric split of the SAME run the headline number comes from
-    val cpu = obj(_._2.cpu)
-    val taskRun = obj(_._2.taskRun)
-    val gc = obj(_._2.gc)
-    val runs = (0 until 3).map(i => obj(_._3(i).wall)).mkString("[", ",", "]")
+    // task-metric split and job census of the SAME run the headline
+    // number comes from
+    val cpu = obj(_._2.trace.cpuSec)
+    val taskRun = obj(_._2.trace.runSec)
+    val gc = obj(_._2.trace.gcSec)
+    val jobs = results.map(r => "\"" + r._1 + "\":" + r._2.trace.jobs.size)
+      .mkString("{", ",", "}")
+    val driverGap = obj(_._2.trace.driverGapS)
+    val runs = (0 until 3).map(i => obj(_._3(i))).mkString("[", ",", "]")
     val failures = results.flatMap(_._4).map("\"" + _ + "\"").mkString("[", ",", "]")
     // streaming split, only for queries that actually ran micro-batches
     // (same best run the headline number comes from)
-    val streaming = results.filter(_._2.batches > 0).map { r =>
-      "\"" + r._1 + "\":{\"batches\":" + r._2.batches +
-        ",\"rows\":" + r._2.rows +
-        ",\"addbatch_sec\":" + r._2.addBatchSec +
-        ",\"fixed_sec\":" + r._2.fixedSec + "}"
+    val streaming = results.filter(_._2.trace.streaming.batches > 0).map { r =>
+      val s = r._2.trace.streaming
+      "\"" + r._1 + "\":{\"batches\":" + s.batches +
+        ",\"rows\":" + s.rows +
+        ",\"addbatch_sec\":" + s.addBatchSec +
+        ",\"fixed_sec\":" + s.fixedSec + "}"
+    }.mkString("{", ",", "}")
+    // jobs per Trace.stage name, only for queries that tag their jobs
+    val stages = results.filter(_._2.trace.stages.nonEmpty).map { r =>
+      "\"" + r._1 + "\":" + r._2.trace.stages.toSeq.sorted
+        .map { case (d, n) => Verify.jsonString(d) + ":" + n }.mkString("{", ",", "}")
     }.mkString("{", ",", "}")
     val total = results.map(_._2.wall).sum
     // Output layout (the round-9 attribution lesson: BENCH_r04-r09
@@ -150,7 +119,7 @@ object Bench {
     //    head-truncated capture still answers "what regressed and was
     //    it cpu or wait".
     //  line 2 (detail): full-precision maps + per-run walls + streaming
-    //    split, also written to target/bench_last.json.
+    //    split + job census, also written to target/bench_last.json.
     //  lines 3..k (tail, r12 — VERDICT item 2): the driver's capture
     //    keeps only the LAST ~2000 chars and parses the last complete
     //    JSON line(s), so the r10/r11 one-line compact summary (totals
@@ -164,10 +133,10 @@ object Bench {
     //    maps stay on the head/detail lines above, unchanged.
     val slowest = results.sortBy(-_._2.wall).take(12).map { r =>
       "\"" + r._1 + "\":{\"wall\":" + r3(r._2.wall) +
-        ",\"cpu\":" + r3(r._2.cpu) + ",\"gc\":" + r3(r._2.gc) + "}"
+        ",\"cpu\":" + r3(r._2.trace.cpuSec) + ",\"gc\":" + r3(r._2.trace.gcSec) + "}"
     }.mkString("{", ",", "}")
-    val head = s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"failures":$failures,"slowest":$slowest,"queries":${obj3(_._2.wall)},"cpu_sec":${obj3(_._2.cpu)},"sf":"$sfDir"}"""
-    val detail = s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"failures":$failures,"queries":$qs,"cpu_sec":$cpu,"task_run_sec":$taskRun,"gc_sec":$gc,"streaming":$streaming,"runs":$runs,"sf":"$sfDir"}"""
+    val head = s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"failures":$failures,"slowest":$slowest,"queries":${obj3(_._2.wall)},"cpu_sec":${obj3(_._2.trace.cpuSec)},"sf":"$sfDir"}"""
+    val detail = s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"failures":$failures,"queries":$qs,"cpu_sec":$cpu,"task_run_sec":$taskRun,"gc_sec":$gc,"streaming":$streaming,"jobs":$jobs,"driver_gap_sec":$driverGap,"stages":$stages,"runs":$runs,"sf":"$sfDir"}"""
     println(head)
     println(detail)
     try {

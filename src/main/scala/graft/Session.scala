@@ -53,4 +53,20 @@ object Session {
     spark.sparkContext.setLogLevel(logLevel)
     spark
   }
+
+  /** The isolation step between catalog queries. Query-internal caches
+    * (census stages, LSH keys, IVF assignment) must not accumulate across
+    * the catalog, or they squeeze the heap and turn later timings into
+    * eviction noise. A block that survives `clearCache()` has no owner
+    * left: report it on stderr as `[tool] LEAK query: n pinned RDDs`,
+    * then free it so the next query runs on its own.
+    */
+  def isolate(spark: SparkSession, tool: String, query: String): Unit = {
+    spark.catalog.clearCache()
+    val leaked = spark.sparkContext.getPersistentRDDs.values
+    if (leaked.nonEmpty) {
+      System.err.println(s"[$tool] LEAK $query: ${leaked.size} pinned RDDs")
+      leaked.foreach(_.unpersist(blocking = false))
+    }
+  }
 }

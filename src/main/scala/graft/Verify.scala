@@ -28,16 +28,7 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // query-internal caches (census stages, LSH keys, IVF assignment)
-      // must not accumulate across the catalog; a block that survives
-      // clearCache has no owner left — report it against this query,
-      // then free it so the next query is measured on its own
-      spark.catalog.clearCache()
-      val leaked = spark.sparkContext.getPersistentRDDs.values
-      if (leaked.nonEmpty) {
-        System.err.println(s"[verify] LEAK $name: ${leaked.size} pinned RDDs")
-        leaked.foreach(_.unpersist(blocking = false))
-      }
+      Session.isolate(spark, "verify", name)
     }
     writeOracleSql(s"$outDir/oracle_sql.json")
     spark.stop()
@@ -48,7 +39,7 @@ object Verify {
     * `json.load` (tools/compare_oracle.py) reject the whole file and no
     * query would be checked.
     */
-  private def jsonString(s: String): String = "\"" + s.flatMap {
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"
     case '\n' => "\\n"

@@ -20,15 +20,16 @@ import graft.sources.ErSources
   */
 object EvalDriver {
 
-  /** Default eval-loop parallelism, set from the round-8
-    * EvalConcurrency knee sweep (100 warmed explanations on local[32]
-    * under the FAIR pool, outputs asserted identical at every level):
-    * par8 4.05×, par16 4.70×, **par32 3.92×** — the curve peaks at 16
-    * and REGRESSES beyond it as the concurrent job streams start
-    * contending for the 32 scheduler slots, so 16 is the knee, not
-    * just a plateau. Callers explaining on a real cluster with more
-    * executor slots should raise it; `parMap` already bounds the pool
-    * at the batch size, so small batches never over-spawn threads.
+  /** Default eval-loop parallelism. The numbers of the round-8 knee
+    * sweep stand (SURVEY.md; 100 warmed explanations on local[32] under
+    * a FAIR pool, outputs asserted identical at every level): par8
+    * 4.05×, par16 4.70×, **par32 3.92×** — the curve peaks at 16 and
+    * REGRESSES beyond it as the concurrent job streams start contending
+    * for the 32 scheduler slots, so 16 is the knee, not just a plateau.
+    * Nothing in the repo re-runs the sweep. Callers explaining on a
+    * real cluster with more executor slots should raise it; `parMap`
+    * already bounds the pool at the batch size, so small batches never
+    * over-spawn threads.
     */
   val defaultParallelism: Int = 16
 
@@ -227,9 +228,9 @@ object EvalDriver {
 
       val lRec = lsource.filter(col("id") === lid)
       val rRec = rsource.filter(col("id") === rid)
-      val origScores = model.predict(schema.assemblePair(lRec, rRec))
-        .select(col("nomatch_score"), col("match_score")).head()
-      val pc = if (origScores.getDouble(1) > origScores.getDouble(0)) 1 else 0
+      val original = model.predict(schema.assemblePair(lRec, rRec)).head()
+      val pc = if (original.getAs[Double]("match_score") >
+        original.getAs[Double]("nomatch_score")) 1 else 0
       val classScoreCol = if (pc == 1) "match_score" else "nomatch_score"
 
       val result =
@@ -266,7 +267,7 @@ object EvalDriver {
       if (result.cfExamples.columns.isEmpty) {
         CfRow(lid, rid, label, latency, 0L, 0.0, 0.0, 0.0, 0.0)
       } else {
-        val cf = result.cfExamples.limit(cfSample).cache()
+        val cf = result.cfExamples.limit(cfSample)
         val nCf = cf.count()
         if (!Files.exists(Paths.get(cfPath)))
           ErSources.writeCsv(cf.withColumn("alteredAttributes",
@@ -274,17 +275,14 @@ object EvalDriver {
             .withColumn("droppedValues", array_join(col("droppedValues"), "/"))
             .withColumn("copiedValues", array_join(col("copiedValues"), "/")),
             cfPath)
-        val original = model.predict(schema.assemblePair(lRec, rRec)).head()
         val attrs = schema.pairAttributes(
           schema.assemblePair(lRec, rRec))
-        val m = if (nCf == 0) CfRow(lid, rid, label, latency, 0L, 0.0, 0.0, 0.0, 0.0)
+        if (nCf == 0) CfRow(lid, rid, label, latency, 0L, 0.0, 0.0, 0.0, 0.0)
         else CfRow(lid, rid, label, latency, nCf,
           CfMetrics.validity(cf, classScoreCol),
           CfMetrics.proximity(cf, original, attrs),
           CfMetrics.sparsity(cf, original, attrs),
           CfMetrics.diversity(cf, attrs))
-        cf.unpersist()
-        m
       }
     } finally selection.close()
     rows.toDF()

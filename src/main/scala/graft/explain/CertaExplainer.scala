@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StringType,
   StructField, StructType}
+import graft.Trace
 import graft.candidates.Candidates
 import graft.matcher.ERModel
 import graft.perturb.Perturb
@@ -91,7 +92,7 @@ class CertaExplainer(
   // the G2 fallback's fresh-id offsets: both source id maxima in one
   // job, once per instance (the sources are fixed constructor arguments)
   @transient private lazy val maxSourceIds: (Long, Long) =
-    staged("source max ids") {
+    Trace.stage(spark, "certa: source max ids") {
       val r = lsource.agg(max(col("id"))).crossJoin(rsource.agg(max(col("id")))).head()
       (r.getLong(0), r.getLong(1))
     }
@@ -99,15 +100,6 @@ class CertaExplainer(
   override def close(): Unit = synchronized {
     selections.valuesIterator.foreach(_.close())
     selections.clear()
-  }
-
-  /** Tag the Spark jobs of one explainer stage (shows up in listeners /
-    * the UI; stage-level attribution is how the 100 TB tuning loop
-    * finds its bottleneck).
-    */
-  private def staged[T](name: String)(f: => T): T = {
-    spark.sparkContext.setJobDescription(s"certa: $name")
-    try f finally spark.sparkContext.setJobDescription(null)
   }
 
   /** Materialize a bounded frame as a LocalRelation: downstream
@@ -171,20 +163,21 @@ class CertaExplainer(
     // and both probes re-bind as LocalRelations, so nothing below
     // re-plans the two source scans and reading a probe (the support
     // search attaches it as literals) fires no job.
-    val (lRow, rRow) = staged("original prediction")(
+    val (lRow, rRow) = Trace.stage(spark, "certa: original prediction")(
       (lRecord.collect().head, rRecord.collect().head))
     val lProbe = localFrame(Seq(lRow), lRecord.schema)
     val rProbe = localFrame(Seq(rRow), rRecord.schema)
     val pairUnderExplanation = localFrame(Seq(Row.fromSeq(lRow.toSeq ++ rRow.toSeq)),
       StructType(lRecord.schema.map(f => f.copy(name = schema.lprefix + f.name)) ++
         rRecord.schema.map(f => f.copy(name = schema.rprefix + f.name))))
-    val orig = staged("original prediction")(model.predict(pairUnderExplanation).head())
+    val orig = Trace.stage(spark, "certa: original prediction")(
+      model.predict(pairUnderExplanation).head())
     val pc = if (orig.getAs[Double]("match_score") >
       orig.getAs[Double]("nomatch_score")) 1 else 0
 
     // stage 3: support search (one bounded action per distributed side,
     // LocalRelation result)
-    val (_, neighborhood0) = staged("support search")(Candidates.support(
+    val (_, neighborhood0) = Trace.stage(spark, "certa: support search")(Candidates.support(
       lProbe, rProbe, lsource, rsource, pc, model, numTriangles,
       maxPredict, useLeft, useRight, seed = seed, schema = schema,
       gen = gen))
@@ -207,17 +200,17 @@ class CertaExplainer(
     if (nbRows.size < numTriangles) {
       val (maxLid, maxRid) = maxSourceIds
       // variants of the left probe serve as right-side candidates & v.v.
-      val genFromL = staged("augment")(graft.perturb.Augment
+      val genFromL = Trace.stage(spark, "certa: augment")(graft.perturb.Augment
         .generateSubsequences(lProbe, startId = maxRid + 1))
-      val genFromR = staged("augment")(graft.perturb.Augment
+      val genFromR = Trace.stage(spark, "certa: augment")(graft.perturb.Augment
         .generateSubsequences(rProbe, startId = maxLid + 1))
       if (boundedCount(genFromL) > 0 && boundedCount(genFromR) > 0) {
         // local sources and probes: under a column-program matcher the
         // whole search folds and fires no job
-        val (_, support2) = staged("augmented support search")(Candidates.support(
-          lProbe, rProbe, genFromR, genFromL, pc, model, numTriangles,
-          maxPredict, useLeft, useRight, seed = seed, schema = schema,
-          gen = gen))
+        val (_, support2) = Trace.stage(spark, "certa: augmented support search")(
+          Candidates.support(lProbe, rProbe, genFromR, genFromL, pc, model,
+            numTriangles, maxPredict, useLeft, useRight, seed = seed,
+            schema = schema, gen = gen))
         if (support2.columns.nonEmpty)
           nbRows = nbRows ++ support2.collect() // LocalRelation — job-free
       }
@@ -269,13 +262,14 @@ class CertaExplainer(
 
     // stage 4: triangle discovery — a driver-side join of the local
     // support set (≤ (numTriangles/2)² rows, job-free)
-    val discovered = staged("triangle discovery")(Triangles.discover(supportPairs, schema))
+    val discovered = Trace.stage(spark, "certa: triangle discovery")(
+      Triangles.discover(supportPairs, schema))
     if (boundedCount(discovered) == 0) return emptyExplanation()
 
     // stage 5a: vertex resolution. Every vertex is a record of the pair
     // under explanation or of a support row, G2 copies included, so the
     // triangles resolve against the rows the driver holds: no job.
-    val resolvedAll = staged("vertex resolution")(Perturb.resolve(discovered,
+    val resolvedAll = Trace.stage(spark, "certa: vertex resolution")(Perturb.resolve(discovered,
       Perturb.vertexRecords(firstRowRows.toIndexedSeq ++ supportRows, supportPairsSchema,
         lsource.schema, rsource.schema, schema)))
 
@@ -287,7 +281,7 @@ class CertaExplainer(
     val (resolved, flaggedTriangles) =
       if (!check) (resolvedAll, discovered)
       else {
-        val flags = staged("invariant checks")(localize(
+        val flags = Trace.stage(spark, "certa: invariant checks")(localize(
           Invariants.checkAll(resolvedAll, model, schema)))
         if (!discardBad) (resolvedAll, flags)
         else {
@@ -308,7 +302,7 @@ class CertaExplainer(
     if (depths.isEmpty) return emptyExplanation()
     val classScoreCol = if (pc == 1) "match_score" else "nomatch_score"
     val preds = model.predict(Perturb.forDepth(resolved, depths, pc, schema))
-    val flippedRows = staged(s"perturb depth 1-${depths.last}")(
+    val flippedRows = Trace.stage(spark, s"certa: perturb depth 1-${depths.last}")(
       preds.filter(col(classScoreCol) < 0.5).collect()).toIndexedSeq
     val altIdx = preds.schema.fieldIndex("alteredAttributes")
 

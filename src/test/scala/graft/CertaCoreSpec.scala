@@ -255,29 +255,15 @@ class CertaCoreSpec extends SparkSpec {
   }
 
   test("an explanation runs its post-search stages in a bounded number of jobs") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    // jobs of this thread only: other suites share the session
-    val tag = s"certa-job-budget-${java.util.UUID.randomUUID}"
-    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("graft.spec.tag") == tag)
-          descs.add(String.valueOf(e.properties.getProperty("spark.job.description")))
-    }
     val (l, r) = parquetSources
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    sc.setLocalProperty("graft.spec.tag", tag)
-    try assertNoNewPins {
+    // jobs of this thread only: other suites share the session
+    val (_, window) = Trace.window(spark)(assertNoNewPins {
       // a non-match whose support is short: walks the G2 fallback as well
       new CertaExplainer(l, r).explain(rec(l, 0), rec(r, 2),
         TokenCosineModel(), numTriangles = 6)
-      assert(org.apache.spark.GraftCoreBridge.flushListenerBus(sc))
-    } finally {
-      sc.setLocalProperty("graft.spec.tag", null)
-      sc.removeSparkListener(listener)
-    }
-    val jobs = scala.jdk.CollectionConverters.CollectionHasAsScala(descs).asScala.toSeq
+    })
+    assert(window.flushed)
+    val jobs = window.jobs.map(_.description.getOrElse(""))
     def count(desc: String): Int = jobs.count(_ == desc)
     // one collect per probe record; the pair prediction folds
     assert(count("certa: original prediction") <= 2, jobs)

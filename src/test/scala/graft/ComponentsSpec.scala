@@ -102,37 +102,21 @@ class ComponentsSpec extends SparkSpec {
   }
 
   test("a LocalRelation edge set closes on the driver: distributed mapping, no job") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val es = Seq[(Long, Long)]((5L, 3L), (3L, 9L), (9L, 9L), (7L, 8L),
       (8L, 7L), (1L, 2L))
     val dist = resultMap(Components.connectedComponents(edgesDf(es),
       driverEdgeThreshold = 0L))
     // jobs of this thread only: other suites share the session
-    val tag = s"cc-local-${java.util.UUID.randomUUID}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("graft.spec.tag") == tag) jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    sc.setLocalProperty("graft.spec.tag", tag)
-    val local = try {
+    val (local, window) = Trace.window(spark) {
       // a Project + Filter over a LocalRelation folds to one
       val edges = edgesDf(es).filter(org.apache.spark.sql.functions.col("id_a") > 0L)
-      val m = Components.connectedComponents(edges)
-      val got = resultMap(m)
-      assert(org.apache.spark.GraftCoreBridge.flushListenerBus(sc))
-      got
-    } finally {
-      sc.setLocalProperty("graft.spec.tag", null)
-      sc.removeSparkListener(listener)
+      resultMap(Components.connectedComponents(edges))
     }
+    assert(window.flushed)
     assert(local === dist)
     assert(dist === Map(3L -> 3L, 5L -> 3L, 9L -> 3L, 7L -> 7L, 8L -> 7L,
       1L -> 1L, 2L -> 1L))
-    assert(jobs.get === 0)
+    assert(window.jobs.size === 0)
   }
 
   leakGatedTest("withoutLosers pins a loser plan that does not fold, until close()") {

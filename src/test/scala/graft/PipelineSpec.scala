@@ -167,7 +167,6 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("incremental near-dup probes without a broadcast above the session's broadcast threshold") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val base = "the quick brown fox jumps over the lazy dog again and again"
     val drop = (i: Int) => base.split(" ").zipWithIndex.filter(_._2 != i).map(_._1).mkString(" ")
     val history = Seq((0L, base), (1L, drop(3)),
@@ -179,28 +178,16 @@ class PipelineSpec extends SparkSpec {
     // the loser ids and the number of broadcast-exchange jobs of one run
     // (this thread's jobs only: other suites share the context)
     def run(s: org.apache.spark.sql.SparkSession): (Set[Long], Int) = {
-      val tag = s"incremental-broadcast-${java.util.UUID.randomUUID}"
-      val broadcasts = new java.util.concurrent.atomic.AtomicInteger()
-      val listener = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit =
-          if (e.properties != null && e.properties.getProperty("graft.spec.tag") == tag &&
-              Option(e.properties.getProperty("spark.job.tags"))
-                .exists(_.contains("broadcast exchange"))) broadcasts.incrementAndGet()
-      }
-      val sc = s.sparkContext
-      sc.addSparkListener(listener)
-      sc.setLocalProperty("graft.spec.tag", tag)
-      try {
+      val (losers, window) = Trace.window(s) {
         val r = Dedup.incrementalNearDuplicates(
           s.createDataFrame(history).toDF("doc_id", "text"),
           s.createDataFrame(batch).toDF("doc_id", "text"), "text", "doc_id", 0.5)
-        try (r.losers.collect().map(_.getLong(0)).toSet,
-          { assert(org.apache.spark.GraftCoreBridge.flushListenerBus(sc)); broadcasts.get })
+        try r.losers.collect().map(_.getLong(0)).toSet
         finally r.close()
-      } finally {
-        sc.setLocalProperty("graft.spec.tag", null)
-        sc.removeSparkListener(listener)
       }
+      assert(window.flushed)
+      (losers, window.jobs.count(_.properties.get("spark.job.tags")
+        .exists(_.contains("broadcast exchange"))))
     }
     val (broadcastLosers, broadcastJobs) = run(spark)
     assert(broadcastJobs > 0) // the batch keys fit: the probe broadcasts them

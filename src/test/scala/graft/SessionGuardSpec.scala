@@ -9,6 +9,7 @@ import scala.jdk.CollectionConverters._
   * as a different type), and every RDD-level pin is a
   * [[graft.operators.Pinned]] handle (a hand-rolled one has no owner
   * that releases it, and `catalog.clearCache()` does not reach it).
+  * Every Spark or streaming listener is registered by [[graft.Trace]].
   * README's tools table names every main, and only those.
   */
 class SessionGuardSpec extends AnyFunSuite {
@@ -56,6 +57,15 @@ class SessionGuardSpec extends AnyFunSuite {
       .findAllMatchIn(section).map(_.group(1)).toSet
     assert(rows.nonEmpty, "README has no \"Entry points and tools\" table")
     assert(rows === mains, s"README rows: $rows\nmains: $mains")
+  }
+
+  test("no Spark or streaming listener outside graft.Trace") {
+    // split: this file is scanned too
+    val found = sites(Seq("src/main/scala", "src/test/scala"),
+      Seq("addSpark" + "Listener(", "new Spark" + "Listener",
+        "extends StreamingQuery" + "Listener"))
+      .filterNot(_.startsWith("src/main/scala/graft/Trace.scala:"))
+    assert(found.isEmpty, found.mkString("\n"))
   }
 
   test("no RDD-level pin outside graft.operators.Pinned") {

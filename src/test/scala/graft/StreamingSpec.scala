@@ -199,7 +199,6 @@ class StreamingSpec extends SparkSpec {
   }
 
   leakGatedTest("near-dup dedup stream: history drops, within-batch chain to min id, nulls pass, few jobs a batch") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val textA = "the quick brown fox jumps over the lazy dog again"
     val far = "completely different words nobody repeats anywhere here"
     val base = java.nio.file.Files.createTempDirectory("ndstream")
@@ -223,34 +222,27 @@ class StreamingSpec extends SparkSpec {
       new java.io.File(dir).listFiles().find(_.getName.endsWith(".parquet")).get
     }
     val survivors = scala.collection.mutable.Map.empty[Long, Set[Long]]
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val q = StreamingOps.nearDupDedupStream(
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-          .parquet(in.toString),
-        "text", "doc_id", base.resolve("history").toString) { (sv, id) =>
-      survivors(id) = sv.select("doc_id").collect().map(_.getLong(0)).toSet
-    }
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("sql.streaming.queryId") == q.id.toString)
-          jobs.add(e.properties.getProperty("streaming.sql.batchId"))
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      staged.zipWithIndex.foreach { case (f, b) =>
+    // the query starts inside the window, so its stream thread's jobs
+    // are the window's
+    val (queryId, window) = Trace.window(spark) {
+      val q = StreamingOps.nearDupDedupStream(
+          spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+            .parquet(in.toString),
+          "text", "doc_id", base.resolve("history").toString) { (sv, id) =>
+        survivors(id) = sv.select("doc_id").collect().map(_.getLong(0)).toSet
+      }
+      try staged.zipWithIndex.foreach { case (f, b) =>
         java.nio.file.Files.move(f.toPath, in.resolve(s"batch$b.parquet"))
         q.processAllAvailable()
-      }
-      assert(org.apache.spark.GraftCoreBridge.flushListenerBus(sc))
-    } finally {
-      q.stop()
-      sc.removeSparkListener(listener)
+      } finally q.stop()
+      q.id.toString
     }
+    assert(window.flushed)
     assert(survivors.toMap === Map(
       0L -> Set(10L, 11L, 14L), 1L -> Set(21L, 22L), 2L -> Set(31L)))
-    val perBatch = jobs.asScala.toSeq.groupBy(identity).map { case (b, js) =>
+    val jobs = window.jobs.filter(_.properties.get("sql.streaming.queryId")
+      .contains(queryId)).flatMap(_.properties.get("streaming.sql.batchId"))
+    val perBatch = jobs.groupBy(identity).map { case (b, js) =>
       b -> js.size }
     assert(perBatch.keySet === Set("0", "1", "2"), jobs)
     assert(perBatch.values.forall(_ <= 5), perBatch)
