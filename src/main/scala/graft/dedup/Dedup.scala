@@ -98,16 +98,55 @@ object Dedup {
 
   /** LSH banding: band key b = concatenated minhashes of that band.
     * Returns (idCol, band, key) rows — one per band — ready for the
-    * bucket self-join. rowsPerBand=2, numBands=2 by default (4 hashes);
+    * bucket pass. rowsPerBand=2, numBands=2 by default (4 hashes);
     * [[autoBands]] picks a recall-governed scheme for production calls.
     */
   def lshBandKeys(df: DataFrame, textCol: String, idCol: String,
-      numBands: Int = 2, rowsPerBand: Int = 2, k: Int = 3): DataFrame = {
+      numBands: Int = 2, rowsPerBand: Int = 2, k: Int = 3): DataFrame =
+    bandKeyed(df, textCol, col(idCol), numBands, rowsPerBand, k)
+
+  /** `carry` beside each of the `numBands` (band, key) pairs of the
+    * row's minhash signature: one output row per band.
+    */
+  private def bandKeyed(df: DataFrame, textCol: String, carry: Column,
+      numBands: Int, rowsPerBand: Int, k: Int): DataFrame = {
     val sig = withMinhashSignature(df, textCol, numBands * rowsPerBand, k)
     val keyCols = (0 until numBands).map { b =>
       concat_ws("#", (0 until rowsPerBand).map(r => col(s"mh${b * rowsPerBand + r}")): _*)
     }
-    sig.select(col(idCol), posexplode(array(keyCols: _*)).as(Seq("band", "key")))
+    sig.select(carry, posexplode(array(keyCols: _*)).as(Seq("band", "key")))
+  }
+
+  /** A bucket's sorted member array cut to its `maxBucketSize` first
+    * members (the identity when uncapped).
+    */
+  private def capped(members: Column, maxBucketSize: Int): Column =
+    if (maxBucketSize == Int.MaxValue) members else slice(members, 1, maxBucketSize)
+
+  /** Every in-bucket pair of the array column `arr`, as columns `__a`
+    * and `__b` with `__a` at the lower index: a posexplode anchor plus a
+    * per-anchor tail slice, streaming O(bucket) per output row, so the
+    * O(n²) blowup of naive all-pairs never materializes outside a
+    * bucket.
+    */
+  private def bucketPairs(buckets: DataFrame, arr: String): DataFrame =
+    buckets
+      .select(col(arr), posexplode(col(arr)).as(Seq("__i", "__a")))
+      .select(col("__a"),
+        explode(slice(col(arr), col("__i") + 2, size(col(arr)))).as("__b"))
+
+  /** The set a pair is scored on: the distinct word k-shingles. */
+  private def shingleSet(text: Column, k: Int): Column =
+    array_distinct(shingles(text, k))
+
+  /** Exact jaccard of two [[shingleSet]]s. |A∪B| = |A|+|B|−|A∩B|: both
+    * sides are distinct, so the subtraction form is the identical
+    * integer count without building a per-pair union hash set over the
+    * concatenated shingle arrays.
+    */
+  private def jaccard(a: Column, b: Column): Column = {
+    val interSz = size(array_intersect(a, b))
+    interSz.cast("double") / (size(a) + size(b) - interSz).cast("double")
   }
 
   /** Candidate near-dup pairs: same band key in any band, deduplicated,
@@ -117,10 +156,10 @@ object Dedup {
     * aggregation's input and nothing needs caching: the round-4 version
     * cached the band keys to keep the self-join from running the sketch
     * once per side and leaked that cache into long-lived sessions.
-    * In-bucket ordered pairs come from the sorted id array via two
-    * generators (posexplode anchor + per-anchor tail slice), streaming
-    * O(bucket) per output row; the O(n²) blowup of naive all-pairs
-    * never materializes outside a bucket.
+    * Callers that verify the pairs right away should call
+    * [[nearDuplicates]], which scores them inside the bucket; this is
+    * the candidate set alone, for a census or a [[verifyJaccard]] caller
+    * that needs both.
     *
     * @param maxBucketSize optional skew guard: a degenerate corpus (e.g.
     *   all-equal texts) collapses every band into one bucket and hands
@@ -145,21 +184,20 @@ object Dedup {
   def lshCandidatePairsFromKeys(keys: DataFrame, idCol: String,
       maxBucketSize: Int = Int.MaxValue): DataFrame = {
     val buckets = keys.groupBy(col("band"), col("key"))
-      .agg(sort_array(collect_list(col(idCol))).as("__ids"))
-    val capped =
-      if (maxBucketSize == Int.MaxValue) buckets
-      else buckets.withColumn("__ids", slice(col("__ids"), 1, maxBucketSize))
-    capped
-      .select(col("__ids"), posexplode(col("__ids")).as(Seq("__i", "id_a")))
-      .select(col("id_a"),
-        explode(slice(col("__ids"), col("__i") + 2, size(col("__ids")))).as("id_b"))
+      .agg(capped(sort_array(collect_list(col(idCol))), maxBucketSize).as("__ids"))
+    bucketPairs(buckets, "__ids")
+      .select(col("__a").as("id_a"), col("__b").as("id_b"))
       .distinct()
   }
 
-  /** Exact jaccard verification of candidate pairs (id_a, id_b): joins
-    * the shingle sets back in and keeps pairs at or above `threshold`.
-    * Factored out of [[nearDuplicates]] so callers that also need the
-    * raw candidate set (e.g. a census) compute the LSH stage once.
+  /** The verify step for a pair frame: exact k-shingle jaccard of the
+    * candidate pairs (id_a, id_b), joining the shingle sets of `df` back
+    * in, keeping pairs at or above `threshold`. For callers that hold
+    * only pairs — a census that also counts the raw candidates, or a
+    * band-key frame reused across a history probe
+    * ([[dropNearDuplicatesFromKeys]], [[incrementalNearDuplicates]]).
+    * Scoring uses [[nearDuplicates]]' shingle sets and jaccard
+    * expression, so both give bit-equal scores.
     */
   def verifyJaccard(cands: DataFrame, df: DataFrame, textCol: String,
       idCol: String, threshold: Double, k: Int = 3): DataFrame = {
@@ -176,11 +214,10 @@ object Dedup {
     // of arrays, observed as a bimodal 3 s / 60+ s census. A shuffled
     // hash join keys on the narrow id and builds per-partition — the
     // only shape that survives corpus scale.
-    val sh = df.select(col(idCol).as("__id"),
-      array_distinct(shingles(col(textCol), k)).as("__sh"))
+    val sh = df.select(col(idCol).as("__id"), shingleSet(col(textCol), k).as("__sh"))
     val melted = cands.select(col("id_a"), col("id_b"),
       explode(array(col("id_a"), col("id_b"))).as("__id"))
-    val withTexts = melted
+    melted
       .join(sh.hint("shuffle_hash"), "__id")
       .groupBy(col("id_a"), col("id_b"))
       .agg(
@@ -188,30 +225,51 @@ object Dedup {
           .as("sh_a"),
         first(when(col("__id") === col("id_b"), col("__sh")), ignoreNulls = true)
           .as("sh_b"))
-    // |A∪B| = |A|+|B|−|A∩B|: sh_a/sh_b are array_distinct above, so the
-    // subtraction form is the identical integer count without building a
-    // per-pair union hash set over the concatenated shingle arrays
-    val interSz = size(array_intersect(col("sh_a"), col("sh_b")))
-    withTexts
-      .withColumn("jaccard",
-        interSz.cast("double") /
-          (size(col("sh_a")) + size(col("sh_b")) - interSz).cast("double"))
+      .withColumn("jaccard", jaccard(col("sh_a"), col("sh_b")))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
-  /** Verified near-dup pairs: LSH candidates whose k-shingle jaccard
-    * meets `threshold` (exact verification joins the texts back in).
-    * Leak-free: both stages are single-pass now, so nothing is cached —
-    * a long-lived session can loop this without pinning frames (callers
-    * that consume the result more than once own their persistence).
+  /** Verified near-dup pairs (id_a, id_b, jaccard): LSH candidates whose
+    * k-shingle jaccard meets `threshold`, verified inside their bucket.
+    * One scan of `df` sketches each document and carries its
+    * (id, text) into the band-key groupBy — the only wide shuffle — so
+    * a bucket holds its members' texts. Buckets of fewer than two
+    * members drop out there, and `maxBucketSize` (see
+    * [[lshCandidatePairs]]) caps the members, smallest ids first, before
+    * anything is shingled. Each member's shingle set is built once per
+    * bucket, every in-bucket pair is scored as it is generated, and a
+    * pair that collides in several bands is kept once (a `distinct`
+    * that shuffles only the verified pairs). Null ids take part in no
+    * pair.
+    * The rows equal [[lshCandidatePairs]] + [[verifyJaccard]], which
+    * would scan the corpus again and join its shingle sets back to the
+    * pairs through two more shuffles. Nothing is cached — a long-lived
+    * session can loop this without pinning frames (callers that consume
+    * the result more than once own their persistence).
     */
   def nearDuplicates(df: DataFrame, textCol: String, idCol: String,
       threshold: Double = 0.7, numBands: Int = 2, rowsPerBand: Int = 2,
       k: Int = 3, maxBucketSize: Int = Int.MaxValue): DataFrame = {
-    val cands = lshCandidatePairs(df, textCol, idCol, numBands, rowsPerBand, k,
-      maxBucketSize)
-    verifyJaccard(cands, df, textCol, idCol, threshold, k)
+    val docs = collect_list(col("__doc"))
+    // The members are shingled in the aggregate's result expression, and
+    // a singleton bucket yields null there. Shingled in a projection
+    // above the aggregate, the generator's inferred `size(__m) > 0`
+    // filter would be pushed below that projection and shingle every
+    // bucket a second time.
+    val members = when(size(docs) >= 2,
+      transform(capped(sort_array(docs), maxBucketSize), d =>
+        struct(d("id").as("id"), shingleSet(d("text"), k).as("sh"))))
+    val doc = struct(col(idCol).as("id"), col(textCol).as("text")).as("__doc")
+    val buckets = bandKeyed(df.filter(col(idCol).isNotNull), textCol, doc,
+      numBands, rowsPerBand, k)
+      .groupBy(col("band"), col("key"))
+      .agg(members.as("__m"))
+    bucketPairs(buckets, "__m")
+      .select(col("__a.id").as("id_a"), col("__b.id").as("id_b"),
+        jaccard(col("__a.sh"), col("__b.sh")).as("jaccard"))
+      .filter(col("jaccard") >= threshold)
+      .distinct()
   }
 
   /** A dedup operator's output: `survivors` is the input minus the

@@ -152,7 +152,8 @@ object PipelineQueries {
   def q32NearDups(s: SparkSession, dir: String): DataFrame = {
     val d = t(s, dir, "documents").filter(col("text").isNotNull)
     // one LSH stage feeds both census legs (cands is cached; the
-    // verify leg reuses it instead of rebuilding signatures)
+    // verify leg reuses it instead of rebuilding signatures). Uncached,
+    // exchange reuse saves 2 of 14 jobs but no wall (Bench sf0.01).
     val cands = Dedup.lshCandidatePairs(d, "text", "doc_id").cache()
     val nCand = cands.agg(count(lit(1)).as("n_candidates"))
     val nVer = Dedup.verifyJaccard(cands, d, "text", "doc_id", threshold = 0.7)

@@ -204,6 +204,20 @@ object ReferenceTwins {
         lit(0L), (s, v) => s + v))
   }
 
+  // ------------------------------------------------ near-dup verify
+  /** `Dedup.nearDuplicates` as it was written before it verified pairs
+    * inside their bucket: the LSH candidate pairs (a bucket holds ids
+    * only), then `Dedup.verifyJaccard`, which scans the corpus again for
+    * every document's shingle set and joins the sets back to the pairs.
+    */
+  def nearDuplicatesJoinBack(df: DataFrame, textCol: String, idCol: String,
+      threshold: Double = 0.7, numBands: Int = 2, rowsPerBand: Int = 2,
+      k: Int = 3, maxBucketSize: Int = Int.MaxValue): DataFrame =
+    Dedup.verifyJaccard(
+      Dedup.lshCandidatePairs(df, textCol, idCol, numBands, rowsPerBand, k,
+        maxBucketSize),
+      df, textCol, idCol, threshold, k)
+
   // ------------------------------------------------ explainer lattice census
   /** The explainer's lattice census as it was taken before it collected
     * only the flipped rows: one groupBy over EVERY scored perturbation

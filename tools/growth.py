@@ -45,7 +45,14 @@ def fmt(x, nd=2):
 def main(paths):
     if len(paths) < 2:
         sys.exit(__doc__)
-    runs = sorted(load(p) for p in paths)
+    by_sf = {}
+    for p in paths:
+        sf, d = load(p)
+        if sf in by_sf:
+            sys.exit(f"{by_sf[sf][0]} and {p} both carry scale factor {sf:g}; "
+                     "give one Bench run per scale factor")
+        by_sf[sf] = (p, d)
+    runs = [(sf, d) for sf, (_, d) in sorted(by_sf.items())]
     sfs = [sf for sf, _ in runs]
     nominal = sfs[-1] / sfs[-2]
     names = sorted(set().union(*(d["queries"] for _, d in runs)))
