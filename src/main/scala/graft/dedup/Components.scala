@@ -9,8 +9,8 @@ import graft.operators.Pinned
 
 /** Distributed connected components over an undirected edge list —
   * the cluster-resolution step that turns near-duplicate PAIRS
-  * ([[Dedup.nearDuplicates]], [[Dedup.simhashNearDuplicates]],
-  * [[graft.similarity.Ann.nearNeighborPairs]]) into dedup CLUSTERS
+  * ([[Dedup.nearDuplicates]], [[Dedup.simhashNearDuplicatesFromSigs]],
+  * [[graft.similarity.SemDedup.nearDuplicatePairs]]) into dedup CLUSTERS
   * with one deterministic survivor each. Pair emission alone
   * under-deletes: if A~B and B~C but A!~C, keeping "one of each pair"
   * retains two of the three docs; the transitive closure keeps one.

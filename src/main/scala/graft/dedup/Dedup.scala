@@ -97,24 +97,26 @@ object Dedup {
   }
 
   /** LSH banding: band key b = concatenated minhashes of that band.
-    * Returns (idCol, band, key) rows — one per band — ready for the
-    * bucket pass. rowsPerBand=2, numBands=2 by default (4 hashes);
-    * [[autoBands]] picks a recall-governed scheme for production calls.
+    * Returns (idCol, textCol, band, key) rows — one per band, each
+    * carrying the document's id and text — ready for the bucket pass,
+    * which verifies pairs on the texts the keys carry. rowsPerBand=2,
+    * numBands=2 by default (4 hashes); [[autoBands]] picks a
+    * recall-governed scheme for production calls. Throws when
+    * `numBands`, `rowsPerBand` or `k` is below 1: with no bands no
+    * document gets a key, and a dedup over the keys would silently
+    * return its whole input.
     */
   def lshBandKeys(df: DataFrame, textCol: String, idCol: String,
-      numBands: Int = 2, rowsPerBand: Int = 2, k: Int = 3): DataFrame =
-    bandKeyed(df, textCol, col(idCol), numBands, rowsPerBand, k)
-
-  /** `carry` beside each of the `numBands` (band, key) pairs of the
-    * row's minhash signature: one output row per band.
-    */
-  private def bandKeyed(df: DataFrame, textCol: String, carry: Column,
-      numBands: Int, rowsPerBand: Int, k: Int): DataFrame = {
+      numBands: Int = 2, rowsPerBand: Int = 2, k: Int = 3): DataFrame = {
+    require(numBands >= 1, s"numBands must be >= 1, got $numBands")
+    require(rowsPerBand >= 1, s"rowsPerBand must be >= 1, got $rowsPerBand")
+    require(k >= 1, s"k must be >= 1, got $k")
     val sig = withMinhashSignature(df, textCol, numBands * rowsPerBand, k)
     val keyCols = (0 until numBands).map { b =>
       concat_ws("#", (0 until rowsPerBand).map(r => col(s"mh${b * rowsPerBand + r}")): _*)
     }
-    sig.select(carry, posexplode(array(keyCols: _*)).as(Seq("band", "key")))
+    sig.select(col(idCol), col(textCol),
+      posexplode(array(keyCols: _*)).as(Seq("band", "key")))
   }
 
   /** A bucket's sorted member array cut to its `maxBucketSize` first
@@ -170,34 +172,23 @@ object Dedup {
     */
   def lshCandidatePairs(df: DataFrame, textCol: String, idCol: String,
       numBands: Int = 2, rowsPerBand: Int = 2, k: Int = 3,
-      maxBucketSize: Int = Int.MaxValue): DataFrame =
-    lshCandidatePairsFromKeys(
-      lshBandKeys(df, textCol, idCol, numBands, rowsPerBand, k),
-      idCol, maxBucketSize)
-
-  /** The bucket-pass half of [[lshCandidatePairs]] over an existing
-    * [[lshBandKeys]] frame — callers that already paid the sketch pass
-    * (e.g. [[incrementalNearDuplicates]], which keys the batch once
-    * for both its history probe and its self pairs) reuse it here
-    * instead of sketching twice.
-    */
-  def lshCandidatePairsFromKeys(keys: DataFrame, idCol: String,
       maxBucketSize: Int = Int.MaxValue): DataFrame = {
-    val buckets = keys.groupBy(col("band"), col("key"))
+    val buckets = lshBandKeys(df, textCol, idCol, numBands, rowsPerBand, k)
+      .groupBy(col("band"), col("key"))
       .agg(capped(sort_array(collect_list(col(idCol))), maxBucketSize).as("__ids"))
     bucketPairs(buckets, "__ids")
       .select(col("__a").as("id_a"), col("__b").as("id_b"))
       .distinct()
   }
 
-  /** The verify step for a pair frame: exact k-shingle jaccard of the
-    * candidate pairs (id_a, id_b), joining the shingle sets of `df` back
-    * in, keeping pairs at or above `threshold`. For callers that hold
-    * only pairs — a census that also counts the raw candidates, or a
-    * band-key frame reused across a history probe
-    * ([[dropNearDuplicatesFromKeys]], [[incrementalNearDuplicates]]).
-    * Scoring uses [[nearDuplicates]]' shingle sets and jaccard
-    * expression, so both give bit-equal scores.
+  /** The verify step for a bare pair frame: exact k-shingle jaccard of
+    * the candidate pairs (id_a, id_b), joining the shingle sets of `df`
+    * back in, keeping pairs at or above `threshold`. The dedup operators
+    * never call it — their key frames carry the texts, so they verify
+    * inside the bucket. It serves callers that need the raw candidates
+    * as well: q32's candidates-plus-verified census and the certabench
+    * `dedup` trace. Scoring uses the in-bucket path's shingle sets and
+    * jaccard expression, so both give bit-equal scores.
     */
   def verifyJaccard(cands: DataFrame, df: DataFrame, textCol: String,
       idCol: String, threshold: Double, k: Int = 3): DataFrame = {
@@ -230,28 +221,20 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
-  /** Verified near-dup pairs (id_a, id_b, jaccard): LSH candidates whose
-    * k-shingle jaccard meets `threshold`, verified inside their bucket.
-    * One scan of `df` sketches each document and carries its
-    * (id, text) into the band-key groupBy — the only wide shuffle — so
-    * a bucket holds its members' texts. Buckets of fewer than two
-    * members drop out there, and `maxBucketSize` (see
-    * [[lshCandidatePairs]]) caps the members, smallest ids first, before
-    * anything is shingled. Each member's shingle set is built once per
-    * bucket, every in-bucket pair is scored as it is generated, and a
-    * pair that collides in several bands is kept once (a `distinct`
-    * that shuffles only the verified pairs). Null ids take part in no
-    * pair.
-    * The rows equal [[lshCandidatePairs]] + [[verifyJaccard]], which
-    * would scan the corpus again and join its shingle sets back to the
-    * pairs through two more shuffles. Nothing is cached — a long-lived
-    * session can loop this without pinning frames (callers that consume
-    * the result more than once own their persistence).
+  /** The in-bucket verify over an [[lshBandKeys]] frame: rows with a
+    * null id drop out, the (band, key) groupBy — the only wide shuffle —
+    * collects each bucket's (id, text) members, and buckets of fewer
+    * than two members drop out there. `maxBucketSize` caps the members,
+    * smallest ids first, before anything is shingled. Each member's
+    * shingle set is built once per bucket, every in-bucket pair is
+    * scored as it is generated, and a pair that collides in several
+    * bands is kept once (a `distinct` that shuffles only the verified
+    * pairs). Output (id_a, id_b, jaccard), id_a < id_b.
     */
-  def nearDuplicates(df: DataFrame, textCol: String, idCol: String,
-      threshold: Double = 0.7, numBands: Int = 2, rowsPerBand: Int = 2,
-      k: Int = 3, maxBucketSize: Int = Int.MaxValue): DataFrame = {
-    val docs = collect_list(col("__doc"))
+  private def verifiedInBuckets(keys: DataFrame, textCol: String,
+      idCol: String, threshold: Double, k: Int,
+      maxBucketSize: Int = Int.MaxValue): DataFrame = {
+    val docs = collect_list(struct(col(idCol).as("id"), col(textCol).as("text")))
     // The members are shingled in the aggregate's result expression, and
     // a singleton bucket yields null there. Shingled in a projection
     // above the aggregate, the generator's inferred `size(__m) > 0`
@@ -260,9 +243,7 @@ object Dedup {
     val members = when(size(docs) >= 2,
       transform(capped(sort_array(docs), maxBucketSize), d =>
         struct(d("id").as("id"), shingleSet(d("text"), k).as("sh"))))
-    val doc = struct(col(idCol).as("id"), col(textCol).as("text")).as("__doc")
-    val buckets = bandKeyed(df.filter(col(idCol).isNotNull), textCol, doc,
-      numBands, rowsPerBand, k)
+    val buckets = keys.filter(col(idCol).isNotNull)
       .groupBy(col("band"), col("key"))
       .agg(members.as("__m"))
     bucketPairs(buckets, "__m")
@@ -271,6 +252,24 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
       .distinct()
   }
+
+  /** Verified near-dup pairs (id_a, id_b, jaccard): LSH candidates whose
+    * k-shingle jaccard meets `threshold`, verified inside their bucket.
+    * One scan of `df` sketches each document, and its band keys carry
+    * its (id, text) into the bucket groupBy, so a bucket holds its
+    * members' texts; `maxBucketSize` (see [[lshCandidatePairs]]) bounds
+    * them. Null ids take part in no pair.
+    * The rows equal [[lshCandidatePairs]] + [[verifyJaccard]], which
+    * would scan the corpus again and join its shingle sets back to the
+    * pairs through two more shuffles. Nothing is cached — a long-lived
+    * session can loop this without pinning frames (callers that consume
+    * the result more than once own their persistence).
+    */
+  def nearDuplicates(df: DataFrame, textCol: String, idCol: String,
+      threshold: Double = 0.7, numBands: Int = 2, rowsPerBand: Int = 2,
+      k: Int = 3, maxBucketSize: Int = Int.MaxValue): DataFrame =
+    verifiedInBuckets(lshBandKeys(df, textCol, idCol, numBands, rowsPerBand, k),
+      textCol, idCol, threshold, k, maxBucketSize)
 
   /** A dedup operator's output: `survivors` is the input minus the
     * `losers` ids. Built only by [[Components.withoutLosers]], which
@@ -287,45 +286,31 @@ object Dedup {
     * cluster representative (component MINIMUM id — deterministic). The
     * pair→component closure and the loser pin are
     * [[Components.dropLosers]]; docs in no near-dup pair survive
-    * untouched.
+    * untouched. One body with [[dropNearDuplicatesFromKeys]], over the
+    * band keys of `df`.
     */
   def dropNearDuplicates(df: DataFrame, textCol: String, idCol: String,
       threshold: Double = 0.7, numBands: Int = 2, rowsPerBand: Int = 2,
       k: Int = 3): NearDupResult =
-    Components.dropLosers(df, idCol, nearDuplicates(df, textCol, idCol,
-      threshold, numBands, rowsPerBand, k).select(col("id_a"), col("id_b")))()
+    dropNearDuplicatesFromKeys(df,
+      lshBandKeys(df, textCol, idCol, numBands, rowsPerBand, k),
+      textCol, idCol, threshold, k)
 
-  /** [[dropNearDuplicates]] over a PRECOMPUTED (and caller-PERSISTED)
-    * [[lshBandKeys]] frame for `df` — the seam for callers that need
-    * the keys a second time and must not pay the signature sketch
-    * twice (q197/q201: the history's keys feed its own dedup here AND,
-    * filtered to survivors, the incremental batch probe join via
-    * `historyKeys`). Two r12 differences from the single-pass surface,
-    * both result-identical (same survivor set, spec'd):
-    *  - the candidate pass reads `keys` instead of re-sketching — why
-    *    the caller must persist it (it is consumed by the bucket pass
-    *    AND the referenced-id prune below; unpersisted keys would
-    *    re-run the md5-min fold per consumer);
-    *  - the verify shingle side is semi-join-pruned to
-    *    candidate-referenced ids (guide §2.3): verifyJaccard joins the
-    *    shingle frame INNER on the pair ids, so non-candidate rows
-    *    never contribute — pruning them first skips their tokenize +
-    *    shingle work and their shuffle bytes, the
-    *    incrementalNearDuplicates posture applied to the batch surface.
+  /** [[dropNearDuplicates]] over an existing [[lshBandKeys]] frame for
+    * `df` — the seam for callers that need the keys a second time and
+    * must not pay the signature sketch twice (q197/q201: the history's
+    * keys feed its own dedup here AND, filtered to survivors, the
+    * incremental batch probe join via `historyKeys`). The pairs are
+    * verified inside the bucket on the texts the keys carry, so `keys`
+    * is read once here and `df` only for the survivors; a caller that
+    * reuses the keys persists them.
     */
   def dropNearDuplicatesFromKeys(df: DataFrame, keys: DataFrame,
       textCol: String, idCol: String, threshold: Double = 0.7,
-      k: Int = 3): NearDupResult = {
-    val cands = lshCandidatePairsFromKeys(keys, idCol)
-    val refIds = cands
-      .select(explode(array(col("id_a"), col("id_b"))).as("__rid"))
-      .distinct()
-    val pruned = df.select(col(idCol), col(textCol))
-      .join(refIds, col(idCol) === col("__rid"), "left_semi")
+      k: Int = 3): NearDupResult =
     Components.dropLosers(df, idCol,
-      verifyJaccard(cands, pruned, textCol, idCol, threshold, k)
+      verifiedInBuckets(keys, textCol, idCol, threshold, k)
         .select(col("id_a"), col("id_b")))()
-  }
 
   /** Quality-aware cluster survivor selection: like
     * [[dropNearDuplicates]], but the survivor of each near-dup cluster
@@ -373,11 +358,13 @@ object Dedup {
     * of the batch's band keys against the history's — history
     * survivors are pairwise non-near-dup under this very band scheme,
     * so no history-internal edge can exist and none is looked for).
-    * Exact-jaccard verification joins shingles back for REFERENCED
-    * ids only (semi-join pruned — un-candidated history rows are
-    * never shuffled past their band keys). A batch doc survives iff
-    * its component over the found edges contains no history doc and
-    * it is the component's min id.
+    * Both verify on the texts the band keys carry: the batch×batch
+    * pairs inside their bucket, as [[nearDuplicates]] does, and each
+    * batch×history probe row — which holds both texts — as it leaves
+    * the join, so no text is read back by id and un-candidated history
+    * rows never travel past the probe. A batch doc survives iff its
+    * component over the found edges contains no history doc and it is
+    * the component's min id.
     *
     * EQUIVALENCE CONTRACT (spec'd; q197's oracle replays it): when
     * every history id sorts BELOW every batch id (min-id survivorship
@@ -388,8 +375,8 @@ object Dedup {
     * replay's answer at batch-driven cost. The strict ordering also
     * means the id SETS are disjoint — a history id reused by a batch
     * row (a re-crawl overwriting in place) must go through an upsert
-    * first, since two texts under one id would make the per-id
-    * shingle lookup ambiguous. Callers violating the id ordering get
+    * first, since two texts under one id would make one graph vertex of
+    * two documents. Callers violating the id ordering get
     * batch-internal dedup plus history-collision drops, but not the
     * replay equivalence.
     *
@@ -410,8 +397,8 @@ object Dedup {
     * Non-long id types skip the guard (the contract is still the
     * caller's to honor).
     *
-    * Scale shape: history contributes one column-pruned sketch pass
-    * (band keys — persist them across batches via [[lshBandKeys]] to
+    * Scale shape: history contributes one sketch pass (band keys with
+    * their texts — persist them across batches via [[lshBandKeys]] to
     * amortize, the `withBandKeys` pattern) and the keyed probe join;
     * candidate and edge volume are batch-driven. Nothing quadratic in
     * history, ever.
@@ -480,29 +467,24 @@ object Dedup {
       // against the session's broadcast threshold: a batch above it (or
       // a session with broadcast off) takes the shuffle join — the same
       // pairs, without building an oversized table on the driver.
-      val probeB = keysB.select(col(idCol).as("id_b"), col("band"), col("key"))
+      def side(keys: DataFrame, s: String) = keys.filter(col(idCol).isNotNull)
+        .select(col(idCol).as(s"id_$s"), col(textCol).as(s"text_$s"),
+          col("band"), col("key"))
+      val probeB = side(keysB, "b")
       val broadcastLimit = batch.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
       val fits = broadcastLimit >= 0 &&
         keysB.queryExecution.optimizedPlan.stats.sizeInBytes <= broadcastLimit
-      val cross = keysH.select(col(idCol).as("id_a"), col("band"), col("key"))
+      val cross = side(keysH, "a")
         .join(if (fits) broadcast(probeB) else probeB, Seq("band", "key"))
+        .filter(jaccard(shingleSet(col("text_a"), k),
+          shingleSet(col("text_b"), k)) >= threshold)
         .select(col("id_a"), col("id_b")).distinct()
-      val self = lshCandidatePairsFromKeys(keysB, idCol)
       // self pairs have both ids in batch, cross pairs one in history —
       // disjoint by construction (the id-ordering contract implies the
-      // id SETS are disjoint; a shared id with different text would
-      // make verifyJaccard's per-id shingle lookup ambiguous), no
-      // cross-set dedup needed
-      val cands = self.unionByName(cross)
-      val refIds = cands
-        .select(explode(array(col("id_a"), col("id_b"))).as("__rid"))
-        .distinct()
-      val pruned = history.select(col(idCol), col(textCol))
-        .unionByName(batch.select(col(idCol), col(textCol)))
-        .join(refIds, col(idCol) === col("__rid"), "left_semi")
-      val edges = verifyJaccard(cands, pruned, textCol, idCol, threshold, k)
+      // id SETS are disjoint), no cross-set dedup needed
+      val self = verifiedInBuckets(keysB, textCol, idCol, threshold, k)
         .select(col("id_a"), col("id_b"))
-      Components.dropLosers(batch, idCol, edges)(
+      Components.dropLosers(batch, idCol, self.unionByName(cross))(
         Components.batchLosers(batch, idCol, historyWins))
     } finally keysB.unpersist(false)
   }
@@ -662,7 +644,8 @@ object Dedup {
 
   /** GUARANTEED-complete SimHash near-dup pairs at Hamming ≤
     * `maxDistance` — the Manku–Jain–Sarma web-dedup scheme (WWW 2007,
-    * public) replacing the prefix-bucket heuristic below, whose recall
+    * public) replacing the prefix-bucket heuristic
+    * ([[simhashNearDuplicatesFromSigs]]), whose recall
     * silently excludes any pair differing inside the prefix window:
     * split the signature into `numBlocks ≥ maxDistance + 1` bit
     * blocks; a pair within distance d differs in at most d blocks, so
@@ -723,22 +706,5 @@ object Dedup {
           hamming(col("sig_a"), col("sig_b")).as("distance"))
     }.reduce(_ unionByName _)
       .filter(col("distance") <= maxDistance)
-  }
-
-  /** SimHash near-dup pairs within prefix buckets: documents sharing the
-    * top `prefixBits` bits land in one bucket (cheap blocking), then
-    * exact hamming verification ≤ maxDistance.
-    */
-  def simhashNearDuplicates(df: DataFrame, textCol: String, idCol: String,
-      maxDistance: Int = 8, prefixBits: Int = 16): DataFrame = {
-    val sigs = df.select(col(idCol), simhash(col(textCol)).as("sig"))
-      .withColumn("bucket", shiftrightunsigned(col("sig"), 64 - prefixBits))
-    val a = sigs.select(col("bucket"), col(idCol).as("id_a"), col("sig").as("sig_a"))
-    val b = sigs.select(col("bucket").as("bucket_b"), col(idCol).as("id_b"),
-      col("sig").as("sig_b"))
-    a.join(b, col("bucket") === col("bucket_b") && col("id_a") < col("id_b"))
-      .withColumn("distance", hamming(col("sig_a"), col("sig_b")))
-      .filter(col("distance") <= maxDistance)
-      .select(col("id_a"), col("id_b"), col("distance"))
   }
 }

@@ -113,14 +113,6 @@ class CertaExplainer(
   private def localFrame(rows: Seq[Row], schema: StructType): DataFrame =
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
-  /** count() that skips the Spark job when the frame folds to a
-    * LocalRelation ([[graft.candidates.Candidates.boundedCount]]) — an
-    * explanation is a sequence of dozens of tiny jobs whose scheduler
-    * round-trips, not task work, dominate its wall clock.
-    */
-  private def boundedCount(df: DataFrame): Long =
-    graft.candidates.Candidates.boundedCount(df)
-
   /** Explain the model's prediction on (lRecord, rRecord): 1-row
     * un-prefixed entity frames, as in reference explain(l_tuple, r_tuple).
     */
@@ -204,7 +196,7 @@ class CertaExplainer(
         .generateSubsequences(lProbe, startId = maxRid + 1))
       val genFromR = Trace.stage(spark, "certa: augment")(graft.perturb.Augment
         .generateSubsequences(rProbe, startId = maxLid + 1))
-      if (boundedCount(genFromL) > 0 && boundedCount(genFromR) > 0) {
+      if (Candidates.boundedCount(genFromL) > 0 && Candidates.boundedCount(genFromR) > 0) {
         // local sources and probes: under a column-program matcher the
         // whole search folds and fires no job
         val (_, support2) = Trace.stage(spark, "certa: augmented support search")(
@@ -264,7 +256,7 @@ class CertaExplainer(
     // support set (≤ (numTriangles/2)² rows, job-free)
     val discovered = Trace.stage(spark, "certa: triangle discovery")(
       Triangles.discover(supportPairs, schema))
-    if (boundedCount(discovered) == 0) return emptyExplanation()
+    if (Candidates.boundedCount(discovered) == 0) return emptyExplanation()
 
     // stage 5a: vertex resolution. Every vertex is a record of the pair
     // under explanation or of a support row, G2 copies included, so the
@@ -289,7 +281,8 @@ class CertaExplainer(
           (resolvedAll.only(kept), kept)
         }
       }
-    val (nLeft, nRight) = (boundedCount(resolved.left), boundedCount(resolved.right))
+    val (nLeft, nRight) =
+      (Candidates.boundedCount(resolved.left), Candidates.boundedCount(resolved.right))
     val nTriangles = nLeft + nRight
     if (nTriangles == 0) return emptyExplanation()
 

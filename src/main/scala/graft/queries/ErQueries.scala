@@ -241,16 +241,21 @@ object ErQueries {
       val src = erSource(s, dir)
       val l = src.filter(col("id") === 0)
       val r = src.filter(col("id") === 0)
-      val e = new CertaExplainer(src, src).explain(l, r, TokenCosineModel(),
-        numTriangles = 10)
-      // materialize the (tiny) outputs as local frames so the memoized
-      // explanation survives cache clearing without recompute
-      def localize(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-        if (df.columns.isEmpty) df
-        else s.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
-      Explanation(localize(e.saliency), localize(e.pss), localize(e.cfSummary),
-        localize(e.cfExamples), localize(e.triangles))
+      localize(s, new CertaExplainer(src, src).explain(l, r, TokenCosineModel(),
+        numTriangles = 10))
     })
+
+  /** An explanation with its (tiny) outputs materialized as local
+    * frames, so a memoized explanation survives cache clearing without
+    * recompute.
+    */
+  private def localize(s: SparkSession, e: Explanation): Explanation = {
+    def local(df: DataFrame): DataFrame =
+      if (df.columns.isEmpty) df
+      else s.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+    Explanation(local(e.saliency), local(e.pss), local(e.cfSummary),
+      local(e.cfExamples), local(e.triangles))
+  }
 
   /** Full CERTA saliency explanation (reference explain.py:34-158) of a
     * self-match on part 0 — live explainer, hash-checked against the
@@ -321,13 +326,8 @@ object ErQueries {
     goldenCache.getOrElseUpdate(dir, {
       val src = goldenSource(s, dir)
       val l = src.filter(col("id") === 0)
-      val e = new CertaExplainer(src, src).explain(l, l, TokenCosineModel(),
-        numTriangles = 10)
-      def localize(df: DataFrame): DataFrame =
-        if (df.columns.isEmpty) df
-        else s.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
-      Explanation(localize(e.saliency), localize(e.pss), localize(e.cfSummary),
-        localize(e.cfExamples), localize(e.triangles))
+      localize(s, new CertaExplainer(src, src).explain(l, l, TokenCosineModel(),
+        numTriangles = 10))
     })
 
   def q60GoldenSaliency(s: SparkSession, dir: String): DataFrame =

@@ -41,13 +41,6 @@ final case class PairSchema(lprefix: String = "ltable_", rprefix: String = "rtab
   def pairId(lidCol: Column, ridCol: Column): Column =
     concat(lit("0@"), lidCol.cast("string"), lit("#1@"), ridCol.cast("string"))
 
-  /** F4 parse: sided id `"<side>@<recordId>"` of a triangle vertex. */
-  def vertexRecordId(vertex: Column): Column =
-    element_at(split(vertex, "@"), 2)
-
-  def vertexIsLeft(vertex: Column): Column =
-    vertex.startsWith("0@")
-
   /** J1 pair assembly: cross of two single-record frames with prefix
     * renames (reference utils.py:4-10 get_row). Both inputs are single
     * records by contract but usually arrive as filtered frames the

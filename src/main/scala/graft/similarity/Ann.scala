@@ -688,24 +688,4 @@ object Ann {
         coalesce(col("n_positives"), lit(0L)).as("n_positives"))
       .orderBy(col("anchor_id"), col("rank"))
   }
-
-  /** All-pairs near neighbors above a cosine threshold, LSH-bucketed:
-    * the embedding analog of MinHash near-dup detection. Join is
-    * per-bucket; at 100 TB this is the only tractable shape.
-    */
-  def nearNeighborPairs(df: DataFrame, embCol: String, idCol: String,
-      threshold: Double, numPlanes: Int = 8): DataFrame = {
-    val bucketed = df.select(col(idCol), col(embCol),
-      graft.functions.VecMath.norm(col(embCol)).as("__n"),
-      lshBucket(col(embCol), numPlanes).as("__bucket"))
-    val a = bucketed.select(col("__bucket"), col(idCol).as("id_a"),
-      col(embCol).as("emb_a"), col("__n").as("__na"))
-    val b = bucketed.select(col("__bucket").as("__bucket_b"),
-      col(idCol).as("id_b"), col(embCol).as("emb_b"), col("__n").as("__nb"))
-    a.join(b, col("__bucket") === col("__bucket_b") && col("id_a") < col("id_b"))
-      .withColumn("cosine", graft.functions.VecMath.cosinePre(
-        col("emb_a"), col("emb_b"), col("__na") * col("__nb")))
-      .filter(col("cosine") >= threshold)
-      .select(col("id_a"), col("id_b"), col("cosine"))
-  }
 }

@@ -76,21 +76,11 @@ object StreamingOps {
   /** Streaming ER scoring: column-program models (TokenCosineModel,
     * MLlibMatcher.transform) lift to streaming frames unchanged — this
     * is just the typed entry point. mapPartitions-based scorers
-    * (ExternalBatchScorer) need foreachBatch instead; see
-    * [[scoreStreamForeachBatch]].
+    * (ExternalBatchScorer) score each micro-batch inside
+    * `writeStream.foreachBatch` instead.
     */
   def scoreStream(pairStream: DataFrame, model: graft.matcher.ERModel): DataFrame =
     model.predict(pairStream)
-
-  /** Streaming route for RDD-based scorers: score each micro-batch with
-    * the arbitrary model and hand the result to `sink`.
-    */
-  def scoreStreamForeachBatch(pairStream: DataFrame,
-      model: graft.matcher.ERModel,
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    pairStream.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
-      sink(model.predict(batch), id)
-    }.start()
 
   /** Streaming incremental dedup against ALL history with BOUNDED
     * state: each micro-batch is (1) content-deduped within itself,

@@ -7,8 +7,11 @@ import graft.dedup.Dedup
 /** `Dedup.nearDuplicates` verifies each pair inside its LSH bucket. Its
   * rows must equal the join-back formulation
   * (`ReferenceTwins.nearDuplicatesJoinBack`: candidate pairs, then
-  * `Dedup.verifyJaccard`) row for row, jaccard bit for bit, and a whole
-  * `dropNearDuplicates` pass must stay within its job budget.
+  * `Dedup.verifyJaccard`) row for row, jaccard bit for bit. The
+  * operators that reuse band keys (`dropNearDuplicatesFromKeys`,
+  * `incrementalNearDuplicates`) verify on the texts the keys carry and
+  * must give the single-pass and full-replay answers, and each pass
+  * must stay within its job budget.
   */
 class NearDupSpec extends SparkSpec {
 
@@ -122,10 +125,79 @@ class NearDupSpec extends SparkSpec {
     assertTwins(docs, threshold = 0.5, numBands = 4, rowsPerBand = 1)
   }
 
-  test("dropNearDuplicates pass fires at most 7 jobs") {
+  test("a band scheme below 1 is rejected, naming the value") {
+    val docs = planted(3, background = 10, clusters = 2).toDF("doc_id", "text")
+    Seq[(String, () => Any)](
+      "numBands must be >= 1, got 0" -> (() =>
+        Dedup.dropNearDuplicates(docs, "text", "doc_id", numBands = 0)),
+      "rowsPerBand must be >= 1, got 0" -> (() =>
+        Dedup.lshBandKeys(docs, "text", "doc_id", rowsPerBand = 0)),
+      "k must be >= 1, got -1" -> (() =>
+        Dedup.nearDuplicates(docs, "text", "doc_id", k = -1))
+    ).foreach { case (msg, run) =>
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage.contains(msg), e.getMessage)
+    }
+  }
+
+  /** [[planted]] with every tenth id null. */
+  private def withNullIds(seed: Long): DataFrame =
+    planted(seed).map { case (id, t) => (if (id % 10 == 7) None else Some(id), t) }
+      .toDF("doc_id", "text")
+
+  private def ids(df: DataFrame): Seq[Option[Long]] =
+    df.select(col("doc_id")).collect().toSeq
+      .map(r => if (r.isNullAt(0)) None else Some(r.getLong(0))).sorted
+
+  test("dropNearDuplicatesFromKeys over lshBandKeys equals dropNearDuplicates") {
+    val docs = withNullIds(6)
+    val keys = Dedup.lshBandKeys(docs, "text", "doc_id").persist()
+    val viaKeys = Dedup.dropNearDuplicatesFromKeys(docs, keys, "text", "doc_id")
+    val direct = Dedup.dropNearDuplicates(docs, "text", "doc_id")
+    try {
+      assert(ids(viaKeys.losers).nonEmpty)
+      assert(ids(viaKeys.losers) === ids(direct.losers))
+      assert(ids(viaKeys.survivors) === ids(direct.survivors))
+      assert(ids(viaKeys.survivors).count(_.isEmpty) === ids(docs).count(_.isEmpty))
+    } finally { viaKeys.close(); direct.close(); keys.unpersist() }
+  }
+
+  test("incremental dedup: history keys change nothing, min-id equals the full replay") {
+    val docs = withNullIds(7)
+    val split = 250L
+    // null ids only in the batch, so the replay's nulls are all batch rows
+    val histR = Dedup.dropNearDuplicates(docs.filter(col("doc_id") < split),
+      "text", "doc_id")
+    val history = histR.survivors.persist()
+    val batch = docs.filter(col("doc_id").isNull || col("doc_id") >= split)
+    val keys = Dedup.lshBandKeys(history, "text", "doc_id").persist()
+    def survivors(historyWins: Boolean, historyKeys: Option[DataFrame]) = {
+      val r = Dedup.incrementalNearDuplicates(history, batch, "text", "doc_id",
+        historyKeys = historyKeys, historyWins = historyWins, enforceIdOrder = true)
+      try ids(r.survivors) finally r.close()
+    }
+    val replay = Dedup.dropNearDuplicates(history.unionByName(batch), "text", "doc_id")
+    try {
+      Seq(false, true).foreach { historyWins =>
+        assert(survivors(historyWins, Some(keys)) === survivors(historyWins, None))
+      }
+      val minId = survivors(historyWins = false, None)
+      assert(minId.size < ids(batch).size) // batch copies and history clones die
+      assert(minId === ids(replay.survivors.filter(
+        col("doc_id").isNull || col("doc_id") >= split)))
+    } finally {
+      replay.close(); keys.unpersist(); history.unpersist(); histR.close()
+    }
+  }
+
+  private def plantedParquet(seed: Long): DataFrame = {
     val dir = java.nio.file.Files.createTempDirectory("near-dup-budget").toString + "/docs"
-    planted(2).toDF("doc_id", "text").write.parquet(dir)
-    val docs = spark.read.parquet(dir)
+    planted(seed).toDF("doc_id", "text").write.parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  test("dropNearDuplicates pass fires at most 7 jobs") {
+    val docs = plantedParquet(2)
     val (survivors, window) = Trace.window(spark)(assertNoNewPins {
       val r = Dedup.dropNearDuplicates(docs, "text", "doc_id")
       try r.survivors.collect() finally r.close()
@@ -134,5 +206,31 @@ class NearDupSpec extends SparkSpec {
     assert(survivors.length < docs.count()) // planted copies are gone
     // 7 with the in-bucket verify; the join-back verify fires 11
     assert(window.jobs.size <= 7, window.jobs.map(_.description))
+  }
+
+  test("dropNearDuplicatesFromKeys pass fires at most 8 jobs") {
+    val docs = plantedParquet(2)
+    val (survivors, window) = Trace.window(spark)(assertNoNewPins {
+      val keys = Dedup.lshBandKeys(docs, "text", "doc_id").persist()
+      val r = Dedup.dropNearDuplicatesFromKeys(docs, keys, "text", "doc_id")
+      try r.survivors.collect() finally { r.close(); keys.unpersist() }
+    })
+    assert(window.flushed)
+    assert(survivors.length < docs.count())
+    // 8 verifying in the bucket; the referenced-id join-back fires 17
+    assert(window.jobs.size <= 8, window.jobs.map(_.description))
+  }
+
+  test("incrementalNearDuplicates fires at most 20 jobs") {
+    val docs = plantedParquet(2)
+    val (survivors, window) = Trace.window(spark)(assertNoNewPins {
+      val r = Dedup.incrementalNearDuplicates(docs.filter(col("doc_id") < 250L),
+        docs.filter(col("doc_id") >= 250L), "text", "doc_id")
+      try r.survivors.collect() finally r.close()
+    })
+    assert(window.flushed)
+    assert(survivors.length < docs.filter(col("doc_id") >= 250L).count())
+    // 20 verifying on the keys' texts; the referenced-id join-back fires 40
+    assert(window.jobs.size <= 20, window.jobs.map(_.description))
   }
 }

@@ -128,7 +128,7 @@ object ReferenceTwins {
       zip_with(a, b, (x, y) => { val d = x - y; d * d }),
       lit(0L), (acc, v) => acc + v)
 
-  /** `Dedup.simhashNearDuplicates` over the portable 60-bit signature. */
+  /** `Dedup.simhashNearDuplicatesFromSigs` over the portable 60-bit signature. */
   def simhashNearDuplicatesPortable(df: DataFrame, textCol: String, idCol: String,
       maxDistance: Int = 8, prefixBits: Int = 16): DataFrame =
     Dedup.simhashNearDuplicatesFromSigs(
