@@ -44,18 +44,24 @@ object Components {
     * self-loops are ignored. Returns (id, rep), one row per distinct
     * vertex, including (rep, rep) for the representative itself.
     *
-    * Cost-based path choice: the canonical edge count falls out of the
-    * round-0 convergence checksum for free, and when it is at most
-    * `driverEdgeThreshold` (long-typed ids only) the closure runs as a
-    * single bounded collect + path-compressed union-find on the driver
-    * — near-dup edge sets are usually orders of magnitude below the
-    * corpus, and O(log n) alternating-star shuffle rounds cost more
-    * than reading ≤ threshold pairs once. Above the threshold (or for
-    * non-long ids) the distributed large-star/small-star loop runs
-    * unchanged — the 100 TB default. Both paths produce the identical
-    * mapping (spec-pinned). An edge plan that folds to a LocalRelation of
-    * at most `driverEdgeThreshold` rows is already on the driver: it
-    * goes straight to the union-find, with no pin and no job.
+    * Cost-based path choice: with long-typed ids and
+    * `driverEdgeThreshold >= 1`, one action reads at most
+    * `driverEdgeThreshold + 1` raw edge rows (`limit(threshold + 1)
+    * .collect()`). When they all fit, the closure runs on the driver as
+    * a path-compressed union-find over them — no pin, no canonical
+    * shuffle, no checksum job: near-dup edge sets are usually orders of
+    * magnitude below the corpus, and O(log n) alternating-star shuffle
+    * rounds cost more than reading ≤ threshold pairs once. Spark's
+    * bounded take scans partitions in growing steps, so the action is
+    * one job over a single-partition edge frame (an AQE-coalesced pair
+    * shuffle) and no job over a plan that folds to a LocalRelation.
+    * Otherwise (or for non-long ids, or `driverEdgeThreshold` 0) the
+    * distributed large-star/small-star loop runs unchanged — the 100 TB
+    * default. The bound counts RAW rows, before
+    * self-loops and duplicates drop, so a caller with heavily duplicated
+    * edges takes the distributed path sooner; every dedup operator
+    * passes distinct pairs. Both paths produce the identical mapping
+    * (spec-pinned).
     *
     * `roundObserver` is a measurement seam: the distributed loop calls
     * it after every completed round with (round index starting at 1,
@@ -71,16 +77,10 @@ object Components {
       roundObserver: (Int, Long) => Unit = (_, _) => ()): DataFrame = {
     val spark = edges.sparkSession
     val uv = edges.select(col(aCol).as("u"), col(bCol).as("v"))
-    // an edge set already on the driver (its plan folds to a
-    // LocalRelation) closes there as it stands: no Pinned copy, no
-    // checksum job. Only all-local leaves are worth optimizing to see.
-    val local = longIds(uv) &&
-      uv.queryExecution.analyzed.collectLeaves().forall(
-        _.isInstanceOf[LocalRelation])
-    if (local) uv.queryExecution.optimizedPlan match {
-      case l: LocalRelation if l.data.size <= driverEdgeThreshold =>
-        return unionFind(spark, uv.collect())
-      case _ =>
+    if (longIds(uv) && driverEdgeThreshold >= 1) {
+      val rows = uv.limit(math.min(driverEdgeThreshold, Int.MaxValue - 1L).toInt + 1)
+        .collect()
+      if (rows.length <= driverEdgeThreshold) return unionFind(spark, rows)
     }
     // Each round must TRUNCATE lineage, not just cache: both star
     // passes reference their input twice (self-union / self-window),
@@ -90,13 +90,6 @@ object Components {
     // filled inside the round's checksum job, released by close().
     var cur = Pinned(canonical(uv))
     var curSum = checksum(cur.df)
-    if (longIds(cur.df) && curSum._1 <= driverEdgeThreshold) {
-      // driver union-find over the pinned canonical edges (reads the
-      // persisted blocks — no recompute of the edge lineage)
-      val rows = cur.df.collect()
-      cur.close()
-      return unionFind(spark, rows)
-    }
     var converged = false
     var it = 0
     while (!converged && it < maxIter) {

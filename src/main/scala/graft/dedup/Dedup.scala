@@ -2,6 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.{MinHashSignature, ShingleJaccard, ShingleSet}
 import graft.text.TextAnalysis
 
 /** Deduplication operators for training-data pipelines, in increasing
@@ -47,7 +48,7 @@ object Dedup {
   def withMinhashSignature(df: DataFrame, textCol: String,
       numHashes: Int = 4, k: Int = 3): DataFrame = {
     val sigged = df.withColumn("__sig",
-      graft.functions.MinHashSignature(col(textCol), numHashes, k))
+      MinHashSignature(col(textCol), numHashes, k))
     (0 until numHashes).foldLeft(sigged) { (d, i) =>
       d.withColumn(s"mh$i", element_at(col("__sig"), i + 1))
     }.drop("__sig")
@@ -111,9 +112,13 @@ object Dedup {
     require(numBands >= 1, s"numBands must be >= 1, got $numBands")
     require(rowsPerBand >= 1, s"rowsPerBand must be >= 1, got $rowsPerBand")
     require(k >= 1, s"k must be >= 1, got $k")
-    val sig = withMinhashSignature(df, textCol, numBands * rowsPerBand, k)
+    // two selects, not a withColumn per hash: each Dataset step costs
+    // the driver an analysis pass, and every dedup pass builds these keys
+    val sig = df.select(col(idCol), col(textCol),
+      MinHashSignature(col(textCol), numBands * rowsPerBand, k).as("__sig"))
     val keyCols = (0 until numBands).map { b =>
-      concat_ws("#", (0 until rowsPerBand).map(r => col(s"mh${b * rowsPerBand + r}")): _*)
+      concat_ws("#", (0 until rowsPerBand).map(r =>
+        element_at(col("__sig"), b * rowsPerBand + r + 1)): _*)
     }
     sig.select(col(idCol), col(textCol),
       posexplode(array(keyCols: _*)).as(Seq("band", "key")))
@@ -129,26 +134,16 @@ object Dedup {
     * and `__b` with `__a` at the lower index: a posexplode anchor plus a
     * per-anchor tail slice, streaming O(bucket) per output row, so the
     * O(n²) blowup of naive all-pairs never materializes outside a
-    * bucket.
+    * bucket. With `partner`, `__b` is `partner(__a, b)` for each later
+    * member b, built inside the per-anchor explode.
     */
-  private def bucketPairs(buckets: DataFrame, arr: String): DataFrame =
+  private def bucketPairs(buckets: DataFrame, arr: String,
+      partner: Option[(Column, Column) => Column] = None): DataFrame = {
+    val tail = slice(col(arr), col("__i") + 2, size(col(arr)))
     buckets
       .select(col(arr), posexplode(col(arr)).as(Seq("__i", "__a")))
-      .select(col("__a"),
-        explode(slice(col(arr), col("__i") + 2, size(col(arr)))).as("__b"))
-
-  /** The set a pair is scored on: the distinct word k-shingles. */
-  private def shingleSet(text: Column, k: Int): Column =
-    array_distinct(shingles(text, k))
-
-  /** Exact jaccard of two [[shingleSet]]s. |A∪B| = |A|+|B|−|A∩B|: both
-    * sides are distinct, so the subtraction form is the identical
-    * integer count without building a per-pair union hash set over the
-    * concatenated shingle arrays.
-    */
-  private def jaccard(a: Column, b: Column): Column = {
-    val interSz = size(array_intersect(a, b))
-    interSz.cast("double") / (size(a) + size(b) - interSz).cast("double")
+      .select(col("__a"), explode(partner.fold(tail)(p =>
+        transform(tail, b => p(col("__a"), b)))).as("__b"))
   }
 
   /** Candidate near-dup pairs: same band key in any band, deduplicated,
@@ -205,7 +200,7 @@ object Dedup {
     // of arrays, observed as a bimodal 3 s / 60+ s census. A shuffled
     // hash join keys on the narrow id and builds per-partition — the
     // only shape that survives corpus scale.
-    val sh = df.select(col(idCol).as("__id"), shingleSet(col(textCol), k).as("__sh"))
+    val sh = df.select(col(idCol).as("__id"), ShingleSet(col(textCol), k).as("__sh"))
     val melted = cands.select(col("id_a"), col("id_b"),
       explode(array(col("id_a"), col("id_b"))).as("__id"))
     melted
@@ -216,7 +211,7 @@ object Dedup {
           .as("sh_a"),
         first(when(col("__id") === col("id_b"), col("__sh")), ignoreNulls = true)
           .as("sh_b"))
-      .withColumn("jaccard", jaccard(col("sh_a"), col("sh_b")))
+      .withColumn("jaccard", ShingleJaccard(col("sh_a"), col("sh_b")))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }
@@ -226,10 +221,12 @@ object Dedup {
     * collects each bucket's (id, text) members, and buckets of fewer
     * than two members drop out there. `maxBucketSize` caps the members,
     * smallest ids first, before anything is shingled. Each member's
-    * shingle set is built once per bucket, every in-bucket pair is
-    * scored as it is generated, and a pair that collides in several
-    * bands is kept once (a `distinct` that shuffles only the verified
-    * pairs). Output (id_a, id_b, jaccard), id_a < id_b.
+    * shingle set is built once per bucket; the per-anchor explode emits
+    * each later member as an (id, jaccard) struct, so a pair is scored
+    * once, as it is generated, and the threshold filters the
+    * generator's output. A pair that collides in several bands is kept
+    * once (a `distinct` that shuffles only the verified pairs). Output
+    * (id_a, id_b, jaccard), id_a < id_b.
     */
   private def verifiedInBuckets(keys: DataFrame, textCol: String,
       idCol: String, threshold: Double, k: Int,
@@ -242,14 +239,17 @@ object Dedup {
     // bucket a second time.
     val members = when(size(docs) >= 2,
       transform(capped(sort_array(docs), maxBucketSize), d =>
-        struct(d("id").as("id"), shingleSet(d("text"), k).as("sh"))))
+        struct(d("id").as("id"), ShingleSet(d("text"), k).as("sh"))))
     val buckets = keys.filter(col(idCol).isNotNull)
       .groupBy(col("band"), col("key"))
       .agg(members.as("__m"))
-    bucketPairs(buckets, "__m")
+    // scored inside the generator: a filter on a projected jaccard would
+    // be pushed below the projection and score every passing pair twice
+    bucketPairs(buckets, "__m", Some((a: Column, b: Column) =>
+        struct(b("id").as("id"), ShingleJaccard(a("sh"), b("sh")).as("jaccard"))))
+      .filter(col("__b.jaccard") >= threshold)
       .select(col("__a.id").as("id_a"), col("__b.id").as("id_b"),
-        jaccard(col("__a.sh"), col("__b.sh")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+        col("__b.jaccard").as("jaccard"))
       .distinct()
   }
 
@@ -459,26 +459,7 @@ object Dedup {
     try {
       val keysH = historyKeys.getOrElse(
         lshBandKeys(history, textCol, idCol, numBands, rowsPerBand, k))
-      // The batch is BY CONTRACT the small side (a crawl window probing
-      // an established corpus), and its key frame is already persisted
-      // above — broadcast it so the history key table, the side
-      // proportional to the full corpus, is never shuffled for the
-      // probe. The broadcast is gated on the key frame's size estimate
-      // against the session's broadcast threshold: a batch above it (or
-      // a session with broadcast off) takes the shuffle join — the same
-      // pairs, without building an oversized table on the driver.
-      def side(keys: DataFrame, s: String) = keys.filter(col(idCol).isNotNull)
-        .select(col(idCol).as(s"id_$s"), col(textCol).as(s"text_$s"),
-          col("band"), col("key"))
-      val probeB = side(keysB, "b")
-      val broadcastLimit = batch.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-      val fits = broadcastLimit >= 0 &&
-        keysB.queryExecution.optimizedPlan.stats.sizeInBytes <= broadcastLimit
-      val cross = side(keysH, "a")
-        .join(if (fits) broadcast(probeB) else probeB, Seq("band", "key"))
-        .filter(jaccard(shingleSet(col("text_a"), k),
-          shingleSet(col("text_b"), k)) >= threshold)
-        .select(col("id_a"), col("id_b")).distinct()
+      val cross = historyProbe(keysH, keysB, textCol, idCol, threshold, k)
       // self pairs have both ids in batch, cross pairs one in history —
       // disjoint by construction (the id-ordering contract implies the
       // id SETS are disjoint), no cross-set dedup needed
@@ -487,6 +468,38 @@ object Dedup {
       Components.dropLosers(batch, idCol, self.unionByName(cross))(
         Components.batchLosers(batch, idCol, historyWins))
     } finally keysB.unpersist(false)
+  }
+
+  /** The batch×history pairs of [[incrementalNearDuplicates]]: one
+    * equi-join of the history's band keys against the batch's on
+    * (band, key), each joined row — it holds both texts — scored as it
+    * leaves the join (the threshold is the join condition, so each row
+    * is scored once) and kept once, as (id_a, id_b) with id_a from the
+    * history.
+    *
+    * The batch is BY CONTRACT the small side (a crawl window probing an
+    * established corpus), and its key frame is persisted by the caller
+    * — it is broadcast, so the history key table, the side proportional
+    * to the full corpus, is never shuffled for the probe. The broadcast
+    * is gated on the key frame's size estimate against the session's
+    * broadcast threshold: a batch above it (or a session with broadcast
+    * off) takes the shuffle join — the same pairs, without building an
+    * oversized table on the driver.
+    */
+  private[graft] def historyProbe(keysH: DataFrame, keysB: DataFrame,
+      textCol: String, idCol: String, threshold: Double, k: Int): DataFrame = {
+    def side(keys: DataFrame, s: String) = keys.filter(col(idCol).isNotNull)
+      .select(col(idCol).as(s"id_$s"), col(textCol).as(s"text_$s"),
+        col("band"), col("key"))
+    val probeB = side(keysB, "b")
+    val broadcastLimit = keysB.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val fits = broadcastLimit >= 0 &&
+      keysB.queryExecution.optimizedPlan.stats.sizeInBytes <= broadcastLimit
+    side(keysH, "a")
+      .join(if (fits) broadcast(probeB) else probeB, Seq("band", "key"))
+      .filter(ShingleJaccard(ShingleSet(col("text_a"), k),
+        ShingleSet(col("text_b"), k)) >= threshold)
+      .select(col("id_a"), col("id_b")).distinct()
   }
 
   // ----------------------------------------------------------- winnowing

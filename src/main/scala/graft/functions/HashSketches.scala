@@ -1,22 +1,37 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression,
+  UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext,
+  CodeGenerator, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType,
+  StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Single-pass hash-sketch expressions for the dedup operators.
+/** Single-pass hash-sketch and shingle-set kernels for the dedup
+  * operators.
   *
   * The declarative formulation (one `aggregate`/`transform` fold per
   * hash function / per bit) evaluates one md5 or xxhash64 expression
   * call per shingle per function — ~10 µs each through the expression
   * interpreter, which at 4 hashes × hundreds of shingles × millions of
   * documents dominates the pipeline. These expressions compute the whole
-  * sketch in one generated-code call: one tokenizer pass, one reused
-  * digest, all mins/counters updated together. Semantics are unchanged
-  * (verified against the declarative twin in DedupSpec).
+  * sketch in one generated-code call: the text encoded once, its
+  * shingles walked as byte ranges of that encoding ([[Shingles]]), one
+  * reused digest reset once per document, all mins/counters updated
+  * together. The minhash loop digests each `i|` + shingle in one update
+  * into a reused 16-byte buffer and keeps its mins as bytes, so a
+  * shingle costs no string, hex or array allocation.
+  *
+  * The near-dup verify scores pairs on the same shingles: [[shingleSet]]
+  * is a document's sorted distinct shingle array and [[jaccardSorted]]
+  * counts the intersection of two such arrays in one merge walk — no
+  * per-pair hash set. Semantics are unchanged: every kernel equals its
+  * declarative twin bit for bit (SketchEquivalenceSpec).
   */
 object HashSketches {
 
@@ -39,53 +54,131 @@ object HashSketches {
     new String(out)
   }
 
-  /** Walk the word k-shingles of `text` (k consecutive tokens joined
-    * by one space; texts shorter than k tokens yield the whole text) —
-    * the single shared shingle convention of every sketch below.
-    * split(-1) keeps trailing empty segments, matching Spark's split().
+  private val utf8 = java.nio.charset.StandardCharsets.UTF_8
+
+  /** The word k-shingles of a text as byte ranges — the single shared
+    * shingle convention of every kernel below: k consecutive
+    * `split(" ", -1)` tokens joined by one space (split(-1) keeps
+    * trailing empty segments, matching Spark's split()), and a text
+    * shorter than k tokens (`whole`) is one shingle, itself. UTF-8
+    * encodes only the space as 0x20 and is concatenative, so tokens
+    * split at each 0x20 byte of the text's UTF-8 and shingle s is the
+    * byte range `line[from(s), from(s) + len(s))`. `line` holds the text
+    * behind `pad` free bytes, room for a digest prefix in front of the
+    * first shingle.
     */
-  private def foreachShingle(text: String, k: Int)(f: String => Unit): Unit = {
-    val toks = text.split(" ", -1)
-    if (toks.length < k) { f(text); return }
-    val nShingles = toks.length - k + 1
-    var s = 0
-    while (s < nShingles) {
-      val sb = new java.lang.StringBuilder()
-      var j = 0
-      while (j < k) {
-        if (j > 0) sb.append(' ')
-        sb.append(toks(s + j))
-        j += 1
-      }
-      f(sb.toString)
-      s += 1
+  private final class Shingles(text: String, k: Int, pad: Int) {
+    val line: Array[Byte] = {
+      val b = text.getBytes(utf8)
+      val l = if (pad == 0) b else new Array[Byte](pad + b.length)
+      if (pad > 0) System.arraycopy(b, 0, l, pad, b.length)
+      l
     }
+    // token t starts at starts(t); starts(nTokens) is one past the end
+    private val starts: Array[Int] = {
+      var n = 1
+      var p = pad
+      while (p < line.length) { if (line(p) == ' ') n += 1; p += 1 }
+      val st = new Array[Int](n + 1)
+      st(0) = pad
+      var t = 1
+      p = pad
+      while (p < line.length) { if (line(p) == ' ') { st(t) = p + 1; t += 1 }; p += 1 }
+      st(n) = line.length + 1
+      st
+    }
+    private val nTokens = starts.length - 1
+    val whole: Boolean = nTokens < k
+    private val width = if (whole) nTokens else k
+    val count: Int = nTokens - width + 1
+    def from(s: Int): Int = starts(s)
+    def len(s: Int): Int = starts(s + width) - 1 - starts(s)
   }
 
   /** MinHash signature: for i in 0 until numHashes, min over word
     * k-shingles of hex(md5(s"$i|$shingle")) — exactly the per-column
-    * formulation in graft.dedup.Dedup, one pass.
+    * formulation in graft.dedup.Dedup, one pass. Each digest is one
+    * update over `i|` written in place just in front of the shingle's
+    * bytes (the bytes before a shingle are never read again: shingles
+    * start in increasing order) into one reused 16-byte buffer; each
+    * running min stays a digest, compared unsigned — the order of its
+    * lowercase hex — and only the final mins are hex-encoded.
     */
   def minhashSignature(text: String, numHashes: Int, k: Int): Array[String] = {
-    val mins = new Array[String](numHashes)
     val md = mdLocal.get()
-    foreachShingle(text, k) { shingle =>
+    md.reset()
+    val prefixes = Array.tabulate(numHashes)(i => s"$i|".getBytes(utf8))
+    val sh = new Shingles(text, k, if (numHashes == 0) 0 else prefixes.last.length)
+    val line = sh.line
+    val buf = new Array[Byte](16)
+    val mins = new Array[Array[Byte]](numHashes)
+    var s = 0
+    while (s < sh.count) {
+      val from = sh.from(s)
+      val len = sh.len(s)
       var i = 0
       while (i < numHashes) {
-        md.reset()
-        val h = hex(md.digest((i + "|" + shingle)
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-        if (mins(i) == null || h.compareTo(mins(i)) < 0) mins(i) = h
+        val p = prefixes(i)
+        System.arraycopy(p, 0, line, from - p.length, p.length)
+        md.update(line, from - p.length, len + p.length)
+        md.digest(buf, 0, 16) // also resets the digest
+        if (mins(i) == null) mins(i) = buf.clone()
+        else if (java.util.Arrays.compareUnsigned(buf, mins(i)) < 0)
+          System.arraycopy(buf, 0, mins(i), 0, 16)
         i += 1
       }
+      s += 1
     }
-    mins
+    mins.map(hex)
   }
 
   def minhashArray(text: UTF8String, numHashes: Int, k: Int): ArrayData = {
     if (text == null) return new GenericArrayData(Array.empty[Any])
     new GenericArrayData(minhashSignature(text.toString, numHashes, k)
       .map(s => UTF8String.fromString(s): Any))
+  }
+
+  /** The set a near-dup pair is scored on: the distinct word
+    * k-shingles of `text` (see [[Shingles]]), sorted by their UTF-8
+    * bytes. A text shorter than k tokens is its own one shingle, kept
+    * with the bytes it came in; a null text yields `[null]`.
+    */
+  def shingleSet(text: UTF8String, k: Int): ArrayData = {
+    if (text == null) return new GenericArrayData(Array[Any](null))
+    val sh = new Shingles(text.toString, k, 0)
+    if (sh.whole) return new GenericArrayData(Array[Any](text))
+    val sorted = Array.tabulate(sh.count)(s =>
+      UTF8String.fromBytes(sh.line, sh.from(s), sh.len(s)))
+    java.util.Arrays.sort(sorted.asInstanceOf[Array[AnyRef]])
+    var n = 0
+    var i = 0
+    while (i < sorted.length) {
+      if (n == 0 || sorted(i) != sorted(n - 1)) { sorted(n) = sorted(i); n += 1 }
+      i += 1
+    }
+    new GenericArrayData(java.util.Arrays.copyOf(sorted, n).asInstanceOf[Array[Any]])
+  }
+
+  /** Jaccard of two [[shingleSet]] arrays: the intersection counted in
+    * one merge walk (nulls first, then byte order), over
+    * |A|+|B|−|A∩B|. Two empty sets score NaN.
+    */
+  def jaccardSorted(a: ArrayData, b: ArrayData): Double = {
+    val na = a.numElements()
+    val nb = b.numElements()
+    var i = 0
+    var j = 0
+    var inter = 0
+    while (i < na && j < nb) {
+      val c =
+        if (a.isNullAt(i) || b.isNullAt(j))
+          java.lang.Boolean.compare(!a.isNullAt(i), !b.isNullAt(j))
+        else a.getUTF8String(i).compareTo(b.getUTF8String(j))
+      if (c == 0) { inter += 1; i += 1; j += 1 }
+      else if (c < 0) i += 1
+      else j += 1
+    }
+    inter.toDouble / (na + nb - inter).toDouble
   }
 
   /** Winnowing fingerprints (sorted distinct window-mins of 60-bit
@@ -97,17 +190,17 @@ object HashSketches {
     */
   def winnowFingerprints(text: String, k: Int, w: Int): Array[Long] = {
     val md = mdLocal.get()
-    val hashBuf = scala.collection.mutable.ArrayBuffer.empty[Long]
-    foreachShingle(text, k) { gram =>
-      md.reset()
-      val d = md.digest(gram.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    md.reset() // digest() leaves it reset for the next gram
+    val sh = new Shingles(text, k, 0)
+    val hashes = Array.tabulate(sh.count) { s =>
+      md.update(sh.line, sh.from(s), sh.len(s))
+      val d = md.digest()
       // first 15 hex chars = bytes 0..6 plus the high nibble of byte 7
       var v = 0L
       var i = 0
       while (i < 7) { v = (v << 8) | (d(i) & 0xffL); i += 1 }
-      hashBuf += ((v << 4) | ((d(7) & 0xf0L) >>> 4))
+      (v << 4) | ((d(7) & 0xf0L) >>> 4)
     }
-    val hashes = hashBuf.toArray
     val nShingles = hashes.length
     val kept = new java.util.TreeSet[java.lang.Long]()
     if (nShingles < w) {
@@ -145,11 +238,11 @@ object HashSketches {
   def simhashPortable60(text: String): Long = {
     val md = mdLocal.get()
     val votes = new Array[Int](60)
+    md.reset() // digest() leaves it reset for the next token
     val toks = text.split(" ", -1)
     var t = 0
     while (t < toks.length) {
-      md.reset()
-      val d = md.digest(toks(t).getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      val d = md.digest(toks(t).getBytes(utf8))
       // first 15 hex chars = bytes 0..6 plus the high nibble of byte 7
       var v = 0L
       var i = 0
@@ -270,14 +363,79 @@ case class WinnowSketchExpr(child: Expression, k: Int, w: Int)
     copy(child = newChild)
 }
 
+/** array<string> sorted distinct k-shingles of a text column; `[null]`
+  * for a null text, so the expression is never null itself.
+  */
+case class ShingleSetExpr(child: Expression, k: Int) extends UnaryExpression {
+
+  override def dataType: DataType = ArrayType(StringType, containsNull = true)
+
+  override def nullable: Boolean = false
+
+  override def prettyName: String = "shingle_set"
+
+  override def eval(input: InternalRow): Any =
+    HashSketches.shingleSet(child.eval(input).asInstanceOf[UTF8String], k)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    ev.copy(code = c.code + code"""
+      final ${CodeGenerator.javaType(dataType)} ${ev.value} =
+        graft.functions.HashSketches.shingleSet(${c.isNull} ? null : ${c.value}, $k);""",
+      isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): ShingleSetExpr =
+    copy(child = newChild)
+}
+
+/** Jaccard (double) of two [[ShingleSetExpr]] arrays; null when either
+  * is null.
+  */
+case class ShingleJaccardExpr(left: Expression, right: Expression)
+  extends BinaryExpression {
+
+  override def dataType: DataType = DoubleType
+
+  override def prettyName: String = "shingle_jaccard"
+
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    HashSketches.jaccardSorted(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) =>
+      s"graft.functions.HashSketches.jaccardSorted($a, $b)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): ShingleJaccardExpr =
+    copy(left = newLeft, right = newRight)
+}
+
+object ShingleSet {
+  def apply(text: Column, k: Int = 3): Column = {
+    require(k >= 1, s"k must be >= 1, got $k")
+    GraftBridge.column(ShingleSetExpr(GraftBridge.expression(text), k))
+  }
+}
+
+object ShingleJaccard {
+  def apply(a: Column, b: Column): Column =
+    GraftBridge.column(ShingleJaccardExpr(
+      GraftBridge.expression(a), GraftBridge.expression(b)))
+}
+
 object MinHashSignature {
-  def apply(text: Column, numHashes: Int = 4, k: Int = 3): Column =
+  def apply(text: Column, numHashes: Int = 4, k: Int = 3): Column = {
+    require(k >= 1, s"k must be >= 1, got $k")
     GraftBridge.column(MinHashSignatureExpr(GraftBridge.expression(text), numHashes, k))
+  }
 }
 
 object WinnowSketch {
-  def apply(text: Column, k: Int = 3, w: Int = 4): Column =
+  def apply(text: Column, k: Int = 3, w: Int = 4): Column = {
+    require(k >= 1, s"k must be >= 1, got $k")
     GraftBridge.column(WinnowSketchExpr(GraftBridge.expression(text), k, w))
+  }
 }
 
 object SimHash64 {

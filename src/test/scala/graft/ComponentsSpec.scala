@@ -119,6 +119,48 @@ class ComponentsSpec extends SparkSpec {
     assert(window.jobs.size === 0)
   }
 
+  /** `es` as a one-partition RDD-backed frame: not a LocalRelation, and
+    * Spark's bounded take reads it in one job (a wider frame takes one
+    * job per scale-up step).
+    */
+  private def rddEdges(es: Seq[(Long, Long)]): DataFrame =
+    spark.sparkContext.parallelize(es, 1).toDF("id_a", "id_b")
+
+  private val mixed = Seq[(Long, Long)]((5L, 3L), (3L, 9L), (9L, 9L), (7L, 8L),
+    (8L, 7L), (1L, 2L))
+
+  test("a non-local edge frame under the threshold closes in one bounded collect") {
+    val (got, window) = Trace.window(spark)(assertNoNewPins(
+      resultMap(Components.connectedComponents(rddEdges(mixed)))))
+    assert(window.flushed)
+    assert(got === unionFind(mixed.filter { case (a, b) => a != b }))
+    // the collect alone: no Pinned copy, no canonical shuffle, no checksum
+    assert(window.jobs.size === 1, window.jobs)
+  }
+
+  test("duplicated raw edges over the threshold close through the distributed loop") {
+    val es = Seq[(Long, Long)]((1L, 2L), (2L, 3L), (7L, 8L))
+    val raw = Seq.fill(4)(es).flatten ++ es.map(_.swap) // 15 rows, 3 edges
+    val rounds = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val got = resultMap(Components.connectedComponents(edgesDf(raw),
+      driverEdgeThreshold = 10L, roundObserver = (r, _) => { rounds += r; () }))
+    assert(got === unionFind(es))
+    assert(rounds.nonEmpty, "15 raw rows over a threshold of 10 must not close on the driver")
+  }
+
+  test("driverEdgeThreshold = 0 fires no bounded collect") {
+    def jobs(threshold: Long): Int = {
+      val (got, window) = Trace.window(spark)(resultMap(
+        Components.connectedComponents(rddEdges(mixed), driverEdgeThreshold = threshold)))
+      assert(window.flushed)
+      assert(got === unionFind(mixed.filter { case (a, b) => a != b }))
+      window.jobs.size
+    }
+    // a threshold of 1 reads two rows, finds too many and runs the same
+    // distributed loop: one job more
+    assert(jobs(1L) === jobs(0L) + 1)
+  }
+
   leakGatedTest("withoutLosers pins a loser plan that does not fold, until close()") {
     // the dedup specs' losers come from the driver-side closure and fold
     // to a LocalRelation, which pins nothing; a range-derived loser plan

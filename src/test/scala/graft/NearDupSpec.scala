@@ -16,6 +16,7 @@ import graft.dedup.Dedup
 class NearDupSpec extends SparkSpec {
 
   import spark.implicits._
+  import NearDupSpec.planted
 
   private type PairRow = (Long, Long, Long) // id_a, id_b, jaccard bits
 
@@ -39,31 +40,6 @@ class NearDupSpec extends SparkSpec {
 
   private def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
 
-  /** Seeded corpus: `background` unrelated documents of 30-60 Zipf-ish
-    * words plus `clusters` planted clusters (a seed text and 1-3 copies
-    * with one token dropped or two adjacent tokens swapped).
-    */
-  private def planted(seed: Long, background: Int = 300,
-      clusters: Int = 40): Seq[(Long, String)] = {
-    val rnd = new scala.util.Random(seed)
-    val vocab = (0 until 600).map(i => s"w$i")
-    def word(): String = vocab(math.min(vocab.size - 1,
-      (math.pow(vocab.size.toDouble, rnd.nextDouble()) - 1).toInt))
-    def text(): Vector[String] = Vector.fill(30 + rnd.nextInt(31))(word())
-    def edit(t: Vector[String]): Vector[String] = {
-      val i = rnd.nextInt(t.size - 1)
-      if (rnd.nextBoolean()) t.patch(i, Nil, 1)
-      else t.updated(i, t(i + 1)).updated(i + 1, t(i))
-    }
-    val texts = Vector.fill(background)(text()) ++
-      (0 until clusters).flatMap { _ =>
-        val s = text()
-        s +: Vector.fill(1 + rnd.nextInt(3))(edit(s))
-      }
-    rnd.shuffle(texts.indices.toVector).zip(texts)
-      .map { case (id, t) => (id.toLong, t.mkString(" ")) }
-  }
-
   test("null ids take part in no pair") {
     val docs = Seq[(Option[Long], String)](
       (Some(1L), "the same five word text"), (None, "the same five word text"),
@@ -84,6 +60,28 @@ class NearDupSpec extends SparkSpec {
     Seq((3L, 4L), (5L, 6L), (7L, 8L)).foreach { p =>
       assert(rows.exists(r => (r._1, r._2) == p), rows)
     }
+  }
+
+  test("two null-text docs pair at jaccard 1.0: both band keys are empty") {
+    val docs = Seq[(Long, String)]((1L, null), (2L, null), (3L, "a b c d e"))
+      .toDF("doc_id", "text")
+    val keys = Dedup.lshBandKeys(docs, "text", "doc_id")
+      .filter(col("text").isNull).select(col("key")).distinct().collect()
+    assert(keys.map(_.getString(0)).toSeq === Seq(""))
+    // each null text's shingle set is [null], and [null] ∩ [null] = [null]
+    assert(assertTwins(docs) === Seq((1L, 2L, bits(1.0))))
+  }
+
+  test("each verify plan scores a pair with one jaccard call") {
+    val docs = planted(4).toDF("doc_id", "text")
+    // the unexecuted adaptive plan prints the physical plan once (a
+    // final one would print the initial plan beside it)
+    def jaccardCalls(df: DataFrame): Int =
+      "shingle_jaccard\\(".r.findAllMatchIn(df.queryExecution.executedPlan.toString).size
+    assert(jaccardCalls(Dedup.nearDuplicates(docs, "text", "doc_id")) === 1)
+    val keysB = Dedup.lshBandKeys(docs.filter(col("doc_id") >= 250L), "text", "doc_id")
+    val keysH = Dedup.lshBandKeys(docs.filter(col("doc_id") < 250L), "text", "doc_id")
+    assert(jaccardCalls(Dedup.historyProbe(keysH, keysB, "text", "doc_id", 0.7, 3)) === 1)
   }
 
   test("all-identical texts, uncapped and capped at 16") {
@@ -196,7 +194,7 @@ class NearDupSpec extends SparkSpec {
     spark.read.parquet(dir)
   }
 
-  test("dropNearDuplicates pass fires at most 7 jobs") {
+  test("dropNearDuplicates pass fires at most 5 jobs") {
     val docs = plantedParquet(2)
     val (survivors, window) = Trace.window(spark)(assertNoNewPins {
       val r = Dedup.dropNearDuplicates(docs, "text", "doc_id")
@@ -204,11 +202,12 @@ class NearDupSpec extends SparkSpec {
     })
     assert(window.flushed)
     assert(survivors.length < docs.count()) // planted copies are gone
-    // 7 with the in-bucket verify; the join-back verify fires 11
-    assert(window.jobs.size <= 7, window.jobs.map(_.description))
+    // 5 closing on one bounded collect; 7 through the pinned canonical
+    // edges and their checksum, 11 with the join-back verify
+    assert(window.jobs.size <= 5, window.jobs.map(_.description))
   }
 
-  test("dropNearDuplicatesFromKeys pass fires at most 8 jobs") {
+  test("dropNearDuplicatesFromKeys pass fires at most 6 jobs") {
     val docs = plantedParquet(2)
     val (survivors, window) = Trace.window(spark)(assertNoNewPins {
       val keys = Dedup.lshBandKeys(docs, "text", "doc_id").persist()
@@ -217,11 +216,12 @@ class NearDupSpec extends SparkSpec {
     })
     assert(window.flushed)
     assert(survivors.length < docs.count())
-    // 8 verifying in the bucket; the referenced-id join-back fires 17
-    assert(window.jobs.size <= 8, window.jobs.map(_.description))
+    // 6 closing on one bounded collect; 8 through the pinned canonical
+    // edges and their checksum, 17 with the referenced-id join-back
+    assert(window.jobs.size <= 6, window.jobs.map(_.description))
   }
 
-  test("incrementalNearDuplicates fires at most 20 jobs") {
+  test("incrementalNearDuplicates fires at most 18 jobs") {
     val docs = plantedParquet(2)
     val (survivors, window) = Trace.window(spark)(assertNoNewPins {
       val r = Dedup.incrementalNearDuplicates(docs.filter(col("doc_id") < 250L),
@@ -230,7 +230,36 @@ class NearDupSpec extends SparkSpec {
     })
     assert(window.flushed)
     assert(survivors.length < docs.filter(col("doc_id") >= 250L).count())
-    // 20 verifying on the keys' texts; the referenced-id join-back fires 40
-    assert(window.jobs.size <= 20, window.jobs.map(_.description))
+    // 18 closing on one bounded collect; 20 through the pinned canonical
+    // edges and their checksum, 40 with the referenced-id join-back
+    assert(window.jobs.size <= 18, window.jobs.map(_.description))
+  }
+}
+
+object NearDupSpec {
+
+  /** Seeded corpus: `background` unrelated documents of 30-60 Zipf-ish
+    * words plus `clusters` planted clusters (a seed text and 1-3 copies
+    * with one token dropped or two adjacent tokens swapped).
+    */
+  def planted(seed: Long, background: Int = 300,
+      clusters: Int = 40): Seq[(Long, String)] = {
+    val rnd = new scala.util.Random(seed)
+    val vocab = (0 until 600).map(i => s"w$i")
+    def word(): String = vocab(math.min(vocab.size - 1,
+      (math.pow(vocab.size.toDouble, rnd.nextDouble()) - 1).toInt))
+    def text(): Vector[String] = Vector.fill(30 + rnd.nextInt(31))(word())
+    def edit(t: Vector[String]): Vector[String] = {
+      val i = rnd.nextInt(t.size - 1)
+      if (rnd.nextBoolean()) t.patch(i, Nil, 1)
+      else t.updated(i, t(i + 1)).updated(i + 1, t(i))
+    }
+    val texts = Vector.fill(background)(text()) ++
+      (0 until clusters).flatMap { _ =>
+        val s = text()
+        s +: Vector.fill(1 + rnd.nextInt(3))(edit(s))
+      }
+    rnd.shuffle(texts.indices.toVector).zip(texts)
+      .map { case (id, t) => (id.toLong, t.mkString(" ")) }
   }
 }

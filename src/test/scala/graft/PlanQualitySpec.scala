@@ -355,6 +355,16 @@ class PlanQualitySpec extends SparkSpec {
       org.apache.spark.sql.functions.col("text"), 4, 3)))
     // formatted mode marks whole-stage-codegen operators with '*'
     assert(p.contains("* Project"), p)
+    // the verify's jaccard kernel, in verifyJaccard's Project above the
+    // pair groupBy: the final adaptive plan marks a codegen'd operator
+    // with its stage id, `*(n)`
+    val cands = graft.dedup.Dedup.lshCandidatePairs(d, "text", "doc_id")
+    val v = graft.dedup.Dedup.verifyJaccard(cands, d, "text", "doc_id", 0.0)
+    v.collect()
+    val fp = v.queryExecution.executedPlan.toString
+    assert(fp.contains("isFinalPlan=true"), fp)
+    assert(fp.linesIterator.exists(l =>
+      l.matches(""".*\*\(\d+\) Project .*shingle_jaccard\(.*""")), fp)
   }
 
   test("q72: hot-gram set broadcasts when requested; gram census partial-aggregates") {

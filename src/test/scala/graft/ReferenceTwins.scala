@@ -205,6 +205,20 @@ object ReferenceTwins {
   }
 
   // ------------------------------------------------ near-dup verify
+  /** Interpreted twin of `graft.functions.ShingleSet`: the distinct
+    * k-shingles in first-seen order (the kernel sorts them).
+    */
+  def shingleSetInterpreted(text: Column, k: Int = 3): Column =
+    array_distinct(shinglesInline(text, k))
+
+  /** Interpreted twin of `graft.functions.ShingleJaccard`: |A∩B| from
+    * `array_intersect`'s hash set over |A|+|B|−|A∩B|.
+    */
+  def jaccardInterpreted(a: Column, b: Column): Column = {
+    val interSz = size(array_intersect(a, b))
+    interSz.cast("double") / (size(a) + size(b) - interSz).cast("double")
+  }
+
   /** `Dedup.nearDuplicates` as it was written before it verified pairs
     * inside their bucket: the LSH candidate pairs (a bucket holds ids
     * only), then `Dedup.verifyJaccard`, which scans the corpus again for

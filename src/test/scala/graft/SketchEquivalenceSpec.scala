@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.dedup.Dedup
-import graft.functions.{MinHashSignature, SimHash64, TextSim, TokenBagCosine}
+import graft.functions.{MinHashSignature, ShingleJaccard, ShingleSet, SimHash64,
+  TextSim, TokenBagCosine}
 
 /** The single-pass sketch expressions must agree bit-for-bit with their
   * declarative (built-in-fold) twins, and the codegen'd cosine with the
@@ -22,11 +23,60 @@ class SketchEquivalenceSpec extends SparkSpec {
     (4L, "alpha beta gamma delta epsilon zeta eta theta iota kappa")
   ).toDF("id", "text")
 
+  /** The shingling edge cases plus a planted near-dup corpus. */
+  private def shingled: DataFrame = Seq[(Long, String)](
+    (100L, null),
+    (101L, ""),
+    (102L, "a  b  c d"),                      // double spaces: empty tokens
+    (103L, "a b c d "),                       // trailing space
+    (104L, "   "),                            // spaces only
+    (105L, "a b"),                            // shorter than k = 3
+    (106L, "x y z x y z x y z"),              // repeated shingles
+    (107L, "naïve café über straße"),         // multi-byte UTF-8
+    (108L, "日本語 の テキスト です 😀 😀 の"),
+    (109L, "Zebra apple Apple zebra émile")   // case and byte order
+  ).toDF("id", "text").union(texts)
+    .union(NearDupSpec.planted(11, background = 60, clusters = 20).toDF("id", "text"))
+
   test("minhash expression equals the declarative md5-min fold") {
-    val cmp = texts.select(
-      MinHashSignature(col("text"), 4, 3).as("fast"),
-      array((0 until 4).map(i => ReferenceTwins.minhashColumn(col("text"), i, 3)): _*).as("slow"))
-    assert(cmp.filter(col("fast") =!= col("slow")).count() === 0)
+    // the kernel keeps its mins as digest bytes, compared unsigned; the
+    // twin takes the min of the lowercase hex strings. A null text has
+    // no signature in the kernel and an array of nulls in the twin.
+    val docs = shingled.filter(col("text").isNotNull)
+    Seq(1, 3).foreach { k =>
+      val cmp = docs.select(
+        MinHashSignature(col("text"), 4, k).as("fast"),
+        array((0 until 4).map(i => ReferenceTwins.minhashColumn(col("text"), i, k)): _*)
+          .as("slow"))
+      assert(cmp.filter(!(col("fast") <=> col("slow"))).count() === 0, s"k = $k")
+    }
+  }
+
+  test("shingle-set and jaccard kernels equal the interpreted twin bit for bit") {
+    // over the local rows the kernels are folded on the driver
+    // (interpreted); over a shuffled frame they run as generated code
+    Seq(1, 3).foreach { k =>
+      def setsOf(docs: DataFrame) = docs.select(col("id"),
+        ShingleSet(col("text"), k).as("fast"),
+        ReferenceTwins.shingleSetInterpreted(col("text"), k).as("slow"))
+      val sets = setsOf(shingled.repartition(2))
+      // the same set, sorted by the kernel
+      Seq(setsOf(shingled), sets).foreach { ss =>
+        assert(ss.filter(!(col("fast") <=> array_sort(col("slow")))).count() === 0,
+          s"k = $k")
+      }
+      val pairs = sets.as("a").crossJoin(sets.as("b")).select(
+        ShingleJaccard(col("a.fast"), col("b.fast")).as("fast"),
+        ReferenceTwins.jaccardInterpreted(col("a.slow"), col("b.slow")).as("slow"))
+        .collect()
+      val n = sets.count()
+      assert(pairs.length === n * n)
+      val bits = (d: Double) => java.lang.Double.doubleToRawLongBits(d)
+      pairs.foreach { r =>
+        assert(bits(r.getDouble(0)) === bits(r.getDouble(1)), s"k = $k: $r")
+      }
+      assert(pairs.exists(r => r.getDouble(0) > 0.0 && r.getDouble(0) < 1.0))
+    }
   }
 
   test("winnow sketch expression equals the declarative window-min fold") {
