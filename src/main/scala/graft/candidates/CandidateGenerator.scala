@@ -2,7 +2,8 @@ package graft.candidates
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.TextSim
+import graft.dedup.Dedup
+import graft.functions.{MinHashSignature, TextSim}
 import graft.schema.PairSchema
 
 /** Strategy for J3 candidate-pair generation (reference
@@ -52,30 +53,41 @@ trait CandidateGenerator extends Serializable {
 }
 
 /** Sentinel for cost-based generator selection: resolved by
-  * [[CandidateGenerator.auto]] (EvalDriver does this when handed
-  * AutoSelect) into the prekeyed blocked path or the cross scan from
-  * (batch size, scorer cost) BEFORE any explanation runs — its own
-  * `pairs` is never called.
+  * [[CandidateGenerator.resolve]] (the explainer and EvalDriver do this)
+  * into the prekeyed blocked path or the cross scan from (batch size,
+  * scorer cost) BEFORE any explanation runs — its own `pairs` is never
+  * called.
   */
 case object AutoSelect extends CandidateGenerator {
   override def pairs(probe: DataFrame, source: DataFrame,
       probeIsLeft: Boolean, schema: PairSchema): DataFrame =
     throw new IllegalStateException(
-      "AutoSelect must be resolved via CandidateGenerator.auto before use")
+      "AutoSelect must be resolved via CandidateGenerator.resolve before use")
 }
 
 object CandidateGenerator {
 
-  /** Resolved selection: the generator to use plus ownership of any
-    * prekeyed caches it rides on. `close()` releases them (no-op for
-    * the cross path) — same contract as [[PrekeyedBlocking]].
+  /** Resolved selection: the generator to use plus ownership of the
+    * cached band-keyed source frames it rides on (none for the cross
+    * path or an explicitly chosen generator). `close()` releases them,
+    * so nothing stays pinned once the batch ends.
     */
   final class Selection private[graft] (
       val generator: CandidateGenerator,
-      prekeyed: Option[PrekeyedBlocking]) extends AutoCloseable {
-    def isPrekeyed: Boolean = prekeyed.isDefined
-    override def close(): Unit = prekeyed.foreach(_.close())
+      keyed: Seq[DataFrame] = Nil) extends AutoCloseable {
+    def isPrekeyed: Boolean = keyed.nonEmpty
+    override def close(): Unit = keyed.foreach(_.unpersist(false))
   }
+
+  /** [[AutoSelect]] resolved by [[auto]]; any other generator is used
+    * as chosen and owns nothing.
+    */
+  def resolve(gen: CandidateGenerator, sources: Seq[DataFrame],
+      batchSize: Int, costlyScorer: Boolean): Selection =
+    gen match {
+      case AutoSelect => auto(sources, batchSize, costlyScorer)
+      case g => new Selection(g)
+    }
 
   /** Cost-based generator choice, encoding the measured trade
     * (SURVEY.md round 5 ScaleSmoke; [[LshBlockingGenerator]]'s
@@ -143,10 +155,9 @@ object CandidateGenerator {
           .head().getAs[Long]("pair_completeness_q") >=
           math.round(minPairCompleteness * 1e9)
       }
-    if ((batchSize >= 2 || costlyScorer) && bigEnough && recallOk) {
-      val handle = LshBlockingGenerator.forBatch(sources)
-      new Selection(handle.generator, Some(handle))
-    } else new Selection(CrossJoinGenerator, None)
+    if ((batchSize >= 2 || costlyScorer) && bigEnough && recallOk)
+      LshBlockingGenerator.forBatch(sources)
+    else new Selection(CrossJoinGenerator)
   }
 }
 
@@ -215,24 +226,14 @@ final case class LshBlockingGenerator(numBands: Int = 4, rowsPerBand: Int = 2,
   }
 }
 
-/** Caller-owned handle for a batch of blocked explanations: holds the
-  * generator wired to the cached band-keyed frames; `close()` releases
-  * every cache (nothing stays pinned once the batch ends — the
-  * EvalDriver leak discipline).
-  */
-final class PrekeyedBlocking private[candidates] (
-    val generator: LshBlockingGenerator,
-    keyed: Seq[DataFrame]) extends AutoCloseable {
-  override def close(): Unit = keyed.foreach(_.unpersist(false))
-}
-
 object LshBlockingGenerator {
 
   /** Pre-key `sources` for a batch of explanations over the same
     * corpora: one sketch pass per source (paid here, eagerly), then
     * every probe in the batch is a band-key filter over the cached
-    * keyed frame. Use with the frames you pass to the explainer —
-    * `prekeyed` matches by reference identity:
+    * keyed frame. The returned selection owns the caches. Use with the
+    * frames you pass to the explainer — `prekeyed` matches by reference
+    * identity:
     * {{{
     * val batch = LshBlockingGenerator.forBatch(Seq(lsource, rsource))
     * try EvalDriver.evalCf(lsource, rsource, ..., candidateGen = batch.generator)
@@ -240,11 +241,11 @@ object LshBlockingGenerator {
     * }}}
     */
   def forBatch(sources: Seq[DataFrame], numBands: Int = 4,
-      rowsPerBand: Int = 2, k: Int = 3): PrekeyedBlocking = {
+      rowsPerBand: Int = 2, k: Int = 3): CandidateGenerator.Selection = {
     val keyed = sources.map(s =>
       s -> withBandKeys(s, numBands, rowsPerBand, k).cache())
     keyed.foreach(_._2.count())
-    new PrekeyedBlocking(
+    new CandidateGenerator.Selection(
       LshBlockingGenerator(numBands, rowsPerBand, k, keyed.toMap),
       keyed.map(_._2))
   }
@@ -281,24 +282,16 @@ object LshBlockingGenerator {
     val idType = source.schema("id").dataType
     require(graft.operators.TopK.integralKeyType(idType),
       s"selfRecallCensus requires an integral id column, got $idType")
-    val text = TextSim.recordText(
-      source.columns.filter(_ != "id").map(col).toIndexedSeq)
     val sampled = source
       .orderBy(xxhash64(col("id").cast("string"), lit(seed)), col("id"))
       .limit(sampleSize)
-      .select(col("id").cast("long").as("__truth"), text.as("__text"))
+      .select(col("id").cast("long").as("__truth"), recordText(source).as("__text"))
     val both = sampled
-      .select(col("__truth"), lit(0L).as("__copy"), col("__text"))
-      .unionByName(sampled.select(col("__truth"), lit(1L).as("__copy"),
+      .select(col("__truth"), (col("__truth") * 2).as("__pid"), col("__text"))
+      .unionByName(sampled.select(col("__truth"), (col("__truth") * 2 + 1).as("__pid"),
         regexp_replace(col("__text"), "\\s+\\S+$", "").as("__text")))
-    val sigged = both.withColumn("__sig",
-      graft.functions.MinHashSignature(col("__text"), numBands * rowsPerBand, k))
-    val keyed = (0 until numBands).foldLeft(sigged) { (d, b) =>
-      d.withColumn(s"__bk$b", concat_ws("#",
-        (0 until rowsPerBand).map(r =>
-          element_at(col("__sig"), b * rowsPerBand + r + 1)): _*))
-    }.withColumn("__pid", col("__truth") * 2 + col("__copy"))
-    Blocking.orPairCompleteness(keyed,
+    Blocking.orPairCompleteness(
+      keyedFrame(both, col("__text"), numBands, rowsPerBand, k),
       (0 until numBands).map(b => s"__bk$b"), "__truth", "__pid")
   }
 
@@ -317,16 +310,23 @@ object LshBlockingGenerator {
     * sketch work per explanation.
     */
   def withBandKeys(source: DataFrame, numBands: Int = 4,
-      rowsPerBand: Int = 2, k: Int = 3): DataFrame = {
-    val text = TextSim.recordText(
-      source.columns.filter(_ != "id").map(col).toIndexedSeq)
-    val sigged = source.withColumn("__sig",
-      graft.functions.MinHashSignature(text, numBands * rowsPerBand, k))
-    (0 until numBands).foldLeft(sigged) { (d, b) =>
-      d.withColumn(s"__bk$b", concat_ws("#",
-        (0 until rowsPerBand).map(r =>
-          element_at(col("__sig"), b * rowsPerBand + r + 1)): _*))
-    }.drop("__sig")
+      rowsPerBand: Int = 2, k: Int = 3): DataFrame =
+    keyedFrame(source, recordText(source), numBands, rowsPerBand, k)
+
+  /** The text a record is keyed on: every column but `id`. */
+  private def recordText(source: DataFrame): Column =
+    TextSim.recordText(source.columns.filter(_ != "id").map(col).toIndexedSeq)
+
+  /** `df`'s columns plus `__bk0..__bkN`, the band keys
+    * ([[graft.dedup.Dedup.bandKeyCols]]) of the minhash signature of
+    * `text`: one select adds the signature, one more builds every key.
+    */
+  private def keyedFrame(df: DataFrame, text: Column, numBands: Int,
+      rowsPerBand: Int, k: Int): DataFrame = {
+    val keys = Dedup.bandKeyCols(col("__sig"), numBands, rowsPerBand)
+      .zipWithIndex.map { case (key, b) => key.as(s"__bk$b") }
+    df.select(col("*"), MinHashSignature(text, numBands * rowsPerBand, k).as("__sig"))
+      .select(df.columns.map(col).toIndexedSeq ++ keys: _*)
   }
 }
 

@@ -41,19 +41,6 @@ object Dedup {
       when(size(toks) >= k, TextAnalysis.windows(toks, k)).otherwise(array(text))
     }
 
-  /** Append `numHashes` minhash columns mh0..mh{n-1} (single-pass
-    * sketch expression: minhash i is the min over shingles of
-    * md5(i || '|' || shingle)).
-    */
-  def withMinhashSignature(df: DataFrame, textCol: String,
-      numHashes: Int = 4, k: Int = 3): DataFrame = {
-    val sigged = df.withColumn("__sig",
-      MinHashSignature(col(textCol), numHashes, k))
-    (0 until numHashes).foldLeft(sigged) { (d, i) =>
-      d.withColumn(s"mh$i", element_at(col("__sig"), i + 1))
-    }.drop("__sig")
-  }
-
   /** Band-scheme governor for the minhash LSH passes — the minhash
     * twin of the embedding side's `Ann.autoProbe`: pick (numBands,
     * rowsPerBand) for a target jaccard `threshold` under a
@@ -97,31 +84,40 @@ object Dedup {
     }
   }
 
-  /** LSH banding: band key b = concatenated minhashes of that band.
-    * Returns (idCol, textCol, band, key) rows — one per band, each
-    * carrying the document's id and text — ready for the bucket pass,
-    * which verifies pairs on the texts the keys carry. rowsPerBand=2,
-    * numBands=2 by default (4 hashes); [[autoBands]] picks a
-    * recall-governed scheme for production calls. Throws when
-    * `numBands`, `rowsPerBand` or `k` is below 1: with no bands no
-    * document gets a key, and a dedup over the keys would silently
-    * return its whole input.
+  /** The band keys of a minhash signature column — the one band scheme
+    * the dedup operators, the streaming state and candidate blocking
+    * share: band b is components b·r+1 … b·r+r of `sig` (r =
+    * `rowsPerBand`) joined by `#`, one key column per band. A null
+    * signature keys every band `""`. Throws when `numBands` or
+    * `rowsPerBand` is below 1: with no bands no document gets a key,
+    * and with empty bands every document shares every key.
+    */
+  private[graft] def bandKeyCols(sig: Column, numBands: Int,
+      rowsPerBand: Int): Seq[Column] = {
+    require(numBands >= 1, s"numBands must be >= 1, got $numBands")
+    require(rowsPerBand >= 1, s"rowsPerBand must be >= 1, got $rowsPerBand")
+    (0 until numBands).map { b =>
+      concat_ws("#", (0 until rowsPerBand).map(r =>
+        element_at(sig, b * rowsPerBand + r + 1)): _*)
+    }
+  }
+
+  /** LSH banding ([[bandKeyCols]]). Returns (idCol, textCol, band, key)
+    * rows — one per band, each carrying the document's id and text —
+    * ready for the bucket pass, which verifies pairs on the texts the
+    * keys carry. rowsPerBand=2, numBands=2 by default (4 hashes);
+    * [[autoBands]] picks a recall-governed scheme for production calls.
+    * Throws when `numBands`, `rowsPerBand` or `k` is below 1.
     */
   def lshBandKeys(df: DataFrame, textCol: String, idCol: String,
       numBands: Int = 2, rowsPerBand: Int = 2, k: Int = 3): DataFrame = {
-    require(numBands >= 1, s"numBands must be >= 1, got $numBands")
-    require(rowsPerBand >= 1, s"rowsPerBand must be >= 1, got $rowsPerBand")
-    require(k >= 1, s"k must be >= 1, got $k")
+    val keyCols = bandKeyCols(col("__sig"), numBands, rowsPerBand)
     // two selects, not a withColumn per hash: each Dataset step costs
     // the driver an analysis pass, and every dedup pass builds these keys
-    val sig = df.select(col(idCol), col(textCol),
-      MinHashSignature(col(textCol), numBands * rowsPerBand, k).as("__sig"))
-    val keyCols = (0 until numBands).map { b =>
-      concat_ws("#", (0 until rowsPerBand).map(r =>
-        element_at(col("__sig"), b * rowsPerBand + r + 1)): _*)
-    }
-    sig.select(col(idCol), col(textCol),
-      posexplode(array(keyCols: _*)).as(Seq("band", "key")))
+    df.select(col(idCol), col(textCol),
+        MinHashSignature(col(textCol), numBands * rowsPerBand, k).as("__sig"))
+      .select(col(idCol), col(textCol),
+        posexplode(array(keyCols: _*)).as(Seq("band", "key")))
   }
 
   /** A bucket's sorted member array cut to its `maxBucketSize` first

@@ -170,14 +170,11 @@ object IncrementalDedup {
     * `survivors` (batch rows, in the batch's schema, that are new vs
     * history and within-batch representatives, plus the null-text rows)
     * and `historyRows` (the survivors' (id, band, key, sig) rows to
-    * append to the state table). Nothing is pinned, so `close()` has
-    * nothing to release. `probe` is the history probe frame the batch
-    * collected, kept for plan inspection.
+    * append to the state table). Nothing is pinned. `probe` is the
+    * history probe frame the batch collected, kept for plan inspection.
     */
   final case class NearDupBatch(survivors: DataFrame, historyRows: DataFrame,
-      private[graft] val probe: DataFrame) extends AutoCloseable {
-    override def close(): Unit = ()
-  }
+      private[graft] val probe: DataFrame)
 
   /** The state-table schema: (id, band, key, sig). */
   private[graft] def stateSchema(idCol: String,
@@ -230,10 +227,7 @@ object IncrementalDedup {
       rowsPerBand: Int = 2, k: Int = 3): NearDupBatch = {
     val spark = batch.sparkSession
     val nh = numBands * rowsPerBand
-    val keyExprs = (0 until numBands).map { b =>
-      concat_ws("#", (0 until rowsPerBand).map(r =>
-        element_at(col("__sig"), b * rowsPerBand + r + 1)): _*)
-    }
+    val keyCols = Dedup.bandKeyCols(col("__sig"), numBands, rowsPerBand)
     // 1. the one collect of the batch
     val n = batch.schema.length
     val (idAt, textAt) = (batch.schema.fieldIndex(idCol),
@@ -242,7 +236,7 @@ object IncrementalDedup {
       .select(col("*"),
         graft.functions.MinHashSignature(col(textCol), nh, k).as("__sig"))
       .select(col("*"),
-        when(col("__sig").isNotNull, array(keyExprs: _*)).as("__keys"))
+        when(col("__sig").isNotNull, array(keyCols: _*)).as("__keys"))
       .collect()
     def idOf(r: Row): Any = r.get(idAt)
     def sigOf(r: Row): Seq[String] = r.getSeq[String](n)

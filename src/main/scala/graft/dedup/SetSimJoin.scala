@@ -22,7 +22,8 @@ import org.apache.spark.sql.functions._
   *  - prefixes hold each document's RAREST tokens, so prefix buckets
   *    are small by construction (df-ascending is the skew guard the
   *    algorithm is named for); `maxBucketSize` caps adversarial cases
-  *    (recall trade, off by default — the Dedup.lshBuckets contract);
+  *    (recall trade, off by default — the `maxBucketSize` contract of
+  *    [[Dedup.lshCandidatePairs]]);
   *  - verification compares sorted token arrays per candidate pair —
   *    integer cross-multiplied (`|∩|·100 ≥ t100·|∪|`), no doubles.
   */

@@ -90,22 +90,6 @@ object EvalDriver {
     (result, n)
   }
 
-  /** Resolve [[graft.candidates.AutoSelect]] into a concrete generator
-    * from (batch size, scorer cost) — the cost-based choice
-    * [[graft.candidates.CandidateGenerator.auto]] encodes. Pass-through
-    * (with a no-op close) for explicitly-chosen generators.
-    */
-  private def resolveGen(
-      gen: graft.candidates.CandidateGenerator,
-      lsource: DataFrame, rsource: DataFrame,
-      batchSize: Int, model: ERModel): graft.candidates.CandidateGenerator.Selection =
-    gen match {
-      case graft.candidates.AutoSelect =>
-        graft.candidates.CandidateGenerator.auto(
-          Seq(lsource, rsource), batchSize, model.costlyScorer)
-      case g => new graft.candidates.CandidateGenerator.Selection(g, None)
-    }
-
   final case class CfRow(
       ltableId: Long, rtableId: Long, label: Int,
       latencySec: Double, nCf: Long,
@@ -132,7 +116,8 @@ object EvalDriver {
     import spark.implicits._
     Files.createDirectories(Paths.get(outDir))
     val items = testPairs.limit(maxRows).collect().toSeq
-    val selection = resolveGen(candidateGen, lsource, rsource, items.size, model)
+    val selection = graft.candidates.CandidateGenerator.resolve(candidateGen,
+      Seq(lsource, rsource), items.size, model.costlyScorer)
     val explainer = new CertaExplainer(lsource, rsource, schema,
       candidateGen = selection.generator)
 
@@ -215,7 +200,8 @@ object EvalDriver {
     Files.createDirectories(Paths.get(outDir))
 
     val items = testPairs.limit(maxRows).collect().toSeq
-    val selection = resolveGen(candidateGen, lsource, rsource, items.size, model)
+    val selection = graft.candidates.CandidateGenerator.resolve(candidateGen,
+      Seq(lsource, rsource), items.size, model.costlyScorer)
     val explainer = new CertaExplainer(lsource, rsource, schema,
       candidateGen = selection.generator)
     val rows = try parMap(items, parallelism,

@@ -78,15 +78,11 @@ class CertaExplainer(
   @transient private lazy val selections = scala.collection.mutable
     .Map.empty[Boolean, graft.candidates.CandidateGenerator.Selection]
   private def resolvedGen(model: ERModel): graft.candidates.CandidateGenerator =
-    candidateGen match {
-      case graft.candidates.AutoSelect =>
-        synchronized {
-          selections.getOrElseUpdate(model.costlyScorer,
-            graft.candidates.CandidateGenerator.auto(
-              Seq(lsource, rsource), expectedBatch, model.costlyScorer))
-            .generator
-        }
-      case g => g
+    synchronized {
+      selections.getOrElseUpdate(model.costlyScorer,
+        graft.candidates.CandidateGenerator.resolve(candidateGen,
+          Seq(lsource, rsource), expectedBatch, model.costlyScorer))
+        .generator
     }
 
   // the G2 fallback's fresh-id offsets: both source id maxima in one

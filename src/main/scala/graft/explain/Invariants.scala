@@ -35,18 +35,6 @@ object Invariants {
     Probe("transitivity", 9, "u", "v"), Probe("transitivity", 10, "v", "w"),
     Probe("transitivity", 11, "u", "w"))
 
-  /** Check identity/symmetry/transitivity for every triangle, resolving
-    * its vertices against the sources.
-    *
-    * @param triangles (u, v, w) sided-id triples
-    * @param lsource,rsource un-prefixed entity sources
-    * @return (u, v, w, identity, symmetry, transitivity)
-    */
-  def checkAll(triangles: DataFrame, lsource: DataFrame, rsource: DataFrame,
-      model: ERModel, schema: PairSchema = PairSchema.default): DataFrame =
-    checkAll(Perturb.resolve(triangles, Perturb.sourceRecords(triangles, lsource, rsource)),
-      model, schema)
-
   /** Check identity/symmetry/transitivity for every resolved triangle.
     *
     * @return (u, v, w, identity, symmetry, transitivity)

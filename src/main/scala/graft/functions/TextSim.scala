@@ -6,12 +6,10 @@ import org.apache.spark.sql.functions._
 /** Text-similarity scalar functions (reference local_explain.py:218-234
   * `cs`, utils.py:75-81 `diff`).
   *
-  * The token-bag cosine is a Scala UDF: semantics match the reference's
+  * The token-bag cosine is a codegen'd Catalyst expression
+  * ([[TokenBagCosine]]) whose semantics match the reference's
   * Counter-based cosine exactly (regex `\w+` tokens, integer term
-  * frequencies, double math). A codegen'd Catalyst Expression is the
-  * upgrade path if this ever dominates a profile; per SURVEY.md §2.9 it
-  * is a nice-to-have, not a need — the UDF sits inside one projection
-  * and does not break pipelining.
+  * frequencies, double math); [[cosineBags]] is its plain-Scala twin.
   */
 object TextSim {
 

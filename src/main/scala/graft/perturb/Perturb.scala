@@ -66,25 +66,6 @@ object Perturb {
     VertexRecords(lSchema, rSchema, all.reverseIterator.toMap)
   }
 
-  /** The records of the triangles' vertices read from the sources —
-    * for callers that hold only the sources (the one-shot [[forDepth]]
-    * and [[graft.explain.Invariants.checkAll]] surfaces): one filtered
-    * scan per source.
-    */
-  def sourceRecords(triangles: DataFrame, lsource: DataFrame,
-      rsource: DataFrame): VertexRecords = {
-    val vertices = triangles.select(col("u"), col("v"), col("w")).collect()
-      .flatMap(_.toSeq.map(String.valueOf)).distinct.toIndexedSeq
-    def side(tag: String, src: DataFrame): Seq[(String, Row)] = {
-      val ids = vertices.collect { case v if v.startsWith(tag + "@") => v.drop(tag.length + 1) }
-      if (ids.isEmpty) Nil
-      else src.filter(col("id").cast("string").isin(ids: _*)).collect().toIndexedSeq
-        .map(r => s"$tag@${r.getAs[Any]("id")}" -> r)
-    }
-    VertexRecords(lsource.schema, rsource.schema,
-      (side("0", lsource) ++ side("1", rsource)).toMap)
-  }
-
   /** Triangles with their vertex records joined in, split by the free
     * record's side. `left`/`right` carry columns `u,v,w` plus
     * `__u_<attr>`, `__w_<attr>` (free-side schema) and `__v_<attr>`
@@ -200,17 +181,4 @@ object Perturb {
 
     generate(resolved.left, "l").unionByName(generate(resolved.right, "r"))
   }
-
-  /** One-shot convenience (spec surface): resolve against the sources +
-    * one depth.
-    */
-  def forDepth(
-      triangles: DataFrame,
-      lsource: DataFrame,
-      rsource: DataFrame,
-      depth: Int,
-      classToExplain: Int,
-      schema: PairSchema = PairSchema.default): DataFrame =
-    forDepth(resolve(triangles, sourceRecords(triangles, lsource, rsource)),
-      depth to depth, classToExplain, schema)
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.dedup.{Dedup, IncrementalDedup}
+import graft.functions.MinHashSignature
 import graft.multimodal.Multimodal
 import graft.similarity.Ann
 import graft.sources.Tables
@@ -122,9 +123,10 @@ object PipelineQueries {
   def q31MinhashSig(s: SparkSession, dir: String): DataFrame =
     // null filter mirrors the oracle CTE's WHERE text IS NOT NULL (the
     // sketch null-propagates; the SQL CASE would not)
-    Dedup.withMinhashSignature(
-        t(s, dir, "documents").filter(col("text").isNotNull), "text", numHashes = 4)
-      .select(col("doc_id"), col("mh0"), col("mh1"), col("mh2"), col("mh3"))
+    t(s, dir, "documents").filter(col("text").isNotNull)
+      .select(col("doc_id"), MinHashSignature(col("text"), 4).as("__sig"))
+      .select(col("doc_id") +:
+        (0 until 4).map(i => element_at(col("__sig"), i + 1).as(s"mh$i")): _*)
       .orderBy(col("doc_id"))
 
   private val shingleSqlCte: String =
@@ -6561,11 +6563,11 @@ object PipelineQueries {
     val both = g.select(col("tru"), (col("tru") * 2).as("pid"), col("text"))
       .unionByName(g.select(col("tru"), (col("tru") * 2 + 1).as("pid"),
         regexp_replace(col("text"), "\\s+\\S+$", "").as("text")))
-    val sig = Dedup.withMinhashSignature(both, "text", numHashes = 4)
-      .withColumn("bk0", concat_ws("#", col("mh0"), col("mh1")))
-      .withColumn("bk1", concat_ws("#", col("mh2"), col("mh3")))
+    val Seq(bk0, bk1) = Dedup.bandKeyCols(col("__sig"), 2, 2)
+    val keyed = both.select(col("tru"), col("pid"), MinHashSignature(col("text"), 4).as("__sig"))
+      .select(col("tru"), col("pid"), bk0.as("bk0"), bk1.as("bk1"))
     graft.candidates.Blocking.orPairCompleteness(
-      sig, Seq("bk0", "bk1"), "tru", "pid")
+      keyed, Seq("bk0", "bk1"), "tru", "pid")
   }
 
   val q188Sql: String =
@@ -7792,7 +7794,7 @@ object PipelineQueries {
     * token length (width 16), each bucket cuts seeded-hash-ordered
     * batches of 8, and every (bucket, batch) reports its pad target,
     * padded-token total, and utilization in basis points — the
-    * padded-batch recipe for fine-tuning pipelines, where [[q71]]'s
+    * padded-batch recipe for fine-tuning pipelines, where [[q71Packing]]'s
     * straddling concatenation is not allowed. Integer arithmetic
     * throughout; the oracle replays bucket assignment, the md5 batch
     * order, and the census.

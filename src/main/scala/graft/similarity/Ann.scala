@@ -16,15 +16,6 @@ import org.apache.spark.sql.types._
   */
 object Ann {
 
-  /** Dot product of two array<float/double> columns, accumulated in
-    * double, left to right.
-    */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-
-  def norm(a: Column): Column = sqrt(dot(a, a))
-
   /** Pairwise cosine — the fused single-pass expression. Bit-identical
     * to the declarative zip_with/aggregate form (spec'd), ~an order of magnitude less
     * per-row overhead: the declarative form's zip_with/aggregate

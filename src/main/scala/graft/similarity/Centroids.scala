@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   * shuffles. At 100 TB the corpus never moves — each executor scans
   * its partitions once against the broadcast-by-literal centroids.
   *
-  * All distance math is the ordered left-fold double chain of
-  * [[Ann.dot]] (`zip_with` then `aggregate` index order), so a SQL
+  * All distance math is an ordered left-fold double chain
+  * (`zip_with` then `aggregate` index order, see [[sqDist]]), so a SQL
   * engine replaying `list_aggregate(..., 'sum')` produces
   * bit-identical doubles and the argmin — tie-broken by centroid id —
   * is engine-portable with no quantization.

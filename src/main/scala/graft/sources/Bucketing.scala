@@ -35,7 +35,7 @@ object Bucketing {
 
   /** Equi-join two same-key bucketed tables. With equal bucket counts
     * the planner aligns buckets and the join carries no Exchange on
-    * either side; [[graft.BucketingSpec]] pins that plan property.
+    * either side; the spec `BucketingSpec` pins that plan property.
     */
   def bucketedJoin(spark: SparkSession, leftTable: String,
       rightTable: String, key: String,

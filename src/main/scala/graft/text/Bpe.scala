@@ -11,7 +11,7 @@ import graft.operators.Pinned
   * most |symbol-vocab|² rows, not corpus rows), the argmax collects a
   * single row to the driver, and the chosen merge is applied corpus-wide
   * as a scan-local array fold. Train on the big corpus, then
-  * [[tokenize]] applies the frozen merge table to any stream of text —
+  * [[applyMerges]] applies the frozen merge table to any stream of text —
   * the learn-small/apply-wide split of production tokenizers.
   *
   * State between rounds is a [[graft.operators.Pinned]] lineage cut:

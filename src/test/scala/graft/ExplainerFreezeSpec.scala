@@ -4,7 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.explain.{CertaExplainer, Explanation}
 import graft.matcher.{ERModel, ExternalBatchScorer, NeuralScorerExample}
-import graft.perturb.Perturb
 
 /** Frozen explanations of the paths the golden fixtures do not walk: a
   * mapPartitions scorer (no column program folds over it) and the
@@ -167,7 +166,7 @@ class ExplainerFreezeSpec extends SparkSpec {
       numTriangles = 6)
     val depths = 1 until 3
     val preds = depths.map(d => TwoDiffModel.predict(
-      Perturb.forDepth(e.triangles, l, r, depth = d, classToExplain = 1)))
+      ReferenceTwins.perturbForDepth(e.triangles, l, r, depth = d, classToExplain = 1)))
       .reduce(_ unionByName _)
     val twin = ReferenceTwins.censusPss(preds, "match_score", depths,
       e.triangles.count())

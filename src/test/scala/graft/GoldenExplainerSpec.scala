@@ -74,6 +74,16 @@ class GoldenExplainerSpec extends SparkSpec {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
+  test("every frame of the memoized explanation is a LocalRelation") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val e = ErQueries.explained(spark, dir)
+    Seq("saliency" -> e.saliency, "pss" -> e.pss, "cfSummary" -> e.cfSummary,
+      "cfExamples" -> e.cfExamples, "triangles" -> e.triangles).foreach { case (name, df) =>
+      val plan = df.queryExecution.optimizedPlan
+      assert(plan.isInstanceOf[LocalRelation], s"$name:\n$plan")
+    }
+  }
+
   test("golden VALUES oracles carry the same rows the constants do") {
     // the oracle SQL is generated, not hand-written: pin the generation
     // so an accidental edit to the formatter can't desync driver + spec

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.eval.EvalDriver
-import graft.explain.Invariants
 import graft.matcher.TokenCosineModel
 import graft.perturb.Augment
 
@@ -26,7 +25,7 @@ class InvariantsSpec extends SparkSpec {
 
   test("invariant probes: cosine matcher is identity/symmetry-consistent") {
     val tri = Seq(("0@0", "1@0", "0@1")).toDF("u", "v", "w")
-    val checked = Invariants.checkAll(tri, lsource, rsource, TokenCosineModel())
+    val checked = ReferenceTwins.checkAll(tri, lsource, rsource, TokenCosineModel())
     val row = checked.head()
     // cosine is reflexive and symmetric by construction
     assert(row.getAs[Boolean]("identity"))
@@ -52,7 +51,7 @@ class InvariantsSpec extends SparkSpec {
     //   u~v share "b" (match), v~w share "c" (match), u~w disjoint →
     //   exactly 2 matches → transitivity violated
     val tri = Seq(("0@0", "1@0", "0@1")).toDF("u", "v", "w")
-    val flags = Invariants.checkAll(tri, l, r, overlapModel).head()
+    val flags = ReferenceTwins.checkAll(tri, l, r, overlapModel).head()
     assert(!flags.getAs[Boolean]("transitivity"))
 
     // the explainer's check/discardBad path: with every triangle bad the

@@ -124,14 +124,26 @@ class NearDupSpec extends SparkSpec {
   }
 
   test("a band scheme below 1 is rejected, naming the value") {
+    import graft.candidates.LshBlockingGenerator
+    import graft.dedup.IncrementalDedup
     val docs = planted(3, background = 10, clusters = 2).toDF("doc_id", "text")
+    val history = IncrementalDedup.emptyHistory(spark, "doc_id")
     Seq[(String, () => Any)](
       "numBands must be >= 1, got 0" -> (() =>
         Dedup.dropNearDuplicates(docs, "text", "doc_id", numBands = 0)),
       "rowsPerBand must be >= 1, got 0" -> (() =>
         Dedup.lshBandKeys(docs, "text", "doc_id", rowsPerBand = 0)),
       "k must be >= 1, got -1" -> (() =>
-        Dedup.nearDuplicates(docs, "text", "doc_id", k = -1))
+        Dedup.nearDuplicates(docs, "text", "doc_id", k = -1)),
+      "rowsPerBand must be >= 1, got 0" -> (() =>
+        IncrementalDedup.nearDupNewDocs(history, docs, "text", "doc_id", rowsPerBand = 0)),
+      "numBands must be >= 1, got 0" -> (() =>
+        IncrementalDedup.nearDupNewDocs(history, docs, "text", "doc_id", numBands = 0)),
+      "rowsPerBand must be >= 1, got 0" -> (() =>
+        LshBlockingGenerator.withBandKeys(docs, rowsPerBand = 0)),
+      "numBands must be >= 1, got 0" -> (() =>
+        LshBlockingGenerator(numBands = 0).pairs(docs.limit(1), docs,
+          probeIsLeft = true, graft.schema.PairSchema.default))
     ).foreach { case (msg, run) =>
       val e = intercept[IllegalArgumentException](run())
       assert(e.getMessage.contains(msg), e.getMessage)

@@ -1030,7 +1030,7 @@ class PipelineSpec extends SparkSpec {
     val r1 = IncrementalDedup.nearDupNewDocs(h0, b1, "text", "doc_id")
     val s1 = r1.survivors.select("doc_id").collect().map(_.getLong(0)).toSet
     assert(s1 === Set(11L))
-    r0.close(); r1.close(); h0.unpersist(true)
+    h0.unpersist(true)
   }
 
   test("knowledge injection rewrites tokens by the reference's rules") {

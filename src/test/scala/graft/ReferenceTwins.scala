@@ -1,9 +1,13 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.dedup.Dedup
+import graft.explain.Invariants
 import graft.functions.TextSim
+import graft.matcher.ERModel
+import graft.perturb.Perturb
+import graft.schema.PairSchema
 import graft.similarity.Ann
 import graft.text.TextAnalysis
 
@@ -140,12 +144,21 @@ object ReferenceTwins {
     */
   val cosineUdf = udf(TextSim.cosineBags _)
 
+  /** Dot product of two array<float/double> columns, accumulated in
+    * double, left to right.
+    */
+  def dot(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
+      lit(0.0), (acc, v) => acc + v)
+
+  def norm(a: Column): Column = sqrt(dot(a, a))
+
   /** The declarative (higher-order-function) twin of `Ann.cosine`: the
     * form a SQL engine replays directly.
     */
   def cosineDeclarative(a: Column, b: Column): Column = {
-    val den = Ann.norm(a) * Ann.norm(b)
-    when(den === 0.0, 0.0).otherwise(Ann.dot(a, b) / den)
+    val den = norm(a) * norm(b)
+    when(den === 0.0, 0.0).otherwise(dot(a, b) / den)
   }
 
   /** Declarative (zip_with/aggregate) twin of `IncrementalDedup
@@ -231,6 +244,43 @@ object ReferenceTwins {
       Dedup.lshCandidatePairs(df, textCol, idCol, numBands, rowsPerBand, k,
         maxBucketSize),
       df, textCol, idCol, threshold, k)
+
+  // ------------------------------------------------ explainer from the sources
+  // One-shot explainer steps for callers that hold only the sources and
+  // a triangles frame; the explainer itself resolves vertices from the
+  // support rows it already holds (`Perturb.vertexRecords`).
+
+  /** The records of the triangles' vertices read from the sources: one
+    * filtered scan per source.
+    */
+  def sourceRecords(triangles: DataFrame, lsource: DataFrame,
+      rsource: DataFrame): Perturb.VertexRecords = {
+    val vertices = triangles.select(col("u"), col("v"), col("w")).collect()
+      .flatMap(_.toSeq.map(String.valueOf)).distinct.toIndexedSeq
+    def side(tag: String, src: DataFrame): Seq[(String, Row)] = {
+      val ids = vertices.collect { case v if v.startsWith(tag + "@") => v.drop(tag.length + 1) }
+      if (ids.isEmpty) Nil
+      else src.filter(col("id").cast("string").isin(ids: _*)).collect().toIndexedSeq
+        .map(r => s"$tag@${r.getAs[Any]("id")}" -> r)
+    }
+    Perturb.VertexRecords(lsource.schema, rsource.schema,
+      (side("0", lsource) ++ side("1", rsource)).toMap)
+  }
+
+  /** `Perturb.forDepth` at one depth, resolved against the sources. */
+  def perturbForDepth(triangles: DataFrame, lsource: DataFrame, rsource: DataFrame,
+      depth: Int, classToExplain: Int,
+      schema: PairSchema = PairSchema.default): DataFrame =
+    Perturb.forDepth(Perturb.resolve(triangles, sourceRecords(triangles, lsource, rsource)),
+      depth to depth, classToExplain, schema)
+
+  /** `Invariants.checkAll` with the vertices resolved against the
+    * sources: (u, v, w, identity, symmetry, transitivity).
+    */
+  def checkAll(triangles: DataFrame, lsource: DataFrame, rsource: DataFrame,
+      model: ERModel, schema: PairSchema = PairSchema.default): DataFrame =
+    Invariants.checkAll(Perturb.resolve(triangles, sourceRecords(triangles, lsource, rsource)),
+      model, schema)
 
   // ------------------------------------------------ explainer lattice census
   /** The explainer's lattice census as it was taken before it collected
